@@ -548,7 +548,8 @@ def q_preprocessed_media(spark, sf_dir):
         "applied_joined",
         "n_applied",
         "rotation_deg_after",
-        "skew_deg_after",
+        # assess_media's skew is integral, so the cast is exact
+        F.col("skew_deg_after").cast("int").alias("skew_deg_after"),
         F.col("changed").cast("int").alias("changed"),
         "out_checksum",
         "mean_after",
@@ -780,31 +781,6 @@ def q_quarantine_accounting(spark, sf_dir):
 
 
 # ------------------------------------------- grid reconstruction family
-# Since round 7 the three fused queries (assign / spanning / row_maps)
-# run through operators/grid_fused.py: ONE detections scan + ONE
-# per-table aggregation + an Arrow-batched kernel, replacing the staged
-# band-join + theta-join + 4 window shuffles whose cost was interpreted
-# higher-order-function evaluation (OPTIMIZATION_r07.md). The staged
-# operators remain in operators/grid.py and tests/test_grid_fused.py
-# pins row-for-row equivalence on the synthetic corpora; both paths
-# share the same DuckDB oracles.
-def _grid_assigned(spark, sf_dir):
-    # staged twin, kept for the fused-equivalence tests
-    d = tables.load_detections(spark, sf_dir)
-    cells = d.filter(F.col("bucket") == "cell").select(
-        "doc_id", "table_id", F.col("item_id").alias("cell_id"), "x", "y", "w", "h", "text"
-    )
-    return grid.assign_cells_banded(cells, grid.band_arrays(d)), d
-
-
-def _grid_final(spark, sf_dir):
-    assigned, d = _grid_assigned(spark, sf_dir)
-    spans = d.filter(F.col("bucket") == "spanning_cell").select(
-        "doc_id", "table_id", F.col("item_id").alias("span_id"), "x", "y", "w", "h"
-    )
-    return grid.apply_spanning_cells(assigned, spans)
-
-
 def q_grid_bands(spark, sf_dir):
     d = tables.load_detections(spark, sf_dir)
     return grid.index_bands(d, "row").unionByName(grid.index_bands(d, "column")).select(

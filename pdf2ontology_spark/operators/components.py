@@ -4,7 +4,7 @@ self-joins (SURVEY.md §7.2 step 3 — the canonicalization substrate).
 Algorithm: iterative minimum-label propagation — each round every node
 takes the min label over itself and its neighbors; converges in
 O(component diameter) rounds. Alias/near-dup clusters have tiny
-diameters (2-4), so 3-6 rounds suffice in practice; ``max_iter`` guards
+diameters (2-4), so 3-6 rounds suffice in practice; ``MAX_ITER`` guards
 the loop and convergence is detected with a cheap count of changed
 labels.
 
@@ -22,7 +22,7 @@ Scale notes (10^12-node framing):
   global loop: the loop's input shrinks from |E| edges to at most one
   edge per node per partition, and intra-partition chains collapse to
   diameter 2 — at planet scale edges >> nodes, so this is the lever
-  that keeps the iterative joins cheap (``pre_contract=True``).
+  that keeps the iterative joins cheap.
 """
 
 from __future__ import annotations
@@ -32,17 +32,23 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+# iterative-loop round cap; alias/near-dup graphs converge in 3-6
+MAX_ITER = 25
+# label results at or under this many edges carry a broadcast hint
+BROADCAST_THRESHOLD = 100_000
 
 
-def _local_contract(sym: DataFrame) -> DataFrame:
-    """Union-find within each partition (Arrow-batched; the iterator
-    spans the whole partition, so state accumulates across batches and
-    the star forest is emitted once): every node maps to its
-    partition-local root. Connectivity is exactly preserved — star
-    edges reproduce each partition's components, and cross-partition
-    edges still share their endpoint nodes."""
+def _union_find(node_col: str, root_col: str):
+    """mapInPandas body: union-find over every (a, b) edge the iterator
+    yields (Arrow-batched; the iterator spans the whole partition, so
+    state accumulates across batches), emitting each node once with its
+    root — the component's MIN id under python's ``<``, which matches
+    Spark's ordering for the id types used here (strings compare as
+    code points == UTF-8 bytes; ints/longs are ints)."""
 
-    def contract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parent: dict = {}
 
         def find(x):
@@ -65,10 +71,21 @@ def _local_contract(sym: DataFrame) -> DataFrame:
                     lo, hi = (ra, rb) if ra < rb else (rb, ra)
                     parent[hi] = lo
         nodes = list(parent)
-        yield pd.DataFrame({"a": nodes, "b": [find(n) for n in nodes]})
+        yield pd.DataFrame({node_col: nodes, root_col: [find(n) for n in nodes]})
 
+    return run
+
+
+def _local_contract(sym: DataFrame) -> DataFrame:
+    """Union-find within each partition: every node maps to its
+    partition-local root, emitted as a star forest. Connectivity is
+    exactly preserved — star edges reproduce each partition's
+    components, and cross-partition edges still share their endpoint
+    nodes."""
     # schema-preserving: node ids keep whatever type the caller uses
-    return sym.mapInPandas(contract, sym.schema).filter(F.col("a") != F.col("b"))
+    return sym.mapInPandas(_union_find("a", "b"), sym.schema).filter(
+        F.col("a") != F.col("b")
+    )
 
 
 def _gather_components(sym: DataFrame) -> DataFrame:
@@ -77,70 +94,35 @@ def _gather_components(sym: DataFrame) -> DataFrame:
     ONE job when consumed — versus 2 + 2*rounds driver-synchronized jobs
     for the iterative loop, which dominated the canonicalization query's
     wall time at bench scale (the loop's per-round work was milliseconds
-    of data on 32 partitions).
-
-    Node ordering note: roots are the per-component MIN under python's
-    ``<``, which matches Spark's ordering for the id types used here
-    (strings compare as code points == UTF-8 bytes; ints/longs are
-    ints)."""
-
-    def gather(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parent: dict = {}
-
-        def find(x):
-            r = x
-            while parent[r] != r:
-                r = parent[r]
-            while parent[x] != r:
-                parent[x], x = r, parent[x]
-            return r
-
-        for pdf in batches:
-            for a, b in zip(pdf["a"], pdf["b"]):
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                    parent[hi] = lo
-        nodes = list(parent)
-        yield pd.DataFrame({"node": nodes, "component": [find(n) for n in nodes]})
-
-    from pyspark.sql import types as T
-
+    of data on 32 partitions)."""
     t = sym.schema["a"].dataType
     schema = T.StructType(
         [T.StructField("node", t), T.StructField("component", t)]
     )
-    return sym.coalesce(1).mapInPandas(gather, schema)
+    return sym.coalesce(1).mapInPandas(_union_find("node", "component"), schema)
 
 
 def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 25,
-    pre_contract: bool = True,
     gather_threshold: int = 2_000_000,
-    broadcast_threshold: int = 100_000,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) where component is the
     minimum node id in the connected component. Nodes appear iff they
     occur in the edge list. Deterministic.
 
-    After the per-partition contraction, the surviving edge count is
-    checked once (a cheap job on the just-materialized list): at or
-    under ``gather_threshold`` edges the components are finished with a
-    single-task union-find (``_gather_components``) — exact, one job,
-    no driver-synchronized rounds; above it the iterative min-label
-    loop runs as before. Entity-linking bridge graphs are tiny by
+    The symmetric edge count is checked once (a cheap job on the
+    just-materialized list): at or under ``gather_threshold`` edges the
+    components are finished with a single-task union-find
+    (``_gather_components``) — exact, one job, no driver-synchronized
+    rounds. Above it the edges are contracted per partition
+    (``_local_contract``) and the iterative min-label loop runs for at
+    most ``MAX_ITER`` rounds. Entity-linking bridge graphs are tiny by
     construction (LSH-verified near-dup pairs between exact-group
-    reps), so production corpora take the gather path for the final
-    step while the heavy lifting stays in the distributed contraction.
-    Results under ``broadcast_threshold`` edges additionally carry a
-    broadcast hint so the caller's label join skips its shuffle."""
+    reps), so production corpora take the gather path. Results under
+    ``BROADCAST_THRESHOLD`` edges additionally carry a broadcast hint
+    so the caller's label join skips its shuffle."""
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
@@ -165,23 +147,22 @@ def connected_components(
         # stage + another distinct round) costs more than the problem —
         # gather the raw edges straight into one union-find task
         labels = _gather_components(sym)
-        if n_edges <= broadcast_threshold:
+        if n_edges <= BROADCAST_THRESHOLD:
             labels = labels.hint("broadcast")
         return labels
-    if pre_contract:
-        star = _local_contract(sym)
-        sym = (
-            star.unionByName(star.select(F.col("b").alias("a"), F.col("a").alias("b")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+    star = _local_contract(sym)
+    sym = (
+        star.unionByName(star.select(F.col("b").alias("a"), F.col("a").alias("b")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()
         .withColumn("component", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    for _ in range(max_iter):
+    for _ in range(MAX_ITER):
         # neighbor labels: for edge (a,b), b's current label is a candidate for a
         neighbor = (
             sym.join(labels.withColumnRenamed("node", "b"), "b")

@@ -1,23 +1,18 @@
-"""Grid reconstruction from detected bounding boxes — the Spark form of
-the reference's table-transformer post-processing
-(/root/reference/src/table_processors/table_transformer.py). The corpus
-ships pre-gridded cells, so these operators serve detection-style inputs
-(bbox rows from a layout model); they are the J2/J3/J5 + W1/W3 + A8-A11
-rows of SURVEY.md §2.
+"""Grid-reconstruction window operators — band indexing (W1), header
+levels (W3) and contour skew statistics (A8-A10) from the reference's
+table-transformer post-processing (table_transformer.py) and document
+analysis utilities. The corpus ships pre-gridded cells, so these
+operators serve detection-style inputs (bbox rows from a layout model).
 
-Scale stance: a table's detections are tiny (5-50 boxes), so every join
-here is *within* a (doc_id, table_id) group — the joins below are
-group-local equi-joins on the table key plus a non-equi predicate, which
-Spark executes as one shuffle on the table key with group-local nested
-loops (exactly what the data shape wants; no crossJoin of the corpus).
+Cell assignment, spanning cells and row maps (J2/J3/J5 + W4/A11 of
+SURVEY.md §2) are per-table logic and live in ``operators/grid_fused.py``
+as one Arrow-batched kernel.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-from pdf2ontology_spark import functions as fn
 
 KEY = ["doc_id", "table_id"]
 
@@ -35,274 +30,6 @@ def index_bands(detections: DataFrame, bucket: str) -> DataFrame:
     return (
         detections.filter(F.col("bucket") == bucket)
         .withColumn("idx", F.row_number().over(w) - 1)
-    )
-
-
-def _nearest_idx(bands, center):
-    """Argmin-center-distance over a sorted band array: strictly-less
-    keeps the FIRST (lowest-idx) band on distance ties — the same total
-    order as the old window sort by (abs distance asc, idx asc)."""
-    init = F.struct(
-        F.lit(float("inf")).alias("d"), F.lit(None).cast("int").alias("idx")
-    )
-    return F.aggregate(
-        bands,
-        init,
-        lambda acc, b: F.when(
-            F.abs(center - b["c"]) < acc["d"],
-            F.struct(F.abs(center - b["c"]).alias("d"), b["idx"].alias("idx")),
-        ).otherwise(acc),
-    )["idx"]
-
-
-def _band_agg(center):
-    """Per-table sorted array<struct<idx,c>> of band centers."""
-    return F.array_sort(
-        F.collect_list(F.struct(F.col("idx").alias("idx"), center.alias("c")))
-    )
-
-
-def band_arrays(detections: DataFrame) -> DataFrame:
-    """ONE-scan band indexing for the query path: row- and column-band
-    arrays per table from a single pass over the detections (the
-    composed index_bands x2 route scans the source twice).
-
-    ONE shuffle total: the band rows are collected per table with a
-    hash aggregation and sorted INSIDE the array — array_sort over
-    struct<o,x,y,c> reproduces index_bands' window order exactly
-    ((y|x, x, y) with the center c a deterministic final tie-break),
-    then a positional transform assigns the 0-based idx. The previous
-    window-function form cost a second full shuffle + sort of every
-    band row before the same aggregation (measured 2.8x slower on the
-    sf0.1 detections table)."""
-    bands = detections.filter(F.col("bucket").isin("row", "column"))
-    order_key = F.when(F.col("bucket") == "row", F.col("y")).otherwise(F.col("x"))
-    center = F.when(
-        F.col("bucket") == "row", F.col("y") + F.col("h") / 2
-    ).otherwise(F.col("x") + F.col("w") / 2)
-    st = F.struct(
-        order_key.alias("o"), F.col("x").alias("x"), F.col("y").alias("y"),
-        center.alias("c"),
-    )
-    tagged = bands.select(*KEY, "bucket", st.alias("st"))
-    agg = tagged.groupBy(*KEY).agg(
-        F.array_sort(
-            F.collect_list(F.when(F.col("bucket") == "row", F.col("st")))
-        ).alias("r0"),
-        F.array_sort(
-            F.collect_list(F.when(F.col("bucket") == "column", F.col("st")))
-        ).alias("c0"),
-    )
-
-    def idxed(col: Column) -> Column:
-        return F.transform(
-            col, lambda s, i: F.struct(i.cast("int").alias("idx"), s["c"].alias("c"))
-        )
-
-    return agg.select(
-        *KEY, idxed(F.col("r0")).alias("row_bands"), idxed(F.col("c0")).alias("col_bands")
-    )
-
-
-def assign_cells_banded(cells: DataFrame, bands: DataFrame) -> DataFrame:
-    """J3 over pre-aggregated band arrays (band_arrays output): one join
-    per cell instead of a cells x bands fan-out + two joins back — the
-    cells input is referenced exactly once, so composed plans stop
-    re-expanding its subtree."""
-    # a table lacking either band family never assigns (the old inner
-    # joins on both band sides dropped its cells): _nearest_idx is null
-    # exactly when its band array is empty OR the cell's center is
-    # null/NaN, so the contract is enforced as a size() filter on the
-    # (table-granular) bands side plus a scalar center-validity filter
-    # on the cells side BEFORE the join — a post-join isNotNull filter
-    # gets pushed into the join condition, where it re-evaluates the
-    # O(bands) argmin aggregate a second time per cell (measured: 2x
-    # the whole assign stage's cost)
-    bands = bands.filter((F.size("row_bands") > 0) & (F.size("col_bands") > 0))
-    cy = F.col("y") + F.col("h") / 2
-    cx = F.col("x") + F.col("w") / 2
-    cells = cells.filter(
-        cy.isNotNull() & ~F.isnan(cy) & cx.isNotNull() & ~F.isnan(cx)
-    )
-    return (
-        cells.join(bands, KEY)
-        .withColumn("row", _nearest_idx(F.col("row_bands"), F.col("y") + F.col("h") / 2))
-        .withColumn("col", _nearest_idx(F.col("col_bands"), F.col("x") + F.col("w") / 2))
-        .drop("row_bands", "col_bands")
-    )
-
-
-def assign_cells(cells: DataFrame, rows: DataFrame, cols: DataFrame) -> DataFrame:
-    """J3: assign each detected cell box to the argmin-center-distance
-    row band and column band (table_transformer.py:893-902).
-
-    cells: (doc_id, table_id, cell_id, x, y, w, h, text)
-    rows/cols: output of index_bands. Returns cells + (row, col).
-    """
-    rb = rows.groupBy(*KEY).agg(
-        _band_agg(F.col("y") + F.col("h") / 2).alias("row_bands")
-    )
-    cb = cols.groupBy(*KEY).agg(
-        _band_agg(F.col("x") + F.col("w") / 2).alias("col_bands")
-    )
-    return assign_cells_banded(cells, rb.join(cb, KEY))
-
-
-def apply_spanning_cells(grid_cells: DataFrame, span_boxes: DataFrame) -> DataFrame:
-    """J2 + A11: map spanning-cell boxes onto overlapped grid cells
-    (table_transformer.py:290-325): within a span's covered set, the
-    min-(row, col) cell becomes MERGED with rowspan/colspan = extent;
-    the rest become EMPTY; untouched cells stay NORMAL.
-
-    grid_cells: (doc_id, table_id, row, col, x, y, w, h, text)
-    span_boxes: (doc_id, table_id, span_id, x, y, w, h)
-    """
-    g = grid_cells.select(
-        *KEY, "row", "col", "text",
-        F.col("x").alias("gx"), F.col("y").alias("gy"),
-        F.col("w").alias("gw"), F.col("h").alias("gh"),
-    )
-    s = span_boxes.select(
-        F.col("doc_id").alias("_sd"), F.col("table_id").alias("_st"), "span_id",
-        F.col("x").alias("sx"), F.col("y").alias("sy"),
-        F.col("w").alias("sw"), F.col("h").alias("sh"),
-    )
-    overlap = fn.bbox_overlap(
-        F.col("gx"), F.col("gy"), F.col("gw"), F.col("gh"),
-        F.col("sx"), F.col("sy"), F.col("sw"), F.col("sh"),
-    )
-    # ONE left theta-join (equi on the table key + overlap residual),
-    # then pure window math: the former covered->extent groupBy join-back
-    # and the final join back onto grid_cells each re-expanded the whole
-    # grid_cells subtree, multiplying upstream scans in composed plans
-    j = g.join(
-        s,
-        (F.col("doc_id") == F.col("_sd")) & (F.col("table_id") == F.col("_st")) & overlap,
-        "left",
-    )
-    # span extents + the merged survivor: the FIRST covered cell in
-    # reading order (min (row, col) among cells actually covered) —
-    # anchoring on the (r0, c0) extent corner would emit NO merged cell
-    # for L-shaped coverage (reference table_transformer.py:303-310
-    # promotes covered_cells[0]); unmatched cells share the null-span
-    # partition and are tagged 'normal' below
-    w_ext = Window.partitionBy(*KEY, "span_id")
-    w_span = Window.partitionBy(*KEY, "span_id").orderBy("row", "col")
-    tagged = (
-        j.withColumn("r0", F.min("row").over(w_ext))
-        .withColumn("r1", F.max("row").over(w_ext))
-        .withColumn("c0", F.min("col").over(w_ext))
-        .withColumn("c1", F.max("col").over(w_ext))
-        .withColumn("_first", F.row_number().over(w_span))
-    )
-    # one tag per cell even when several spans cover it: the span with
-    # the smallest id wins (deterministic stand-in for the reference's
-    # sequential mutation); a cell matches either >=1 spans or exactly
-    # one null-span row, so the winner window never mixes the two
-    w_cell = Window.partitionBy(*KEY, "row", "col").orderBy("span_id")
-    merged = F.col("span_id").isNotNull() & (F.col("_first") == 1)
-    empty = F.col("span_id").isNotNull() & (F.col("_first") != 1)
-    return (
-        tagged.withColumn("_rk", F.row_number().over(w_cell))
-        .filter(F.col("_rk") == 1)
-        .select(
-            *KEY, "row", "col", "text",
-            F.when(merged, "merged").when(empty, "empty").otherwise("normal").alias("cell_type"),
-            F.when(merged, F.col("r1") - F.col("r0") + 1).otherwise(1).alias("rowspan"),
-            F.when(merged, F.col("c1") - F.col("c0") + 1).otherwise(1).alias("colspan"),
-        )
-    )
-
-
-def expand_spans(cells: DataFrame) -> DataFrame:
-    """J5 (first half): scatter cells over their rowspan x colspan extent
-    (table_processor_paddlex.py:313-318) — explode(sequence) x 2; empty
-    copies carry no text."""
-    return (
-        cells.withColumn("dr", F.explode(F.sequence(F.lit(0), F.col("rowspan") - 1)))
-        .withColumn("dc", F.explode(F.sequence(F.lit(0), F.col("colspan") - 1)))
-        .select(
-            *KEY,
-            (F.col("row") + F.col("dr")).alias("row"),
-            (F.col("col") + F.col("dc")).alias("col"),
-            F.when((F.col("dr") == 0) & (F.col("dc") == 0), F.col("text"))
-            .otherwise(F.lit(""))
-            .alias("text"),
-        )
-    )
-
-
-def grid_to_row_maps(cells: DataFrame) -> DataFrame:
-    """J5 (second half) + W4: header row = first row with any non-empty
-    cell; every later row becomes an ordered {header -> value} map
-    (table_processor_paddlex.py:320-338).
-
-    ONE shuffle: the expanded cells are collected per table and the
-    entire construction — (row, col) winner dedup, header-row pick,
-    per-column key with fallback + duplicate-label disambiguation,
-    per-row map assembly — runs as array expressions over the (tiny,
-    tens-of-cells) per-table group. The previous form spent FOUR window
-    shuffles plus a final groupBy on the same keys:
-      - winner per (row, col): cells arrive sorted by (r, c, empty, t),
-        so the winner is the first element of each (r, c) run (the old
-        row_number-over-(text='' , text) order, exactly);
-      - hrow = min r with non-empty t (null -> no data rows, as before);
-      - per-column key: header text at (hrow, c) if non-empty else
-        'Column_c'; a column whose label already appeared at a smaller
-        column index gets the '_c' suffix (the old dense_rank > 1);
-      - rows > hrow become ordered maps (keys in column order)."""
-    g = cells.groupBy(*KEY).agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("row").alias("r"),
-                    F.col("col").alias("c"),
-                    (F.col("text") == "").cast("int").alias("e"),
-                    F.col("text").alias("t"),
-                )
-            )
-        ).alias("cs")
-    )
-    # winner per (r, c): first of each run (greatest() keeps the i=0
-    # probe in bounds under ANSI; it compares cs[0] with itself, and
-    # the i = 0 arm wins regardless)
-    g = g.select(
-        *KEY,
-        F.expr(
-            "filter(cs, (s, i) -> i = 0 OR NOT "
-            "(cs[greatest(i - 1, 0)].r = s.r AND cs[greatest(i - 1, 0)].c = s.c))"
-        ).alias("ds"),
-    )
-    g = g.select(
-        *KEY, "ds",
-        F.expr("array_min(transform(filter(ds, s -> s.e = 0), s -> s.r))").alias("hrow"),
-    ).filter(F.col("hrow").isNotNull())
-    # per-column final key, in ascending column order
-    g = g.select(
-        *KEY, "ds", "hrow",
-        F.expr(
-            "transform(array_sort(array_distinct(transform(ds, s -> s.c))), c -> "
-            "named_struct('c', c, 'k', coalesce(nullif("
-            "  get(transform(filter(ds, s -> s.r = hrow AND s.c = c), s -> s.t), 0), ''),"
-            "  concat('Column_', c))))"
-        ).alias("bk"),
-    )
-    g = g.select(
-        *KEY, "ds", "hrow",
-        F.expr(
-            "transform(bk, (x, i) -> named_struct('c', x.c, 'k', "
-            "CASE WHEN exists(slice(bk, 1, i), y -> y.k = x.k) "
-            "THEN concat(x.k, '_', x.c) ELSE x.k END))"
-        ).alias("km"),
-    )
-    rows_expr = F.expr(
-        "transform(array_distinct(transform(filter(ds, s -> s.r > hrow), s -> s.r)), "
-        "r -> named_struct('row', r, 'row_map', map_from_entries("
-        "transform(filter(ds, s -> s.r = r), "
-        "s -> named_struct('key', get(filter(km, k -> k.c = s.c), 0).k, 'value', s.t)))))"
-    )
-    return g.select(*KEY, F.explode(rows_expr).alias("o")).select(
-        *KEY, F.col("o.row").alias("row"), F.col("o.row_map").alias("row_map")
     )
 
 

@@ -1,33 +1,31 @@
-"""Fused grid-reconstruction family: one detections scan + one
-per-table aggregation + one Arrow-batched kernel (guide §4.2) instead of
-the staged band-join + theta-join + 4 window shuffles + explode +
-re-aggregation pipeline in operators/grid.py.
+"""Grid reconstruction from detected bounding boxes (J2/J3/J5 + W4/A11
+of SURVEY.md §2; the reference's table_transformer.py post-processing):
+one detections scan + one per-table aggregation + one Arrow-batched
+kernel (guide §4.2) assigns cells to row/column bands, applies spanning
+cells and pivots the expanded grid into header-keyed row maps.
 
-WHY: profiling (OPTIMIZATION_r07.md) showed the staged path's cost is
-NOT shuffles (AQE handles the small exchanges fine) but interpreted
-higher-order-function evaluation — the per-cell argmin over band arrays
-and the per-table row-map array expressions evaluate interpreted lambda
-trees per element (~0.8-1.1s each at sf0.1). A table's detections are
-tiny (5-50 boxes), so the per-table logic is exactly the ragged,
-group-local work §4.2 says to hand to native/python code in whole Arrow
-batches: collect each table's detections once (one shuffle), run the
-assignment/spanning/row-map logic per table inside mapInPandas.
+WHY: a table's detections are tiny (5-50 boxes), and the per-table work
+is ragged, group-local logic. Expressed as Spark joins, windows and
+higher-order functions it cost 4 exchanges, 3 scans and interpreted
+lambda trees per element (OPTIMIZATION_r07.md); here each table's
+detections are collected once (one shuffle) and the assignment /
+spanning / row-map logic runs per table inside mapInPandas.
 
-SEMANTICS are replicated from grid.py operator-for-operator (band
-ordering incl. Spark's null-first struct field ordering and NaN-greater
-double ordering, strictly-less argmin tie-breaks, the left theta-join's
-null-span rows, the (row,col)-winner window's span_id-nulls-first order,
-min/max-ignore-null extents, and grid_to_row_maps' run-dedup + header
-fallback + duplicate-label suffixing). Equivalence with the staged path
-is pinned by tests/test_grid_fused.py on the synthetic corpora; both
-paths share the same DuckDB oracles (grid_assign_cells /
-grid_spanning_cells / grid_row_maps).
+SEMANTICS follow SQL ordering and null rules exactly: Spark's
+null-first struct field ordering and NaN-greater double ordering for
+band order, strictly-less argmin tie-breaks, no assignment for tables
+lacking a band family, min/max-ignore-null span extents, the
+smallest-span_id winner per (row, col) with uncovered cells first,
+and the row maps' run-dedup + header fallback + duplicate-label
+suffixing. The reference is the DuckDB oracles
+(``oracles_data.grid_assign_sql`` / ``grid_spanning_sql`` /
+``grid_row_maps_sql``), pinned to full outputs on the synthetic corpus
+by tests/test_grid_fused.py; the hand-built J2/J3/J5+W4 fixtures in
+tests/test_grid.py pin exact expectations.
 
 At 100 TB: the aggregation state per key is one table's detections
 (bounded, tiny); the kernel is O(cells * bands + cells * spans) per
-table with small constants — the same asymptotics as the staged joins,
-minus the interpreted-expression constant factor and 3 of the 4
-exchanges.
+table with small constants.
 """
 
 from __future__ import annotations
@@ -53,11 +51,9 @@ ROWMAP_SCHEMA = "doc_id string, table_id string, row int, row_map map<string,str
 
 def grid_tables(detections: DataFrame) -> DataFrame:
     """One scan + one aggregation: every grid-relevant detection of a
-    table collected into a single per-table array (the staged path read
-    the detections parquet 3x with disjoint bucket filters and joined
-    the pieces back together)."""
-    # null table keys never matched the staged path's inner joins —
-    # drop them here so the fused kernel cannot emit rows for them
+    table collected into a single per-table array."""
+    # null table keys join nothing in the relational form — drop them
+    # here so the kernel cannot emit rows for them
     d = detections.filter(
         F.col("bucket").isin("row", "column", "cell", "spanning_cell")
         & F.col("doc_id").isNotNull()
@@ -121,9 +117,9 @@ def _overlap(gx, gy, gw, gh, sx, sy, sw, sh) -> bool:
 
 
 def _band_centers(dets: list, family: str) -> list:
-    """index order + centers of one band family — grid.band_arrays'
-    array_sort over struct<o,x,y,c> exactly (o = y for rows, x for
-    columns; c = center along the banding axis)."""
+    """index order + centers of one band family: sorted as
+    struct<o,x,y,c> (o = y for rows, x for columns; c = center along
+    the banding axis)."""
     rows = []
     for d in dets:
         if d["b"] != family:
@@ -141,7 +137,7 @@ def _band_centers(dets: list, family: str) -> list:
 
 
 def _nearest(centers: list, center: float):
-    """grid._nearest_idx: strictly-less argmin keeps the FIRST
+    """Argmin center distance: strictly-less keeps the FIRST
     (lowest-idx) band on ties; null/NaN centers never win."""
     best_d = math.inf
     best = None
@@ -155,9 +151,9 @@ def _nearest(centers: list, center: float):
 
 
 def _assigned_cells(dets: list) -> list | None:
-    """grid.assign_cells_banded for one table: None when either band
-    family is empty (the staged inner join dropped such tables); else
-    the list of valid-center cells as dicts with row/col."""
+    """J3 for one table: None when either band family is empty (such a
+    table assigns no cells); else the list of valid-center cells as
+    dicts with row/col."""
     rc = _band_centers(dets, "row")
     cc = _band_centers(dets, "column")
     if not rc or not cc:
@@ -184,9 +180,11 @@ def _assigned_cells(dets: list) -> list | None:
 
 
 def _spanning_cells(dets: list) -> list | None:
-    """grid.apply_spanning_cells for one table: one output dict per
-    distinct assigned (row, col) — (row, col, text, cell_type, rowspan,
-    colspan)."""
+    """J2 + A11 for one table: one output dict per distinct assigned
+    (row, col) — (row, col, text, cell_type, rowspan, colspan). Within
+    a span's covered set the first cell in (row, col) order becomes
+    MERGED with rowspan/colspan = extent, the rest EMPTY; uncovered
+    cells stay NORMAL."""
     cells = _assigned_cells(dets)
     if cells is None:
         return None
@@ -200,8 +198,7 @@ def _spanning_cells(dets: list) -> list | None:
         if d["b"] == "spanning_cell"
     ]
     # per-span covered set -> extents (min/max ignore nulls) and the
-    # first covered cell in (row, col) order (nulls first), replicating
-    # the staged w_ext / w_span windows
+    # first covered cell in (row, col) order (nulls first)
     for s in spans:
         cov = [
             c for c in cells
@@ -215,9 +212,9 @@ def _spanning_cells(dets: list) -> list | None:
             min(cov, key=lambda c: (_ik(c["row"]), _ik(c["col"]))) if cov else None
         )
         s["cov"] = cov
-    # the staged w_cell winner: per (row, col), the (cell x covering
-    # span) row with the smallest span_id — nulls (= unmatched cells)
-    # FIRST, exactly row_number().orderBy("span_id")
+    # winner per (row, col): the (cell x covering span) pair with the
+    # smallest span_id — nulls (= unmatched cells) FIRST, as
+    # row_number() OVER (ORDER BY span_id)
     groups: dict = {}
     for c in cells:
         covering = [
@@ -255,8 +252,10 @@ def _spanning_cells(dets: list) -> list | None:
 
 
 def _row_maps(dets: list) -> list | None:
-    """grid.expand_spans + grid.grid_to_row_maps for one table: (row,
-    row_map) pairs, map keys in column order."""
+    """J5 + W4 for one table: non-empty cells scattered over their
+    rowspan x colspan extent, header row = first row with any non-empty
+    cell, every later row an ordered {header -> value} map. Returns
+    (row, row_map) pairs, map keys in column order."""
     fin = _spanning_cells(dets)
     if fin is None:
         return None
@@ -268,11 +267,10 @@ def _row_maps(dets: list) -> list | None:
         if c["cell_type"] == "empty":
             continue
         if c["rowspan"] is None or c["colspan"] is None or c["row"] is None or c["col"] is None:
-            # staged: row + dr with null row yields null rows for every
-            # copy; those rows reach grid_to_row_maps with r = null and
-            # never pass r > hrow, so skipping the null-origin copies is
-            # exact for every consumer below EXCEPT the (r, c) dedup,
-            # where a null r groups separately and emits nothing
+            # row + dr with a null row yields null rows for every copy;
+            # those never pass r > hrow, so skipping the null-origin
+            # copies is exact for every consumer below EXCEPT the (r, c)
+            # dedup, where a null r groups separately and emits nothing
             if c["rowspan"] is None or c["colspan"] is None:
                 continue
             for dr in range(c["rowspan"]):
@@ -296,8 +294,7 @@ def _row_maps(dets: list) -> list | None:
         cs.append((r, c, e, t))
     cs.sort(key=lambda s: (_ik(s[0]), _ik(s[1]), _ik(s[2]), _sk(s[3])))
 
-    # ds: first of each (r, c) run — under the staged filter's SQL
-    # three-valued logic: the element survives only when the NOT(prev.r
+    # ds: first of each (r, c) run — under SQL three-valued logic: the element survives only when the NOT(prev.r
     # = r AND prev.c = c) condition is TRUE, i.e. some field differs
     # with BOTH sides non-null (a null field makes the comparison
     # unknown and drops the element)
@@ -318,7 +315,7 @@ def _row_maps(dets: list) -> list | None:
         {s[1] for s in ds}, key=lambda c: (1, 0) if c is None else (0, int(c))
     )
     # per-column key: header text at (hrow, c) if non-empty else Column_c
-    # (a null column index keeps a null key like the staged
+    # (a null column index keeps a null key like SQL's
     # concat('Column_', null) — it only errors if a data row uses it,
     # exactly where Spark's map_from_entries raises on a null key)
     bk = []
@@ -414,20 +411,22 @@ _SCHEMAS = {
 
 
 def assign_cells_fused(detections: DataFrame) -> DataFrame:
-    """Fused q:grid_assign_cells body — equals
-    grid.assign_cells_banded(cells, grid.band_arrays(d)) projected to
-    (doc_id, table_id, cell_id, row, col, text)."""
+    """q:grid_assign_cells body: (doc_id, table_id, cell_id, row, col,
+    text) per assigned cell. Reference: ``oracles_data.grid_assign_sql``
+    and the J3 fixture in tests/test_grid.py."""
     return grid_tables(detections).mapInPandas(_kernel("assign"), _SCHEMAS["assign"])
 
 
 def spanning_cells_fused(detections: DataFrame) -> DataFrame:
-    """Fused q:grid_spanning_cells body — equals
-    grid.apply_spanning_cells over the staged assignment, projected to
-    its query columns."""
+    """q:grid_spanning_cells body: one row per assigned (row, col)
+    with its cell_type/rowspan/colspan. Reference:
+    ``oracles_data.grid_spanning_sql`` and the J2 fixture in
+    tests/test_grid.py."""
     return grid_tables(detections).mapInPandas(_kernel("spanning"), _SCHEMAS["spanning"])
 
 
 def row_maps_fused(detections: DataFrame) -> DataFrame:
-    """Fused q:grid_row_maps body — equals grid.grid_to_row_maps(
-    grid.expand_spans(final.filter(cell_type != 'empty')))."""
+    """q:grid_row_maps body: (row, row_map) per data row. Reference:
+    ``oracles_data.grid_row_maps_sql`` and the J5+W4 fixture in
+    tests/test_grid.py."""
     return grid_tables(detections).mapInPandas(_kernel("rowmaps"), _SCHEMAS["rowmaps"])

@@ -559,7 +559,7 @@ def assess_media_full(spans: DataFrame, blobs: DataFrame | None = None) -> DataF
 PREPROCESSED_SCHEMA = (
     "doc_id string, offset int, media_ref string, processed_ref string, "
     "applied_joined string, n_applied int, rotation_deg_after int, "
-    "skew_deg_after int, changed boolean, out_checksum long, mean_after double"
+    "skew_deg_after double, changed boolean, out_checksum long, mean_after double"
 )
 
 
@@ -646,8 +646,10 @@ def apply_actions(assessed: DataFrame, blobs: DataFrame | None = None) -> DataFr
             out["rotation_deg_after"] = [
                 0 if "rotate" in a else r for r, a in zip(pdf["rotation_deg"], acts)
             ]
+            # double: assess_media_real's skew is fractional, and an int
+            # column would reject (or truncate) the pass-through values
             out["skew_deg_after"] = [
-                0 if "deskew" in a else s for s, a in zip(pdf["skew_deg"], acts)
+                0.0 if "deskew" in a else float(s) for s, a in zip(pdf["skew_deg"], acts)
             ]
             out["changed"] = [len(a) > 0 for a in acts]
             out["out_checksum"] = checksums

@@ -944,9 +944,10 @@ FROM spans WHERE kind = 'media' GROUP BY doc_id"""
 
 
 # ------------------------------------------------- grid reconstruction
-# DuckDB replication of operators/grid.py over the detection fixtures
-# (synth.ensure_detections). All coordinates are quarter-grid exact, so
-# centers/distances/overlaps agree bit-for-bit with the Spark plan.
+# DuckDB replication of operators/grid.py + operators/grid_fused.py over
+# the detection fixtures (synth.ensure_detections). All coordinates are
+# quarter-grid exact, so centers/distances/overlaps agree bit-for-bit
+# with the Spark plan.
 def _det_path(tag: str) -> str:
     import os
 

@@ -1,23 +1,28 @@
 """Grid-reconstruction operators (SURVEY J2/J3/J5, W1/W3/W4, A8-A11) on
-hand-built detection fixtures with exact expectations."""
+hand-built detection fixtures with exact expectations; J2/J3/J5+W4 run
+through the fused per-table kernel (operators/grid_fused.py)."""
 
-from pdf2ontology_spark.operators import grid
+from pdf2ontology_spark.operators import grid, grid_fused
 
 
-def _bands(spark, rows):
-    return spark.createDataFrame(
-        rows, "doc_id string, table_id string, bucket string, x double, y double, w double, h double"
-    )
+DET_SCHEMA = (
+    "doc_id string, table_id string, bucket string, item_id string, "
+    "x double, y double, w double, h double, text string"
+)
+
+
+def _dets(spark, rows):
+    return spark.createDataFrame(rows, DET_SCHEMA)
 
 
 def test_index_bands_w1(spark):
-    det = _bands(
+    det = _dets(
         spark,
         [
-            ("d", "t", "row", 0.0, 0.5, 1.0, 0.2),
-            ("d", "t", "row", 0.0, 0.1, 1.0, 0.2),
-            ("d", "t", "column", 0.6, 0.0, 0.3, 1.0),
-            ("d", "t", "column", 0.1, 0.0, 0.4, 1.0),
+            ("d", "t", "row", "r1", 0.0, 0.5, 1.0, 0.2, None),
+            ("d", "t", "row", "r0", 0.0, 0.1, 1.0, 0.2, None),
+            ("d", "t", "column", "k1", 0.6, 0.0, 0.3, 1.0, None),
+            ("d", "t", "column", "k0", 0.1, 0.0, 0.4, 1.0, None),
         ],
     )
     rows = {(r.y): r.idx for r in grid.index_bands(det, "row").collect()}
@@ -27,44 +32,43 @@ def test_index_bands_w1(spark):
 
 
 def test_assign_cells_j3(spark):
-    det = _bands(
+    det = _dets(
         spark,
         [
-            ("d", "t", "row", 0.0, 0.0, 1.0, 0.5),
-            ("d", "t", "row", 0.0, 0.5, 1.0, 0.5),
-            ("d", "t", "column", 0.0, 0.0, 0.5, 1.0),
-            ("d", "t", "column", 0.5, 0.0, 0.5, 1.0),
+            ("d", "t", "row", "r0", 0.0, 0.0, 1.0, 0.5, None),
+            ("d", "t", "row", "r1", 0.0, 0.5, 1.0, 0.5, None),
+            ("d", "t", "column", "k0", 0.0, 0.0, 0.5, 1.0, None),
+            ("d", "t", "column", "k1", 0.5, 0.0, 0.5, 1.0, None),
+            ("d", "t", "cell", "c1", 0.05, 0.05, 0.4, 0.4, "a"),  # -> (0,0)
+            ("d", "t", "cell", "c2", 0.55, 0.6, 0.4, 0.3, "b"),  # -> (1,1)
         ],
     )
-    rows, cols = grid.index_bands(det, "row"), grid.index_bands(det, "column")
-    cells = spark.createDataFrame(
-        [
-            ("d", "t", "c1", 0.05, 0.05, 0.4, 0.4, "a"),  # -> (0,0)
-            ("d", "t", "c2", 0.55, 0.6, 0.4, 0.3, "b"),  # -> (1,1)
-        ],
-        "doc_id string, table_id string, cell_id string, x double, y double, w double, h double, text string",
-    )
-    got = {r.cell_id: (r.row, r.col) for r in grid.assign_cells(cells, rows, cols).collect()}
+    got = {r.cell_id: (r.row, r.col) for r in grid_fused.assign_cells_fused(det).collect()}
     assert got == {"c1": (0, 0), "c2": (1, 1)}
 
 
-def _grid_cells(spark):
-    rows = []
-    for r in range(3):
-        for c in range(3):
-            rows.append(("d", "t", r, c, 0.33 * c, 0.33 * r, 0.33, 0.33, f"v{r}{c}"))
-    return spark.createDataFrame(
-        rows,
-        "doc_id string, table_id string, row int, col int, x double, y double, w double, h double, text string",
-    )
+def _grid_dets(n_rows, n_cols, texts):
+    """Row/column bands of a regular 0.33-pitch grid plus one cell box
+    per (row, col) in ``texts``."""
+    rows = [("d", "t", "row", f"r{r}", 0.0, 0.33 * r, 1.0, 0.33, None) for r in range(n_rows)]
+    rows += [
+        ("d", "t", "column", f"k{c}", 0.33 * c, 0.0, 0.33, 1.0, None) for c in range(n_cols)
+    ]
+    rows += [
+        ("d", "t", "cell", f"c{r}{c}", 0.33 * c, 0.33 * r, 0.33, 0.33, t)
+        for (r, c), t in texts.items()
+    ]
+    return rows
 
 
-def test_apply_spanning_cells_j2(spark):
-    spans = spark.createDataFrame(
-        [("d", "t", "s1", 0.0, 0.0, 0.66, 0.33)],  # covers (0,0) and (0,1)
-        "doc_id string, table_id string, span_id string, x double, y double, w double, h double",
+def test_spanning_cells_j2(spark):
+    texts = {(r, c): f"v{r}{c}" for r in range(3) for c in range(3)}
+    det = _dets(
+        spark,
+        _grid_dets(3, 3, texts)
+        + [("d", "t", "spanning_cell", "s1", 0.0, 0.0, 0.66, 0.33, None)],  # covers (0,0) and (0,1)
     )
-    out = {(r.row, r.col): r for r in grid.apply_spanning_cells(_grid_cells(spark), spans).collect()}
+    out = {(r.row, r.col): r for r in grid_fused.spanning_cells_fused(det).collect()}
     assert out[(0, 0)].cell_type == "merged"
     assert out[(0, 0)].rowspan == 1 and out[(0, 0)].colspan == 2
     assert out[(0, 1)].cell_type == "empty"
@@ -72,24 +76,21 @@ def test_apply_spanning_cells_j2(spark):
 
 
 def test_expand_and_pivot_j5_w4(spark):
-    cells = spark.createDataFrame(
-        [
-            ("d", "t", 0, 0, "H1", 1, 2),  # header spanning 2 cols
-            ("d", "t", 0, 2, "H2", 1, 1),
-            ("d", "t", 1, 0, "a", 1, 1),
-            ("d", "t", 1, 1, "b", 1, 1),
-            ("d", "t", 1, 2, "c", 1, 1),
-        ],
-        "doc_id string, table_id string, row int, col int, text string, rowspan int, colspan int",
+    texts = {(0, 0): "H1", (0, 1): "x", (0, 2): "H2", (1, 0): "a", (1, 1): "b", (1, 2): "c"}
+    det = _dets(
+        spark,
+        _grid_dets(2, 3, texts)
+        + [("d", "t", "spanning_cell", "s1", 0.0, 0.0, 0.66, 0.33, None)],  # header spanning 2 cols
     )
-    expanded = grid.expand_spans(cells)
-    got = {(r.row, r.col): r.text for r in expanded.collect()}
-    assert got[(0, 0)] == "H1" and got[(0, 1)] == "" and got[(0, 2)] == "H2"
+    fin = {(r.row, r.col): r for r in grid_fused.spanning_cells_fused(det).collect()}
+    assert (fin[(0, 0)].text, fin[(0, 0)].colspan) == ("H1", 2)
+    assert fin[(0, 1)].cell_type == "empty" and fin[(0, 2)].text == "H2"
 
-    maps = grid.grid_to_row_maps(expanded).collect()
+    maps = grid_fused.row_maps_fused(det).collect()
     assert len(maps) == 1
     rm = maps[0].row_map
-    # col 1 has empty header after expansion -> Column_1 fallback
+    # (0,1) is H1's empty expansion copy (the covered cell's "x" is
+    # dropped with it) -> Column_1 fallback
     assert rm == {"H1": "a", "Column_1": "b", "H2": "c"}
 
 

@@ -1,19 +1,62 @@
-"""Round-7 fused grid family (operators/grid_fused.py) must be
-row-for-row identical to the staged operators it replaced on the query
-path — the same corpora the driver checks, full-output exceptAll both
-ways."""
+"""The fused grid family (operators/grid_fused.py) must equal its DuckDB
+oracles (oracles_data.grid_*_sql) on the synthetic sf0.001 detections —
+full outputs, order-insensitive, compared the way
+scripts/check_oracles.py compares driver queries."""
 
+import duckdb
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
-import __spark_entry__ as entry
-from pdf2ontology_spark.operators import grid, grid_fused
+from pdf2ontology_spark import oracles_data
+from pdf2ontology_spark.operators import grid_fused
 from pdf2ontology_spark.sources import tables
 
 SF = "/root/testdata/sf0.001"
+TAG = "sf0.001"
 
 
-def _maps_str(maps):
-    return maps.select(
+def _canon(df: pd.DataFrame) -> pd.DataFrame:
+    df = df.reindex(sorted(df.columns), axis=1)
+    for c in df.columns:
+        if df[c].dtype == object:
+            df[c] = df[c].astype(str)
+        elif np.issubdtype(df[c].dtype, np.floating):
+            df[c] = df[c].round(6)
+        else:
+            df[c] = df[c].astype("float64").round(6)
+    return df.sort_values(list(df.columns)).reset_index(drop=True)
+
+
+def _equals_oracle(got, sql: str):
+    got = got.toPandas()
+    exp = duckdb.connect().execute(sql).df()
+    assert len(got) > 0
+    assert sorted(got.columns) == sorted(exp.columns)
+    pd.testing.assert_frame_equal(_canon(got), _canon(exp), check_dtype=False)
+
+
+def _detections(spark):
+    # also materializes the detections parquet the oracle SQL reads
+    return tables.load_detections(spark, SF)
+
+
+def test_assign_fused_equals_oracle(spark):
+    _equals_oracle(
+        grid_fused.assign_cells_fused(_detections(spark)),
+        oracles_data.grid_assign_sql(TAG),
+    )
+
+
+def test_spanning_fused_equals_oracle(spark):
+    _equals_oracle(
+        grid_fused.spanning_cells_fused(_detections(spark)),
+        oracles_data.grid_spanning_sql(TAG),
+    )
+
+
+def test_row_maps_fused_equals_oracle(spark):
+    maps = grid_fused.row_maps_fused(_detections(spark)).select(
         "doc_id",
         "table_id",
         "row",
@@ -23,35 +66,9 @@ def _maps_str(maps):
                 lambda e: F.concat_ws("=", e["key"], e["value"]),
             ),
             "|",
-        ).alias("s"),
+        ).alias("row_map_str"),
     )
-
-
-def _same(a, b):
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
-def test_assign_fused_equals_staged(spark):
-    staged, _ = entry._grid_assigned(spark, SF)
-    _same(
-        staged.select("doc_id", "table_id", "cell_id", "row", "col", "text"),
-        grid_fused.assign_cells_fused(tables.load_detections(spark, SF)),
-    )
-
-
-def test_spanning_fused_equals_staged(spark):
-    staged = entry._grid_final(spark, SF).select(
-        "doc_id", "table_id", "row", "col", "text", "cell_type", "rowspan", "colspan"
-    )
-    _same(staged, grid_fused.spanning_cells_fused(tables.load_detections(spark, SF)))
-
-
-def test_row_maps_fused_equals_staged(spark):
-    fin = entry._grid_final(spark, SF).filter(F.col("cell_type") != "empty")
-    staged = _maps_str(grid.grid_to_row_maps(grid.expand_spans(fin)))
-    fused = _maps_str(grid_fused.row_maps_fused(tables.load_detections(spark, SF)))
-    _same(staged, fused)
+    _equals_oracle(maps, oracles_data.grid_row_maps_sql(TAG))
 
 
 def test_fused_handles_missing_band_family(spark):

@@ -144,6 +144,29 @@ def test_apply_actions_passthrough_and_chain(spark):
             assert r.rotation_deg_after == 0
 
 
+def test_apply_actions_on_real_skew(spark):
+    """Pixel-derived skew is fractional: rows without a deskew action
+    pass it through unchanged, and rows with one report 0."""
+    import __spark_entry__ as entry
+    from pdf2ontology_spark.operators import condition, media
+
+    sf = "/root/testdata/sf0.001"
+    blobs = entry._blobs(spark, sf)
+    assessed = condition.assess_media_real(entry._spans_m(spark, sf), blobs)
+    skew = {(r.doc_id, r.offset): r.skew_deg for r in assessed.collect()}
+    out = media.apply_actions(assessed, blobs).collect()
+    assert len(out) == len(skew)
+    n_fractional = 0
+    for r in out:
+        before = skew[(r.doc_id, r.offset)]
+        if "deskew" in r.applied_joined.split("|"):
+            assert r.skew_deg_after == 0.0
+        else:
+            assert r.skew_deg_after == before
+            n_fractional += before != int(before)
+    assert n_fractional, "fixture must pass fractional skew through"
+
+
 def test_stream_dedup_first_seen_stateful(spark, tmp_path):
     """applyInPandasWithState dedup: duplicates are dropped within a
     batch, and state survives a RESTART so re-crawled docs are dropped
