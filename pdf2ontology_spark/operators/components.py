@@ -102,6 +102,23 @@ def _gather_components(sym: DataFrame) -> DataFrame:
     return sym.coalesce(1).mapInPandas(_union_find("node", "component"), schema)
 
 
+def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """(a, b) and (b, a) for every edge, self-loops dropped, deduplicated.
+    One explode over the two orientations (the ``graph.mentions`` idiom),
+    not a union of two selects: a union evaluates ``edges``' whole
+    upstream plan once per branch."""
+    both = F.array(
+        F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
+        F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
+    )
+    return (
+        edges.select(F.explode(both).alias("e"))
+        .select("e.a", "e.b")
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
 def connected_components(
     edges: DataFrame,
     src: str = "src",
@@ -123,24 +140,14 @@ def connected_components(
     reps), so production corpora take the gather path. Results under
     ``BROADCAST_THRESHOLD`` edges additionally carry a broadcast hint
     so the caller's label join skips its shuffle."""
-    sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .unionByName(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    # materialize the edge list ONCE: every consumer (size probe, loop
-    # rounds, gather) re-evaluates the whole upstream pair-generation
-    # plan (LSH banding included) without it — measured as the CC step
-    # costing 15s for a 12-edge input at sf0.1. Lazy checkpoint + count
-    # = one materializing pass instead of eager + count. Cost ledger on
-    # the LARGE-graph path: vs round 6 this adds one local-disk
-    # materialization of the raw 2|E| list (the star forest is then
-    # checkpointed from it without re-running the upstream pipeline) —
-    # the price of the size probe that buys the gather short-circuit;
-    # entity-linking bridge graphs take the gather path long before
-    # that write is noticeable.
-    sym = sym.localCheckpoint(eager=False)
+    # materialize the symmetric edge list ONCE: every consumer (size
+    # probe, loop rounds, gather) would otherwise re-evaluate the whole
+    # upstream pair-generation plan (LSH banding included). With the
+    # single-pass ``_symmetrize`` the lazy checkpoint + count runs that
+    # upstream plan exactly once. On the LARGE-graph path this costs
+    # one local-disk write of the 2|E| list — the price of the size
+    # probe that buys the gather short-circuit.
+    sym = _symmetrize(edges, src, dst).localCheckpoint(eager=False)
     n_edges = sym.count()
     if n_edges <= gather_threshold:
         # tiny graph: the per-partition contraction machinery (a python
@@ -151,11 +158,7 @@ def connected_components(
             labels = labels.hint("broadcast")
         return labels
     star = _local_contract(sym)
-    sym = (
-        star.unionByName(star.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    sym = _symmetrize(star, "a", "b").localCheckpoint(eager=True)
     labels = (
         sym.select(F.col("a").alias("node"))
         .distinct()

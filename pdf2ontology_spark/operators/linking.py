@@ -13,16 +13,19 @@ Pipeline (all DataFrame ops):
    (graph.canonical_key_col) — value-like types (numeric/date) keep
    exact keys and never enter fuzzy blocking.
 2. exact-key contraction: every (key, entity_type) group is collapsed to
-   its min-surface_id representative with ONE window/groupBy — exact-key
-   pairs form cliques, so contracting them first yields identical
-   connected components while the iterative CC loop only ever sees the
-   (tiny) fuzzy bridge edges between group representatives. This removed
-   the O(group²) exact self-join pairs and most CC work (round-1 profile:
-   canonicalize was the most expensive bench query).
+   its min-surface_id representative with ONE window (``rep_id``); the
+   representatives are then the narrow filter surface_id == rep_id.
+   Exact-key pairs form cliques, so contracting them first yields
+   identical connected components while CC only ever sees the (tiny)
+   fuzzy bridge edges between group representatives. This removed the
+   O(group²) exact self-join pairs and most CC work.
 3. fuzzy pairs between representatives = MinHash-LSH band match AND
    char-3-gram Jaccard >= threshold. LSH bounds the self-join; the
    Jaccard check removes banding false positives. Signatures are
-   computed once per distinct key, not once per surface.
+   computed once per distinct key, in the row (one ``array_min`` per
+   slot over the key's gram array, no shuffle), and the band join
+   carries the gram arrays, so the size prefilter and the exact Jaccard
+   run inline on its output before one pair ``distinct``.
 4. connected components (components.connected_components) over the
    bridge edges — iterative self-joins, the north-rule canonicalization.
 5. canonical_nodes/canonical_edges: groupBy component, representative =
@@ -81,111 +84,86 @@ def _fuzzy_base(reps: DataFrame) -> DataFrame:
     )
 
 
-def banded_candidates(fuzzy_base: DataFrame, with_sizes: bool = False) -> DataFrame:
-    """Raw LSH band-collision pairs (id_a < id_b) between reps — the
-    blocking stage only, before any verification. ``with_sizes=True``
-    additionally carries |grams| through the band rows as (na, nb) —
-    one extra int per shuffled band row, which lets the size prefilter
-    run inline on the join output instead of via two dimension joins
-    (round-7: those joins were two of the candidate pipeline's ~10
-    shuffle stages, pure overhead at every scale since the band rows
-    carry the int anyway)."""
-    sh = fuzzy_base.select(
-        "surface_id", "entity_type", "grams", F.explode("grams").alias("shingle")
-    )
-    # LSH_K independent md5('i:'||gram) digests per gram — NOT the
-    # document dedup's one-digest mix family: the surfaces input is
-    # tiny (distinct normalized keys, ~8 grams each) so the digest
-    # cost is immaterial here, while the recall of specific near-dup
-    # name pairs is fixture-pinned (tests/test_linking.py) and the
-    # banding draw of this family is the one those pins encode.
-    # SQL-string aggregates: identical md5('i:'||gram) digests, one
-    # parse per slot instead of ~6 py4j round-trips (see dedup.simhash)
-    aggs = [
-        F.expr(f"min(substring(md5(concat('{i}:', shingle)), 1, 16)) AS mh_{i}")
-        for i in range(LSH_K)
-    ]
-    # |grams| for free: sh is one row per DISTINCT gram, so count(*)
-    # per surface is exactly size(grams)
-    sig = sh.groupBy("surface_id", "entity_type").agg(
-        *aggs, F.count("*").cast("int").alias("ng")
-    )
+def _band_join(fuzzy_base: DataFrame) -> DataFrame:
+    """Every LSH band collision (id_a < id_b) between reps, one row per
+    colliding band, carrying both sides' gram arrays (ga, gb) so the
+    size prefilter and the exact Jaccard run inline on the join output.
+    The MinHash signature is computed in the row: ``grams`` is already a
+    distinct array, so each slot is an ``array_min`` over it — no
+    explode and no groupBy(surface_id) shuffle. LSH_K independent
+    md5('i:'||gram) digests per gram — NOT the document dedup's
+    one-digest mix family: the surfaces input is tiny (distinct
+    normalized keys, ~8 grams each) so the digest cost is immaterial,
+    while the recall of specific near-dup name pairs is fixture-pinned
+    (tests/test_linking.py) and the banding draw of this family is the
+    one those pins encode. SQL strings: one parse per band instead of
+    ~6 py4j round-trips per slot (see dedup.simhash)."""
     r = LSH_K // LSH_BANDS
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(F.concat_ws("|", *[F.col(f"mh_{b * r + j}") for j in range(r)])).alias(
-                "band_key"
-            ),
-        )
+    slot = "array_min(transform(grams, x -> substring(md5(concat('{}:', x)), 1, 16)))"
+    band_keys = ", ".join(
+        f"named_struct('band', {b}, 'band_key', md5(concat_ws('|', "
+        + ", ".join(slot.format(b * r + j) for j in range(r))
+        + ")))"
         for b in range(LSH_BANDS)
-    ]
-    bands = sig.select(
-        "surface_id", "entity_type", "ng", F.explode(F.array(*band_structs)).alias("bb")
-    ).select("surface_id", "entity_type", "ng", "bb.band", "bb.band_key")
+    )
+    bands = fuzzy_base.select(
+        "surface_id", "entity_type", "grams", F.expr(f"explode(array({band_keys}))").alias("bb")
+    ).select("surface_id", "entity_type", "grams", "bb.*")
 
-    a = bands.select(
-        F.col("surface_id").alias("id_a"), F.col("ng").alias("na"),
-        "entity_type", "band", "band_key",
-    )
-    b = bands.select(
-        F.col("surface_id").alias("id_b"), F.col("ng").alias("nb"),
-        "entity_type", "band", "band_key",
-    )
-    joined = a.join(b, ["entity_type", "band", "band_key"]).filter(
+    def side(s: str) -> DataFrame:
+        return bands.select(
+            F.col("surface_id").alias(f"id_{s}"), F.col("grams").alias(f"g{s}"),
+            "entity_type", "band", "band_key",
+        )
+
+    return side("a").join(side("b"), ["entity_type", "band", "band_key"]).filter(
         F.col("id_a") < F.col("id_b")
     )
-    cols = ["id_a", "id_b", "na", "nb"] if with_sizes else ["id_a", "id_b"]
-    return joined.select(*cols).distinct()
+
+
+def _size_ok() -> Column:
+    """The SIZE prefilter. Jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|), so
+    ``min >= t*max`` (epsilon-slack so float rounding can only
+    over-admit, never wrongly drop) is a NECESSARY condition for the
+    threshold — a pure prefilter that saves the array set operations on
+    mixed-length band collisions."""
+    na, nb = F.size("ga"), F.size("gb")
+    return F.least(na, nb) >= F.lit(JACCARD_THRESHOLD) * F.greatest(na, nb) - F.lit(1e-9)
+
+
+def banded_candidates(fuzzy_base: DataFrame) -> DataFrame:
+    """Raw LSH band-collision pairs (id_a < id_b) between reps — the
+    blocking stage only, before any verification."""
+    return _band_join(fuzzy_base).select("id_a", "id_b").distinct()
 
 
 def prefiltered_candidates(fuzzy_base: DataFrame) -> DataFrame:
-    """Band candidates passed through the SIZE prefilter.
-    Jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|), so ``min >= t*max``
-    (epsilon-slack so float rounding can only over-admit, never wrongly
-    drop) is a NECESSARY condition for the threshold — a pure
-    prefilter: every surviving pair still gets the exact Jaccard
-    verification, so no approximation (hash or otherwise) can ever
-    create a false link. The sizes ride along the band rows
-    (``with_sizes`` — one int, not the wide gram arrays), so the filter
-    is inline on the band join's output: filtering before or after the
-    pair ``distinct`` is equivalent because it depends only on
-    (id_a, id_b)-functional values."""
-    return (
-        banded_candidates(fuzzy_base, with_sizes=True)
-        .filter(
-            F.least("na", "nb")
-            >= F.lit(JACCARD_THRESHOLD) * F.greatest("na", "nb") - F.lit(1e-9)
-        )
-        .select("id_a", "id_b")
-    )
+    """Band candidates that pass the size prefilter (``_size_ok``) —
+    the pairs ``candidate_pairs`` runs the exact Jaccard on. The filter
+    depends only on (id_a, id_b)-functional values, so applying it
+    before the pair ``distinct`` is equivalent to applying it after."""
+    return _band_join(fuzzy_base).filter(_size_ok()).select("id_a", "id_b").distinct()
 
 
 def candidate_pairs(reps: DataFrame) -> DataFrame:
     """Fuzzy (id_a, id_b) bridge links between exact-group reps, within
     entity_type. Only non-value types; minhash over char-3-grams of the
-    key, banded (LSH_BANDS bands of LSH_K/LSH_BANDS rows); band matches
-    pass the size prefilter (``prefiltered_candidates``) and are then
-    verified with exact Jaccard >= threshold.
+    key, banded (LSH_BANDS bands of LSH_K/LSH_BANDS rows). The band join
+    carries the gram arrays, so the size prefilter and the exact
+    Jaccard >= threshold check run inline on its output, followed by
+    ONE pair ``distinct`` — no dimension joins back to the grams.
 
     ``reps`` needs (surface_id, entity_type, key) — one row per distinct
     key (the exact-group representative).
     """
-    fuzzy_base = _fuzzy_base(reps)
-    pre = prefiltered_candidates(fuzzy_base)
-    grams_dim = fuzzy_base.select("surface_id", "grams")
-    verified = (
-        pre.join(grams_dim.withColumnRenamed("surface_id", "id_a").withColumnRenamed("grams", "ga"), "id_a")
-        .join(grams_dim.withColumnRenamed("surface_id", "id_b").withColumnRenamed("grams", "gb"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("ga", "gb"))
-            / F.size(F.array_union("ga", "gb")),
-        )
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
+    jaccard = F.size(F.array_intersect("ga", "gb")) / F.size(F.array_union("ga", "gb"))
+    return (
+        _band_join(_fuzzy_base(reps))
+        .filter(_size_ok())
+        .filter(jaccard >= JACCARD_THRESHOLD)
         .select("id_a", "id_b")
+        .distinct()
     )
-    return verified.distinct()
 
 
 def canonicalize(triples: DataFrame) -> dict[str, DataFrame]:
@@ -198,12 +176,11 @@ def canonicalize(triples: DataFrame) -> dict[str, DataFrame]:
     surface_id of its exact group.
     """
     surf = exact_contract(surfaces(triples)).cache()
-    # one aggregation instead of projecting the window result and
-    # re-shuffling it through a distinct (round 7): min surface_id per
-    # exact (key, entity_type) group IS the group's rep_id
-    reps = surf.groupBy("key", "entity_type").agg(
-        F.min("surface_id").alias("surface_id")
-    ).select("surface_id", "entity_type", "key")
+    # rep_id IS the min surface_id of the exact (key, entity_type) group,
+    # so the rep rows are a narrow filter — no second aggregation
+    reps = surf.filter(F.col("surface_id") == F.col("rep_id")).select(
+        "surface_id", "entity_type", "key"
+    )
     pairs = candidate_pairs(reps)
     comp = components.connected_components(pairs, "id_a", "id_b")
     mapping = (

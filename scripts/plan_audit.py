@@ -2,6 +2,9 @@
 queries and grep for the properties that matter at 100 TB —
 PushedFilters reaching the scan, pruned ReadSchema, WholeStageCodegen
 coverage, exchange (shuffle) count, broadcast usage. Writes PLANS.md.
+
+Usage: python scripts/plan_audit.py [name ...] — with names, only those
+queries' sections of PLANS.md are rewritten (a new name is appended).
 """
 
 from __future__ import annotations
@@ -46,12 +49,7 @@ def plan_of(df) -> str:
     return buf.getvalue()
 
 
-def main() -> None:
-    spark = get_spark(shuffle_partitions=16)
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry.queries()
-    out = [
-        """# PLANS.md — physical-plan audit (sf0.01, local[32] conf)
+HEADER = """# PLANS.md — physical-plan audit (sf0.01, local[32] conf)
 
 How to read this (the 100 TB checklist):
 - **PushedFilters** at every parquet scan — kind/key predicates reach
@@ -78,29 +76,48 @@ How to read this (the 100 TB checklist):
   connected-components union-find. No row-at-a-time BatchEvalPython
   anywhere.
 """
-    ]
-    for name in AUDIT:
-        plan = plan_of(qs[name](spark, SF))
-        n_exchange = len(re.findall(r"\bExchange\b", plan))
-        n_bcast = len(re.findall(r"BroadcastExchange|BroadcastHashJoin", plan))
-        pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-        pushed_nonempty = [p for p in pushed if p.strip()]
-        scans = re.findall(r"ReadSchema: ([^\n]+)", plan)
-        out.append(f"## {name}\n")
-        n_scans = len(re.findall(r"\(\d+\) Scan parquet", plan))
-        out.append(
-            f"- parquet scans: {n_scans}; "
-            f"exchanges (raw matches, 2x per node): {n_exchange}; "
-            f"broadcast joins/exchanges: {n_bcast}\n"
-            f"- scans with pushed filters: {len(pushed_nonempty)}/{len(pushed)}\n"
-        )
-        for s in scans[:4]:
-            out.append(f"- ReadSchema: `{s[:160]}`\n")
-        out.append("\n<details><summary>full plan</summary>\n\n```\n" + plan + "```\n</details>\n")
+
+
+def section(name: str, plan: str) -> str:
+    """One PLANS.md section: the headline counts, then the full plan."""
+    out = []
+    n_exchange = len(re.findall(r"\bExchange\b", plan))
+    n_bcast = len(re.findall(r"BroadcastExchange|BroadcastHashJoin", plan))
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    pushed_nonempty = [p for p in pushed if p.strip()]
+    scans = re.findall(r"ReadSchema: ([^\n]+)", plan)
+    out.append(f"## {name}\n")
+    n_scans = len(re.findall(r"\(\d+\) Scan parquet", plan))
+    out.append(
+        f"- parquet scans: {n_scans}; "
+        f"exchanges (raw matches, 2x per node): {n_exchange}; "
+        f"broadcast joins/exchanges: {n_bcast}\n"
+        f"- scans with pushed filters: {len(pushed_nonempty)}/{len(pushed)}\n"
+    )
+    for s in scans[:4]:
+        out.append(f"- ReadSchema: `{s[:160]}`\n")
+    out.append("\n<details><summary>full plan</summary>\n\n```\n" + plan + "```\n</details>\n")
+    return "\n".join(out) + "\n"
+
+
+def main() -> None:
+    only = sys.argv[1:]
+    qs = entry.queries()
+    head, sections = HEADER + "\n", {}
+    if only:
+        with open("PLANS.md") as f:
+            chunks = re.split(r"(?m)^(?=## )", f.read())
+        head = chunks[0]
+        # every section ends with one blank line, as a fresh one does
+        sections = {c.split("\n", 1)[0][3:]: c.rstrip("\n") + "\n\n" for c in chunks[1:]}
+    spark = get_spark(shuffle_partitions=16)
+    spark.sparkContext.setLogLevel("ERROR")
+    for name in only or AUDIT:
+        sections[name] = section(name, plan_of(qs[name](spark, SF)))
     spark.stop()
     with open("PLANS.md", "w") as f:
-        f.write("\n".join(out))
-    print("wrote PLANS.md")
+        f.write((head + "".join(sections.values())).rstrip("\n") + "\n")
+    print(f"wrote PLANS.md ({len(only or AUDIT)} sections audited)")
 
 
 if __name__ == "__main__":

@@ -4,12 +4,15 @@ The typo variants (e.g. "Samsonn AG") are reachable ONLY through the
 MinHash-LSH + Jaccard path, so this also proves the fuzzy blocking is
 load-bearing."""
 
+import hashlib
 from itertools import combinations
 
-from pdf2ontology_spark.operators import components, linking
+from pdf2ontology_spark.operators import components, graph, linking
 from pdf2ontology_spark.plans.pipeline import run_kg_pipeline
 from pdf2ontology_spark.sources import tables
 from pdf2ontology_spark import synth
+
+SF0001 = "/root/testdata/sf0.001"  # TESTDATA.md
 
 
 def _pairs(groups: dict) -> set:
@@ -46,8 +49,37 @@ def test_connected_components_gather_equals_loop(spark):
     }
 
 
+def test_connected_components_reads_edges_once(spark):
+    """The edge list's upstream plan runs once per call, on the gather
+    path and on the iterative loop path: a counting pass in front of
+    the edges sees each input row exactly once, and the labels stay
+    the same."""
+    rows = [("d", "c"), ("c", "b"), ("b", "a"), ("m", "n"), ("z", "q")]
+    read = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            read.add(len(pdf))
+            yield pdf
+
+    edges = spark.createDataFrame(rows, "src string, dst string").mapInPandas(
+        count_rows, "src string, dst string"
+    )
+    want = {"a": "a", "b": "a", "c": "a", "d": "a", "m": "m", "n": "m", "q": "q", "z": "q"}
+    for threshold in (2_000_000, 0):
+        before = read.value
+        got = {
+            r.node: r.component
+            for r in components.connected_components(
+                edges, gather_threshold=threshold
+            ).collect()
+        }
+        assert got == want, threshold
+        assert read.value - before == len(rows), (threshold, read.value - before)
+
+
 def test_org_clusters_pairwise_exact(spark):
-    trips = run_kg_pipeline(spark, "/root/testdata/sf0.001")["triples"]
+    trips = run_kg_pipeline(spark, SF0001)["triples"]
     out = linking.canonicalize(trips)
     mapping = (
         out["mapping"].filter("entity_type = 'organization'").select("name", "canonical_id")
@@ -147,10 +179,92 @@ def test_prefilter_never_drops_true_pairs(spark):
 
 
 def test_canonical_graph_integrity(spark):
-    trips = run_kg_pipeline(spark, "/root/testdata/sf0.001")["triples"]
+    trips = run_kg_pipeline(spark, SF0001)["triples"]
     out = linking.canonicalize(trips)
     nodes, edges = out["nodes"], out["edges"]
     node_ids = {r.canonical_id for r in nodes.select("canonical_id").collect()}
     for col in ("subject_id", "object_id"):
         missing = {r[0] for r in edges.select(col).distinct().collect()} - node_ids
         assert not missing
+
+
+def _grams(key: str) -> set:
+    """Distinct character 3-grams; a key shorter than 3 is its own gram."""
+    return {key[i : i + 3] for i in range(max(len(key) - 2, 1))}
+
+
+def _reference_lsh(rows) -> tuple[set, set]:
+    """Pure-Python MinHash-LSH over (surface_id, entity_type, key) rep
+    rows: slot i = min over grams of md5(f"{i}:{gram}")[:16], band key
+    = md5 of its slots joined by "|". Returns (band-collision pairs,
+    the pairs among them with char-3-gram Jaccard >= threshold)."""
+    r = linking.LSH_K // linking.LSH_BANDS
+    grams, buckets = {}, {}
+    for sid, etype, key in rows:
+        if etype in graph.VALUE_TYPES:
+            continue
+        g = grams[sid] = _grams(key)
+        sig = [
+            min(hashlib.md5(f"{i}:{x}".encode()).hexdigest()[:16] for x in g)
+            for i in range(linking.LSH_K)
+        ]
+        for b in range(linking.LSH_BANDS):
+            band_key = hashlib.md5("|".join(sig[b * r : (b + 1) * r]).encode()).hexdigest()
+            buckets.setdefault((etype, b, band_key), []).append(sid)
+    collisions = {
+        (a, b) for ids in buckets.values() for a in ids for b in ids if a < b
+    }
+    verified = {
+        (a, b)
+        for a, b in collisions
+        if len(grams[a] & grams[b]) / len(grams[a] | grams[b]) >= linking.JACCARD_THRESHOLD
+    }
+    return collisions, verified
+
+
+def _assert_matches_reference(reps):
+    collisions, verified = _reference_lsh(
+        [(r.surface_id, r.entity_type, r.key) for r in reps.collect()]
+    )
+    banded = linking.banded_candidates(linking._fuzzy_base(reps)).collect()
+    assert {(r.id_a, r.id_b) for r in banded} == collisions
+    assert {(r.id_a, r.id_b) for r in linking.candidate_pairs(reps).collect()} == verified
+    return collisions, verified
+
+
+def test_lsh_equals_python_reference_synth(spark):
+    collisions, verified = _assert_matches_reference(_synth_reps(spark, 600))
+    assert verified and len(verified) < len(collisions)
+
+
+def test_lsh_equals_python_reference_sf0001(spark):
+    """On the sf0.001 corpus's exact-group representatives (min
+    surface_id per normalized key and type, picked in Python)."""
+    trips = run_kg_pipeline(spark, SF0001)["triples"]
+    reps: dict = {}
+    for r in linking.surfaces(trips).select("surface_id", "entity_type", "key").collect():
+        k = (r.key, r.entity_type)
+        reps[k] = min(reps.get(k, r.surface_id), r.surface_id)
+    rows = [(sid, etype, key) for (key, etype), sid in reps.items()]
+    df = spark.createDataFrame(rows, "surface_id string, entity_type string, key string")
+    _, verified = _assert_matches_reference(df)
+    assert verified
+
+
+def test_canonicalize_job_budget(spark):
+    """canonicalize + writing its nodes runs a bounded number of Spark
+    jobs on materialized triples: the signature is computed in the row,
+    the verification rides the band join, and the components input is
+    read once. 12 jobs at the time of writing; 14 leaves slack for a
+    planner change, well under the 30 of a per-stage-shuffle design."""
+    trips = run_kg_pipeline(spark, SF0001)["triples"].localCheckpoint()
+    sc = spark.sparkContext
+    group = "canonicalize-job-budget"
+    sc.setJobGroup(group, "canonicalize job budget")
+    try:
+        out = linking.canonicalize(trips)
+        out["nodes"].write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 14, len(jobs)
