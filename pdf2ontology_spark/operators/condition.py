@@ -2,11 +2,11 @@
 Spark-native form of the reference's document-condition stage:
 
 - CV metric extraction (RotationDetector/SkewDetector/QualityAssessor,
-  /root/reference/src/utils/document_analysis_utils.py:103-528) — the
-  metrics here are sha256-derived DETERMINISTIC STUBS (no image libs in
-  this container, same stance as operators/media.py); on a real cluster
-  the metric columns come from the media_features pandas UDF instead,
-  and everything downstream is unchanged.
+  /root/reference/src/utils/document_analysis_utils.py:103-528) — in
+  ``assess_media`` the metrics are sha256-derived DETERMINISTIC STUBS;
+  ``assess_media_real`` reads the real pixel metrics from
+  ``media.assess_media_full`` instead, and everything downstream is
+  unchanged.
 - quality composite 0.3*contrast + 0.2*brightness + 0.3*sharpness +
   0.2*(1-noise) (document_analysis_utils.py:467-473, SURVEY A14);
 - condition -> action mapping + fixed priority ordering 1:rotate ..
@@ -23,13 +23,45 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from pdf2ontology_spark import functions as fn
-
 SKIP_QUALITY = 0.8  # document_preprocessing_chain.py:164-171
 
 
 def _hexval(h: Column, start: int, n: int) -> Column:
     return F.conv(F.substring(h, start, n), 16, 10).cast("long")
+
+
+def _raw_actions(
+    rotation: Column,
+    skew: Column,
+    contrast: Column,
+    brightness: Column,
+    sharpness: Column,
+    noise: Column,
+) -> Column:
+    """Condition -> action rules with the REFERENCE's exact thresholds
+    (document_analysis_utils.py:450-464 + :768): rotation != 0 ->
+    rotate, abs(skew) >= 2.0 -> deskew, contrast < 0.4 ->
+    enhance_contrast, brightness < 0.3 -> gamma_correction (its own
+    action, not a contrast clause), noise > 0.6 -> denoise, sharpness
+    < 0.3 -> sharpen.
+
+    The concat emits the actions in the O6 priority order (rotate 1,
+    deskew 2, enhance_contrast/gamma 5 — alphabetical tie — denoise 6,
+    sharpen 7) with no duplicates, so ``fn.priority_sorted_actions``
+    is the identity on it and the per-row interpreted sort is elided
+    (pinned over every rule combination by tests/test_functions.py)."""
+
+    def rule(cond: Column, action: str) -> Column:
+        return F.when(cond, F.array(F.lit(action))).otherwise(F.array())
+
+    return F.concat(
+        rule(rotation != 0, "rotate"),
+        rule(F.abs(skew) >= 2, "deskew"),
+        rule(contrast < 0.4, "enhance_contrast"),
+        rule(brightness < 0.3, "gamma_correction"),
+        rule(noise > 0.6, "denoise"),
+        rule(sharpness < 0.3, "sharpen"),
+    )
 
 
 # cache of the UNRESOLVED assess columns (pure expression ASTs, no
@@ -53,33 +85,14 @@ def _assess_cols() -> list[Column]:
     quality = F.round(
         (3 * ci + 2 * bi + 3 * si + 2 * (65535 - ni)) / 655350.0, 6
     )
-    # thresholds are the REFERENCE's exact ones
-    # (document_analysis_utils.py:450-464 + :768): contrast<0.4 ->
-    # enhance_contrast, brightness<0.3 -> gamma_correction (its own
-    # action, not a contrast clause), sharpness<0.3 -> sharpen,
-    # noise>0.6 -> denoise, abs(skew)>=2.0 -> deskew
     brightness = F.round(bi / 65535.0, 6)
     contrast = F.round(ci / 65535.0, 6)
     sharpness = F.round(si / 65535.0, 6)
     noise = F.round(ni / 65535.0, 6)
-    raw_actions = F.concat(
-        F.when(rotation_deg != 0, F.array(F.lit("rotate"))).otherwise(F.array()),
-        F.when(F.abs(skew_deg) >= 2, F.array(F.lit("deskew"))).otherwise(F.array()),
-        F.when(contrast < 0.4, F.array(F.lit("enhance_contrast"))).otherwise(F.array()),
-        F.when(brightness < 0.3, F.array(F.lit("gamma_correction"))).otherwise(F.array()),
-        F.when(noise > 0.6, F.array(F.lit("denoise"))).otherwise(F.array()),
-        F.when(sharpness < 0.3, F.array(F.lit("sharpen"))).otherwise(F.array()),
-    )
+    raw_actions = _raw_actions(rotation_deg, skew_deg, contrast, brightness, sharpness, noise)
     needs = (quality <= SKIP_QUALITY) & (F.size(raw_actions) > 0)
     # skip predicate: good spans keep an EMPTY plan (pass-through rows,
-    # same shape — the chain's copy-through at :169-171).
-    # The concat above already emits actions in the O6 priority order
-    # (rotate 1, deskew 2, enhance_contrast/gamma 5 — alphabetical tie
-    # — denoise 6, sharpen 7) with no duplicates, so
-    # fn.priority_sorted_actions(raw_actions) is the identity here and
-    # the per-row interpreted sort is elided (verified exhaustively on
-    # the corpus and by the shared assess oracle; the O6 operator
-    # itself stays in functions/__init__.py with its own tests).
+    # same shape — the chain's copy-through at :169-171)
     _ASSESS_COLS = [
         F.col("doc_id"),
         F.col("offset"),
@@ -116,12 +129,13 @@ def assess_media_real(spans: DataFrame, blobs: DataFrame | None = None) -> DataF
     mask -> morphological-gradient edges -> Hough accumulation -> angle
     statistics; document_analysis_utils.py:103-412). All metrics come
     from ONE Arrow stage over one raster decode
-    (``media.assess_media_full``); only the byte->pixel decode itself
-    remains the labeled synthetic-raster stub. Thresholds, the
-    0.3/0.2/0.3/0.2 composite (inside ``overall_score``), the skip
-    predicate, and the priority-ordered plan are identical to
-    ``assess_media``; skew_deg is now a double (the reference's
-    SkewAnalysisResult.skew_angle is a float).
+    (``media.assess_media_full``), over rasters decoded from the real
+    PNG bytes by ``png_codec`` (the closed-form fixture raster when no
+    blob store is given). Thresholds, the 0.3/0.2/0.3/0.2 composite
+    (inside ``overall_score``), the skip predicate, and the
+    priority-ordered plan are identical to ``assess_media``; skew_deg
+    is now a double (the reference's SkewAnalysisResult.skew_angle is a
+    float).
 
     Output: (doc_id, offset, media_ref, contrast_score,
     brightness_score, sharpness_score, noise_level, quality, skew_deg,
@@ -134,21 +148,13 @@ def assess_media_real(spans: DataFrame, blobs: DataFrame | None = None) -> DataF
         .withColumnRenamed("overall_score", "quality")
         .drop("text_orientation", "edge_orientation")
     )
-    raw_actions = F.concat(
-        F.when(F.col("rotation_deg") != 0, F.array(F.lit("rotate"))).otherwise(F.array()),
-        F.when(F.abs(F.col("skew_deg")) >= 2, F.array(F.lit("deskew"))).otherwise(
-            F.array()
-        ),
-        F.when(F.col("contrast_score") < 0.4, F.array(F.lit("enhance_contrast"))).otherwise(
-            F.array()
-        ),
-        F.when(
-            F.col("brightness_score") < 0.3, F.array(F.lit("gamma_correction"))
-        ).otherwise(F.array()),
-        F.when(F.col("noise_level") > 0.6, F.array(F.lit("denoise"))).otherwise(F.array()),
-        F.when(F.col("sharpness_score") < 0.3, F.array(F.lit("sharpen"))).otherwise(
-            F.array()
-        ),
+    raw_actions = _raw_actions(
+        F.col("rotation_deg"),
+        F.col("skew_deg"),
+        F.col("contrast_score"),
+        F.col("brightness_score"),
+        F.col("sharpness_score"),
+        F.col("noise_level"),
     )
     df = df.withColumn(
         "needs_processing",
@@ -156,9 +162,9 @@ def assess_media_real(spans: DataFrame, blobs: DataFrame | None = None) -> DataF
     )
     return df.withColumn(
         "actions",
-        F.when(
-            F.col("needs_processing"), fn.priority_sorted_actions(raw_actions)
-        ).otherwise(F.array().cast("array<string>")),
+        F.when(F.col("needs_processing"), raw_actions).otherwise(
+            F.array().cast("array<string>")
+        ),
     ).drop("issues_joined")
 
 

@@ -2,9 +2,9 @@
 
 The reference's two remaining CV analyzer families
 (/root/reference/src/utils/document_analysis_utils.py:103-304 RotationDetector,
-:311-412 SkewDetector) ported to pure numpy over the deterministic
-synthetic raster (media.synth_raster — the byte fetch/decode stays the
-labeled stub; everything from pixels onward is real):
+:311-412 SkewDetector) ported to pure numpy over the
+decoded raster (png_codec, or the closed-form raster.synth_raster
+fixture with identical pixels; everything from pixels onward is real):
 
 - shared edge stage: adaptive-mean binarization (25*g < S25 - 25*C, the
   exact-integer form of cv2.adaptiveThreshold's mean-C — the reference's

@@ -15,7 +15,7 @@ Portability notes:
 
 from __future__ import annotations
 
-from pdf2ontology_spark import oracles
+from pdf2ontology_spark import oracles, raster
 from pdf2ontology_spark.operators.dedup import LSH_BANDS, MINHASH_K, SHINGLE_W, SIMHASH_BITS
 from pdf2ontology_spark.operators.text import DE_STOP, EN_STOP, TOKEN_RE
 
@@ -609,10 +609,8 @@ def media_features_sql(tag: str = "sf0.01", h: int | None = None, w: int | None 
     pixel pattern (the Spark side computes it from pixels DECODED out of
     the genuine PNG bytes — the two meet only if chunk parse, inflate,
     defilter and the bit packing are all correct)."""
-    from pdf2ontology_spark.operators.media import QUALITY_GRID_H, QUALITY_GRID_W
-
-    h = QUALITY_GRID_H if h is None else h
-    w = QUALITY_GRID_W if w is None else w
+    h = raster.GRID_H if h is None else h
+    w = raster.GRID_W if w is None else w
     return f"""
 {_ahash_ctes(tag, h, w)}
 SELECT doc_id, media_ref, off AS "offset",
@@ -631,10 +629,8 @@ def media_quality_sql(tag: str = "sf0.01", h: int | None = None, w: int | None =
     exact integer sums as the numpy side. This genuinely re-verifies
     the engine's numpy kernel math: the two implementations share only
     the pattern definition and the published reference formulas."""
-    from pdf2ontology_spark.operators.media import QUALITY_GRID_H, QUALITY_GRID_W
-
-    h = QUALITY_GRID_H if h is None else h
-    w = QUALITY_GRID_W if w is None else w
+    h = raster.GRID_H if h is None else h
+    w = raster.GRID_W if w is None else w
 
     def v(xe: str, ye: str) -> str:
         # the synth_raster pixel: lo + (a*x + b*y + c*x*y + d) % (rng+1)
@@ -710,10 +706,8 @@ def content_layout_sql(tag: str = "sf0.01", h: int | None = None, w: int | None 
     sum, valleys via the integer-reformulated threshold (S_i * w <
     total * 0.3 — the 1/k, 1/(w*k) normalizations cancel), non-valley
     runs via gaps-and-islands, columns = runs wider than w//10."""
-    from pdf2ontology_spark.operators.media import QUALITY_GRID_H, QUALITY_GRID_W
-
-    h = QUALITY_GRID_H if h is None else h
-    w = QUALITY_GRID_W if w is None else w
+    h = raster.GRID_H if h is None else h
+    w = raster.GRID_W if w is None else w
     k = max(5, min(20, w // 50))
     assert k % 2 == 1, "even smoothing kernels need asymmetric-window SQL"
     m = (k - 1) // 2
@@ -931,10 +925,8 @@ def media_stats_sql(tag: str = "sf0.01", h: int | None = None, w: int | None = N
     blob in the store parses (n_ok = n_media), dims are the PNG header's
     (uniform corpus raster), one format. The Spark side derives the
     same numbers from the actual per-blob decode verdicts."""
-    from pdf2ontology_spark.operators.media import QUALITY_GRID_H, QUALITY_GRID_W
-
-    h = QUALITY_GRID_H if h is None else h
-    w = QUALITY_GRID_W if w is None else w
+    h = raster.GRID_H if h is None else h
+    w = raster.GRID_W if w is None else w
     return f"""
 WITH {oracles.spans_cte(tag).lstrip()}
 SELECT doc_id, count(*) AS n_media, count(*) AS n_ok,
@@ -1164,10 +1156,9 @@ def preprocessed_media_sql(tag: str = "sf0.01", h: int | None = None, w: int | N
     exposed as the position-weighted checksum + mean the engine emits.
     The sha256 processed_ref state chain is the bytes-pointer twin."""
     from pdf2ontology_spark.operators import imaging
-    from pdf2ontology_spark.operators.media import QUALITY_GRID_H, QUALITY_GRID_W
 
-    h = QUALITY_GRID_H if h is None else h
-    w = QUALITY_GRID_W if w is None else w
+    h = raster.GRID_H if h is None else h
+    w = raster.GRID_W if w is None else w
     # the 90/270 rotate expressions below index a flat pixel list with w
     # as BOTH row strides — only the correct transpose when h == w
     # (mirrors the assert in imaging.rotate_exact)

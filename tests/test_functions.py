@@ -55,6 +55,31 @@ def test_priority_sorted_actions(spark):
     assert df.collect()[0].plan == ["rotate", "crop", "denoise", "sharpen", "unknown_op"]
 
 
+def test_raw_actions_already_priority_sorted(spark):
+    """condition._raw_actions emits its plan in priority order, so both
+    assess paths skip fn.priority_sorted_actions: over all 64 on/off
+    combinations of the six rules the sort is the identity."""
+    import itertools
+
+    from pdf2ontology_spark.operators import condition
+
+    # (off, on) value per rule: rotation, skew, contrast, brightness,
+    # sharpness, noise
+    levels = [(0, 90), (0.0, 5.0), (0.9, 0.1), (0.9, 0.1), (0.9, 0.1), (0.1, 0.9)]
+    combos = itertools.product((0, 1), repeat=6)
+    df = spark.createDataFrame(
+        [tuple(lv[b] for lv, b in zip(levels, bits)) for bits in combos],
+        "rotation int, skew double, contrast double, brightness double, "
+        "sharpness double, noise double",
+    )
+    raw = condition._raw_actions(*[F.col(c) for c in df.columns])
+    rows = df.select(
+        raw.alias("raw"), fn.priority_sorted_actions(raw).alias("sorted")
+    ).collect()
+    assert len({tuple(r.raw) for r in rows}) == 64
+    assert all(r.raw == r.sorted for r in rows)
+
+
 def test_quarantine_split_accounts_for_every_row(spark):
     """F2: invalid rows never throw and never vanish — they land in the
     quarantine side with a reason; good + bad == input."""

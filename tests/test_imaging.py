@@ -86,7 +86,7 @@ def test_batched_chain_bit_identical_to_scalar():
     """The grouped (B, h, w) chain path must equal the per-image path
     bit-for-bit for every kernel and parameter mix — the invariant that
     lets apply_actions run one batched chain per signature group."""
-    from pdf2ontology_spark.operators.media import synth_rasters_batch
+    from pdf2ontology_spark.raster import synth_rasters_batch
 
     refs = [f"media://doc{i}/img{i % 7}" for i in range(23)]
     G = synth_rasters_batch(refs)

@@ -5,6 +5,7 @@ helpers, and the mapInPandas operator around them."""
 import numpy as np
 import pytest
 
+from pdf2ontology_spark import raster
 from pdf2ontology_spark.operators import media
 
 
@@ -68,7 +69,7 @@ def test_assess_quality_flat_image():
 def test_assess_quality_reference_formulas():
     """Spot-check each score against the reference normalizations
     (document_analysis_utils.py:487-528) computed independently."""
-    g = media.synth_raster("some-media-ref")
+    g = raster.synth_raster("some-media-ref")
     m = media.assess_quality_gray(g)
     assert m["contrast_score"] == pytest.approx(min(g.std() / 80.0, 1.0), abs=1e-4)
     lap = media._laplacian_reflect101(g)
@@ -119,7 +120,7 @@ def test_detect_columns_matches_reference_float_impl():
         assert media.detect_columns_gray(g) == _reference_detect_columns(g)
     # synthetic refs too (what the operator actually sees)
     for i in range(60):
-        g = media.synth_raster(f"ref{i}")
+        g = raster.synth_raster(f"ref{i}")
         assert media.detect_columns_gray(g) == _reference_detect_columns(g)
 
 
@@ -143,7 +144,7 @@ def test_content_layout_operator(spark):
     rows = {r.media_ref: r for r in media.content_layout(spans).collect()}
     assert set(rows) == {"m/ref1", "m/ref2"}
     for ref, r in rows.items():
-        g = media.synth_raster(ref)
+        g = raster.synth_raster(ref)
         assert r.column_count == media.detect_columns_gray(g)
         assert r.multi_column == (r.column_count > 1)
         assert abs(r.dark_ratio - (g < 128).mean()) < 1e-4
@@ -154,11 +155,11 @@ def test_batch_paths_match_per_image_reference():
     implementations exactly — rasters, every quality score, the issues
     string, and the column count."""
     refs = [f"batch-ref-{i}" for i in range(300)]
-    G = media.synth_rasters_batch(refs)
+    G = raster.synth_rasters_batch(refs)
     batch = media.assess_quality_batch(G)
     cols = media.detect_columns_batch(G)
     for i, ref in enumerate(refs):
-        g = media.synth_raster(ref)
+        g = raster.synth_raster(ref)
         assert np.array_equal(G[i], g)
         single = media.assess_quality_gray(g)
         for k in ("contrast_score", "brightness_score", "sharpness_score",

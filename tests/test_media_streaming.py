@@ -3,6 +3,7 @@ equivalence with the batch pipeline."""
 
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf2ontology_spark import png_codec, raster
@@ -61,6 +62,55 @@ def test_media_quality_blobs_match_fixture_path(spark):
     fixture = media.media_quality(spans)
     assert with_bytes.exceptAll(fixture).count() == 0
     assert fixture.exceptAll(with_bytes).count() == 0
+
+
+def test_media_salt_balances_gallery_docs(spark):
+    """The composite salt spreads a gallery doc's media: 2 docs x 400
+    media spans plus 400 docs x 2, at 8 shuffle partitions. The rows of
+    media_quality's Arrow stage stay within 1.3x of the mean partition,
+    while the same rows keyed by doc_id alone reach >= 2x (each gallery
+    doc lands whole in one bucket) — the deterministic row histogram
+    behind BENCH/SKEW_r6.md."""
+    rows = [(f"g{d}", i) for d in range(2) for i in range(400)]
+    rows += [(f"d{d}", i) for d in range(400) for i in range(2)]
+    spans = spark.createDataFrame(
+        [(doc, "media", "", f"media://{doc}/{i}.png", i) for doc, i in rows],
+        "doc_id string, kind string, text string, media_ref string, offset int",
+    )
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert n_part == 8
+
+    def max_over_mean(df):
+        sizes = [r["count"] for r in df.groupBy(F.spark_partition_id()).count().collect()]
+        assert sum(sizes) == len(rows)
+        return max(sizes) * n_part / len(rows)
+
+    assert max_over_mean(media.media_quality(spans)) <= 1.3
+    assert max_over_mean(spans.repartition(n_part, F.xxhash64("doc_id"))) >= 2
+
+
+def test_corrupt_png_fails_non_tolerant_operators(spark, tmp_path):
+    """Only media_features quarantines corrupt bytes (F11). The other
+    operators must fail loudly on a truncated PNG and write nothing."""
+    from pdf2ontology_spark.operators import condition
+
+    ref = "media://d1/0.png"
+    good = png_codec.encode_png_gray(raster.synth_raster(ref))
+    spans = spark.createDataFrame(
+        [("d1", "media", "", ref, 0)],
+        "doc_id string, kind string, text string, media_ref string, offset int",
+    )
+    blobs = spark.createDataFrame(
+        [(ref, bytearray(good[:-8]))], "media_ref string, png binary"
+    )
+    for name, df in [
+        ("media_quality", media.media_quality(spans, blobs)),
+        ("apply_actions", media.apply_actions(condition.assess_media(spans), blobs)),
+    ]:
+        out = tmp_path / name
+        with pytest.raises(Exception, match="PngFormatError"):
+            df.write.parquet(str(out))
+        assert not list(out.glob("*.parquet")), f"{name} wrote rows"
 
 
 def test_stream_matches_batch(spark, tmp_path):

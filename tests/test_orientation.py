@@ -7,7 +7,7 @@ import math
 import numpy as np
 
 from pdf2ontology_spark.operators import orientation as O
-from pdf2ontology_spark.operators.media import synth_rasters_batch
+from pdf2ontology_spark.raster import synth_rasters_batch
 
 
 def _scalar_hough(edge_img):

@@ -63,10 +63,19 @@ def test_media_features_is_arrow_batched(spark):
 def test_media_stages_salt_on_composite_key(spark):
     """Every media decode stage must repartition on xxhash64(doc_id,
     media_ref) — the skew salt that keeps a 500-media-span gallery doc
-    from pinning one partition (north rule; measured on the sfskew
-    heavy-tail corpus by scripts/bench_skew.py). A doc_id-only hash
-    would put a whole doc's media in one bucket."""
-    for q in [entry.q_media_quality, entry.q_media_features, entry.q_assess_media_real]:
+    from pinning one partition (north rule; the row histogram it buys is
+    pinned by tests/test_media_streaming.py::
+    test_media_salt_balances_gallery_docs). A doc_id-only hash would put
+    a whole doc's media in one bucket. The list covers every operator
+    that runs through media._media_stage."""
+    for q in [
+        entry.q_media_quality,
+        entry.q_media_features,
+        entry.q_assess_media_real,
+        entry.q_content_layout,
+        entry.q_skew_rotation,
+        entry.q_preprocessed_media,
+    ]:
         plan = plan_of(q(spark, SF))
         assert re.search(r"hashpartitioning\(xxhash64\(doc_id#\d+, media_ref", plan), (
             f"{q.__name__} lost the composite-key salt exchange"
