@@ -30,7 +30,6 @@ from pdf2ontology_spark.operators import (
     relational,
     segment,
     similarity,
-    tabulate,
     text,
     triples,
 )
@@ -50,22 +49,11 @@ def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return segment.explode_spans(_docs(spark, sf_dir)).select(
-        "doc_id",
-        "kind",
-        F.coalesce("text", F.lit("")).alias("text"),
-        F.coalesce("media_ref", F.lit("")).alias("media_ref"),
-        "offset",
-    )
-
-
-def _spans_m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """_spans WITHOUT the loader's small-corpus doc_id repartition —
-    for the media family, whose operators immediately re-salt on
-    xxhash64(doc_id, media_ref) (or need no shuffle at all), so the
-    loader exchange moved the whole corpus once for nothing (round-7:
-    ~0.3-0.5s per media query at sf0.1). Values are identical; only the
-    initial row distribution differs."""
+    """One row per span, NULL text/media_ref read as "". Built on the
+    loader WITHOUT its small-corpus doc_id repartition: every user
+    either aggregates straight away or re-salts on xxhash64(doc_id,
+    media_ref) (the media family), so that exchange moved the whole
+    corpus once for nothing (~0.3-0.5s per media query at sf0.1)."""
     return segment.explode_spans(
         tables.load_documents_spans(spark, sf_dir, repartition=False)
     ).select(
@@ -83,16 +71,8 @@ def _blobs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return tables.load_media_blobs(spark, sf_dir)
 
 
-def _entries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tabulate.semantic_entries(tabulate.table_cells(_spans(spark, sf_dir)))
-
-
 def _all_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # fused single-scan plan: one corpus read, zero exchanges (the
-    # composed all_triples(spans, entries) scans + parses twice and
-    # shuffles for the tabulate/sentence windows); equivalence with the
-    # composed path is pinned by tests/test_triples_fused.py and the
-    # shared DuckDB oracle
+    # one corpus read, zero exchanges (pinned in tests/test_plans.py)
     return triples.all_triples_fused(_docs(spark, sf_dir))
 
 
@@ -123,8 +103,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
 # ---------------------------------------------------------------- queries
 def q_segment_spans(spark, sf_dir):
-    # pure projection — the loader's doc_id repartition bought nothing
-    return _spans_m(spark, sf_dir)
+    return _spans(spark, sf_dir)
 
 
 def q_span_invariant(spark, sf_dir):
@@ -134,46 +113,37 @@ def q_span_invariant(spark, sf_dir):
 
 
 def q_doc_stats(spark, sf_dir):
-    # round-7 in-row form: the documents table is already one row per
-    # doc, so the staged explode+groupBy shuffled the corpus to rebuild
-    # state it started with; zero exchanges now (equivalence pinned in
-    # tests/test_segment_fused.py)
-    return segment.doc_stats_docs(
+    return segment.doc_stats(
         tables.load_documents_spans(spark, sf_dir, repartition=False)
     )
 
 
 def q_reassemble_text(spark, sf_dir):
-    # round-7 in-row form — same rationale as q_doc_stats
-    return segment.reassemble_text_docs(
+    return segment.reassemble_text(
         tables.load_documents_spans(spark, sf_dir, repartition=False)
     )
 
 
 def q_table_cells(spark, sf_dir):
-    return tabulate.table_cells(_spans(spark, sf_dir))
+    return triples.table_cells(_docs(spark, sf_dir))
 
 
 def q_relationship_entries(spark, sf_dir):
-    # round-7 fused form: one corpus scan, zero shuffles — the staged
-    # table_cells -> semantic_entries twin stays available as _entries
-    # (used by the triples_table queries) and equivalence is pinned in
-    # tests/test_triples_fused.py
-    return triples.semantic_entries_fused(_docs(spark, sf_dir))
+    return triples.semantic_entries(_docs(spark, sf_dir))
 
 
 def q_triples_table(spark, sf_dir):
-    return triples.table_triples(_entries(spark, sf_dir))
+    return triples.table_triples(_docs(spark, sf_dir))
 
 
 def q_triples_table_strict(spark, sf_dir):
     """Reference-exact degraded mode: the fallback only processes the
     first 3 table rows (triplet_extractor.py:358)."""
-    return triples.table_triples(_entries(spark, sf_dir), reference_strict=True)
+    return triples.table_triples(_docs(spark, sf_dir), reference_strict=True)
 
 
 def q_triples_text(spark, sf_dir):
-    return triples.text_triples(_spans(spark, sf_dir))
+    return triples.text_triples(_docs(spark, sf_dir))
 
 
 def q_triples_all(spark, sf_dir):
@@ -274,7 +244,7 @@ def q_ontology_classes(spark, sf_dir):
 
 def q_auto_create_entities(spark, sf_dir):
     t = _triples_stage(spark, sf_dir)
-    base = graph.entities_distinct(triples.table_triples(_entries(spark, sf_dir))).withColumn(
+    base = graph.entities_distinct(triples.table_triples(_docs(spark, sf_dir))).withColumn(
         "confidence", F.lit(0.6)
     )
     return graph.auto_create_entities(base, t).select(
@@ -461,22 +431,22 @@ def q_doc_fingerprint(spark, sf_dir):
 
 # ------------------------------------------- classify / condition / W5
 def q_merged_sentences(spark, sf_dir):
-    return segment.merged_text_sentences(_spans(spark, sf_dir))
+    return segment.merged_text_sentences(_docs(spark, sf_dir))
 
 
 def q_ner_mentions(spark, sf_dir):
-    return ner.ner_mentions(_spans(spark, sf_dir))
+    return ner.ner_mentions(_docs(spark, sf_dir))
 
 
 def q_classify_documents(spark, sf_dir):
-    doc_text = segment.reassemble_text(_spans(spark, sf_dir)).select(
+    doc_text = segment.reassemble_text(_docs(spark, sf_dir)).select(
         "doc_id", F.col("document_text").alias("text")
     )
     return classify.classify_documents(doc_text, "doc_id", "text")
 
 
 def q_assess_media(spark, sf_dir):
-    return condition.assess_media(_spans_m(spark, sf_dir)).select(
+    return condition.assess_media(_spans(spark, sf_dir)).select(
         "doc_id",
         "offset",
         "media_ref",
@@ -495,7 +465,7 @@ def q_assess_media(spark, sf_dir):
 def q_assess_media_real(spark, sf_dir):
     # skew_deg / rotation_deg are PIXEL-DERIVED since round 5
     # (orientation.py: Hough lines + ink moments over the raster)
-    return condition.assess_media_real(_spans_m(spark, sf_dir), _blobs(spark, sf_dir)).select(
+    return condition.assess_media_real(_spans(spark, sf_dir), _blobs(spark, sf_dir)).select(
         "doc_id",
         "offset",
         "media_ref",
@@ -519,7 +489,7 @@ def q_skew_rotation(spark, sf_dir):
     # text/edge orientations, the banded rotation decision + confidence,
     # Hough-line skew + confidence + line count — every column
     # recomputed independently by the DuckDB twin (skew_rotation_sql)
-    return media.assess_media_full(_spans_m(spark, sf_dir), _blobs(spark, sf_dir)).select(
+    return media.assess_media_full(_spans(spark, sf_dir), _blobs(spark, sf_dir)).select(
         "doc_id",
         "offset",
         "media_ref",
@@ -538,7 +508,7 @@ def q_preprocessed_media(spark, sf_dir):
     # action chain transforms the actual raster (operators/imaging.py)
     # and the DuckDB twin recomputes every stage on per-image lists
     out = media.apply_actions(
-        condition.assess_media(_spans_m(spark, sf_dir)), _blobs(spark, sf_dir)
+        condition.assess_media(_spans(spark, sf_dir)), _blobs(spark, sf_dir)
     )
     return out.select(
         "doc_id",
@@ -557,7 +527,7 @@ def q_preprocessed_media(spark, sf_dir):
 
 
 def q_condition_rollup(spark, sf_dir):
-    return condition.condition_rollup(condition.assess_media(_spans_m(spark, sf_dir)))
+    return condition.condition_rollup(condition.assess_media(_spans(spark, sf_dir)))
 
 
 # --------------------------------------------------------- relational
@@ -825,30 +795,30 @@ def q_dominant_angle(spark, sf_dir):
 
 # ------------------------------------------------------------- media
 def q_media_features(spark, sf_dir):
-    return media.media_features(_spans_m(spark, sf_dir), _blobs(spark, sf_dir))
+    return media.media_features(_spans(spark, sf_dir), _blobs(spark, sf_dir))
 
 
 def q_media_quality(spark, sf_dir):
     # REAL metric math (the reference QualityAssessor's kernels in
     # numpy) over the deterministic synthetic raster; the DuckDB twin
     # recomputes the same kernels in closed-form SQL.
-    return media.media_quality(_spans_m(spark, sf_dir), _blobs(spark, sf_dir))
+    return media.media_quality(_spans(spark, sf_dir), _blobs(spark, sf_dir))
 
 
 def q_content_layout(spark, sf_dir):
     # REAL projection math (the reference ContentAnalyzer's column
     # detector) over the deterministic synthetic raster.
-    return media.content_layout(_spans_m(spark, sf_dir), _blobs(spark, sf_dir))
+    return media.content_layout(_spans(spark, sf_dir), _blobs(spark, sf_dir))
 
 
 def q_media_stats(spark, sf_dir):
     return media.media_stats(
-        media.media_features(_spans_m(spark, sf_dir), _blobs(spark, sf_dir))
+        media.media_features(_spans(spark, sf_dir), _blobs(spark, sf_dir))
     )
 
 
 def q_frame_samples(spark, sf_dir):
-    return media.frame_samples(_spans_m(spark, sf_dir), interval_s=2, max_frames=32)
+    return media.frame_samples(_spans(spark, sf_dir), interval_s=2, max_frames=32)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
@@ -984,12 +954,9 @@ FROM spans WHERE kind IN ('text','title','header','caption') GROUP BY doc_id""",
         + o.table_triples_cte()
         + "\nSELECT * FROM table_triples",
         "triples_table_strict": WE
-        + """,
-entries_capped AS (
-  SELECT * FROM (
-    SELECT e.*, dense_rank() OVER (PARTITION BY doc_id, table_id ORDER BY row_idx) AS _rk
-    FROM entries e)
-  WHERE _rk <= 3),"""
+        + ","
+        + o.entries_capped_cte()
+        + ","
         + o.table_triples_cte().replace("FROM entries", "FROM entries_capped")
         + "\nSELECT * FROM table_triples",
         "triples_text": W + "," + o.text_triples_cte() + "\nSELECT * FROM text_triples",

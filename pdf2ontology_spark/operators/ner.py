@@ -37,14 +37,14 @@ ORG_RE = (
 PRODUCT_RE = rf"([A-ZÄÖÜ][a-zäöü]+(?: Typ [0-9]+| [A-Z]+-?[0-9]+)+)"
 
 
-def ner_mentions(spans: DataFrame) -> DataFrame:
-    """text spans -> cross-span merge -> typed mention rows.
+def ner_mentions(docs: DataFrame) -> DataFrame:
+    """documents -> cross-span merged sentences -> typed mention rows.
 
     Returns (doc_id, offset, sentence, name, entity_type, char_pos,
     confidence); offset is the first span of the merged sentence, so a
     mention split across spans is still found once.
     """
-    sents = segment.merged_text_sentences(spans)
+    sents = segment.merged_text_sentences(docs)
     org = F.regexp_extract_all("sentence", F.lit(ORG_RE), 1)
     prod = F.regexp_extract_all("sentence", F.lit(PRODUCT_RE), 1)
     # gazetteer hits need WORD BOUNDARIES: bare contains() would emit

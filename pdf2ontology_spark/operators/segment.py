@@ -14,8 +14,10 @@ expression, not an aggregation.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from pdf2ontology_spark import rules
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
@@ -51,86 +53,135 @@ def span_sequence_check(docs: DataFrame) -> DataFrame:
     )
 
 
-def reassemble_text(spans: DataFrame) -> DataFrame:
-    """Cross-span text stitch: the reference's OCR flatten+join
-    (/root/reference/src/loader.py:36-58) — text spans concatenated in
-    reading order per document. One shuffle on doc_id.
-    """
-    return (
-        spans.filter(F.col("kind").isin("text", "title", "header", "caption"))
-        .groupBy("doc_id")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("offset", "text"))),
-                    lambda s: s["text"],
-                ),
-                "\n",
-            ).alias("document_text"),
-            F.count("*").cast("long").alias("n_text_spans"),
+# Lazily built span-list Column ASTs (no data, no plan; see
+# triples._FUSED_EXPR_CACHE for why expressions are cached)
+_SPAN_LISTS: dict[str, Column] = {}
+
+
+def _valid_spans(kind: str) -> Column:
+    """A document's ``kind`` spans that pass the validity contract: a
+    present, non-negative offset — what quarantine.span_guard_reason()
+    demands of the kinds extraction reads. Every extraction expression
+    (cells, entries, triples, merged sentences) reads these lists, all
+    built on ONE shared filter, so a span dropped by one is dropped by
+    all."""
+    if not _SPAN_LISTS:
+        _SPAN_LISTS["valid"] = F.filter(
+            F.col("spans"), lambda s: s["offset"].isNotNull() & (s["offset"] >= 0)
         )
+    if kind not in _SPAN_LISTS:
+        _SPAN_LISTS[kind] = F.filter(_SPAN_LISTS["valid"], lambda s: s["kind"] == kind)
+    return _SPAN_LISTS[kind]
+
+
+def _merged_sentences_arr(texts: Column) -> Column:
+    """Array of (offset, sentence) structs: the W5 cross-span merge as a
+    per-document fold over the document's text spans ``texts``. A text
+    span that does not END A SENTENCE continues in the next text span,
+    transitively — a sentence split across any number of consecutive
+    spans is reassembled (the session-window idiom, collapsed to
+    F.aggregate because the whole document is already one row: no
+    doc_id shuffle). A span terminates per rules.TERMINATOR_RE/ABBREV_RE:
+    ends with . ! or ? and the final token is not an abbreviation or
+    initial, so "… siehe Abb." or "… Anlage A." correctly continues.
+
+    Spans are sorted by (offset, text, null text first) before the fold:
+    the input invariant says they are stored sorted, but a violating
+    document must still merge in reading order, deterministically even
+    on duplicate offsets. A NULL-text span contributes nothing and
+    breaks the run: the open run is flushed and the next span starts a
+    new one."""
+    texts = F.array_sort(
+        texts,
+        lambda a, b: F.when(a["offset"] < b["offset"], -1)
+        .when(a["offset"] > b["offset"], 1)
+        .when(a["text"].isNull() & b["text"].isNotNull(), -1)
+        .when(a["text"].isNotNull() & b["text"].isNull(), 1)
+        .when(a["text"] < b["text"], -1)
+        .when(a["text"] > b["text"], 1)
+        .otherwise(0),
+    )
+    sent_t = "array<struct<offset int, sentence string>>"
+    init = F.struct(
+        F.array().cast(sent_t).alias("done"),
+        F.lit(None).cast("string").alias("cur"),
+        F.lit(None).cast("int").alias("cur_off"),
     )
 
+    def flushed(acc: Column) -> Column:
+        """done ++ the open run (if any), without appending new text."""
+        return F.when(acc["cur"].isNull(), acc["done"]).otherwise(
+            F.concat(
+                acc["done"],
+                F.array(
+                    F.struct(
+                        acc["cur_off"].alias("offset"), acc["cur"].alias("sentence")
+                    )
+                ),
+            )
+        )
 
-def merged_text_sentences(spans: DataFrame) -> DataFrame:
+    def step(acc: Column, s: Column) -> Column:
+        txt = s["text"]
+        new_cur = F.when(acc["cur"].isNull(), txt).otherwise(
+            F.concat(acc["cur"], F.lit(" "), txt)
+        )
+        # cast: inline test data infers python ints as bigint; the
+        # accumulator struct is pinned to the parquet schema's int32
+        new_off = (
+            F.when(acc["cur"].isNull(), s["offset"]).otherwise(acc["cur_off"]).cast("int")
+        )
+        terminated = txt.rlike(rules.TERMINATOR_RE) & ~txt.rlike(rules.ABBREV_RE)
+        reset = [
+            F.lit(None).cast("string").alias("cur"),
+            F.lit(None).cast("int").alias("cur_off"),
+        ]
+        return (
+            F.when(txt.isNull(), F.struct(flushed(acc).alias("done"), *reset))
+            .when(
+                terminated,
+                F.struct(
+                    F.concat(
+                        acc["done"],
+                        F.array(
+                            F.struct(new_off.alias("offset"), new_cur.alias("sentence"))
+                        ),
+                    ).alias("done"),
+                    *reset,
+                ),
+            )
+            .otherwise(
+                F.struct(
+                    acc["done"].alias("done"), new_cur.alias("cur"), new_off.alias("cur_off")
+                )
+            )
+        )
+
+    return F.aggregate(texts, init, step, flushed)
+
+
+def merged_text_sentences(docs: DataFrame) -> DataFrame:
     """Cross-span content merge (W5 — the reference's CrossPageContent,
-    /root/reference/src/pydantic_models/content_models.py:55-82): a text
-    span that does not END A SENTENCE continues in the NEXT text span of
-    the same document, transitively — a sentence split across ANY number
-    of consecutive text spans is reassembled (multi-level merge, the
-    session-window idiom): a new run starts after a terminated span (or
-    at the first text span); each run concatenates in reading order.
-    A span terminates per rules.TERMINATOR_RE/ABBREV_RE: ends with
-    . ! or ? and the final token is not an abbreviation/initial — so
-    "… siehe Abb." or "… Anlage A." correctly continues.
-    One window + one co-partitioned groupBy, both keyed on doc_id.
-
-    Returns (doc_id, offset, sentence) where offset is the first part's.
-    """
-    from pyspark.sql import Window
-
-    from pdf2ontology_spark import rules
-
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    prev = F.lag("text").over(w)
-    starts = prev.isNull() | (
-        prev.rlike(rules.TERMINATOR_RE) & ~prev.rlike(rules.ABBREV_RE)
-    )
-    t = (
-        spans.filter(F.col("kind") == "text")
-        .withColumn(
-            "grp",
-            F.sum(starts.cast("int")).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-    )
-    return (
-        t.groupBy("doc_id", "grp")
-        .agg(
-            F.min("offset").alias("offset"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("offset", "text"))),
-                    lambda s: s["text"],
-                ),
-                " ",
-            ).alias("sentence"),
-        )
-        .select("doc_id", "offset", "sentence")
-    )
+    src/pydantic_models/content_models.py:55-82) over
+    the documents table: one row per merged sentence,
+    (doc_id, offset, sentence) where offset is the first part's. Zero
+    shuffles: the explode of ``_merged_sentences_arr`` over the valid
+    text spans — the same array the text triples are matched on."""
+    return docs.select(
+        "doc_id", F.explode(_merged_sentences_arr(_valid_spans("text"))).alias("s")
+    ).select("doc_id", "s.offset", "s.sentence")
 
 
 _TEXT_KINDS = ["text", "title", "header", "caption"]
 
 
-def reassemble_text_docs(docs: DataFrame) -> DataFrame:
-    """In-row twin of ``reassemble_text`` over the raw documents table:
-    the input is already one row per document, so the staged
-    explode -> groupBy(collect_list) round-tripped the whole corpus
-    through a shuffle to rebuild per-document state it started with
-    (round-7, guide §2.4). Same output: text-kind spans sorted by
-    (offset, text) — the staged collect_list struct order — joined with
-    newlines; documents with no text-kind spans emit nothing (the
-    staged groupBy never saw them)."""
+def reassemble_text(docs: DataFrame) -> DataFrame:
+    """Cross-span text stitch: the reference's OCR flatten+join
+    (src/loader.py:36-58) — text-kind spans of each
+    document sorted by (offset, text) and joined with newlines, as
+    (doc_id, document_text, n_text_spans). Zero shuffles: the input is
+    already one row per document. Documents with no text-kind spans emit
+    nothing."""
     kinds = F.array(*[F.lit(k) for k in _TEXT_KINDS])
     picked = F.filter(
         F.col("spans"), lambda s: F.array_contains(kinds, s["kind"])
@@ -156,11 +207,11 @@ def reassemble_text_docs(docs: DataFrame) -> DataFrame:
     )
 
 
-def doc_stats_docs(docs: DataFrame) -> DataFrame:
-    """In-row twin of ``doc_stats`` over the raw documents table — same
-    rationale as ``reassemble_text_docs``: zero shuffles, zero explode.
-    Documents with no spans emit nothing (the staged explode dropped
-    them)."""
+def doc_stats(docs: DataFrame) -> DataFrame:
+    """Corpus/document statistics — the reference's _compile_results
+    (src/core/document_analyzer.py:230-272): per-doc
+    span counts by kind plus total characters. Zero shuffles, zero
+    explode. Documents with no spans emit nothing."""
     spans = F.col("spans")
 
     def n_kind(kind: str):
@@ -178,18 +229,3 @@ def doc_stats_docs(docs: DataFrame) -> DataFrame:
             lambda acc, s: acc + F.length(F.coalesce(s["text"], F.lit(""))),
         ).alias("total_chars"),
     ).filter(F.col("n_spans") > 0)
-
-
-def doc_stats(spans: DataFrame) -> DataFrame:
-    """Corpus/document statistics — reference's _compile_results
-    (/root/reference/src/core/document_analyzer.py:230-272): per-doc span
-    counts by kind plus totals. Partial/final hash aggregation does the
-    two-level compile for free (SURVEY.md A15).
-    """
-    return spans.groupBy("doc_id").agg(
-        F.count("*").cast("long").alias("n_spans"),
-        F.sum(F.when(F.col("kind") == "table", 1).otherwise(0)).cast("long").alias("n_tables"),
-        F.sum(F.when(F.col("kind") == "media", 1).otherwise(0)).cast("long").alias("n_media"),
-        F.sum(F.when(F.col("kind") == "text", 1).otherwise(0)).cast("long").alias("n_text"),
-        F.sum(F.length(F.coalesce("text", F.lit("")))).cast("long").alias("total_chars"),
-    )

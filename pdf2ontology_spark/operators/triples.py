@@ -1,11 +1,17 @@
 """Triple extraction — the parity artifact (FIXTURES.md F3).
 
-Two deterministic extractors:
+One implementation: every rule is a per-document array expression over
+the documents table (doc_id, spans), so each query below is one corpus
+scan, a narrow projection and one explode — zero shuffles. A table's
+grid lives entirely inside ONE span's JSON and a document's text spans
+live in one row, so the (doc_id, table_id) windows and the doc_id
+sentence window a staged plan would need collapse to in-row array work.
+Two extractors share that scan:
 
-- ``table_triples``: productionized version of the reference's
-  rule-based fallback (/root/reference/src/knowledge_extractor/
-  triplet_extractor.py:339-384): for every (key, value) of a table row
-  with a non-empty value and key != "row_header", emit
+- table spans -> cells -> semantic entries -> triples: the reference's
+  semantic-table rules and its rule-based fallback (see
+  ``_cells_triples``): for every (key, value) of a table row with a
+  non-empty value and key != "row_header", emit
   (subject=row_header [concept], predicate=related_to, object=value),
   confidence 0.6, source_sentence "{row_header} has {key} of {value}",
   extraction_method "fallback_rule_based". Object typing follows the
@@ -18,13 +24,15 @@ Two deterministic extractors:
   loss at scale); pass ``reference_strict=True`` to reproduce the cap
   exactly.
 
-- ``text_triples``: sentence-pattern relation extraction over text spans
-  (SURVEY.md §7.2 step 1), one JVM-side pass: each pattern is evaluated
-  with regexp_extract into an array of candidate structs, exploded, and
-  empty matches dropped. Predicates are drawn from the reference's
-  RelationType enum (enums.py:42-64).
+- text spans -> merged sentences (W5, segment.merged_text_sentences) ->
+  sentence-pattern triples (SURVEY.md §7.2 step 1): each pattern is
+  evaluated with regexp_extract, empty matches dropped. Predicates are
+  drawn from the reference's RelationType enum (enums.py:42-64).
 
-Everything stays inside whole-stage codegen — no Python on the hot path.
+Both read only spans that pass segment._valid_spans (present,
+non-negative offset). Everything stays inside whole-stage codegen — no
+Python on the hot path; equivalence with the DuckDB oracles is pinned by
+tests/test_triples_fused.py and scripts/check_oracles.py.
 """
 
 from __future__ import annotations
@@ -34,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pdf2ontology_spark import rules
+from pdf2ontology_spark.operators.segment import _merged_sentences_arr, _valid_spans
 from pdf2ontology_spark.schemas import CELL
 
 
@@ -46,83 +55,7 @@ def classify_value_col(c: Column) -> Column:
     )
 
 
-def table_triples(entries: DataFrame, reference_strict: bool = False) -> DataFrame:
-    """semantic entries -> triples (schemas.TRIPLES)."""
-    df = entries
-    if reference_strict:
-        # reproduce the reference's data_rows[:3] cap (triplet_extractor.py:358)
-        w = Window.partitionBy("doc_id", "table_id").orderBy("row_idx")
-        df = (
-            df.withColumn("_rk", F.dense_rank().over(w))
-            .filter(F.col("_rk") <= 3)
-            .drop("_rk")
-        )
-    v = F.col("value")
-    return (
-        df.filter(v.isNotNull() & (v != "") & (F.col("key") != "row_header"))
-        .select(
-            "doc_id",
-            "table_id",
-            F.col("row_header").alias("subj_name"),
-            F.lit("concept").alias("subj_type"),
-            F.lit("related_to").alias("predicate"),
-            v.alias("obj_name"),
-            classify_value_col(v).alias("obj_type"),
-            F.lit(rules.FALLBACK_CONFIDENCE).alias("confidence"),
-            F.concat(
-                F.col("row_header"), F.lit(" has "), F.col("key"), F.lit(" of "), v
-            ).alias("source_sentence"),
-            F.lit(rules.FALLBACK_METHOD).alias("extraction_method"),
-        )
-    )
-
-
-def text_triples(spans: DataFrame) -> DataFrame:
-    """text spans -> cross-span merge (W5) -> pattern-matched triples,
-    single JVM pass over the merged sentence stream."""
-    from pdf2ontology_spark.operators.segment import merged_text_sentences
-
-    cands = F.array(
-        *[
-            F.struct(
-                F.regexp_extract("sentence", pat, 1).alias("subj_name"),
-                F.lit(st).alias("subj_type"),
-                F.lit(pred).alias("predicate"),
-                F.regexp_extract("sentence", pat, 2).alias("obj_name"),
-                F.lit(ot).alias("obj_type"),
-            )
-            for pat, pred, st, ot in rules.TEXT_PATTERNS
-        ]
-    )
-    return (
-        merged_text_sentences(spans)
-        .select("doc_id", "sentence", F.explode(cands).alias("m"))
-        .filter((F.col("m.subj_name") != "") & (F.col("m.obj_name") != ""))
-        .select(
-            "doc_id",
-            F.lit(None).cast("string").alias("table_id"),
-            F.col("m.subj_name").alias("subj_name"),
-            F.col("m.subj_type").alias("subj_type"),
-            F.col("m.predicate").alias("predicate"),
-            F.col("m.obj_name").alias("obj_name"),
-            F.col("m.obj_type").alias("obj_type"),
-            F.lit(rules.PATTERN_CONFIDENCE).alias("confidence"),
-            F.col("sentence").alias("source_sentence"),
-            F.lit(rules.PATTERN_METHOD).alias("extraction_method"),
-        )
-    )
-
-
-def all_triples(spans: DataFrame, entries: DataFrame, reference_strict: bool = False) -> DataFrame:
-    """Union of table + text triples (U1 semantics: one DataFrame from
-    the start — the reference's ``all_triplets.extend`` loop collapses to
-    ``unionByName``). Composed from the staged operators — use
-    ``all_triples_fused`` for the single-scan, shuffle-free production
-    plan over the raw documents table."""
-    return table_triples(entries, reference_strict).unionByName(text_triples(spans))
-
-
-# ------------------------------------------------------- fused extraction
+# ------------------------------------------------------------- extraction
 # Field layout of one extracted triple inside the per-document arrays;
 # both branches must emit the exact same struct for concat().
 def _triple_struct(
@@ -245,19 +178,15 @@ def _bind(expr: Column, f) -> Column:
     return F.element_at(F.transform(F.array(expr), f), 1)
 
 
-def _table_span_triples(doc_id: Column, span: Column, reference_strict: bool) -> Column:
-    """Array of triples extracted from ONE table span — the whole
-    tabulate.table_cells -> semantic_entries -> table_triples chain
-    re-expressed as array expressions over the span's cell list (the
-    grid lives entirely inside this one span's JSON, so every
-    (doc_id, table_id[, row/col]) window collapses to an in-row array
-    computation: tabulate.py's one shuffle becomes zero). Grids are
-    5-50 cells (reference scale), so the O(cells^2) row/col lookups are
-    constant-bounded per row."""
+def _table_cells(doc_id: Column, span: Column) -> tuple[Column, Column]:
+    """(table_id, normalized cell array) of ONE table span. The span
+    text is the reference's coordinate-JSON cell list,
+    src/table_processors/table_content_extractor_general.py:54-64;
+    table_id is the deterministic sha2(doc_id ':' offset) (FIXTURES.md
+    F2). Malformed JSON -> no cells (F11 per-item tolerance); null cells
+    are dropped and a null cell text reads as ""."""
     raw = F.from_json(F.coalesce(span["text"], F.lit("")), T.ArrayType(CELL))
-    # malformed JSON -> null array -> no cells (F11 per-item tolerance);
-    # null elements mirror table_cells' explode_outer + isNotNull filter
-    parsed = F.transform(
+    cells = F.transform(
         F.filter(F.coalesce(raw, F.array().cast(T.ArrayType(CELL))), lambda c: c.isNotNull()),
         lambda c: F.struct(
             c["row"].alias("row"),
@@ -268,32 +197,23 @@ def _table_span_triples(doc_id: Column, span: Column, reference_strict: bool) ->
     table_id = F.sha2(
         F.concat_ws(":", doc_id, span["offset"].cast("string")), 256
     )
-    return _bind(
-        parsed, lambda cells: _cells_triples(table_id, cells, reference_strict)
-    )
+    return table_id, cells
+
+
+def _table_span_triples(doc_id: Column, span: Column, reference_strict: bool) -> Column:
+    """Array of triples extracted from ONE table span."""
+    table_id, cells = _table_cells(doc_id, span)
+    return _bind(cells, lambda cs: _cells_triples(table_id, cs, reference_strict))
 
 
 def _table_span_entries(doc_id: Column, span: Column) -> Column:
-    """Array of semantic entries (incl. table_id) for ONE table span —
-    the in-row twin of tabulate.table_cells -> semantic_entries for that
-    span, built on the same parse and entry expressions as the fused
-    extraction."""
-    raw = F.from_json(F.coalesce(span["text"], F.lit("")), T.ArrayType(CELL))
-    parsed = F.transform(
-        F.filter(F.coalesce(raw, F.array().cast(T.ArrayType(CELL))), lambda c: c.isNotNull()),
-        lambda c: F.struct(
-            c["row"].alias("row"),
-            c["col"].alias("col"),
-            F.coalesce(c["text"], F.lit("")).alias("txt"),
-        ),
-    )
-    table_id = F.sha2(
-        F.concat_ws(":", doc_id, span["offset"].cast("string")), 256
-    )
+    """Array of semantic entries (incl. table_id) for ONE table span,
+    built on the same parse and entry expressions as the extraction."""
+    table_id, cells = _table_cells(doc_id, span)
     return _bind(
-        parsed,
-        lambda cells: F.transform(
-            _cells_triples(table_id, cells, False, as_entries=True),
+        cells,
+        lambda cs: F.transform(
+            _cells_triples(table_id, cs, False, as_entries=True),
             lambda e: F.struct(
                 table_id.alias("table_id"),
                 e["row_idx"].alias("row_idx"),
@@ -305,42 +225,29 @@ def _table_span_entries(doc_id: Column, span: Column) -> Column:
     )
 
 
-def semantic_entries_fused(docs: DataFrame) -> DataFrame:
-    """Single-scan, shuffle-free twin of
-    tabulate.semantic_entries(tabulate.table_cells(spans)) over the raw
-    documents table — the same fusion as ``all_triples_fused`` stopped
-    at the entries stage (the staged path shuffled once for its three
-    window families and parsed the cell JSON under them). Equivalence
-    is pinned by tests/test_triples_fused.py and the shared DuckDB
-    oracle (q:relationship_entries).
-
-    Shared fused-architecture invariant (same as ``all_triples_fused``
-    since round 5): a table's grid lives entirely inside ONE span, so
-    two table spans of a document sharing an offset (an input-contract
-    violation — it collides their sha2 table_id; q:span_invariant
-    checks the contract) would be evaluated per span here but merged
-    by the staged windows."""
-    return docs.select(
-        F.col("doc_id"), F.explode(_fused_entries_expr()).alias("e")
-    ).select(
-        "doc_id",
-        "e.table_id",
-        "e.row_idx",
-        "e.row_header",
-        "e.key",
-        "e.value",
-    )
-
-
 def _cells_triples(
     table_id: Column, cells: Column, reference_strict: bool, as_entries: bool = False
 ) -> Column:
-    """Triples from a (once-materialized) normalized cell array.
-    ``as_entries=True`` stops after the semantic-entry construction and
-    returns the raw array<struct<row_idx, row_header, key, value>> —
-    the in-row twin of tabulate.semantic_entries' per-table output,
-    shared so the fused entries query and the fused extraction cannot
-    drift apart."""
+    """Triples from a (once-materialized) normalized cell array — the
+    semantic-table rules of the reference's structured prompt
+    (src/table_processors/table_content_extractor.py:98-175):
+
+    - 2-column table         -> parameter -> single_value
+    - multi-column table     -> values map {column header -> cell value}
+    - option-selection table -> the "X"-marked column's header becomes
+                                the value; all options go to the notes
+    - empty cells            -> "" (never null); no triple downstream
+
+    plus the reference's relationship -> data_rows conversion in
+    src/knowledge_extractor/triplet_extractor.py:700-723
+    (single_value -> key "value"; values map merged; notes appended), in
+    long form: one entry per (table row, key). ``as_entries=True`` stops
+    there and returns the array<struct<row_idx, row_header, key, value>>
+    — shared so the entries query and the extraction cannot drift
+    apart. Empty values are KEPT at entry level (prompt rule 5); the
+    triple step drops them (triplet_extractor.py:361-363 emits no triple
+    for falsy values). Grids are 5-50 cells (reference scale), so the
+    O(cells^2) row/col lookups are constant-bounded per row."""
     ncols = F.array_max(F.transform(cells, lambda c: c["col"])) + F.lit(1)
     has_opts = F.exists(cells, lambda c: (c["row"] == 0) & (c["col"] >= 1))
     options = F.array_join(
@@ -498,94 +405,6 @@ def _cells_triples(
     return finalize(entries)
 
 
-def _merged_sentences_arr(spans_col: Column) -> Column:
-    """Array of (offset, sentence) structs: the W5 cross-span merge as a
-    per-document fold over the text spans — same terminator rule as
-    segment.merged_text_sentences, but with NO doc_id shuffle: the
-    session window collapses to F.aggregate, because the whole document
-    is already one row. Spans are explicitly sorted by offset first
-    (the input invariant says they are stored sorted, but the staged
-    twin re-sorts via its window, so a violating document must not
-    produce silently different triples here).
-
-    NULL-text spans replicate the staged window exactly: the span
-    contributes nothing to its run and the NEXT span starts a new run
-    (staged: lag(text).isNull() starts a run; array_join drops the null
-    element). The staged path also materializes an all-NULL run as an
-    empty-sentence row; no pattern can match '' so the fold skips it —
-    triple output is identical (the pinned equivalence target)."""
-    # tie-break duplicate offsets by text (null first) — the staged
-    # window's array_sort over (offset, text) structs does the same, so
-    # even offset-violating documents merge identically on both paths
-    texts = F.array_sort(
-        F.filter(spans_col, lambda s: s["kind"] == "text"),
-        lambda a, b: F.when(a["offset"] < b["offset"], -1)
-        .when(a["offset"] > b["offset"], 1)
-        .when(a["text"].isNull() & b["text"].isNotNull(), -1)
-        .when(a["text"].isNotNull() & b["text"].isNull(), 1)
-        .when(a["text"] < b["text"], -1)
-        .when(a["text"] > b["text"], 1)
-        .otherwise(0),
-    )
-    sent_t = "array<struct<offset int, sentence string>>"
-    init = F.struct(
-        F.array().cast(sent_t).alias("done"),
-        F.lit(None).cast("string").alias("cur"),
-        F.lit(None).cast("int").alias("cur_off"),
-    )
-
-    def flushed(acc: Column) -> Column:
-        """done ++ the open run (if any), without appending new text."""
-        return F.when(acc["cur"].isNull(), acc["done"]).otherwise(
-            F.concat(
-                acc["done"],
-                F.array(
-                    F.struct(
-                        acc["cur_off"].alias("offset"), acc["cur"].alias("sentence")
-                    )
-                ),
-            )
-        )
-
-    def step(acc: Column, s: Column) -> Column:
-        txt = s["text"]
-        new_cur = F.when(acc["cur"].isNull(), txt).otherwise(
-            F.concat(acc["cur"], F.lit(" "), txt)
-        )
-        # cast: inline test data infers python ints as bigint; the
-        # accumulator struct is pinned to the parquet schema's int32
-        new_off = (
-            F.when(acc["cur"].isNull(), s["offset"]).otherwise(acc["cur_off"]).cast("int")
-        )
-        terminated = txt.rlike(rules.TERMINATOR_RE) & ~txt.rlike(rules.ABBREV_RE)
-        reset = [
-            F.lit(None).cast("string").alias("cur"),
-            F.lit(None).cast("int").alias("cur_off"),
-        ]
-        return (
-            F.when(txt.isNull(), F.struct(flushed(acc).alias("done"), *reset))
-            .when(
-                terminated,
-                F.struct(
-                    F.concat(
-                        acc["done"],
-                        F.array(
-                            F.struct(new_off.alias("offset"), new_cur.alias("sentence"))
-                        ),
-                    ).alias("done"),
-                    *reset,
-                ),
-            )
-            .otherwise(
-                F.struct(
-                    acc["done"].alias("done"), new_cur.alias("cur"), new_off.alias("cur_off")
-                )
-            )
-        )
-
-    return F.aggregate(texts, init, step, flushed)
-
-
 def _sentence_triples(sent: Column) -> Column:
     """Array of pattern triples for one merged sentence struct."""
     cands = F.array(
@@ -616,8 +435,8 @@ def _sentence_triples(sent: Column) -> Column:
     )
 
 
-# Cache of the UNRESOLVED fused-extraction Column expressions, keyed by
-# the only parameter they depend on. This holds no data and no plan —
+# Cache of the UNRESOLVED per-document extraction Column expressions,
+# keyed by output kind (and reference_strict where it applies). This holds no data and no plan —
 # just the immutable expression AST (the prepared-statement analog):
 # building it costs ~1.2s of py4j round-trips per call (thousands of
 # Column-API constructor calls), which the bench's construction+execution
@@ -627,67 +446,93 @@ def _sentence_triples(sent: Column) -> Column:
 _FUSED_EXPR_CACHE: dict[tuple, Column] = {}
 
 
-def _fused_triples_expr(reference_strict: bool) -> Column:
-    key = ("triples", reference_strict)
+def _cached(key: tuple, build) -> Column:
     col = _FUSED_EXPR_CACHE.get(key)
     if col is None:
-        doc_id = F.col("doc_id")
-        valid = F.filter(
-            F.col("spans"), lambda s: s["offset"].isNotNull() & (s["offset"] >= 0)
-        )
-        tbl = F.flatten(
-            F.transform(
-                F.filter(valid, lambda s: s["kind"] == "table"),
-                lambda s: _table_span_triples(doc_id, s, reference_strict),
-            )
-        )
-        txt = F.flatten(F.transform(_merged_sentences_arr(valid), _sentence_triples))
-        col = F.concat(tbl, txt)
-        _FUSED_EXPR_CACHE[key] = col
+        col = _FUSED_EXPR_CACHE[key] = build()
     return col
 
 
-def _fused_entries_expr() -> Column:
-    key = ("entries",)
-    col = _FUSED_EXPR_CACHE.get(key)
-    if col is None:
-        doc_id = F.col("doc_id")
-        col = F.flatten(
-            F.transform(
-                F.filter(F.col("spans"), lambda s: s["kind"] == "table"),
-                lambda s: _table_span_entries(doc_id, s),
-            )
+def _per_table_span(key: tuple, f) -> Column:
+    """``f(doc_id, span)`` over every valid table span, flattened."""
+    doc_id = F.col("doc_id")
+    return _cached(
+        key,
+        lambda: F.flatten(F.transform(_valid_spans("table"), lambda s: f(doc_id, s))),
+    )
+
+
+def _table_triples_expr(reference_strict: bool) -> Column:
+    return _per_table_span(
+        ("table", reference_strict),
+        lambda doc_id, s: _table_span_triples(doc_id, s, reference_strict),
+    )
+
+
+def _text_triples_expr() -> Column:
+    return _cached(
+        ("text",),
+        lambda: F.flatten(
+            F.transform(_merged_sentences_arr(_valid_spans("text")), _sentence_triples)
+        ),
+    )
+
+
+def _explode(docs: DataFrame, arr: Column) -> DataFrame:
+    """One output row per element of the per-document array ``arr``:
+    doc_id plus the element's struct fields."""
+    return docs.select(F.col("doc_id"), F.explode(arr).alias("t")).select("doc_id", "t.*")
+
+
+def table_cells(docs: DataFrame) -> DataFrame:
+    """documents -> (doc_id, table_id, row, col, text): one row per
+    parsed cell of every valid table span."""
+
+    def cell_rows(doc_id: Column, span: Column) -> Column:
+        table_id, cells = _table_cells(doc_id, span)
+        return F.transform(
+            cells,
+            lambda c: F.struct(
+                table_id.alias("table_id"),
+                c["row"].alias("row"),
+                c["col"].alias("col"),
+                c["txt"].alias("text"),
+            ),
         )
-        _FUSED_EXPR_CACHE[key] = col
-    return col
+
+    return _explode(docs, _per_table_span(("cells",), cell_rows))
+
+
+def semantic_entries(docs: DataFrame) -> DataFrame:
+    """documents -> long-form relationship entries
+    (doc_id, table_id, row_idx, row_header, key, value). One row per
+    (data row, key); option rows contribute a "value" entry (the
+    selected header) and a "notes" entry; empty values are kept.
+
+    Input contract (q:span_invariant checks it): a table's grid lives
+    in ONE span, so two table spans of a document sharing an offset
+    (which collides their sha2 table_id) are evaluated per span."""
+    return _explode(docs, _per_table_span(("entries",), _table_span_entries))
+
+
+def table_triples(docs: DataFrame, reference_strict: bool = False) -> DataFrame:
+    """documents -> table fallback-rule triples (schemas.TRIPLES)."""
+    return _explode(docs, _table_triples_expr(reference_strict))
+
+
+def text_triples(docs: DataFrame) -> DataFrame:
+    """documents -> sentence-pattern triples over the merged text spans
+    (schemas.TRIPLES, table_id NULL)."""
+    return _explode(docs, _text_triples_expr())
 
 
 def all_triples_fused(docs: DataFrame, reference_strict: bool = False) -> DataFrame:
-    """Single-scan, shuffle-free triple extraction over the raw
-    documents table (doc_id, spans): both extraction kinds — the
-    table fallback rule and the sentence patterns — are computed per
-    document with array expressions inside ONE narrow projection, so
-    the physical plan is FileScan -> Project -> Generate(explode) with
-    ZERO exchanges and ONE corpus read. The composed
-    ``all_triples(spans, entries)`` path reads + explodes the corpus
-    once per branch and shuffles for the tabulate windows and the
-    sentence session-window; at 10^12 documents that is the entire
-    corpus scanned twice plus two wide shuffles for work that is
-    per-document local. Row-for-row equivalence with the composed path
-    is pinned by tests/test_triples_fused.py and by sharing the same
-    DuckDB oracle (q:triples_all).
-
-    Reference parity: triplet_extractor.py:339-384 (fallback rule),
-    SURVEY.md §7.2 step 1 (patterns), content_models.py:55-82 (W5).
-
-    The validity contract (the filter inside _fused_triples_expr) is the
-    same as quarantine.span_guard_reason() for the kinds this operator
-    consumes: known kind and a present, non-negative offset — so fused
-    output matches the staged pipeline's post-quarantine triples."""
-    return (
-        docs.select(
-            F.col("doc_id"),
-            F.explode(_fused_triples_expr(reference_strict)).alias("t"),
-        )
-        .select("doc_id", "t.*")
-    )
+    """Both extractors in ONE narrow projection: the physical plan is
+    FileScan -> Project -> Generate(explode), ONE corpus read and ZERO
+    exchanges (U1: the reference's ``all_triplets.extend`` loop is the
+    concat of the two per-document arrays). Reference parity:
+    triplet_extractor.py:339-384 (fallback rule), SURVEY.md §7.2 step 1
+    (patterns), content_models.py:55-82 (W5). Pinned to the DuckDB
+    oracle q:triples_all by tests/test_triples_fused.py."""
+    arr = F.concat(_table_triples_expr(reference_strict), _text_triples_expr())
+    return _explode(docs, arr)

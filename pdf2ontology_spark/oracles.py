@@ -103,6 +103,17 @@ entries AS (
 )"""
 
 
+def entries_capped_cte() -> str:
+    """The reference's data_rows[:3] cap (triplet_extractor.py:358):
+    the entries of each table's first 3 distinct data rows."""
+    return """
+entries_capped AS (
+  SELECT * FROM (
+    SELECT e.*, dense_rank() OVER (PARTITION BY doc_id, table_id ORDER BY row_idx) AS _rk
+    FROM entries e)
+  WHERE _rk <= 3)"""
+
+
 def obj_type_sql(col: str) -> str:
     return f"""CASE WHEN regexp_matches({col}, '{rules.NUMERIC_RE}') THEN 'numeric'
        WHEN {col} IN {_locations_sql()} THEN 'location'

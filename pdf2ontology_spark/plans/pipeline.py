@@ -1,16 +1,19 @@
 """The flagship KG-construction pipeline (SURVEY.md §7.1):
 
-documents(spans) -> segment -> tabulate -> semantic entries -> triples
-                -> canonicalized nodes + edges
+documents(spans) -> triples -> canonicalized nodes + edges
+documents(spans) -> spans -> good spans + quarantine side table
 
-Each arrow is a pure DataFrame transform; with a CheckpointStore the
-stage outputs are persisted and the run resumes idempotently.
+Extraction (table cells -> semantic entries -> fallback rule, plus the
+merged-sentence patterns) is one per-document expression,
+triples.all_triples_fused. Each arrow is a pure DataFrame transform;
+with a CheckpointStore the stage outputs are persisted and the run
+resumes idempotently.
 
 Shuffle budget end-to-end (scale analysis, 1000-executor framing):
-1. segment/explode: narrow — 0 shuffles.
-2. tabulate windows: 1 shuffle on (doc_id, table_id) — all windows share
-   the prefix; grids are tiny so no skew.
-3. triples: narrow on top of (2).
+1. documents: 1 shuffle, the salted repartition below.
+2. spans/quarantine: narrow explode + filter — 0 shuffles.
+3. triples: narrow — every rule is an array expression over one
+   document row, 0 shuffles.
 4. nodes/edges: endpoint ids are pure expressions, so only the final
    groupBys shuffle — 1 shuffle each on entity/edge key. Entity keys are
    the classic skew risk (popular entities); AQE skew handling is on,
@@ -25,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pdf2ontology_spark.operators import graph, quarantine, segment, tabulate, triples
+from pdf2ontology_spark.operators import graph, quarantine, segment, triples
 from pdf2ontology_spark.sources import tables
 from pdf2ontology_spark.sources.checkpoint import CheckpointStore
 
@@ -69,37 +72,18 @@ def run_kg_pipeline(
 
     all_spans = st("spans", lambda: segment.explode_spans(docs))
     # input guard (F2): invalid spans go to a quarantine side table (with
-    # its own _metrics row under a CheckpointStore) and never throw;
-    # downstream stages see only the good side
+    # its own _metrics row under a CheckpointStore) and never throw
     spans, rejected = quarantine.split_spans(all_spans)
     bad_spans = st("quarantine_spans", lambda: rejected)
-    cells = st("cells", lambda: tabulate.table_cells(spans))
-    entries = st("entries", lambda: tabulate.semantic_entries(cells))
-    if ckpt is None:
-        # no checkpoint store -> nothing materializes between stages, so
-        # the staged union would scan + parse the source corpus twice
-        # and shuffle for the tabulate/sentence windows; the fused plan
-        # is one scan, zero exchanges (tests/test_triples_fused.py pins
-        # equivalence; its span-validity guard matches split_spans)
-        trips = triples.all_triples_fused(docs, reference_strict)
-    else:
-        # resumable path: spans/entries are materialized parquet stages,
-        # so each branch reads the (cheap, local) checkpoint — keep the
-        # staged lineage that idempotent resume depends on
-        trips = st(
-            "triples",
-            lambda: triples.table_triples(entries, reference_strict).unionByName(
-                triples.text_triples(spans)
-            ),
-        )
+    # extraction reads the documents, not the spans stage: its span
+    # validity filter is split_spans' contract for the kinds it reads
+    trips = st("triples", lambda: triples.all_triples_fused(docs, reference_strict))
     nodes_df = st("nodes", lambda: graph.nodes(trips))
     edges_df = st("edges", lambda: graph.edges(trips))
     return {
         "documents": docs,
         "spans": spans,
         "quarantine": bad_spans,
-        "cells": cells,
-        "entries": entries,
         "triples": trips,
         "nodes": nodes_df,
         "edges": edges_df,

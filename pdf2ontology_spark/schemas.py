@@ -51,29 +51,6 @@ CELL = StructType(
     ]
 )
 
-CELLS = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("table_id", StringType(), False),
-        StructField("row", IntegerType(), False),
-        StructField("col", IntegerType(), False),
-        StructField("text", StringType(), True),
-    ]
-)
-
-# DataRelationship analog, exploded long-form
-# (/root/reference/src/pydantic_models/semantic_table_models.py:28-47)
-RELATIONSHIP_ENTRIES = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("table_id", StringType(), False),
-        StructField("row_idx", IntegerType(), False),
-        StructField("row_header", StringType(), True),
-        StructField("key", StringType(), False),
-        StructField("value", StringType(), True),
-    ]
-)
-
 # Flattened Triplet (/root/reference/src/pydantic_models/knowledge_models.py:107-146);
 # parity is measured on distinct (subj_name, predicate, obj_name).
 TRIPLES = StructType(
@@ -138,43 +115,3 @@ METRICS = StructType(
         StructField("output_checkpoint", StringType(), True),
     ]
 )
-
-# EntityType enum values (/root/reference/src/pydantic_models/enums.py:28-40)
-ENTITY_TYPES = [
-    "person",
-    "organization",
-    "location",
-    "date",
-    "product",
-    "concept",
-    "numeric",
-    "event",
-    "technology",
-    "document",
-    "other",
-]
-
-# RelationType enum values (/root/reference/src/pydantic_models/enums.py:42-64)
-RELATION_TYPES = [
-    "is_a",
-    "part_of",
-    "located_in",
-    "works_for",
-    "created_by",
-    "contains",
-    "related_to",
-    "temporal",
-    "causal",
-    "member_of",
-    "instance_of",
-    "similar_to",
-    "depends_on",
-    "used_by",
-    "owns",
-    "affects",
-    "precedes",
-    "follows",
-    "composed_of",
-    "produces",
-    "other",
-]

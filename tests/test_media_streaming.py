@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pdf2ontology_spark import png_codec, raster
-from pdf2ontology_spark.operators import media, segment, tabulate, triples
+from pdf2ontology_spark.operators import media, segment, triples
 from pdf2ontology_spark.sources import tables
 from pdf2ontology_spark.streaming.incremental import stream_triples
 
@@ -122,11 +122,10 @@ def test_stream_matches_batch(spark, tmp_path):
     q.awaitTermination(120)
 
     streamed = spark.read.parquet(out_dir)
-    spans = segment.explode_spans(docs)
-    batch = triples.all_triples(spans, tabulate.semantic_entries(tabulate.table_cells(spans)))
-    cols = batch.columns
-    assert streamed.select(*cols).exceptAll(batch).count() == 0
-    assert batch.exceptAll(streamed.select(*cols)).count() == 0
+    golden = tables.load_golden_triples(spark, "/root/testdata/sf0.001")
+    cols = golden.columns
+    assert streamed.select(*cols).exceptAll(golden).count() == 0
+    assert golden.exceptAll(streamed.select(*cols)).count() == 0
 
     # resume: nothing new in the directory -> no duplicate output rows
     n1 = streamed.count()
@@ -202,7 +201,7 @@ def test_apply_actions_on_real_skew(spark):
 
     sf = "/root/testdata/sf0.001"
     blobs = entry._blobs(spark, sf)
-    assessed = condition.assess_media_real(entry._spans_m(spark, sf), blobs)
+    assessed = condition.assess_media_real(entry._spans(spark, sf), blobs)
     skew = {(r.doc_id, r.offset): r.skew_deg for r in assessed.collect()}
     out = media.apply_actions(assessed, blobs).collect()
     assert len(out) == len(skew)

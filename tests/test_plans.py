@@ -19,24 +19,35 @@ def plan_of(df) -> str:
 
 
 def test_triples_plan_single_scan_and_no_python(spark):
-    """Fused extraction: ONE corpus scan (the composed path read it
-    twice), no shuffle beyond the loader's optional small-file
-    repartition, and no Python in the hot path. (There are no row-level
+    """Every extraction-derived query is one per-document projection:
+    ONE corpus scan, no shuffle beyond the loader's optional small-file
+    repartition, no window or aggregation (all table/sentence state is
+    in-row), and no Python in the hot path. (There are no row-level
     predicates to push: every document is consumed; the kind routing is
     in-array.)"""
-    plan = plan_of(entry.q_triples_all(spark, SF))
-    # formatted explain prints each node twice (tree + detail): count
-    # the "(n) Scan parquet" detail headers, one per physical scan node
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, (
-        "fused extraction must scan once"
-    )
-    assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 1, (
-        "only the loader repartition may shuffle"
-    )
-    assert "Window" not in plan and "HashAggregate" not in plan
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, (
-        "core extraction must stay JVM-side"
-    )
+    for q in [
+        entry.q_triples_all,
+        entry.q_triples_table,
+        entry.q_triples_table_strict,
+        entry.q_triples_text,
+        entry.q_table_cells,
+        entry.q_relationship_entries,
+        entry.q_merged_sentences,
+    ]:
+        plan = plan_of(q(spark, SF))
+        name = q.__name__
+        # formatted explain prints each node twice (tree + detail): count
+        # the "(n) Scan parquet" detail headers, one per physical scan node
+        assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, (
+            f"{name} must scan the corpus once"
+        )
+        assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 1, (
+            f"{name}: only the loader repartition may shuffle"
+        )
+        assert "Window" not in plan and "HashAggregate" not in plan, name
+        assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, (
+            f"{name} must stay JVM-side"
+        )
 
 
 def test_shipping_priority_broadcasts_and_prunes(spark):

@@ -10,7 +10,7 @@ import random
 from pyspark.sql import Row
 
 from pdf2ontology_spark import rules
-from pdf2ontology_spark.operators import segment, tabulate
+from pdf2ontology_spark.operators import segment, triples
 
 TEXT_POOL = ["", "X", "✓", "durchfluss", "20-50 l/min", "5.2", "Wert", "flüssig",
              "Kesselhaus", "a b", "Parameter", "x"]
@@ -79,7 +79,7 @@ def test_random_grids_match_reference_impl(spark):
         ]
     )
     got: dict[str, set] = {gid: set() for gid in grids}
-    entries = tabulate.semantic_entries(tabulate.table_cells(segment.explode_spans(docs)))
+    entries = triples.semantic_entries(docs)
     for row in entries.collect():
         got[row.doc_id].add((row.row_idx, row.row_header, row.key, row.value))
     mismatches = {
@@ -142,9 +142,8 @@ def test_property_multilevel_merge(spark):
         doc_id = f"p{d}"
         docs.append(Row(doc_id=doc_id, spans=spans))
         expected[doc_id] = merged_expect
-    spans_df = segment.explode_spans(spark.createDataFrame(docs))
     got: dict = {}
-    for r in segment.merged_text_sentences(spans_df).collect():
+    for r in segment.merged_text_sentences(spark.createDataFrame(docs)).collect():
         got.setdefault(r.doc_id, []).append((r.offset, r.sentence))
     for doc_id, exp in expected.items():
         assert [s for _, s in sorted(got.get(doc_id, []))] == exp, doc_id

@@ -32,11 +32,34 @@ def test_resume_identical(spark, tmp_path):
 
     m = ck2.metrics()
     reused = {r.stage for r in m.filter("reused AND run_id='r2'").select("stage").distinct().collect()}
-    assert {"spans", "cells", "entries", "triples"} <= reused
+    assert {"spans", "triples"} <= reused
     recomputed = {
         r.stage for r in m.filter("NOT reused AND run_id='r2'").select("stage").distinct().collect()
     }
     assert {"nodes", "edges"} <= recomputed
+
+
+def _stages(ck, run_id, reused):
+    m = ck.metrics().filter(f"run_id = '{run_id}' AND reused = {reused}")
+    return {r.stage for r in m.select("stage").distinct().collect()}
+
+
+def test_partial_checkpoint_recomputes_stage(spark, tmp_path):
+    """A stage directory without _SUCCESS (a write that died mid-way) is
+    not complete: the next run recomputes that stage instead of reading
+    its partial files, and the result equals the first run's."""
+    d = str(tmp_path / "ckpt")
+    out1 = run_kg_pipeline(spark, "/root/testdata/sf0.001", ckpt=CheckpointStore(spark, d, "r1"))
+    h1 = out1["triples"].selectExpr(HASH_EXPR).collect()[0][0]
+
+    os.remove(os.path.join(d, "triples", "_SUCCESS"))
+
+    ck2 = CheckpointStore(spark, d, "r2")
+    out2 = run_kg_pipeline(spark, "/root/testdata/sf0.001", ckpt=ck2)
+    assert out2["triples"].selectExpr(HASH_EXPR).collect()[0][0] == h1
+    assert "triples" in _stages(ck2, "r2", reused=False)
+    assert "triples" not in _stages(ck2, "r2", reused=True)
+    assert "spans" in _stages(ck2, "r2", reused=True)
 
 
 def test_lineage_covers_all_docs(spark, tmp_path):

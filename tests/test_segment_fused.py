@@ -1,33 +1,38 @@
-"""Round-7 in-row doc-level twins (segment.doc_stats_docs /
-reassemble_text_docs) must equal the staged explode+groupBy operators
-row-for-row, including dropping span-less / text-less documents."""
+"""The in-row doc-level operators (segment.doc_stats /
+reassemble_text) must equal their DuckDB oracles row-for-row, including
+dropping span-less / text-less documents."""
 
+import duckdb
 from pyspark.sql import Row
 
 import __spark_entry__ as entry
+from pdf2ontology_spark import oracles
 from pdf2ontology_spark.operators import segment
 from pdf2ontology_spark.sources import tables
 
 SF = "/root/testdata/sf0.001"
 
 
-def _same(a, b):
-    assert a.exceptAll(b).count() == 0
-    assert b.exceptAll(a).count() == 0
-
-
-def test_doc_stats_docs_equals_staged(spark):
-    _same(
-        segment.doc_stats(entry._spans(spark, SF)),
-        segment.doc_stats_docs(tables.load_documents_spans(spark, SF)),
+def _equals_oracle(spark, got, name):
+    """``got`` vs ``oracle_sql()[name]`` pointed at the sf0.001 spans
+    parquet, compared as multisets."""
+    sql = entry.oracle_sql()[name].replace(
+        oracles.spans_path(entry.ORACLE_TAG), oracles.spans_path("sf0.001")
     )
+    exp = spark.createDataFrame(duckdb.connect().execute(sql).df(), got.schema)
+    assert got.count() > 0
+    assert got.exceptAll(exp).count() == 0
+    assert exp.exceptAll(got).count() == 0
 
 
-def test_reassemble_text_docs_equals_staged(spark):
-    _same(
-        segment.reassemble_text(entry._spans(spark, SF)),
-        segment.reassemble_text_docs(tables.load_documents_spans(spark, SF)),
-    )
+def test_doc_stats_equals_oracle(spark):
+    docs = tables.load_documents_spans(spark, SF)
+    _equals_oracle(spark, segment.doc_stats(docs), "doc_stats")
+
+
+def test_reassemble_text_equals_oracle(spark):
+    docs = tables.load_documents_spans(spark, SF)
+    _equals_oracle(spark, segment.reassemble_text(docs), "reassemble_text")
 
 
 def test_fused_twins_drop_empty_docs(spark):
@@ -45,9 +50,9 @@ def test_fused_twins_drop_empty_docs(spark):
         ],
         "doc_id string, spans array<struct<kind string, text string, media_ref string, offset int>>",
     )
-    ds = {r.doc_id: r for r in segment.doc_stats_docs(docs).collect()}
+    ds = {r.doc_id: r for r in segment.doc_stats(docs).collect()}
     assert list(ds) == ["d1"]
     assert ds["d1"].n_spans == 3 and ds["d1"].n_text == 2 and ds["d1"].total_chars == 3
-    rt = segment.reassemble_text_docs(docs).collect()
+    rt = segment.reassemble_text(docs).collect()
     assert len(rt) == 1
     assert rt[0].document_text == "a\nb." and rt[0].n_text_spans == 2

@@ -8,7 +8,7 @@ import json
 
 from pyspark.sql import Row
 
-from pdf2ontology_spark.operators import segment, tabulate
+from pdf2ontology_spark.operators import triples
 
 
 def _doc(spark, cells, doc_id="d1"):
@@ -30,8 +30,7 @@ def _doc(spark, cells, doc_id="d1"):
 
 
 def _entries(spark, cells):
-    spans = segment.explode_spans(_doc(spark, cells))
-    out = tabulate.semantic_entries(tabulate.table_cells(spans))
+    out = triples.semantic_entries(_doc(spark, cells))
     return {(r.row_idx, r.key, r.value) for r in out.collect()}
 
 
@@ -121,9 +120,7 @@ def test_missing_header_uses_column_n(spark):
 
 
 def test_malformed_json_tolerated(spark):
-    spans = segment.explode_spans(
-        spark.createDataFrame(
-            [Row(doc_id="bad", spans=[Row(kind="table", text="{not json", media_ref="", offset=0)])]
-        )
+    docs = spark.createDataFrame(
+        [Row(doc_id="bad", spans=[Row(kind="table", text="{not json", media_ref="", offset=0)])]
     )
-    assert tabulate.semantic_entries(tabulate.table_cells(spans)).count() == 0
+    assert triples.semantic_entries(docs).count() == 0

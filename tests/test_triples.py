@@ -6,11 +6,7 @@ import json
 
 from pyspark.sql import Row
 
-from pdf2ontology_spark.operators import segment, tabulate, triples
-
-
-def _spans(spark, rows):
-    return segment.explode_spans(spark.createDataFrame(rows))
+from pdf2ontology_spark.operators import segment, triples
 
 
 def test_fallback_rule_exact(spark):
@@ -24,11 +20,10 @@ def test_fallback_rule_exact(spark):
         {"row": 3, "col": 0, "text": "leer"},
         {"row": 3, "col": 1, "text": ""},
     ]
-    spans = _spans(
-        spark,
+    docs = spark.createDataFrame(
         [Row(doc_id="d", spans=[Row(kind="table", text=json.dumps(cells), media_ref="", offset=0)])],
     )
-    out = triples.table_triples(tabulate.semantic_entries(tabulate.table_cells(spans))).collect()
+    out = triples.table_triples(docs).collect()
     got = {
         (r.subj_name, r.subj_type, r.predicate, r.obj_name, r.obj_type, r.confidence,
          r.source_sentence, r.extraction_method)
@@ -49,20 +44,17 @@ def test_reference_strict_caps_three_rows(spark):
             {"row": i, "col": 0, "text": f"p{i}"},
             {"row": i, "col": 1, "text": str(i)},
         ]
-    spans = _spans(
-        spark,
+    docs = spark.createDataFrame(
         [Row(doc_id="d", spans=[Row(kind="table", text=json.dumps(cells), media_ref="", offset=0)])],
     )
-    entries = tabulate.semantic_entries(tabulate.table_cells(spans))
-    assert triples.table_triples(entries).count() == 5
+    assert triples.table_triples(docs).count() == 5
     # the reference processes data_rows[:3] only (triplet_extractor.py:358)
-    strict = triples.table_triples(entries, reference_strict=True)
+    strict = triples.table_triples(docs, reference_strict=True)
     assert {r.subj_name for r in strict.collect()} == {"p1", "p2", "p3"}
 
 
 def test_text_patterns(spark):
-    spans = _spans(
-        spark,
+    docs = spark.createDataFrame(
         [
             Row(
                 doc_id="d",
@@ -78,7 +70,7 @@ def test_text_patterns(spark):
     )
     got = {
         (r.subj_name, r.predicate, r.obj_name, r.subj_type, r.obj_type)
-        for r in triples.text_triples(spans).collect()
+        for r in triples.text_triples(docs).collect()
     }
     # title spans are not text spans -> no extraction from offset 3
     assert got == {
@@ -102,8 +94,7 @@ def test_multi_level_cross_span_merge(spark):
     """W5: a sentence split across 3+ text spans reassembles (reference
     CrossPageContent chains, content_models.py:55-82); terminated spans
     end a run even mid-document."""
-    spans = _spans(
-        spark,
+    docs = spark.createDataFrame(
         [
             Row(
                 doc_id="d",
@@ -118,13 +109,13 @@ def test_multi_level_cross_span_merge(spark):
             )
         ],
     )
-    got = {r.offset: r.sentence for r in segment.merged_text_sentences(spans).collect()}
+    got = {r.offset: r.sentence for r in segment.merged_text_sentences(docs).collect()}
     assert got == {
         0: "Die Anlage Pumpe P-100 befindet sich im Kesselhaus.",
         4: "Eigener Satz.",
         5: "Offenes Ende ohne Punkt",
     }
-    trip = triples.text_triples(spans).collect()
+    trip = triples.text_triples(docs).collect()
     assert {(t.subj_name, t.predicate, t.obj_name) for t in trip} == {
         ("Pumpe P-100", "located_in", "Kesselhaus")
     }
@@ -133,8 +124,7 @@ def test_multi_level_cross_span_merge(spark):
 def test_ner_mentions_typed(spark):
     from pdf2ontology_spark.operators import ner
 
-    spans = _spans(
-        spark,
+    docs = spark.createDataFrame(
         [
             Row(
                 doc_id="d",
@@ -145,7 +135,7 @@ def test_ner_mentions_typed(spark):
             )
         ],
     )
-    got = {(r.name, r.entity_type): r.char_pos for r in ner.ner_mentions(spans).collect()}
+    got = {(r.name, r.entity_type): r.char_pos for r in ner.ner_mentions(docs).collect()}
     assert got[("Samson AG", "organization")] == 1
     assert got[("Pumpe P-100", "product")] == 19
     assert ("Kesselhaus", "location") in got
@@ -154,8 +144,7 @@ def test_ner_mentions_typed(spark):
 def test_ner_typ_products_umlauts_and_boundaries(spark):
     from pdf2ontology_spark.operators import ner
 
-    spans = _spans(
-        spark,
+    docs = spark.createDataFrame(
         [
             Row(
                 doc_id="d",
@@ -166,7 +155,7 @@ def test_ner_typ_products_umlauts_and_boundaries(spark):
             )
         ],
     )
-    got = {(r.name, r.entity_type) for r in ner.ner_mentions(spans).collect()}
+    got = {(r.name, r.entity_type) for r in ner.ner_mentions(docs).collect()}
     assert ("Ventil Typ 3241", "product") in got      # 'Typ' + bare digits
     assert ("Regler R-20", "product") in got
     assert ("Müller AG", "organization") in got       # umlaut interior
