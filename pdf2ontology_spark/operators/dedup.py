@@ -117,38 +117,11 @@ def mix_consts(k: int) -> tuple[list[int], list[int], list[int]]:
     return A1, A2, B
 
 
-def minhash_bases(shingle: Column) -> tuple[Column, Column]:
-    """Two 32-bit integer halves of a shingle's 64-bit md5 prefix —
-    ONE digest per shingle (Spark's subexpression elimination merges
-    the two md5 references); the k signature slots derive from them
-    arithmetically (DuckDB twin: oracles_data.hexval over the same
-    digits of a once-computed md5 column)."""
-    h = F.md5(shingle)
-    b1 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-    b2 = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
-    return b1, b2
-
-
-def minhash_mix_exprs(shingle: Column, k: int) -> list[Column]:
-    """The k min-aggregate inputs of the universal-hash MinHash."""
-    A1, A2, B = mix_consts(k)
-    b1, b2 = minhash_bases(shingle)
-    return [
-        (
-            (F.lit(A1[i]) * b1) % F.lit(MINHASH_P)
-            + (F.lit(A2[i]) * b2) % F.lit(MINHASH_P)
-            + F.lit(B[i])
-        )
-        % F.lit(MINHASH_P)
-        for i in range(k)
-    ]
-
-
 def minhash_signature(
     df: DataFrame, id_col: str, text_col: str, k: int = MINHASH_K, w: int = SHINGLE_W
 ) -> DataFrame:
     """(id, mh_0..mh_{k-1}) — mh_i = min over shingles of the
-    universal-hash mix (``minhash_mix_exprs``) of the shingle's 64-bit
+    universal-hash mix (``mix_consts``) of the shingle's 64-bit
     md5 prefix. Single groupBy; ONE md5 per shingle with k
     multiply-mod mixes instead of k independent digests — measured 2x
     faster end-to-end at sf0.1. (LSH semantics: slot fusion now needs
@@ -163,10 +136,11 @@ def minhash_signature(
     codegen. An in-row array_min/transform variant was measured 2x
     SLOWER: higher-order lambdas evaluate interpreted."""
     sh = shingles(df, id_col, text_col, w)
-    # SQL-string form of minhash_bases + minhash_mix_exprs (identical
-    # arithmetic, one parse per aggregate — the Column-API form cost
-    # ~10 py4j round-trips per slot in pure construction time; Spark's
-    # subexpression elimination still merges the two md5 references)
+    # b1/b2 are the two 32-bit halves of the shingle's md5 prefix; SQL
+    # strings give one parse per aggregate (the Column-API form cost ~10
+    # py4j round-trips per slot in pure construction time), and Spark's
+    # subexpression elimination merges the two md5 references into one
+    # digest per shingle
     A1, A2, B = mix_consts(k)
     base = sh.select(
         "id",

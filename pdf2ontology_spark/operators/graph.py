@@ -118,12 +118,42 @@ def entity_id_col(name: Column, entity_type: Column) -> Column:
     return F.sha2(F.concat_ws(SEP, canonical_key_col(name, entity_type), entity_type), 256)
 
 
+def _top3(c: str) -> Column:
+    """First-level top-3: the sorted distinct first three values of a
+    string column — deterministic and size-capped."""
+    return F.slice(F.array_sort(F.collect_set(c)), 1, 3)
+
+
+def _union_merge(c: str) -> Column:
+    """Sorted distinct union of an array column's groups."""
+    return F.array_sort(F.array_distinct(F.flatten(F.collect_list(c))))
+
+
+def _top3_merge(c: str) -> Column:
+    """Re-merge of ``_top3`` arrays: top-3 of the union is distributive,
+    so a two-level (or batch-by-batch) aggregation stays exact."""
+    return F.slice(_union_merge(c), 1, 3)
+
+
+def top_surface(c: str) -> Column:
+    """``c`` of the most frequent surface form (tie -> lexicographically
+    smallest name) over per-surface rows with ``n`` and ``name``;
+    min_by over (-count, name) keeps it deterministic."""
+    return F.min_by(c, F.struct((-F.col("n")).alias("nn"), F.col("name")))
+
+
+def edge_id_col(subject_id: Column, predicate: Column, object_id: Column) -> Column:
+    return F.sha2(F.concat_ws(SEP, subject_id, predicate, object_id), 256)
+
+
 def per_surface(triples: DataFrame) -> DataFrame:
     """Per-surface-form statistics — the MERGEABLE node stage: every
     column combines additively across document subsets (n sums,
     max_conf maxes, mention_ex is a distributive top-3), so the
     streaming path can upsert batch-local rows into a surfaces stage
-    table and derive identical nodes (tests/test_stream_graph.py)."""
+    table and derive identical nodes (tests/test_stream_graph.py).
+    LSH canonicalization reads its (name, entity_type, n, max_conf)
+    columns; Catalyst prunes the rest."""
     # aggregate FIRST on the raw surface form, then derive the canonical id
     # on the (tiny) distinct set — sha2+normalization run per distinct name,
     # not per mention (60k vs 1.35M evaluations at sf0.1)
@@ -133,11 +163,7 @@ def per_surface(triples: DataFrame) -> DataFrame:
         .agg(
             F.count("*").cast("long").alias("n"),
             F.max("confidence").alias("max_conf"),
-            # top-3 example mentions; per-surface top-k then re-merge is
-            # distributive, so the two-level aggregation stays exact
-            F.slice(F.array_sort(F.collect_set("source_sentence")), 1, 3).alias(
-                "mention_ex"
-            ),
+            _top3("source_sentence").alias("mention_ex"),
         )
         .withColumn("entity_id", entity_id_col(F.col("name"), F.col("entity_type")))
     )
@@ -154,32 +180,21 @@ def combine_surfaces(a: DataFrame, b: DataFrame) -> DataFrame:
         .agg(
             F.sum("n").cast("long").alias("n"),
             F.max("max_conf").alias("max_conf"),
-            F.slice(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("mention_ex")))),
-                1,
-                3,
-            ).alias("mention_ex"),
+            _top3_merge("mention_ex").alias("mention_ex"),
         )
     )
 
 
 def nodes_from_surfaces(per_surface_df: DataFrame) -> DataFrame:
-    """Second-level node aggregation over a per_surface stage table.
-
-    canonical_form = most frequent surface form (tie -> lexicographically
-    smallest), computed deterministically with min_by over (-count, name).
-    """
+    """Second-level node aggregation over a per_surface stage table;
+    canonical_form is the ``top_surface`` name."""
     out = per_surface_df.groupBy("entity_id", "entity_type").agg(
-        F.min_by("name", F.struct((-F.col("n")).alias("nn"), F.col("name"))).alias(
-            "canonical_form"
-        ),
+        top_surface("name").alias("canonical_form"),
         F.array_sort(F.collect_set("name")).alias("aliases"),
         F.sum("n").cast("long").alias("mention_count"),
         F.max("n").cast("long").alias("top_surface_count"),
         F.max("max_conf").alias("confidence"),
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("mention_ex")))), 1, 3
-        ).alias("mentions"),
+        _top3_merge("mention_ex").alias("mentions"),
     )
     # uri / external_ids populate the reference's declared-but-never-set
     # Entity.uri / Entity.external_ids (knowledge_models.py:47-55) with
@@ -214,94 +229,63 @@ def nodes(triples: DataFrame) -> DataFrame:
     return nodes_from_surfaces(per_surface(triples))
 
 
-def surface_ids(triples: DataFrame) -> DataFrame:
-    """(name, entity_type, entity_id) for every DISTINCT mention surface.
-
-    The id expression (normalize regexes + sha2) runs once per distinct
-    surface instead of once per triple row — at 8M triples/600k docs
-    that is ~60k evaluations instead of 16M, and the triple-side lookup
-    becomes a join that AQE broadcasts (the surface dim is tiny relative
-    to the fact stream at every scale)."""
-    return (
-        mentions(triples)
-        .select("name", "entity_type")
-        .distinct()
-        .withColumn("entity_id", entity_id_col(F.col("name"), F.col("entity_type")))
-    )
-
-
-def edge_aggs(triples: DataFrame) -> DataFrame:
-    """Keyed edge aggregates — the MERGEABLE edge stage: weight sums,
-    confidence maxes, evidence is a distributive top-3 and _methods a
-    distinct union, so batch-local rows upsert additively into an
-    edge-aggs stage table (streaming graph materialization).
-
-    weight = co-occurrence count (Relation.weight semantics,
-    knowledge_models.py:77-81); confidence = max over merged triples.
-    """
-    # PHASE 1 — aggregate on the RAW surface keys: the fact-stream
-    # shuffle carries names/predicate (tens of bytes), not two 64-char
-    # sha2 hex ids (128 bytes/row). This was a measured 1.38-1.58x
-    # CPU-seconds inflation lever at rising thread counts — the
-    # aggregation is DRAM-bound and row width is the knob.
-    by_surface = triples.groupBy(
+def edge_surfaces(triples: DataFrame) -> DataFrame:
+    """One row per surface-keyed edge (subj_name, subj_type, predicate,
+    obj_name, obj_type): weight = co-occurrence count (Relation.weight
+    semantics, knowledge_models.py:77-81), confidence = max over the
+    merged triples, evidence = Relation.evidence (knowledge_models.py:
+    94-97) as a top-3 of supporting sentences, _methods = the sorted
+    extraction methods. Exact edges re-key these groups by entity id
+    (``edge_aggs``); LSH canonicalization re-keys them by component."""
+    # aggregating on the RAW surface keys keeps the fact-stream shuffle
+    # narrow: names/predicate (tens of bytes), not two 64-char sha2 hex
+    # ids (128 bytes/row). This was a measured 1.38-1.58x CPU-seconds
+    # inflation lever at rising thread counts — the aggregation is
+    # DRAM-bound and row width is the knob.
+    return triples.groupBy(
         "subj_name", "subj_type", "predicate", "obj_name", "obj_type"
     ).agg(
         F.count("*").cast("double").alias("weight"),
         F.max("confidence").alias("confidence"),
-        # Relation.evidence (knowledge_models.py:94-97): top-3 distinct
-        # supporting sentences, deterministic (sorted) and size-capped
-        F.slice(F.array_sort(F.collect_set("source_sentence")), 1, 3).alias("evidence"),
+        _top3("source_sentence").alias("evidence"),
         F.array_sort(F.collect_set("extraction_method")).alias("_methods"),
     )
-    # endpoint ids computed DIRECTLY on the collapsed rows (round 7):
-    # the round-6 surface-id dimension join ran sha2 once per distinct
-    # surface, but paid a second full pass over the triples stage, a 2x
-    # mention explode, a distinct exchange and two join builds for it —
-    # measured 1.39 -> 0.87s at sf0.1. The ids are pure expressions of
-    # the group keys, and the hash now runs at edge-surface cardinality
-    # (the same row count the joins would have streamed anyway).
-    e = by_surface.withColumn(
-        "subject_id", entity_id_col(F.col("subj_name"), F.col("subj_type"))
-    ).withColumn(
-        "object_id", entity_id_col(F.col("obj_name"), F.col("obj_type"))
-    )
-    # PHASE 2 — re-aggregate by canonical id: distinct surfaces can
-    # normalize to the SAME entity_id, so the surface-keyed groups are
-    # finer than the id-keyed edges. Every column's merge is the exact
-    # distributive combine (combine_edge_aggs' rules), and this second
-    # aggregation runs at (tiny) edge x surface-variant cardinality.
-    return e.groupBy("subject_id", "predicate", "object_id").agg(
+
+
+def _merge_edge_aggs(df: DataFrame) -> DataFrame:
+    """Id-keyed edge aggregation over rows that already carry weight /
+    confidence / evidence / _methods: every column's merge is the exact
+    distributive combine (weights sum, confidences max, evidence re-takes
+    the top-3, _methods a distinct union)."""
+    return df.groupBy("subject_id", "predicate", "object_id").agg(
         F.sum("weight").alias("weight"),
         F.max("confidence").alias("confidence"),
-        F.slice(
-            F.array_sort(F.array_distinct(F.flatten(F.collect_list("evidence")))), 1, 3
-        ).alias("evidence"),
-        F.array_sort(
-            F.array_distinct(F.flatten(F.collect_list("_methods")))
-        ).alias("_methods"),
+        _top3_merge("evidence").alias("evidence"),
+        _union_merge("_methods").alias("_methods"),
+    )
+
+
+def edge_aggs(triples: DataFrame) -> DataFrame:
+    """Keyed edge aggregates — the MERGEABLE edge stage: batch-local rows
+    upsert additively into an edge-aggs stage table (streaming graph
+    materialization)."""
+    # endpoint ids are pure expressions of the group keys, so they are
+    # computed on the collapsed rows (edge-surface cardinality) instead
+    # of through a surface-id dimension join, which costs a second pass
+    # over the triples (measured 1.39 -> 0.87s at sf0.1). Distinct
+    # surfaces can normalize to the SAME entity_id, so the surface-keyed
+    # groups are finer than the id-keyed edges and merge once more.
+    return _merge_edge_aggs(
+        edge_surfaces(triples)
+        .withColumn("subject_id", entity_id_col(F.col("subj_name"), F.col("subj_type")))
+        .withColumn("object_id", entity_id_col(F.col("obj_name"), F.col("obj_type")))
     )
 
 
 def combine_edge_aggs(a: DataFrame, b: DataFrame) -> DataFrame:
     """Merge two edge_aggs tables exactly: combine(edge_aggs(X),
     edge_aggs(Y)) == edge_aggs(X ++ Y)."""
-    return (
-        a.unionByName(b)
-        .groupBy("subject_id", "predicate", "object_id")
-        .agg(
-            F.sum("weight").alias("weight"),
-            F.max("confidence").alias("confidence"),
-            F.slice(
-                F.array_sort(F.array_distinct(F.flatten(F.collect_list("evidence")))),
-                1,
-                3,
-            ).alias("evidence"),
-            F.array_sort(
-                F.array_distinct(F.flatten(F.collect_list("_methods")))
-            ).alias("_methods"),
-        )
-    )
+    return _merge_edge_aggs(a.unionByName(b))
 
 
 def edges_from_aggs(agg: DataFrame) -> DataFrame:
@@ -315,7 +299,7 @@ def edges_from_aggs(agg: DataFrame) -> DataFrame:
         F.array_join("_methods", ","),
     )
     return agg.select(
-        F.sha2(F.concat_ws(SEP, "subject_id", "predicate", "object_id"), 256).alias(
+        edge_id_col(F.col("subject_id"), F.col("predicate"), F.col("object_id")).alias(
             "edge_id"
         ),
         "subject_id",

@@ -9,9 +9,9 @@ Entity.canonical_form / entity dedup beyond exact name
 name map at triplet_extractor.py:253-272).
 
 Pipeline (all DataFrame ops):
-1. surfaces: distinct (name, entity_type) with a normalized key
-   (graph.canonical_key_col) — value-like types (numeric/date) keep
-   exact keys and never enter fuzzy blocking.
+1. surfaces: graph.per_surface's (name, entity_type, n, max_conf)
+   rows with a normalized key (graph.canonical_key_col) — value-like
+   types (numeric/date) keep exact keys and never enter fuzzy blocking.
 2. exact-key contraction: every (key, entity_type) group is collapsed to
    its min-surface_id representative with ONE window (``rep_id``); the
    representatives are then the narrow filter surface_id == rep_id.
@@ -29,8 +29,9 @@ Pipeline (all DataFrame ops):
 4. connected components (components.connected_components) over the
    bridge edges — iterative self-joins, the north-rule canonicalization.
 5. canonical_nodes/canonical_edges: groupBy component, representative =
-   most frequent surface form; edges remapped via an id -> component
-   broadcast-size dimension join.
+   most frequent surface form (graph.top_surface); graph.edge_surfaces'
+   surface-keyed edge groups are remapped via a surface -> component
+   dimension join and re-aggregated.
 """
 
 from __future__ import annotations
@@ -53,17 +54,6 @@ def _char_shingles_expr(col_name: str, n: int = 3) -> Column:
             F.sequence(F.lit(1), F.greatest(F.length(c) - (n - 1), F.lit(1))),
             lambda i: c.substr(i, F.lit(n)),
         )
-    )
-
-
-def surfaces(triples: DataFrame) -> DataFrame:
-    """Distinct mention surfaces with canonical keys and stable ids."""
-    return (
-        graph.mentions(triples)
-        .groupBy("name", "entity_type")
-        .agg(F.count("*").cast("long").alias("n"), F.max("confidence").alias("max_conf"))
-        .withColumn("key", graph.canonical_key_col(F.col("name"), F.col("entity_type")))
-        .withColumn("surface_id", F.sha2(F.concat_ws("\x1f", "name", "entity_type"), 256))
     )
 
 
@@ -175,7 +165,13 @@ def canonicalize(triples: DataFrame) -> dict[str, DataFrame]:
     component labels are min surface_id, and each group rep IS the min
     surface_id of its exact group.
     """
-    surf = exact_contract(surfaces(triples)).cache()
+    surf = (
+        graph.per_surface(triples)
+        .select("name", "entity_type", "n", "max_conf")
+        .withColumn("key", graph.canonical_key_col(F.col("name"), F.col("entity_type")))
+        .withColumn("surface_id", F.sha2(F.concat_ws(graph.SEP, "name", "entity_type"), 256))
+    )
+    surf = exact_contract(surf).cache()
     # rep_id IS the min surface_id of the exact (key, entity_type) group,
     # so the rep rows are a narrow filter — no second aggregation
     reps = surf.filter(F.col("surface_id") == F.col("rep_id")).select(
@@ -189,12 +185,8 @@ def canonicalize(triples: DataFrame) -> dict[str, DataFrame]:
         .select("surface_id", "name", "entity_type", "n", "max_conf", "canonical_id")
     )
     nodes = mapping.groupBy("canonical_id").agg(
-        F.min_by("name", F.struct((-F.col("n")).alias("nn"), F.col("name"))).alias(
-            "canonical_form"
-        ),
-        F.min_by("entity_type", F.struct((-F.col("n")).alias("nn"), F.col("name"))).alias(
-            "entity_type"
-        ),
+        graph.top_surface("name").alias("canonical_form"),
+        graph.top_surface("entity_type").alias("entity_type"),
         F.array_sort(F.collect_set("name")).alias("aliases"),
         F.sum("n").cast("long").alias("mention_count"),
         F.max("max_conf").alias("confidence"),
@@ -210,18 +202,18 @@ def canonicalize(triples: DataFrame) -> dict[str, DataFrame]:
         F.col("entity_type").alias("obj_type"),
         F.col("canonical_id").alias("object_id"),
     )
+    # join at edge-surface cardinality: weight (a count) sums and
+    # confidence maxes exactly across the surface groups of one edge
     edges = (
-        triples.join(m_subj, ["subj_name", "subj_type"])
+        graph.edge_surfaces(triples)
+        .join(m_subj, ["subj_name", "subj_type"])
         .join(m_obj, ["obj_name", "obj_type"])
         .groupBy("subject_id", "predicate", "object_id")
-        .agg(
-            F.count("*").cast("double").alias("weight"),
-            F.max("confidence").alias("confidence"),
+        .agg(F.sum("weight").alias("weight"), F.max("confidence").alias("confidence"))
+        .select(
+            graph.edge_id_col(F.col("subject_id"), F.col("predicate"), F.col("object_id"))
+            .alias("edge_id"),
+            "subject_id", "predicate", "object_id", "weight", "confidence",
         )
-        .withColumn(
-            "edge_id",
-            F.sha2(F.concat_ws("\x1f", "subject_id", "predicate", "object_id"), 256),
-        )
-        .select("edge_id", "subject_id", "predicate", "object_id", "weight", "confidence")
     )
     return {"surfaces": surf, "pairs": pairs, "mapping": mapping, "nodes": nodes, "edges": edges}

@@ -134,49 +134,6 @@ def _vec_dim(emb: DataFrame, vec_col: str) -> int:
     return int(row["d"]) if row else 0
 
 
-def _checked_vec(vec_col: str, dim: int) -> Column:
-    """double-cast vector with a per-row dimensionality guard: a vector
-    whose length differs from the hyperplane width would silently bias
-    signature bits to 0 (zip_with pads the short side with nulls, the
-    projection goes null, the bit falls to 0) — so mismatches raise
-    instead. ``assert_true`` returns NULL on success; wrapping it in
-    ``when(...isNull(), v)`` forces per-row evaluation so Catalyst cannot
-    prune the check away."""
-    ok = F.assert_true(
-        F.size(F.col(vec_col)) == F.lit(dim),
-        # coalesce: a NULL vector must raise a NAMED error, not a
-        # message-less one (concat with NULL would null the message)
-        F.concat(
-            F.lit(f"embedding dimension mismatch: expected {dim}, got "),
-            F.coalesce(
-                F.size(F.col(vec_col)).cast("string"), F.lit("NULL (missing vector)")
-            ),
-        ),
-    )
-    return F.when(ok.isNull(), _as_double(F.col(vec_col)))
-
-
-def _band_signature(v: Column, offset: int, nbits: int, dim: int) -> Column:
-    """nbits-bit signature over planes [offset, offset+nbits): bit j = 1
-    iff dot(v, plane_{offset+j}) > 0. Planes are literal arrays."""
-    sig = None
-    for j in range(nbits):
-        plane = F.array(*[F.lit(_plane_value(offset + j, i)) for i in range(dim)])
-        proj = F.aggregate(
-            F.zip_with(v, plane, lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bit = F.when(proj > 0, F.lit(2**j)).otherwise(F.lit(0))
-        sig = bit if sig is None else sig + bit
-    return sig.cast("int")
-
-
-def _signature(v: Column, planes: int, dim: int) -> Column:
-    """planes-bit signature as an int: bit p = 1 iff dot(v, plane_p) > 0."""
-    return _band_signature(v, 0, planes, dim)
-
-
 def _band_keys_udf(planes_per_band: int, bands: int, dim: int):
     """Arrow-batched numpy kernel computing ALL band keys per vector in
     one pass — the hot path of every banded-LSH operator. The JVM
@@ -185,12 +142,12 @@ def _band_keys_udf(planes_per_band: int, bands: int, dim: int):
     for 2000 rows x 96 planes x dim 64 at sf0.1); this kernel does the
     same flops as 'dim' vectorized fused multiply-adds (~10ms).
 
-    BIT-IDENTICAL to the expression form and the DuckDB oracle: the
+    BIT-IDENTICAL to the DuckDB oracle (oracles_data._band_sig_sql): the
     accumulation loops i = 0..dim-1 adding V[:,i]*P[:,i] — the exact
     left-to-right fold order per projection (numpy elementwise ops are
     IEEE doubles; no matmul/pairwise-sum reordering), so every
     projection, sign bit and band key matches the SQL twin exactly.
-    The length/null guard mirrors ``_checked_vec``: mismatches raise
+    Every vector is length/null-checked first: a mismatch raises
     instead of silently biasing bits to 0."""
     from pyspark.sql.types import ArrayType, IntegerType
 
@@ -469,16 +426,6 @@ def ivf_topk(
         .filter(F.col("rank") <= k)
         .select("query_id", "corpus_id", "cosine", "rank")
     )
-
-
-def signatures(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding",
-               planes: int = PLANES, dim: int | None = None) -> DataFrame:
-    if dim is None:
-        dim = _vec_dim(emb, vec_col)
-    return emb.select(
-        F.col(id_col).alias("id"),
-        _checked_vec(vec_col, dim).alias("v"),
-    ).withColumn("sig", _signature(F.col("v"), planes, dim))
 
 
 def lsh_topk(

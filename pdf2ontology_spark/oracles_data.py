@@ -188,7 +188,7 @@ FROM ranked WHERE rank <= {k}"""
 
 def _band_sig_sql(vcol: str, offset: int, nbits: int) -> str:
     """nbits-bit hyperplane signature over planes [offset, offset+nbits)
-    of a double list column — twin of similarity._band_signature."""
+    of a double list column — twin of similarity._band_keys_udf."""
     projs = []
     for j in range(nbits):
         p = offset + j

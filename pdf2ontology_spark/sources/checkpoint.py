@@ -1,4 +1,4 @@
-"""Checkpointed stage runner with per-partition lineage/metrics.
+"""Checkpointed stage runner with per-file lineage/metrics.
 
 The Spark-native analog of the reference's per-stage JSON archival
 (/root/reference/src/table_processors/table_content_extractor.py:401-434
@@ -9,7 +9,7 @@ StageResult (/root/reference/src/pydantic_models/pipeline_models.py:25-48).
 Semantics:
 - ``stage(...)`` computes a DataFrame, writes it to
   ``<root>/<name>`` (parquet today, Iceberg on a real cluster), and
-  appends one _metrics row per output partition. If the checkpoint is
+  appends one _metrics row per output file. If the checkpoint is
   already complete (``_SUCCESS``), it is READ instead of recomputed —
   that is the idempotent resume path: all ids are deterministic content
   hashes, so resumed and fresh runs are byte-identical (tested in
@@ -21,10 +21,21 @@ Semantics:
 from __future__ import annotations
 
 import os
+import pathlib
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from pdf2ontology_spark.sources import tables
+
+METRICS_SCHEMA = (
+    "stage string, run_id string, partition_id int, rows_out long, wall_ms long, "
+    "output_checkpoint string, reused boolean"
+)
+LINEAGE_SCHEMA = (
+    "stage string, run_id string, key string, file string, "
+    "n_rows long, key_min string, key_max string"
+)
 
 
 class CheckpointStore:
@@ -44,7 +55,7 @@ class CheckpointStore:
     ) -> DataFrame:
         """Run (or resume) one stage. ``compute`` is a zero-arg callable
         returning the stage DataFrame. Stages keyed by ``lineage_key``
-        also record per-file lineage rows (see ``_record_lineage``)."""
+        also record per-file lineage rows (see ``_record``)."""
         path = self._path(name)
         if resume and self.exists(name):
             self._record(name, path, wall_ms=0, reused=True)
@@ -58,62 +69,55 @@ class CheckpointStore:
             "parquet.block.size", 16 * 1024 * 1024
         ).parquet(path)
         wall_ms = int((time.monotonic() - t0) * 1000)
-        self._record(name, path, wall_ms=wall_ms, reused=False)
-        self._record_lineage(name, path, lineage_key)
+        self._record(name, path, wall_ms=wall_ms, reused=False, lineage_key=lineage_key)
         return self.spark.read.parquet(path)
 
-    def _record(self, name: str, path: str, wall_ms: int, reused: bool) -> None:
-        """One _metrics row per output partition (FIXTURES.md F5).
+    def _record(
+        self, name: str, path: str, wall_ms: int, reused: bool, lineage_key: str | None = None
+    ) -> None:
+        """Stage accounting from the parquet FOOTERS of the files just
+        written (or reused) — a driver-side metadata read, no Spark job
+        over the checkpoint; on Iceberg this is the snapshot manifest.
 
-        Reads the just-written checkpoint and counts rows per partition —
-        a cheap scan of row-group metadata-sized data; on Iceberg this
-        becomes a snapshot-summary read.
-        """
-        out = self.spark.read.parquet(path)
-        per_part = out.groupBy(F.spark_partition_id().alias("partition_id")).agg(
-            F.count("*").cast("long").alias("rows_out")
-        )
-        metrics = per_part.select(
-            F.lit(name).alias("stage"),
-            F.lit(self.run_id).alias("run_id"),
-            F.col("partition_id").cast("int"),
-            "rows_out",
-            F.lit(wall_ms).cast("long").alias("wall_ms"),
-            F.lit(path).alias("output_checkpoint"),
-            F.lit(reused).alias("reused"),
-        )
-        metrics.write.mode("append").parquet(os.path.join(self.root, "_metrics"))
+        - ``_metrics`` (FIXTURES.md F5): one row per output file, in
+          sorted file order (``partition_id`` is the file's index) with
+          the footer row count, so an empty stage still gets an explicit
+          ``rows_out = 0`` row.
+        - ``_lineage`` (fresh writes of stages that have a
+          ``lineage_key`` column): one row per file with its row count
+          and covered key range from the row-group min/max statistics —
+          the audit substrate for idempotent resume (which docs does
+          this checkpoint file cover?). Node/edge tables have no doc key
+          and get _metrics rows only."""
+        import pyarrow.parquet as pq
 
-    def _record_lineage(self, name: str, path: str, key: str) -> None:
-        """Per-(key-range, stage) lineage: one row per written FILE with
-        the stage, the covered key range, and the row count — the audit
-        substrate for idempotent resume (which docs does this checkpoint
-        file cover?). Stages whose output has no ``key`` column (e.g.
-        node/edge tables) skip doc lineage; the per-partition _metrics
-        row still covers them. One cheap scan of the fresh checkpoint;
-        on Iceberg this is file-level metadata already kept by the
-        snapshot manifest."""
-        out = self.spark.read.parquet(path)
-        if key not in out.columns:
-            return
-        lineage = (
-            out.groupBy(F.input_file_name().alias("file"))
-            .agg(
-                F.count("*").cast("long").alias("n_rows"),
-                F.min(key).alias("key_min"),
-                F.max(key).alias("key_max"),
-            )
-            .select(
-                F.lit(name).alias("stage"),
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(key).alias("key"),
-                "file",
-                "n_rows",
-                "key_min",
-                "key_max",
-            )
+        metrics, lineage = [], []
+        for i, f in enumerate(tables._data_files(path)):
+            md = pq.ParquetFile(f).metadata
+            metrics.append((name, self.run_id, i, md.num_rows, wall_ms, path, reused))
+            cols = [md.schema.column(j).path for j in range(md.num_columns)]
+            if lineage_key not in cols:
+                continue
+            stats = [
+                md.row_group(g).column(cols.index(lineage_key)).statistics
+                for g in range(md.num_row_groups)
+                if md.row_group(g).num_rows
+            ]
+            # a row group without min/max leaves the file's range unknown
+            known = stats and all(st is not None and st.has_min_max for st in stats)
+            lineage.append((
+                name, self.run_id, lineage_key, pathlib.Path(f).absolute().as_uri(),
+                md.num_rows,
+                min(st.min for st in stats) if known else None,
+                max(st.max for st in stats) if known else None,
+            ))
+        self.spark.createDataFrame(metrics, METRICS_SCHEMA).write.mode("append").parquet(
+            os.path.join(self.root, "_metrics")
         )
-        lineage.write.mode("append").parquet(os.path.join(self.root, "_lineage"))
+        if lineage:
+            self.spark.createDataFrame(lineage, LINEAGE_SCHEMA).write.mode("append").parquet(
+                os.path.join(self.root, "_lineage")
+            )
 
     def metrics(self) -> DataFrame:
         return self.spark.read.parquet(os.path.join(self.root, "_metrics"))
@@ -123,9 +127,5 @@ class CheckpointStore:
         unlike _metrics, _lineage only exists after a fresh keyed write."""
         path = os.path.join(self.root, "_lineage")
         if not os.path.exists(path):
-            return self.spark.createDataFrame(
-                [],
-                "stage string, run_id string, key string, file string, "
-                "n_rows long, key_min string, key_max string",
-            )
+            return self.spark.createDataFrame([], LINEAGE_SCHEMA)
         return self.spark.read.parquet(path)

@@ -149,7 +149,7 @@ def embedding_dim(sf_dir: str, name: str = "embeddings", col: str = "embedding")
     driver-side pyarrow read of one row group's one column, NO Spark
     job. Paired with ``table_rows`` it lets the similarity/dedup
     operators build their plans fully lazily (every row is still
-    length-checked at run time by ``similarity._checked_vec``)."""
+    length-checked at run time by ``similarity._band_keys_udf``)."""
     import pyarrow.parquet as pq
 
     path = _data_files(os.path.join(sf_dir, f"{name}.parquet"))[0]

@@ -368,18 +368,6 @@ def _generate_chunk(seed: int, start: int, count: int, skew: bool = False):
     return docs, goldens, orgs
 
 
-def generate_corpus(n_docs: int, seed: int = DEFAULT_SEED, skew: bool = False):
-    """Returns (doc_rows, golden_triples, org_mentions) as Python lists —
-    sequential concatenation of the deterministic chunks."""
-    docs, goldens, orgs = [], [], []
-    for s in range(0, n_docs, CHUNK):
-        d, g, o = _generate_chunk(seed, s, min(CHUNK, n_docs - s), skew)
-        docs.extend(d)
-        goldens.extend(g)
-        orgs.extend(o)
-    return docs, goldens, orgs
-
-
 _SPAN_PA = pa.struct(
     [
         ("kind", pa.string()),

@@ -242,7 +242,8 @@ def test_lsh_equals_python_reference_sf0001(spark):
     surface_id per normalized key and type, picked in Python)."""
     trips = run_kg_pipeline(spark, SF0001)["triples"]
     reps: dict = {}
-    for r in linking.surfaces(trips).select("surface_id", "entity_type", "key").collect():
+    surf = linking.canonicalize(trips)["surfaces"]
+    for r in surf.select("surface_id", "entity_type", "key").collect():
         k = (r.key, r.entity_type)
         reps[k] = min(reps.get(k, r.surface_id), r.surface_id)
     rows = [(sid, etype, key) for (key, etype), sid in reps.items()]

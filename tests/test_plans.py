@@ -143,3 +143,25 @@ def test_shingle_stage_materializes_words_once(spark):
     )
     plan = plan_of(dedup.shingles(docs, "doc_id", "text"))
     assert plan.count("split(") == 1, plan
+
+
+def test_canonicalize_surfaces_prune_node_columns(spark):
+    """LSH canonicalization builds its surface table from
+    graph.per_surface, whose mention_ex top-3 (collect_set) and
+    entity_id (sha2 over the canonical key) it does not read: the
+    optimized plan must prune both, leaving one mention explode and one
+    two-column count/max aggregation."""
+    from pdf2ontology_spark.operators import linking
+    from pdf2ontology_spark.plans.pipeline import run_kg_pipeline
+
+    trips = run_kg_pipeline(spark, SF)["triples"].localCheckpoint()
+    surf = linking.canonicalize(trips)["surfaces"]
+    surf.unpersist()
+    # a fresh frame, so the dropped cache entry does not stand in for the plan
+    plan = surf.select("*")._jdf.queryExecution().optimizedPlan().toString()
+    assert "collect_set" not in plan, plan
+    hashed = re.findall(r"sha2\((.*?), 256\)", plan)
+    assert len(hashed) == 1 and "regexp_replace" not in hashed[0], (
+        "only surface_id (over name, entity_type) may be hashed"
+    )
+    assert plan.count("Generate explode(") == 1, plan

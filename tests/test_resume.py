@@ -4,6 +4,8 @@ delete downstream checkpoints, re-run, outputs byte-identical."""
 import os
 import shutil
 
+from pyspark.sql import functions as F
+
 from pdf2ontology_spark.plans.pipeline import run_kg_pipeline
 from pdf2ontology_spark.sources.checkpoint import CheckpointStore
 
@@ -78,3 +80,27 @@ def test_lineage_covers_all_docs(spark, tmp_path):
     # node/edge stages have no doc key -> no lineage rows, metrics only
     assert lin.filter("stage = 'nodes'").count() == 0
     assert ckpt.metrics().filter("stage = 'nodes'").count() >= 1
+    # the footer-derived key range of every file equals a scan's
+    for stage in ("spans", "triples"):
+        scan = (
+            spark.read.parquet(str(tmp_path / "ck" / stage))
+            .groupBy(F.input_file_name().alias("file"))
+            .agg(F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"))
+        )
+        want = {r.file: (r.lo, r.hi) for r in scan.collect()}
+        got = lin.filter(f"stage = '{stage}' AND n_rows > 0").collect()
+        assert want and {r.file: (r.key_min, r.key_max) for r in got} == want
+
+
+def test_metrics_row_for_every_stage(spark, tmp_path):
+    """_metrics is read from the written files' footers: every stage gets
+    rows, the empty quarantine stage included (an explicit rows_out = 0),
+    and each stage's rows_out sums to its row count."""
+    ckpt = CheckpointStore(spark, str(tmp_path / "ck"), run_id="m1")
+    out = run_kg_pipeline(spark, "/root/testdata/sf0.001", ckpt=ckpt)
+    per_stage = ckpt.metrics().groupBy("stage").agg(F.sum("rows_out").alias("n")).collect()
+    rows = {r.stage: r.n for r in per_stage}
+    assert set(rows) == {"spans", "quarantine_spans", "triples", "nodes", "edges"}
+    assert rows["quarantine_spans"] == out["quarantine"].count()
+    for stage in ("triples", "nodes", "edges"):
+        assert rows[stage] == out[stage].count(), stage
