@@ -65,9 +65,10 @@ BENCH_QUERIES = [
 
 
 def _force(make_df) -> float:
-    """Time query CONSTRUCTION + execution: iterative operators (LSH
-    connected components) run driver-side loops during construction, so
-    timing only the final action would under-report them."""
+    """Time query CONSTRUCTION + execution: some operators run Spark
+    jobs while the query is built (LSH connected components counts its
+    edge list to choose its path), so timing only the final action
+    would under-report them."""
     t0 = time.monotonic()
     make_df().write.format("noop").mode("overwrite").save()
     return time.monotonic() - t0

@@ -361,7 +361,7 @@ def dedup_clusters(
     survivor (min id). Every input doc appears exactly once;
     is_survivor marks the row to KEEP (singletons keep themselves).
     Scale shape: banded equi-join for candidates (never all-pairs),
-    shingle joins restricted to candidate ids, iterative CC only over
+    shingle joins restricted to candidate ids, union-find CC only over
     verified duplicate edges (tiny by construction)."""
     cand = minhash_pairs(df, id_col, text_col, k, bands, w)
     sh = shingles(df, id_col, text_col, w)

@@ -10,7 +10,7 @@
   The canonical id is sha2(normalized_name, entity_type) — a PURE
   EXPRESSION of the row, so edge endpoints need NO join at all: at 10^12
   scale the only shuffles are the final groupBys. (The MinHash-LSH +
-  connected-components path, which does need iterative self-joins, lives
+  connected-components path, which does need a band self-join, lives
   in operators/linking.py.)
 
 ``canonical_form`` populates the reference's declared-but-never-written

@@ -39,6 +39,9 @@ AUDIT = [
     "content_layout",
     "shipping_priority",
     "sessionize",
+    "media_features",
+    "assess_media_real",
+    "canonical_edges_lsh",
 ]
 
 
@@ -64,7 +67,7 @@ How to read this (the 100 TB checklist):
   shuffles (its only exchange is the loader's small-file repartition,
   which disappears at bench scale where row-group splits cover the
   cores). The LSH canonicalization is the most exchange-heavy plan by
-  design (blocking join + iterative components) and is exactly the
+  design (blocking join + union-find components) and is exactly the
   stage the north rule says to pay for.
 - **Broadcast** on every dimension-sided join (region/nation rollup,
   query-side of ANN, minhash band self-join probe side).
@@ -78,8 +81,25 @@ How to read this (the 100 TB checklist):
 """
 
 
+# session counters: RDD, expression, exchange-plan and lambda-variable
+# ids depend on what the process ran before the query, so each is
+# renumbered in order of first appearance — an unchanged plan then
+# writes unchanged text whatever subset is audited
+COUNTERS = (r"(RDD\[)(\d+)", r"(#)(\d+)", r"(plan_id=)(\d+)", r"(lambda \w+?_)(\d+)")
+
+
+def normalize(plan: str) -> str:
+    for pat in COUNTERS:
+        ids: dict[str, int] = {}
+        plan = re.sub(
+            pat, lambda m: m.group(1) + str(ids.setdefault(m.group(2), len(ids))), plan
+        )
+    return plan
+
+
 def section(name: str, plan: str) -> str:
     """One PLANS.md section: the headline counts, then the full plan."""
+    plan = normalize(plan)
     out = []
     n_exchange = len(re.findall(r"\bExchange\b", plan))
     n_bcast = len(re.findall(r"BroadcastExchange|BroadcastHashJoin", plan))
@@ -103,11 +123,10 @@ def section(name: str, plan: str) -> str:
 def main() -> None:
     only = sys.argv[1:]
     qs = entry.queries()
-    head, sections = HEADER + "\n", {}
+    sections = {}
     if only:
         with open("PLANS.md") as f:
             chunks = re.split(r"(?m)^(?=## )", f.read())
-        head = chunks[0]
         # every section ends with one blank line, as a fresh one does
         sections = {c.split("\n", 1)[0][3:]: c.rstrip("\n") + "\n\n" for c in chunks[1:]}
     spark = get_spark(shuffle_partitions=16)
@@ -116,7 +135,7 @@ def main() -> None:
         sections[name] = section(name, plan_of(qs[name](spark, SF)))
     spark.stop()
     with open("PLANS.md", "w") as f:
-        f.write((head + "".join(sections.values())).rstrip("\n") + "\n")
+        f.write((HEADER + "\n" + "".join(sections.values())).rstrip("\n") + "\n")
     print(f"wrote PLANS.md ({len(only or AUDIT)} sections audited)")
 
 

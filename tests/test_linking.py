@@ -5,6 +5,7 @@ MinHash-LSH + Jaccard path, so this also proves the fuzzy blocking is
 load-bearing."""
 
 import hashlib
+import random
 from itertools import combinations
 
 from pdf2ontology_spark.operators import components, graph, linking
@@ -30,10 +31,10 @@ def test_connected_components_basic(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_connected_components_gather_equals_loop(spark):
-    """Round-7 single-task gather finisher must produce the identical
-    labels as the iterative min-label loop (forced via
-    gather_threshold=0) — chains, a cycle, and a singleton edge."""
+def test_connected_components_gather_equals_tree(spark):
+    """The single-task gather must produce the identical labels as the
+    halving contraction tree (forced via gather_threshold=0) — chains,
+    a cycle, and a singleton edge."""
     edges = spark.createDataFrame(
         [("d", "c"), ("c", "b"), ("b", "a"), ("m", "n"), ("n", "o"), ("o", "m"), ("z", "q")],
         "src string, dst string",
@@ -51,7 +52,7 @@ def test_connected_components_gather_equals_loop(spark):
 
 def test_connected_components_reads_edges_once(spark):
     """The edge list's upstream plan runs once per call, on the gather
-    path and on the iterative loop path: a counting pass in front of
+    path and on the contraction-tree path: a counting pass in front of
     the edges sees each input row exactly once, and the labels stay
     the same."""
     rows = [("d", "c"), ("c", "b"), ("b", "a"), ("m", "n"), ("z", "q")]
@@ -76,6 +77,39 @@ def test_connected_components_reads_edges_once(spark):
         }
         assert got == want, threshold
         assert read.value - before == len(rows), (threshold, read.value - before)
+
+
+def test_connected_components_exact_on_long_chains(spark):
+    """Shuffled string-id chains far longer than a few propagation
+    rounds come back as ONE component labelled with the minimum id, on
+    both sides of the gather switch. Coalescing is off so the edges
+    really span 8 partitions: one coalesced partition would hide every
+    cross-partition link."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for n in (200, 2_000, 20_000):
+            rng = random.Random(n)
+            ids = [f"v{i}" for i in range(n)]
+            rng.shuffle(ids)
+            rows = list(zip(ids, ids[1:]))
+            rng.shuffle(rows)
+            edges = spark.createDataFrame(rows, "src string, dst string")
+            got = [
+                {
+                    r.node: r.component
+                    for r in components.connected_components(
+                        edges, gather_threshold=threshold
+                    ).collect()
+                }
+                for threshold in (2_000_000, 0)
+            ]
+            assert len(got[1]) == n, n
+            assert set(got[1].values()) == {min(ids)}, (n, len(set(got[1].values())))
+            assert got[0] == got[1], n
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_org_clusters_pairwise_exact(spark):
