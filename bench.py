@@ -67,7 +67,7 @@ BENCH_QUERIES = [
 def _force(make_df) -> float:
     """Time query CONSTRUCTION + execution: some operators run Spark
     jobs while the query is built (LSH connected components counts its
-    edge list to choose its path), so timing only the final action
+    edge list against its size limit), so timing only the final action
     would under-report them."""
     t0 = time.monotonic()
     make_df().write.format("noop").mode("overwrite").save()

@@ -1,22 +1,18 @@
 """Connected components over an edge list (SURVEY.md §7.2 step 3 — the
 canonicalization substrate).
 
-One kernel, ``_union_find`` (a mapInPandas body), does all the work:
-- at or under ``gather_threshold`` symmetric edges the whole list is
-  gathered into ONE task that runs it (``_gather_components``);
-- above it, a halving tree of the same kernel contracts the list first
-  (``_contract_tree``): each partition collapses to a star forest
-  (every node -> its partition-local min), the forest is repartitioned
-  into half as many partitions, and so on until one partition is left,
-  where the same gather finishes.
+One path: the symmetric edge list is gathered into ONE task that runs
+a union-find over it (``_union_find``, a mapInPandas body), so the
+labels are exact — no round cap, no convergence test.
 
-Every tree level preserves connectivity exactly — star edges reproduce
-each partition's components, and edges across partitions share their
-endpoints — so the result is exact by construction at every size, in
-about log2(P) shuffle stages of one job. There is no round cap and no
-convergence test. If one task cannot hold |V|, the Spark-native
-alternative is large-star/small-star (Kiveris et al., "Connected
-Components in MapReduce and Beyond", SoCC'14).
+The size limit is that one task: it streams the edges in Arrow batches
+but holds every node, so its memory grows with |V|, not |E| (measured
+in the ``connected_components`` comment). ``gather_threshold`` bounds
+it: a symmetric edge list longer than the threshold is refused with an
+error, never labelled partially. Every node has at least one symmetric
+edge, so the threshold is also a bound on |V|. Past one task, the
+Spark-native route is large-star/small-star (Kiveris et al.,
+"Connected Components in MapReduce and Beyond", SoCC'14).
 """
 
 from __future__ import annotations
@@ -69,30 +65,13 @@ def _union_find(node_col: str, root_col: str):
 
 
 def _gather_components(sym: DataFrame) -> DataFrame:
-    """Exact single-task union-find over a symmetric edge list (small,
-    or already contracted by ``_contract_tree``): (node, component =
-    min id). One executor task, ONE job when consumed."""
+    """Exact single-task union-find over a symmetric edge list: (node,
+    component = min id). One executor task, ONE job when consumed."""
     t = sym.schema["a"].dataType
     schema = T.StructType(
         [T.StructField("node", t), T.StructField("component", t)]
     )
     return sym.coalesce(1).mapInPandas(_union_find("node", "component"), schema)
-
-
-def _contract_tree(sym: DataFrame) -> DataFrame:
-    """Halving tree of ``_union_find``: every partition collapses to a
-    star forest (node -> partition-local root, self-pairs dropped), the
-    forest is hashed on ``a`` into half as many partitions, and so on
-    until one partition is left. Each level emits at most one edge per
-    node per partition, so the last partition holds at most 2|V| edges
-    for the gather to finish."""
-    n = sym.rdd.getNumPartitions()
-    while n > 1:
-        n = (n + 1) // 2
-        # schema-preserving: node ids keep whatever type the caller uses
-        star = sym.mapInPandas(_union_find("a", "b"), sym.schema)
-        sym = star.filter(F.col("a") != F.col("b")).repartition(n, "a")
-    return sym
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -116,28 +95,26 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    # measured on a 4-vCPU host (local[4], 8 partitions, median of 3;
-    # sizes in symmetric edges): the gather beat the tree on shuffled
-    # chains at 200k / 2M / 4M (1.5 / 8.9 / 19.3 s vs 3.4 / 16.1 /
-    # 31.0 s) and tied it on 20-node cliques (5.6 vs 5.3 s at 2M, 9.8
-    # vs 10.9 s at 4M). No time crossover below 4M, so the switch caps
-    # the one gather task's memory, not its time.
+    # Peak RSS of the one union-find worker (local[4], 8 partitions,
+    # string ids; the worker starts at 114 MB). From 4M / 8M symmetric
+    # edges: chains of 2M / 4M nodes 454 / 713 MB, 20-node cliques of
+    # 210k / 421k nodes 157 / 193 MB, 200-node cliques of 20k / 40k
+    # nodes 122 / 126 MB: 150-190 B per node, nothing per edge. So the
+    # default admits at most 2M nodes, about 340 MB of union-find state.
     gather_threshold: int = 2_000_000,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) where component is the
     minimum node id in the connected component. Nodes appear iff they
-    occur in the edge list. Deterministic and exact at every size.
+    occur in the edge list. Deterministic and exact.
 
     The symmetric edge count is checked once (a cheap job on the
-    just-materialized list). At or under ``gather_threshold`` edges the
-    list goes straight into the single-task union-find
-    (``_gather_components``). Above it the edges are first contracted in
-    a halving tree (``_contract_tree``) and the gather finishes on the
-    contracted star forest. Entity-linking bridge graphs are tiny by
-    construction (LSH-verified near-dup pairs between exact-group
-    reps), so production corpora take the direct gather. Results under
-    ``BROADCAST_THRESHOLD`` edges additionally carry a broadcast hint
-    so the caller's label join skips its shuffle."""
+    just-materialized list). Above ``gather_threshold`` edges the call
+    raises ``ValueError``; otherwise the list goes into the single-task
+    union-find (``_gather_components``). Entity-linking bridge graphs
+    are tiny by construction (LSH-verified near-dup pairs between
+    exact-group reps). Results under ``BROADCAST_THRESHOLD`` edges
+    additionally carry a broadcast hint so the caller's label join
+    skips its shuffle."""
     # materialize the symmetric edge list ONCE: the size probe and the
     # union-find would otherwise each re-evaluate the whole upstream
     # pair-generation plan (LSH banding included). With the single-pass
@@ -146,7 +123,12 @@ def connected_components(
     sym = _symmetrize(edges, src, dst).localCheckpoint(eager=False)
     n_edges = sym.count()
     if n_edges > gather_threshold:
-        sym = _contract_tree(sym)
+        raise ValueError(
+            f"connected_components: {n_edges} symmetric edges exceed "
+            f"gather_threshold={gather_threshold}; the one union-find task "
+            "holds every node, so raise the threshold only if its Python "
+            "worker has the memory"
+        )
     labels = _gather_components(sym)
     if n_edges <= BROADCAST_THRESHOLD:
         labels = labels.hint("broadcast")

@@ -27,7 +27,7 @@ Pipeline (all DataFrame ops):
    carries the gram arrays, so the size prefilter and the exact Jaccard
    run inline on its output before one pair ``distinct``.
 4. connected components (components.connected_components) over the
-   bridge edges — union-find, exact at every size.
+   bridge edges — one single-task union-find, exact.
 5. canonical_nodes/canonical_edges: groupBy component, representative =
    most frequent surface form (graph.top_surface); graph.edge_surfaces'
    surface-keyed edge groups are remapped via a surface -> component

@@ -8,6 +8,8 @@ import hashlib
 import random
 from itertools import combinations
 
+import pytest
+
 from pdf2ontology_spark.operators import components, graph, linking
 from pdf2ontology_spark.plans.pipeline import run_kg_pipeline
 from pdf2ontology_spark.sources import tables
@@ -31,30 +33,31 @@ def test_connected_components_basic(spark):
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
 
 
-def test_connected_components_gather_equals_tree(spark):
-    """The single-task gather must produce the identical labels as the
-    halving contraction tree (forced via gather_threshold=0) — chains,
-    a cycle, and a singleton edge."""
+def test_connected_components_refuses_above_gather_threshold(spark):
+    """Both sides of the gather switch: at exactly the symmetric edge
+    count (14 here) the single task labels chains, a cycle and a
+    singleton edge; one edge below it the call raises instead of
+    returning partial labels."""
     edges = spark.createDataFrame(
         [("d", "c"), ("c", "b"), ("b", "a"), ("m", "n"), ("n", "o"), ("o", "m"), ("z", "q")],
         "src string, dst string",
     )
-    fast = {r.node: r.component for r in components.connected_components(edges).collect()}
-    slow = {
+    got = {
         r.node: r.component
-        for r in components.connected_components(edges, gather_threshold=0).collect()
+        for r in components.connected_components(edges, gather_threshold=14).collect()
     }
-    assert fast == slow == {
+    assert got == {
         "a": "a", "b": "a", "c": "a", "d": "a",
         "m": "m", "n": "m", "o": "m", "q": "q", "z": "q",
     }
+    with pytest.raises(ValueError, match="14 symmetric edges exceed gather_threshold=13"):
+        components.connected_components(edges, gather_threshold=13)
 
 
 def test_connected_components_reads_edges_once(spark):
-    """The edge list's upstream plan runs once per call, on the gather
-    path and on the contraction-tree path: a counting pass in front of
-    the edges sees each input row exactly once, and the labels stay
-    the same."""
+    """The edge list's upstream plan runs once per call, for the labels
+    and for a refusal above ``gather_threshold``: a counting pass in
+    front of the edges sees each input row exactly once."""
     rows = [("d", "c"), ("c", "b"), ("b", "a"), ("m", "n"), ("z", "q")]
     read = spark.sparkContext.accumulator(0)
 
@@ -67,24 +70,20 @@ def test_connected_components_reads_edges_once(spark):
         count_rows, "src string, dst string"
     )
     want = {"a": "a", "b": "a", "c": "a", "d": "a", "m": "m", "n": "m", "q": "q", "z": "q"}
-    for threshold in (2_000_000, 0):
-        before = read.value
-        got = {
-            r.node: r.component
-            for r in components.connected_components(
-                edges, gather_threshold=threshold
-            ).collect()
-        }
-        assert got == want, threshold
-        assert read.value - before == len(rows), (threshold, read.value - before)
+    got = {r.node: r.component for r in components.connected_components(edges).collect()}
+    assert got == want
+    assert read.value == len(rows), read.value
+    with pytest.raises(ValueError):
+        components.connected_components(edges, gather_threshold=0)
+    assert read.value == 2 * len(rows), read.value
 
 
 def test_connected_components_exact_on_long_chains(spark):
     """Shuffled string-id chains far longer than a few propagation
-    rounds come back as ONE component labelled with the minimum id, on
-    both sides of the gather switch. Coalescing is off so the edges
-    really span 8 partitions: one coalesced partition would hide every
-    cross-partition link."""
+    rounds come back as ONE component labelled with the minimum id, and
+    a threshold under their edge count raises rather than returning
+    partial labels. Coalescing is off so the edges reach the one
+    union-find task from 8 partitions."""
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -96,18 +95,14 @@ def test_connected_components_exact_on_long_chains(spark):
             rows = list(zip(ids, ids[1:]))
             rng.shuffle(rows)
             edges = spark.createDataFrame(rows, "src string, dst string")
-            got = [
-                {
-                    r.node: r.component
-                    for r in components.connected_components(
-                        edges, gather_threshold=threshold
-                    ).collect()
-                }
-                for threshold in (2_000_000, 0)
-            ]
-            assert len(got[1]) == n, n
-            assert set(got[1].values()) == {min(ids)}, (n, len(set(got[1].values())))
-            assert got[0] == got[1], n
+            got = {
+                r.node: r.component
+                for r in components.connected_components(edges).collect()
+            }
+            assert len(got) == n, n
+            assert set(got.values()) == {min(ids)}, (n, len(set(got.values())))
+            with pytest.raises(ValueError):
+                components.connected_components(edges, gather_threshold=0)
     finally:
         spark.conf.set(key, old)
 
