@@ -99,8 +99,9 @@ def connected_components(
     # string ids; the worker starts at 114 MB). From 4M / 8M symmetric
     # edges: chains of 2M / 4M nodes 454 / 713 MB, 20-node cliques of
     # 210k / 421k nodes 157 / 193 MB, 200-node cliques of 20k / 40k
-    # nodes 122 / 126 MB: 150-190 B per node, nothing per edge. So the
-    # default admits at most 2M nodes, about 340 MB of union-find state.
+    # nodes 122 / 126 MB: 150-200 B per node from 200k nodes up, nothing
+    # per edge. So the default admits at most 2M nodes, the chain's
+    # 340 MB of union-find state.
     gather_threshold: int = 2_000_000,
 ) -> DataFrame:
     """edges(src, dst) -> (node, component) where component is the
