@@ -78,9 +78,7 @@ def main() -> None:
     import __spark_entry__ as entry
 
     synth.ensure_synth(SF_DIR)  # cached; generation excluded from timing
-    tag = os.path.basename(SF_DIR.rstrip("/"))
-    if tag not in synth.BENCH_TAGS:
-        synth.ensure_blobs(SF_DIR)  # PNG blob store, cached likewise
+    synth.ensure_blobs(SF_DIR)  # PNG blob store, cached likewise
     spark = get_spark(app_name="pdf2ontology_bench")
     spark.sparkContext.setLogLevel("ERROR")
 

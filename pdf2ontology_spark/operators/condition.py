@@ -121,7 +121,7 @@ def assess_media(spans: DataFrame) -> DataFrame:
     return spans.filter(F.col("kind") == "media").select(*_assess_cols())
 
 
-def assess_media_real(spans: DataFrame, blobs: DataFrame | None = None) -> DataFrame:
+def assess_media_real(spans: DataFrame, blobs: DataFrame) -> DataFrame:
     """``assess_media`` with EVERY metric family real: quality scores
     from the QualityAssessor kernels (Laplacian variance, 5x5 median
     filter) AND — since round 5 — pixel-derived skew/rotation from the
@@ -130,9 +130,9 @@ def assess_media_real(spans: DataFrame, blobs: DataFrame | None = None) -> DataF
     statistics; document_analysis_utils.py:103-412). All metrics come
     from ONE Arrow stage over one raster decode
     (``media.assess_media_full``), over rasters decoded from the real
-    PNG bytes by ``png_codec`` (the closed-form fixture raster when no
-    blob store is given). Thresholds, the 0.3/0.2/0.3/0.2 composite
-    (inside ``overall_score``), the skip predicate, and the
+    PNG bytes of the blob store by ``png_codec``. Thresholds, the
+    0.3/0.2/0.3/0.2 composite (inside ``overall_score``), the skip
+    predicate, and the
     priority-ordered plan are identical to ``assess_media``; skew_deg
     is now a double (the reference's SkewAnalysisResult.skew_angle is a
     float).

@@ -3,20 +3,18 @@ with typed metadata, decoded/feature-extracted via Arrow-batched
 mapInPandas (the reference's CV stages — image_utils.py:295-481,
 document_analysis_utils.py — live HERE as per-batch vectorized work).
 
-DECODE: each operator takes an optional ``blobs`` table
-((media_ref, png) — real encoded bytes, the corpus blob store) and
-decodes it with the engine's stdlib PNG reader
-(``png_codec.decode_png_gray_batch``: chunk/CRC parse, inflate,
-defilter 0-4). That is the genuine byte->pixel path the reference runs
-through cv2.imdecode (/root/reference/src/loader.py:18-33,
-image_utils.py:567-604); only non-PNG container formats remain behind
-the seam (no cv2/PIL in this container). Without a ``blobs`` table the
-operators fall back to the deterministic closed-form raster
-(``raster.synth_rasters_batch``) — the labeled fixture path used by the
-huge throughput-bench corpora where materializing millions of blobs
-buys nothing. Both paths produce identical pixels by construction, so
-the kernel families are oracle-checked against independent closed-form
-DuckDB twins either way.
+DECODE: each operator takes the corpus blob store ``blobs``
+((media_ref, png) — real encoded bytes) and decodes it with the
+engine's stdlib PNG reader (``png_codec.decode_png_gray_batch``:
+chunk/CRC parse, inflate, defilter 0-4). That is the genuine
+byte->pixel path the reference runs through cv2.imdecode
+(/root/reference/src/loader.py:18-33, image_utils.py:567-604); only
+non-PNG container formats remain behind the seam (no cv2/PIL in this
+container). The blob store is the ONLY pixel source: a media ref with
+no bytes in it is a bad input — ``media_features`` reports it as
+decode_ok=false, every other operator fails its stage. The kernel
+families are oracle-checked against independent closed-form DuckDB
+twins of the fixture pattern the corpus blobs encode.
 
 The QUALITY METRIC family is real math: the reference QualityAssessor's
 kernels (Laplacian variance, 5x5 median filter, std/mean
@@ -45,7 +43,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pdf2ontology_spark import png_codec, raster
+from pdf2ontology_spark import png_codec
 
 
 def _broadcast_if_small(blobs: DataFrame) -> DataFrame:
@@ -84,7 +82,7 @@ def _media_spans(spans: DataFrame) -> DataFrame:
 
 def _media_stage(
     rows: DataFrame,
-    blobs: DataFrame | None,
+    blobs: DataFrame,
     kernel: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
     chunk: int | None,
@@ -93,9 +91,10 @@ def _media_stage(
 
     ``rows`` (keyed by doc_id, media_ref) are salt-repartitioned on
     xxhash64(doc_id, media_ref) so a media-heavy doc cannot pin one
-    partition, then inner-joined with the blob store on media_ref (a
-    media row without bytes cannot be decoded; the quarantine path
-    accounts for refs missing from the store, see blob_accounting).
+    partition, then left-joined with the blob store on media_ref: a ref
+    missing from the store reaches the kernel with a null ``png``, so it
+    is quarantined (``media_features``: decode_ok=false) or fails the
+    stage (every other operator) — never silently dropped.
     The salt runs BEFORE the join: the exchange moves only the narrow
     rows — blob bytes, the widest column in the pipeline, never transit
     the salt shuffle. The join then either broadcasts the blob side
@@ -106,8 +105,9 @@ def _media_stage(
     (``None``: the whole Arrow batch) to its output rows."""
     n_part = rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
     rows = rows.repartition(int(n_part), F.xxhash64("doc_id", "media_ref"))
-    if blobs is not None:
-        rows = rows.join(_broadcast_if_small(blobs).select("media_ref", "png"), "media_ref")
+    rows = rows.join(
+        _broadcast_if_small(blobs).select("media_ref", "png"), "media_ref", "left"
+    )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -118,14 +118,6 @@ def _media_stage(
 
     return rows.mapInPandas(run, schema=schema)
 
-
-def _rasters_for(part: pd.DataFrame):
-    """(B, h, w) int64 pixel stack for one pandas chunk: decode real PNG
-    bytes when the batch carries them, else render the closed-form
-    fixture pattern (bench-corpus fallback; identical pixels)."""
-    if "png" in part.columns:
-        return png_codec.decode_png_gray_batch(list(part["png"]))
-    return raster.synth_rasters_batch(list(part["media_ref"]))
 
 MEDIA_FEATURES_SCHEMA = (
     "doc_id string, media_ref string, offset int, width int, height int, "
@@ -154,13 +146,14 @@ def ahash_batch(G) -> list[str]:
     return [format(int(v), "016x") for v in vals]
 
 
-def media_features(spans: DataFrame, blobs: DataFrame | None = None) -> DataFrame:
+def media_features(spans: DataFrame, blobs: DataFrame) -> DataFrame:
     """media spans -> decoded feature rows via mapInPandas: width/height
     and format from the actual PNG header (``png_codec.read_png_header``
     + magic-byte sniff), perceptual fingerprint from the decoded pixels
     (``ahash_batch``). Per-item error tolerance (F11): a blob that fails
-    to parse yields decode_ok=false with zeroed metadata instead of
-    failing the stage — the quarantine pattern for corrupt bytes.
+    to parse, or a ref with no blob in the store, yields decode_ok=false
+    with zeroed metadata instead of failing the stage — the quarantine
+    pattern for bad bytes.
 
     The kernel sees the whole Arrow batch (no chunking): the batch decode
     is the fast path, and a corrupt blob re-decodes the batch per item.
@@ -178,28 +171,26 @@ def media_features(spans: DataFrame, blobs: DataFrame | None = None) -> DataFram
         oks = [False] * n
         G = None  # (B, h, w) stack when every row decoded
         imgs, ok_ix = [], []
-        if "png" in pdf.columns:
-            blob_list = list(pdf["png"])
-            try:
-                # batch-vectorized decode — the hot path when every
-                # blob is well-formed and one shape (the normal case)
-                G = png_codec.decode_png_gray_batch([bytes(b) for b in blob_list])
-            except (png_codec.PngFormatError, TypeError):
-                # F11 per-item tolerance: re-decode one by one so a
-                # single corrupt/mixed-shape blob quarantines alone
-                for i, blob in enumerate(blob_list):
-                    try:
-                        b = bytes(blob)
-                        fmts[i] = "png" if b[:8] == png_codec.PNG_SIG else "unknown"
-                        g = png_codec.decode_png_gray(b)
-                    except (png_codec.PngFormatError, TypeError):
-                        continue
-                    heights[i], widths[i] = g.shape
-                    oks[i] = True
-                    imgs.append(g)
-                    ok_ix.append(i)
-        else:
-            G = raster.synth_rasters_batch(list(pdf["media_ref"]))
+        blob_list = list(pdf["png"])
+        try:
+            # batch-vectorized decode — the hot path when every blob is
+            # present, well-formed and one shape (the normal case)
+            G = png_codec.decode_png_gray_batch([bytes(b) for b in blob_list])
+        except (png_codec.PngFormatError, TypeError):
+            # F11 per-item tolerance: re-decode one by one so a single
+            # corrupt/mixed-shape blob, or a ref with no blob (null
+            # png: TypeError), quarantines alone
+            for i, blob in enumerate(blob_list):
+                try:
+                    b = bytes(blob)
+                    fmts[i] = "png" if b[:8] == png_codec.PNG_SIG else "unknown"
+                    g = png_codec.decode_png_gray(b)
+                except (png_codec.PngFormatError, TypeError):
+                    continue
+                heights[i], widths[i] = g.shape
+                oks[i] = True
+                imgs.append(g)
+                ok_ix.append(i)
         if G is not None:
             heights[:], widths[:] = G.shape[1], G.shape[2]
             fmts = ["png"] * n
@@ -382,19 +373,19 @@ def _count_runs(valley, w: int) -> int:
     return max(1, regions)
 
 
-def content_layout(spans: DataFrame, blobs: DataFrame | None = None) -> DataFrame:
+def content_layout(spans: DataFrame, blobs: DataFrame) -> DataFrame:
     """media spans -> content-layout rows (column count, ink ratio) via
     the same mapInPandas seam as the quality metrics: the raster comes
-    from the real PNG decode (or the fixture fallback — module
-    docstring), the layout analysis is the reference ContentAnalyzer's
-    real projection math (``detect_columns_gray``). Handwriting /
-    layout-complexity need contour extraction (cv2.findContours) and
-    stay behind the format seam until a real image stack is present."""
+    from the real PNG decode, the layout analysis is the reference
+    ContentAnalyzer's real projection math (``detect_columns_gray``).
+    Handwriting / layout-complexity need contour extraction
+    (cv2.findContours) and stay behind the format seam until a real
+    image stack is present."""
 
     def layout(part: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
-        G = _rasters_for(part)
+        G = png_codec.decode_png_gray_batch(list(part["png"]))
         _B, hh, ww = G.shape
         cols = detect_columns_batch(G)
         dark = (G < 128).sum(axis=(1, 2))
@@ -477,11 +468,10 @@ def assess_quality_batch(G) -> dict:
     }
 
 
-def media_quality(spans: DataFrame, blobs: DataFrame | None = None) -> DataFrame:
+def media_quality(spans: DataFrame, blobs: DataFrame) -> DataFrame:
     """media spans -> per-image quality assessment via mapInPandas: the
-    bytes decode through the stdlib PNG reader (or the fixture fallback
-    — module docstring), the METRICS over the pixels are the
-    reference's real math, vectorized across each chunk
+    bytes decode through the stdlib PNG reader, the METRICS over the
+    pixels are the reference's real math, vectorized across each chunk
     (``assess_quality_batch``; ``assess_quality_gray`` is the
     per-image reference implementation the batch path is tested
     against).
@@ -492,7 +482,7 @@ def media_quality(spans: DataFrame, blobs: DataFrame | None = None) -> DataFrame
     turns the stage memory-bound)."""
 
     def assess(part: pd.DataFrame) -> pd.DataFrame:
-        G = _rasters_for(part)
+        G = png_codec.decode_png_gray_batch(list(part["png"]))
         return part[["doc_id", "media_ref", "offset"]].assign(**assess_quality_batch(G))
 
     return _media_stage(_media_spans(spans), blobs, assess, QUALITY_SCHEMA, 256)
@@ -505,7 +495,7 @@ CONDITION_SCHEMA = (
 )
 
 
-def assess_media_full(spans: DataFrame, blobs: DataFrame | None = None) -> DataFrame:
+def assess_media_full(spans: DataFrame, blobs: DataFrame) -> DataFrame:
     """media spans -> quality metrics (QualityAssessor kernels) PLUS
     rotation/skew analysis (RotationDetector + SkewDetector pipelines,
     operators/orientation.py) in ONE Arrow stage: the raster decodes
@@ -515,7 +505,7 @@ def assess_media_full(spans: DataFrame, blobs: DataFrame | None = None) -> DataF
     from pdf2ontology_spark.operators import orientation
 
     def assess(part: pd.DataFrame) -> pd.DataFrame:
-        G = _rasters_for(part)
+        G = png_codec.decode_png_gray_batch(list(part["png"]))
         return part[["doc_id", "media_ref", "offset"]].assign(
             **assess_quality_batch(G), **orientation.orientation_batch(G)
         )
@@ -542,7 +532,7 @@ def _apply_token(media_ref: str, actions: list[str]) -> str:
     return state
 
 
-def apply_actions(assessed: DataFrame, blobs: DataFrame | None = None) -> DataFrame:
+def apply_actions(assessed: DataFrame, blobs: DataFrame) -> DataFrame:
     """Consume the condition stage's prioritized action plan — the
     preprocessing chain's apply pass (document_preprocessing_chain.py:
     227-261): actions run in plan order inside the Arrow-batched
@@ -560,7 +550,7 @@ def apply_actions(assessed: DataFrame, blobs: DataFrame | None = None) -> DataFr
         import numpy as np
 
         acts = [list(a) for a in pdf["actions"]]
-        G = _rasters_for(pdf)
+        G = png_codec.decode_png_gray_batch(list(pdf["png"]))
         n, h, w = G.shape
         n_px = h * w
         # Group rows by CHAIN SIGNATURE — the action tuple plus the

@@ -3,8 +3,8 @@
 The reference's two remaining CV analyzer families
 (/root/reference/src/utils/document_analysis_utils.py:103-304 RotationDetector,
 :311-412 SkewDetector) ported to pure numpy over the
-decoded raster (png_codec, or the closed-form raster.synth_raster
-fixture with identical pixels; everything from pixels onward is real):
+raster decoded from the blob store's PNG bytes (png_codec; everything
+from pixels onward is real):
 
 - shared edge stage: adaptive-mean binarization (25*g < S25 - 25*C, the
   exact-integer form of cv2.adaptiveThreshold's mean-C — the reference's

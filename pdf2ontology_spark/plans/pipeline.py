@@ -55,7 +55,6 @@ def run_kg_pipeline(
     spark: SparkSession,
     sf_dir: str,
     ckpt: CheckpointStore | None = None,
-    reference_strict: bool = False,
     salt: int = 4,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; returns every stage as a DataFrame."""
@@ -77,7 +76,7 @@ def run_kg_pipeline(
     bad_spans = st("quarantine_spans", lambda: rejected)
     # extraction reads the documents, not the spans stage: its span
     # validity filter is split_spans' contract for the kinds it reads
-    trips = st("triples", lambda: triples.all_triples_fused(docs, reference_strict))
+    trips = st("triples", lambda: triples.all_triples_fused(docs))
     nodes_df = st("nodes", lambda: graph.nodes(trips))
     edges_df = st("edges", lambda: graph.edges(trips))
     return {

@@ -205,6 +205,8 @@ def read_png_header(data: bytes) -> tuple[int, int, int, int]:
 def _inflate_scanlines(data: bytes) -> tuple[int, int, bytes]:
     """One image's (w, h, raw scanline bytes) — the chunk-parse +
     inflate half of ``decode_png_gray`` (all C-side work)."""
+    if data is None:  # a media ref with no bytes in the blob store
+        raise PngFormatError("no PNG bytes (null blob)")
     ihdr = None
     idat = bytearray()
     for tag, payload in _parse_chunks(bytes(data)):

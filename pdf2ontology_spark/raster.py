@@ -36,28 +36,3 @@ def synth_raster(media_ref: str, h: int = GRID_H, w: int = GRID_W):
     y, x = np.mgrid[0:h, 0:w]
     return (lo + (a * x + b * y + c * x * y + d) % (rng + 1)).astype(np.int64)
 
-
-def synth_rasters_batch(refs, h: int = GRID_H, w: int = GRID_W):
-    """Batch form: one (B, h, w) int64 stack, the per-ref hash parameters
-    broadcast over a shared meshgrid. Pixel values are integers computed
-    with the identical formula, so the stack equals
-    np.stack([synth_raster(r) for r in refs]) exactly."""
-    import numpy as np
-
-    if len(refs) == 0:
-        return np.zeros((0, h, w), dtype=np.int64)
-    par = np.array(
-        [
-            [int(hashlib.sha256(r.encode()).hexdigest()[i * 2 : i * 2 + 2], 16) for i in range(6)]
-            for r in refs
-        ],
-        dtype=np.int64,
-    )
-    a, b, c, d, e, f = (par[:, i][:, None, None] for i in range(6))
-    a = a % 8
-    b = b % 8
-    c = c % 3
-    rng = 16 + e % 180
-    lo = f % (256 - rng)
-    y, x = np.mgrid[0:h, 0:w]
-    return lo + (a * x + b * y + c * x * y + d) % (rng + 1)

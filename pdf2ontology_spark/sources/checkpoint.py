@@ -36,6 +36,7 @@ LINEAGE_SCHEMA = (
     "stage string, run_id string, key string, file string, "
     "n_rows long, key_min string, key_max string"
 )
+LINEAGE_KEY = "doc_id"
 
 
 class CheckpointStore:
@@ -50,14 +51,12 @@ class CheckpointStore:
     def exists(self, name: str) -> bool:
         return os.path.exists(os.path.join(self._path(name), "_SUCCESS"))
 
-    def stage(
-        self, name: str, compute, resume: bool = True, lineage_key: str = "doc_id"
-    ) -> DataFrame:
+    def stage(self, name: str, compute) -> DataFrame:
         """Run (or resume) one stage. ``compute`` is a zero-arg callable
-        returning the stage DataFrame. Stages keyed by ``lineage_key``
+        returning the stage DataFrame. Stages keyed by ``LINEAGE_KEY``
         also record per-file lineage rows (see ``_record``)."""
         path = self._path(name)
-        if resume and self.exists(name):
+        if self.exists(name):
             self._record(name, path, wall_ms=0, reused=True)
             return self.spark.read.parquet(path)
         t0 = time.monotonic()
@@ -69,12 +68,10 @@ class CheckpointStore:
             "parquet.block.size", 16 * 1024 * 1024
         ).parquet(path)
         wall_ms = int((time.monotonic() - t0) * 1000)
-        self._record(name, path, wall_ms=wall_ms, reused=False, lineage_key=lineage_key)
+        self._record(name, path, wall_ms=wall_ms, reused=False)
         return self.spark.read.parquet(path)
 
-    def _record(
-        self, name: str, path: str, wall_ms: int, reused: bool, lineage_key: str | None = None
-    ) -> None:
+    def _record(self, name: str, path: str, wall_ms: int, reused: bool) -> None:
         """Stage accounting from the parquet FOOTERS of the files just
         written (or reused) — a driver-side metadata read, no Spark job
         over the checkpoint; on Iceberg this is the snapshot manifest.
@@ -84,7 +81,7 @@ class CheckpointStore:
           the footer row count, so an empty stage still gets an explicit
           ``rows_out = 0`` row.
         - ``_lineage`` (fresh writes of stages that have a
-          ``lineage_key`` column): one row per file with its row count
+          ``LINEAGE_KEY`` column): one row per file with its row count
           and covered key range from the row-group min/max statistics —
           the audit substrate for idempotent resume (which docs does
           this checkpoint file cover?). Node/edge tables have no doc key
@@ -96,17 +93,17 @@ class CheckpointStore:
             md = pq.ParquetFile(f).metadata
             metrics.append((name, self.run_id, i, md.num_rows, wall_ms, path, reused))
             cols = [md.schema.column(j).path for j in range(md.num_columns)]
-            if lineage_key not in cols:
+            if reused or LINEAGE_KEY not in cols:
                 continue
             stats = [
-                md.row_group(g).column(cols.index(lineage_key)).statistics
+                md.row_group(g).column(cols.index(LINEAGE_KEY)).statistics
                 for g in range(md.num_row_groups)
                 if md.row_group(g).num_rows
             ]
             # a row group without min/max leaves the file's range unknown
             known = stats and all(st is not None and st.has_min_max for st in stats)
             lineage.append((
-                name, self.run_id, lineage_key, pathlib.Path(f).absolute().as_uri(),
+                name, self.run_id, LINEAGE_KEY, pathlib.Path(f).absolute().as_uri(),
                 md.num_rows,
                 min(st.min for st in stats) if known else None,
                 max(st.max for st in stats) if known else None,

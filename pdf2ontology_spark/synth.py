@@ -651,10 +651,9 @@ def ensure_synth(tag_or_sf_dir: str, base_dir: str = SYNTH_BASE, seed: int = DEF
 # (png_codec: filter heuristic over all five row filters, zlib, CRCs),
 # so the engine's media operators exercise a real byte->pixel decode —
 # the path the reference runs through cv2.imdecode
-# (/root/reference/src/loader.py:18-33). Bench tags (sfxl/sfxxl/sfb)
-# intentionally have NO blob store: throughput corpora use the
-# operators' documented closed-form fallback instead of materializing
-# millions of blobs.
+# (/root/reference/src/loader.py:18-33). The blob store is the media
+# operators' only pixel source, so every tag — bench tags included —
+# gets one.
 BLOB_VERSION = 1
 _BLOB_CHUNK = 4000
 
@@ -682,15 +681,10 @@ def _media_refs_from_parquet(spans_path: str) -> list:
 
 def ensure_blobs(tag_or_sf_dir: str, base_dir: str = SYNTH_BASE, seed: int = DEFAULT_SEED) -> dict:
     """Generate (once, cached) ``media_blobs.parquet`` —
-    ``(media_ref string, png binary)`` — for a correctness-scale tag.
+    ``(media_ref string, png binary)`` — for any corpus tag.
     Encoding runs in parallel worker processes (pure function of the
     ref, so chunk order is the only order dependency)."""
     tag = os.path.basename(tag_or_sf_dir.rstrip("/"))
-    if tag in BENCH_TAGS:
-        raise ValueError(
-            f"no blob store for bench tag {tag!r}: throughput corpora use "
-            "the media operators' closed-form raster fallback"
-        )
     spans_path = ensure_synth(tag_or_sf_dir, base_dir, seed)["documents_spans"]
     out = os.path.join(base_dir, tag)
     paths = {"media_blobs": os.path.join(out, "media_blobs.parquet")}

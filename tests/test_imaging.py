@@ -86,10 +86,10 @@ def test_batched_chain_bit_identical_to_scalar():
     """The grouped (B, h, w) chain path must equal the per-image path
     bit-for-bit for every kernel and parameter mix — the invariant that
     lets apply_actions run one batched chain per signature group."""
-    from pdf2ontology_spark.raster import synth_rasters_batch
+    from pdf2ontology_spark.raster import synth_raster
 
     refs = [f"media://doc{i}/img{i % 7}" for i in range(23)]
-    G = synth_rasters_batch(refs)
+    G = np.stack([synth_raster(r) for r in refs])
     # include a FLAT image so contrast_stretch_batch's mx==mn branch is
     # exercised in the same stack as stretchable images
     G = np.concatenate([G, np.full((1, 16, 16), 7, dtype=np.int64)])

@@ -32,12 +32,14 @@ def test_media_features_real_decode(spark):
 
 
 def test_media_features_corrupt_blob_quarantined(spark):
-    """Per-item tolerance (F11): a corrupt blob yields decode_ok=false
-    with zeroed metadata instead of failing the Arrow stage."""
+    """Per-item tolerance (F11): a corrupt blob, or a ref with no blob
+    in the store, yields decode_ok=false with zeroed metadata instead of
+    failing the Arrow stage or dropping the row."""
     good = png_codec.encode_png_gray(raster.synth_raster("media://d1/0.png"))
     rows = [
         ("d1", "media", "", "media://d1/0.png", 0),
         ("d1", "media", "", "media://d1/1.png", 1),
+        ("d1", "media", "", "media://d1/2.png", 2),  # not in the blob store
     ]
     spans = spark.createDataFrame(rows, "doc_id string, kind string, text string, media_ref string, offset int")
     blobs = spark.createDataFrame(
@@ -46,25 +48,14 @@ def test_media_features_corrupt_blob_quarantined(spark):
     )
     out = {r.media_ref: r for r in media.media_features(spans, blobs).collect()}
     assert out["media://d1/0.png"].decode_ok
-    bad = out["media://d1/1.png"]
-    assert not bad.decode_ok and bad.width == 0 and bad.phash == ""
+    for ref in ("media://d1/1.png", "media://d1/2.png"):
+        bad = out[ref]
+        assert not bad.decode_ok and bad.width == 0 and bad.phash == ""
     stats = media.media_stats(media.media_features(spans, blobs)).first()
-    assert (stats.n_media, stats.n_ok) == (2, 1)
+    assert (stats.n_media, stats.n_ok) == (3, 1)
 
 
-def test_media_quality_blobs_match_fixture_path(spark):
-    """The decoded-bytes path and the closed-form fallback produce
-    identical metric rows — the identity the DuckDB twins rest on."""
-    docs = tables.load_documents_spans(spark, "/root/testdata/sf0.001")
-    spans = segment.explode_spans(docs).filter(F.col("kind") == "media").limit(200)
-    blobs = tables.load_media_blobs(spark, "/root/testdata/sf0.001")
-    with_bytes = media.media_quality(spans, blobs)
-    fixture = media.media_quality(spans)
-    assert with_bytes.exceptAll(fixture).count() == 0
-    assert fixture.exceptAll(with_bytes).count() == 0
-
-
-def test_media_salt_balances_gallery_docs(spark):
+def test_media_salt_balances_gallery_docs(spark, fixture_blobs):
     """The composite salt spreads a gallery doc's media: 2 docs x 400
     media spans plus 400 docs x 2, at 8 shuffle partitions. The rows of
     media_quality's Arrow stage stay within 1.3x of the mean partition,
@@ -85,13 +76,15 @@ def test_media_salt_balances_gallery_docs(spark):
         assert sum(sizes) == len(rows)
         return max(sizes) * n_part / len(rows)
 
-    assert max_over_mean(media.media_quality(spans)) <= 1.3
+    blobs = fixture_blobs(f"media://{doc}/{i}.png" for doc, i in rows)
+    assert max_over_mean(media.media_quality(spans, blobs)) <= 1.3
     assert max_over_mean(spans.repartition(n_part, F.xxhash64("doc_id"))) >= 2
 
 
 def test_corrupt_png_fails_non_tolerant_operators(spark, tmp_path):
-    """Only media_features quarantines corrupt bytes (F11). The other
-    operators must fail loudly on a truncated PNG and write nothing."""
+    """Only media_features quarantines bad bytes (F11). The other
+    operators must fail loudly on a truncated PNG, and on a ref missing
+    from the blob store, and write nothing."""
     from pdf2ontology_spark.operators import condition
 
     ref = "media://d1/0.png"
@@ -100,17 +93,20 @@ def test_corrupt_png_fails_non_tolerant_operators(spark, tmp_path):
         [("d1", "media", "", ref, 0)],
         "doc_id string, kind string, text string, media_ref string, offset int",
     )
-    blobs = spark.createDataFrame(
-        [(ref, bytearray(good[:-8]))], "media_ref string, png binary"
-    )
-    for name, df in [
-        ("media_quality", media.media_quality(spans, blobs)),
-        ("apply_actions", media.apply_actions(condition.assess_media(spans), blobs)),
-    ]:
-        out = tmp_path / name
-        with pytest.raises(Exception, match="PngFormatError"):
-            df.write.parquet(str(out))
-        assert not list(out.glob("*.parquet")), f"{name} wrote rows"
+    stores = {
+        "truncated": [(ref, bytearray(good[:-8]))],
+        "missing": [("media://d1/other.png", bytearray(good))],
+    }
+    for case, store in stores.items():
+        blobs = spark.createDataFrame(store, "media_ref string, png binary")
+        for name, df in [
+            ("media_quality", media.media_quality(spans, blobs)),
+            ("apply_actions", media.apply_actions(condition.assess_media(spans), blobs)),
+        ]:
+            out = tmp_path / case / name
+            with pytest.raises(Exception, match="PngFormatError"):
+                df.write.parquet(str(out))
+            assert not list(out.glob("*.parquet")), f"{name} wrote rows ({case})"
 
 
 def test_stream_matches_batch(spark, tmp_path):
@@ -158,7 +154,7 @@ def test_stream_three_chunks_matches_batch(spark, tmp_path):
     docs.unpersist()
 
 
-def test_apply_actions_passthrough_and_chain(spark):
+def test_apply_actions_passthrough_and_chain(spark, fixture_blobs):
     """Skip-predicate rows keep the ORIGINAL byte token (byte-identical
     pass-through); processed rows fold each planned action into the
     state chain in plan order."""
@@ -175,7 +171,8 @@ def test_apply_actions_passthrough_and_chain(spark):
         ]
     )
     assessed = condition.assess_media(spans)
-    out = {r.media_ref: r for r in media.apply_actions(assessed).collect()}
+    blobs = fixture_blobs(f"media://d/{i}.png" for i in range(40))
+    out = {r.media_ref: r for r in media.apply_actions(assessed, blobs).collect()}
     planned = {r.media_ref: r for r in assessed.collect()}
     assert len(out) == 40
     skipped = [r for r in out.values() if r.n_applied == 0]

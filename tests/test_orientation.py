@@ -7,7 +7,7 @@ import math
 import numpy as np
 
 from pdf2ontology_spark.operators import orientation as O
-from pdf2ontology_spark.raster import synth_rasters_batch
+from pdf2ontology_spark.raster import synth_raster
 
 
 def _scalar_hough(edge_img):
@@ -25,7 +25,7 @@ def _scalar_hough(edge_img):
 
 def test_hough_votes_match_scalar_loop():
     refs = [f"t/{i}" for i in range(24)]
-    G = synth_rasters_batch(refs)
+    G = np.stack([synth_raster(r) for r in refs])
     _, edge = O.ink_and_edges(G)
     votes = O.hough_votes(edge)
     for i in (0, 7, 23):
@@ -33,7 +33,7 @@ def test_hough_votes_match_scalar_loop():
 
 
 def test_ink_is_exact_adaptive_mean():
-    G = synth_rasters_batch(["t/a", "t/b"])
+    G = np.stack([synth_raster(r) for r in ["t/a", "t/b"]])
     ink, _ = O.ink_and_edges(G)
     # scalar: mean of 5x5 replicate window minus C, strictly greater
     g = G[0]
@@ -74,7 +74,7 @@ def test_batch_path_matches_scalar_reference():
     """The vectorized orientation_batch must be bit-identical to the
     per-image scalar helpers (which the SQL twin mirrors)."""
     refs = [f"media/par_{i}" for i in range(200)]
-    G = synth_rasters_batch(refs)
+    G = np.stack([synth_raster(r) for r in refs])
     out = O.orientation_batch(G)
     ink, edge = O.ink_and_edges(G)
     votes = O.hough_votes(edge)
@@ -94,7 +94,7 @@ def test_batch_path_matches_scalar_reference():
 
 def test_orientation_batch_deterministic_and_bounded():
     refs = [f"media/x_{i}" for i in range(64)]
-    G = synth_rasters_batch(refs)
+    G = np.stack([synth_raster(r) for r in refs])
     a = O.orientation_batch(G)
     b = O.orientation_batch(G)
     assert a == b
