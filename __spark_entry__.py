@@ -45,18 +45,16 @@ ORACLE_TAG = "sf0.01"
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return tables.load_documents_spans(spark, sf_dir)
+    return tables.spread_small_scan(tables.load_documents_spans(spark, sf_dir), "doc_id")
 
 
 def _spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One row per span, NULL text/media_ref read as "". Built on the
-    loader WITHOUT its small-corpus doc_id repartition: every user
-    either aggregates straight away or re-salts on xxhash64(doc_id,
-    media_ref) (the media family), so that exchange moved the whole
-    corpus once for nothing (~0.3-0.5s per media query at sf0.1)."""
-    return segment.explode_spans(
-        tables.load_documents_spans(spark, sf_dir, repartition=False)
-    ).select(
+    plain loader scan, not ``_docs``' spread: every user either
+    aggregates straight away or re-salts on xxhash64(doc_id, media_ref)
+    (the media family), so a doc_id spread would move the whole corpus
+    once for nothing (~0.3-0.5s per media query at sf0.1)."""
+    return segment.explode_spans(tables.load_documents_spans(spark, sf_dir)).select(
         "doc_id",
         "kind",
         F.coalesce("text", F.lit("")).alias("text"),
@@ -113,15 +111,11 @@ def q_span_invariant(spark, sf_dir):
 
 
 def q_doc_stats(spark, sf_dir):
-    return segment.doc_stats(
-        tables.load_documents_spans(spark, sf_dir, repartition=False)
-    )
+    return segment.doc_stats(tables.load_documents_spans(spark, sf_dir))
 
 
 def q_reassemble_text(spark, sf_dir):
-    return segment.reassemble_text(
-        tables.load_documents_spans(spark, sf_dir, repartition=False)
-    )
+    return segment.reassemble_text(tables.load_documents_spans(spark, sf_dir))
 
 
 def q_table_cells(spark, sf_dir):

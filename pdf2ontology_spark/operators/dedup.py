@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pdf2ontology_spark.sources import tables
+
 MINHASH_K = 12  # signature length
 LSH_BANDS = 6  # bands of rows = K // bands
 SHINGLE_W = 3  # words per shingle
@@ -32,15 +34,6 @@ SHINGLE_W = 3  # words per shingle
 
 def _words(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"[^a-z0-9äöüß]+"), lambda w: w != "")
-
-
-def _spread(df: DataFrame, key: str) -> DataFrame:
-    """similarity.spread_small_scan — used by simhash (64-sum-agg token
-    stage, measured 4.5s -> 1.9s at sf0.1) and, since round 7, by
-    ``shingles`` (see its docstring for the re-measurement)."""
-    from pdf2ontology_spark.operators import similarity
-
-    return similarity.spread_small_scan(df, key)
 
 
 def shingles(df: DataFrame, id_col: str, text_col: str, w: int = SHINGLE_W) -> DataFrame:
@@ -61,7 +54,7 @@ def shingles(df: DataFrame, id_col: str, text_col: str, w: int = SHINGLE_W) -> D
     0.73 -> 0.37s at sf0.1 — the round-6 'don't spread shingles' note
     predated the one-md5 mix rewrite that made hashing cheap relative
     to the explode)."""
-    df = _spread(df, id_col)
+    df = tables.spread_small_scan(df, id_col)
     # Generate barrier (explode of a 1-element array): materialize the
     # tokenized words array ONCE per row. Without it, Project-collapse
     # re-inlines the split+filter expression into EVERY slice() of the
@@ -248,7 +241,9 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = SIMHASH_BITS)
     long — bit 63 adds LONG_MIN (the two's-complement value of 2^63),
     which is carry-free because the other 63 bits sum to < 2^63.
     """
-    tok = _spread(df, id_col).select(
+    # spread: the 64-sum-agg token stage ran single-core on a one-split
+    # table (measured 4.5s -> 1.9s at sf0.1)
+    tok = tables.spread_small_scan(df, id_col).select(
         F.col(id_col).alias("id"), F.explode(_words(F.col(text_col))).alias("tok")
     ).select("id", F.md5("tok").alias("h"))
 
@@ -462,10 +457,9 @@ def _bare_parquet_files(df: DataFrame) -> list[str] | None:
         cls = df._jdf.queryExecution().analyzed().getClass().getSimpleName()
         if cls != "LogicalRelation":
             return None
-        files = df.inputFiles()
     except Exception:  # noqa: BLE001 — any introspection failure -> fallback
         return None
-    paths = [f.removeprefix("file://").removeprefix("file:") for f in files]
+    paths = tables.input_paths(df)
     if not paths or not all(p.endswith(".parquet") and os.path.exists(p) for p in paths):
         return None
     return paths

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf2ontology_spark import png_codec
+from pdf2ontology_spark.sources import tables
 
 
 def _broadcast_if_small(blobs: DataFrame) -> DataFrame:
@@ -59,14 +60,9 @@ def _broadcast_if_small(blobs: DataFrame) -> DataFrame:
     is co-located)."""
     import os
 
-    from pdf2ontology_spark.sources.tables import _parse_byte_conf
-
     try:
-        size = sum(
-            os.path.getsize(f.removeprefix("file://").removeprefix("file:"))
-            for f in blobs.inputFiles()
-        )
-        threshold = _parse_byte_conf(
+        size = sum(os.path.getsize(p) for p in tables.input_paths(blobs))
+        threshold = tables._parse_byte_conf(
             blobs.sparkSession.conf.get(
                 "spark.sql.autoBroadcastJoinThreshold", "33554432"
             )
@@ -90,8 +86,8 @@ def _media_stage(
     """The one Arrow stage every media operator runs through.
 
     ``rows`` (keyed by doc_id, media_ref) are salt-repartitioned on
-    xxhash64(doc_id, media_ref) so a media-heavy doc cannot pin one
-    partition, then left-joined with the blob store on media_ref: a ref
+    xxhash64(doc_id, media_ref) into ``tables.spread_width`` partitions
+    so a media-heavy doc cannot pin one partition, then left-joined with the blob store on media_ref: a ref
     missing from the store reaches the kernel with a null ``png``, so it
     is quarantined (``media_features``: decode_ok=false) or fails the
     stage (every other operator) — never silently dropped.
@@ -103,8 +99,9 @@ def _media_stage(
 
     ``kernel`` maps one pandas slice of at most ``chunk`` rows
     (``None``: the whole Arrow batch) to its output rows."""
-    n_part = rows.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    rows = rows.repartition(int(n_part), F.xxhash64("doc_id", "media_ref"))
+    rows = rows.repartition(
+        tables.spread_width(rows.sparkSession), F.xxhash64("doc_id", "media_ref")
+    )
     rows = rows.join(
         _broadcast_if_small(blobs).select("media_ref", "png"), "media_ref", "left"
     )

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdf2ontology_spark.sources import tables
+
 PLANES = 8
 
 
@@ -43,63 +45,6 @@ def planes_for_corpus(
     if n <= target_bucket:
         return floor
     return min(cap, max(floor, math.ceil(math.log2(n / target_bucket))))
-
-
-# the scan-width probe converts the plan to an RDD (a nontrivial
-# driver-side cost on hot plan-build paths), so its result is memoized
-# per (session, semantic plan, input-file fingerprint) — repeat builds
-# of the same signature stage (bench reps, oracle loop) pay it once.
-# The fingerprint (file sizes + mtimes, the tables.py schema-cache
-# pattern) invalidates the entry when a table at the same path is
-# REGENERATED inside one driver process — semanticHash alone keys on
-# the path and would hand back a stale width; the FIFO cap bounds the
-# dict on a long-lived driver.
-_SPREAD_CACHE: dict[tuple, int] = {}
-_SPREAD_CACHE_MAX = 256
-
-
-def _input_fingerprint(df: DataFrame) -> tuple:
-    import os
-
-    try:
-        files = df.inputFiles()
-    except Exception:  # noqa: BLE001 — non-file-source plans
-        return ()
-    out = []
-    for uri in sorted(files)[:64]:  # 64 files identify a table cheaply
-        path = uri[7:] if uri.startswith("file://") else uri.removeprefix("file:")
-        try:
-            st = os.stat(path)
-            out.append((uri, st.st_size, st.st_mtime_ns))
-        except OSError:
-            out.append((uri, -1, -1))
-    return tuple(out)
-
-
-def spread_small_scan(df: DataFrame, key: str) -> DataFrame:
-    """Hash-spread a table whose scan under-uses the session's cores: a
-    small parquet table is often ONE split, which serializes the
-    expensive downstream stage (signature kernels, token explode +
-    per-token hashing) onto one core. At corpus scale the table has
-    plenty of splits and this is a no-op (no shuffle). Only worth it
-    when the per-row work downstream outweighs shuffling the rows —
-    e.g. NOT for the raw shingle explode, where shuffling the text
-    costs more than the single-core stage (measured at sf0.1)."""
-    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    cache_key = (
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        _input_fingerprint(df),
-    )
-    n_scan = _SPREAD_CACHE.get(cache_key)
-    if n_scan is None:
-        n_scan = df.rdd.getNumPartitions()
-        while len(_SPREAD_CACHE) >= _SPREAD_CACHE_MAX:
-            _SPREAD_CACHE.pop(next(iter(_SPREAD_CACHE)))
-        _SPREAD_CACHE[cache_key] = n_scan
-    if n_scan < n_part:
-        return df.repartition(n_part, key)
-    return df
 
 
 def _as_double(vec: Column) -> Column:
@@ -254,8 +199,8 @@ def banded_keys(
         dim = _vec_dim(emb, vec_col)
     base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
     if spread:
-        # the signature kernel is the expensive stage; see spread_small_scan
-        base = spread_small_scan(base, "id")
+        # the signature kernel is the expensive stage
+        base = tables.spread_small_scan(base, "id")
     keys = _band_keys_udf(planes_per_band, bands, dim)
     return base.select("id", keys(F.col("v")).alias("keys"))
 

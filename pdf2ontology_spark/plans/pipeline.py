@@ -10,7 +10,9 @@ with a CheckpointStore the stage outputs are persisted and the run
 resumes idempotently.
 
 Shuffle budget end-to-end (scale analysis, 1000-executor framing):
-1. documents: 1 shuffle, the salted repartition below.
+1. documents: at most 1 shuffle. ``tables.spread_small_scan`` hashes
+   the documents on doc_id to ``tables.spread_width`` partitions only
+   when the scan splits narrower than that; a wide scan is not shuffled.
 2. spans/quarantine: narrow explode + filter — 0 shuffles.
 3. triples: narrow — every rule is an array expression over one
    document row, 0 shuffles.
@@ -19,8 +21,11 @@ Shuffle budget end-to-end (scale analysis, 1000-executor framing):
    the classic skew risk (popular entities); AQE skew handling is on,
    and the two-level aggregation in graph.nodes() gives map-side partial
    combines, so hot keys reduce before the exchange.
-Media-heavy docs skew SPAN-level partitions: the input is repartitioned
-by a salted doc hash before the explode when ``salt`` > 1.
+A document is the atomic unit of every doc-keyed stage: one row holds
+all its spans, so no partitioning of documents can split a media-heavy
+one. Span-grain skew is handled where spans become rows of their own:
+the media operators' stage salts on (doc_id, media_ref)
+(operators/media.py ``_media_stage``).
 """
 
 from __future__ import annotations
@@ -33,6 +38,7 @@ from pdf2ontology_spark.sources import tables
 from pdf2ontology_spark.sources.checkpoint import CheckpointStore
 
 
+# no library caller: kept for perfbench/workloads.py's kg_build, which imports it
 def salted_repartition(docs: DataFrame, n_partitions: int, salt: int) -> DataFrame:
     """Spread media-heavy documents across partitions: hash(doc_id) plus
     a per-row salt derived from span count, so one 50-media-span doc does
@@ -55,14 +61,9 @@ def run_kg_pipeline(
     spark: SparkSession,
     sf_dir: str,
     ckpt: CheckpointStore | None = None,
-    salt: int = 4,
 ) -> dict[str, DataFrame]:
     """Run the full pipeline; returns every stage as a DataFrame."""
-    # repartition=False: the salted repartition below is this plan's own
-    # (single) post-scan shuffle — don't pay a second one in the loader
-    docs = tables.load_documents_spans(spark, sf_dir, repartition=False)
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    docs = salted_repartition(docs, n_part, salt)
+    docs = tables.spread_small_scan(tables.load_documents_spans(spark, sf_dir), "doc_id")
 
     def st(name: str, fn):
         if ckpt is None:

@@ -98,6 +98,69 @@ def tune_split_bytes(spark: SparkSession, path: str) -> int:
     return target
 
 
+def spread_width(spark: SparkSession) -> int:
+    """The one partition count a hash spread uses: the session's shuffle
+    partitions, capped at ``_SPLIT_WAVES`` waves of ``defaultParallelism``
+    tasks (the scan tuner's target). The cap keeps an untuned conf, such
+    as spark-submit's default 200, from cutting a small corpus into 200
+    slivers — one file each per doc-keyed checkpoint stage."""
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return min(n, _SPLIT_WAVES * spark.sparkContext.defaultParallelism)
+
+
+def input_paths(df: DataFrame) -> list[str]:
+    """Local paths of the files ``df`` scans; [] for a plan with no file
+    source (an in-memory table) or one Spark cannot list."""
+    try:
+        files = df.inputFiles()
+    except Exception:  # noqa: BLE001 — non-file-source plans
+        return []
+    return [f.removeprefix("file://").removeprefix("file:") for f in files]
+
+
+# the scan-width probe converts the plan to an RDD (a nontrivial
+# driver-side cost on hot plan-build paths), so its result is memoized
+# per (session, semantic plan, input-file fingerprint) — repeat builds
+# of the same stage (bench reps, oracle loop) pay it once. The
+# fingerprint (file sizes + mtimes, as in the schema cache) invalidates
+# the entry when a table at the same path is REGENERATED inside one
+# driver process — semanticHash alone keys on the path and would hand
+# back a stale width; the FIFO cap bounds the dict on a long-lived
+# driver.
+_SPREAD_CACHE: dict[tuple, int] = {}
+_SPREAD_CACHE_MAX = 256
+
+
+def _input_fingerprint(df: DataFrame) -> tuple:
+    out = []
+    for path in sorted(input_paths(df))[:64]:  # 64 files identify a table cheaply
+        try:
+            st = os.stat(path)
+            out.append((path, st.st_size, st.st_mtime_ns))
+        except OSError:
+            out.append((path, -1, -1))
+    return tuple(out)
+
+
+def spread_small_scan(df: DataFrame, key: str) -> DataFrame:
+    """Hash-spread ``df`` on ``key`` to ``spread_width`` partitions when
+    its scan splits into fewer: a small parquet table is often ONE
+    split, which serializes the expensive downstream stage (extraction
+    regexes, signature kernels, token explode + per-token hashing) onto
+    one core. A scan already that wide is returned as is — shuffling it
+    would move the whole input for no gain."""
+    spark = df.sparkSession
+    cache_key = (spark.sparkContext.applicationId, df.semanticHash(), _input_fingerprint(df))
+    n_scan = _SPREAD_CACHE.get(cache_key)
+    if n_scan is None:
+        n_scan = df.rdd.getNumPartitions()
+        while len(_SPREAD_CACHE) >= _SPREAD_CACHE_MAX:
+            _SPREAD_CACHE.pop(next(iter(_SPREAD_CACHE)))
+        _SPREAD_CACHE[cache_key] = n_scan
+    width = spread_width(spark)
+    return df.repartition(width, key) if n_scan < width else df
+
+
 def _parse_byte_conf(value: str) -> int:
     """Spark byte confs come back with a unit suffix when the session
     did not set them as a bare number (the default prints as
@@ -160,39 +223,23 @@ def embedding_dim(sf_dir: str, name: str = "embeddings", col: str = "embedding")
     return len(batch.column(0)[0])
 
 
-def load_documents_spans(
-    spark: SparkSession, sf_dir: str, repartition: bool = True
-) -> DataFrame:
+def load_documents_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the interleaved-span documents table (input_hint shape),
     generating the deterministic synthetic corpus on first use
-    (pdf2ontology_spark.synth; seed=42, cached parquet).
-
-    ``repartition`` hash-distributes documents across the shuffle
-    partition count right after the scan — but ONLY when the scan's own
-    split count would under-use the cores (small file sets): the
-    downstream JSON-parse / regex stages are the expensive part and must
-    run wide. When the files already split into >= the shuffle partition
-    count (row groups are small by construction), the repartition would
-    shuffle the ENTIRE nested corpus for nothing — at bench scale that
-    is ~600MB of strings through shuffle disk + DRAM, the exact resource
-    the extraction job is bound by."""
+    (pdf2ontology_spark.synth; seed=42, cached parquet). A plain scan
+    with its splits sized by ``tune_split_bytes``: a caller whose
+    downstream per-document work must run wide spreads it with
+    ``spread_small_scan``."""
     paths = synth.ensure_synth(sf_dir)
-    max_split = tune_split_bytes(spark, paths["documents_spans"])
-    df = spark.read.parquet(paths["documents_spans"])
-    if repartition:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        size = _scan_bytes(paths["documents_spans"])
-        if size // max_split < n:
-            df = df.repartition(n, "doc_id")
-    return df
+    tune_split_bytes(spark, paths["documents_spans"])
+    return spark.read.parquet(paths["documents_spans"])
 
 
 def _scan_bytes(path: str) -> int:
     """Total parquet bytes a scan of ``path`` will read. For a
     Spark-written DIRECTORY table, ``os.path.getsize`` returns the inode
-    size (~4KB) — which would make the small-scan test always pass and
-    shuffle the full corpus for nothing — so directories sum their data
-    files instead."""
+    size (~4KB), which would size its splits as if the table were empty,
+    so directories sum their data files instead."""
     return sum(os.path.getsize(f) for f in _data_files(path))
 
 

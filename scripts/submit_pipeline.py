@@ -13,10 +13,13 @@ Cluster (the only changes are master/packaging — no code changes):
       --conf spark.sql.adaptive.enabled=true \
       scripts/submit_pipeline.py --sf-dir s3://... --output s3://... --ckpt s3://...
 
-The job: documents spans -> triples -> canonical nodes/edges, all stages
-checkpointed (resume on re-submit), per-partition metrics appended.
-Exit code 0 only if the span-sequence invariant holds and the graph
-integrity anti-join is empty.
+The job: documents spans -> spans + quarantine side table -> triples ->
+exact-key nodes and edges (graph.nodes/graph.edges: surface forms with
+the same normalized key and type merge; no LSH canonicalization).
+Every stage is checkpointed under --ckpt (resume on re-submit) and
+appends one _metrics row per written file. --output receives the
+triples, nodes and edges tables. Exit code 0 only if the span-sequence
+invariant holds and the graph integrity anti-join is empty.
 """
 
 from __future__ import annotations
@@ -42,7 +45,6 @@ def main() -> int:
     p.add_argument("--output", required=True)
     p.add_argument("--ckpt", required=True)
     p.add_argument("--run-id", default="submit")
-    p.add_argument("--salt", type=int, default=4)
     args = p.parse_args()
 
     # under spark-submit the session comes from the submit conf; the
@@ -50,14 +52,14 @@ def main() -> int:
     spark = SparkSession.builder.appName("pdf2ontology_pipeline").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    docs = tables.load_documents_spans(spark, args.sf_dir, repartition=False)
+    docs = tables.load_documents_spans(spark, args.sf_dir)
     bad = segment.span_sequence_check(docs).filter("NOT is_ordered").count()
     if bad:
         print(json.dumps({"status": "failed", "reason": f"{bad} docs violate span order"}))
         return 2
 
     ckpt = CheckpointStore(spark, args.ckpt, run_id=args.run_id)
-    out = run_kg_pipeline(spark, args.sf_dir, ckpt=ckpt, salt=args.salt)
+    out = run_kg_pipeline(spark, args.sf_dir, ckpt=ckpt)
 
     tables.write_table(out["triples"], os.path.join(args.output, "triples"))
     tables.write_table(out["nodes"], os.path.join(args.output, "nodes"))

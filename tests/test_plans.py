@@ -20,11 +20,11 @@ def plan_of(df) -> str:
 
 def test_triples_plan_single_scan_and_no_python(spark):
     """Every extraction-derived query is one per-document projection:
-    ONE corpus scan, no shuffle beyond the loader's optional small-file
-    repartition, no window or aggregation (all table/sentence state is
-    in-row), and no Python in the hot path. (There are no row-level
-    predicates to push: every document is consumed; the kind routing is
-    in-array.)"""
+    ONE corpus scan, no shuffle beyond the small-scan spread of the
+    documents (tables.spread_small_scan), no window or aggregation (all
+    table/sentence state is in-row), and no Python in the hot path.
+    (There are no row-level predicates to push: every document is
+    consumed; the kind routing is in-array.)"""
     for q in [
         entry.q_triples_all,
         entry.q_triples_table,
@@ -42,7 +42,7 @@ def test_triples_plan_single_scan_and_no_python(spark):
             f"{name} must scan the corpus once"
         )
         assert len(re.findall(r"\(\d+\) Exchange", plan)) <= 1, (
-            f"{name}: only the loader repartition may shuffle"
+            f"{name}: only the small-scan spread may shuffle"
         )
         assert "Window" not in plan and "HashAggregate" not in plan, name
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan, (

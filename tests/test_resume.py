@@ -4,9 +4,11 @@ delete downstream checkpoints, re-run, outputs byte-identical."""
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf2ontology_spark.plans.pipeline import run_kg_pipeline
+from pdf2ontology_spark.sources import tables
 from pdf2ontology_spark.sources.checkpoint import CheckpointStore
 
 HASH_EXPR = (
@@ -92,15 +94,28 @@ def test_lineage_covers_all_docs(spark, tmp_path):
         assert want and {r.file: (r.key_min, r.key_max) for r in got} == want
 
 
-def test_metrics_row_for_every_stage(spark, tmp_path):
+@pytest.mark.parametrize("shuffle_partitions", [8, 200])
+def test_metrics_row_for_every_stage(spark, tmp_path, shuffle_partitions):
     """_metrics is read from the written files' footers: every stage gets
     rows, the empty quarantine stage included (an explicit rows_out = 0),
-    and each stage's rows_out sums to its row count."""
-    ckpt = CheckpointStore(spark, str(tmp_path / "ck"), run_id="m1")
-    out = run_kg_pipeline(spark, "/root/testdata/sf0.001", ckpt=ckpt)
-    per_stage = ckpt.metrics().groupBy("stage").agg(F.sum("rows_out").alias("n")).collect()
-    rows = {r.stage: r.n for r in per_stage}
-    assert set(rows) == {"spans", "quarantine_spans", "triples", "nodes", "edges"}
-    assert rows["quarantine_spans"] == out["quarantine"].count()
-    for stage in ("triples", "nodes", "edges"):
-        assert rows[stage] == out[stage].count(), stage
+    and each stage's rows_out sums to its row count. The doc-keyed
+    stages are written as at most ``spread_width`` files, also under an
+    untuned conf such as spark-submit's default 200 shuffle partitions."""
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, str(shuffle_partitions))
+    try:
+        ckpt = CheckpointStore(spark, str(tmp_path / "ck"), run_id="m1")
+        out = run_kg_pipeline(spark, "/root/testdata/sf0.001", ckpt=ckpt)
+        per_stage = ckpt.metrics().groupBy("stage").agg(F.sum("rows_out").alias("n")).collect()
+        rows = {r.stage: r.n for r in per_stage}
+        assert set(rows) == {"spans", "quarantine_spans", "triples", "nodes", "edges"}
+        assert rows["quarantine_spans"] == out["quarantine"].count()
+        for stage in ("triples", "nodes", "edges"):
+            assert rows[stage] == out[stage].count(), stage
+        width = tables.spread_width(spark)
+        for stage in ("spans", "triples"):
+            n_files = len(tables._data_files(str(tmp_path / "ck" / stage)))
+            assert 1 <= n_files <= width, (stage, n_files, width)
+    finally:
+        spark.conf.set(conf, before)

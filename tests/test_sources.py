@@ -1,4 +1,9 @@
-"""binaryFile media source + CSV diagnostics sink (S4/K2 analogs)."""
+"""Table IO helpers (spread rule, merge upsert), binaryFile media source
+and CSV diagnostics sink (S4/K2 analogs)."""
+
+import re
+
+import pytest
 
 from pdf2ontology_spark.operators import segment
 from pdf2ontology_spark.sources import binary, tables
@@ -61,3 +66,34 @@ def test_merge_upsert_semantics(spark, tmp_path):
     # previous data restored from the backup, new key merged in
     assert got2 == {"a": 1, "b": 20, "c": 30, "d": 40}
     assert not os.path.exists(old_dir)
+
+
+@pytest.mark.parametrize("case", ["one_split", "wide_scan", "untuned_conf"])
+def test_spread_small_scan_both_sides(spark, tmp_path, case):
+    """Both sides of the one spread switch: a scan narrower than
+    ``spread_width`` is hashed on the key to exactly that width; a scan
+    at least that wide is left alone (no Exchange); and an untuned
+    shuffle conf (spark-submit's 200) is capped at 4 waves of cores."""
+    conf = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(conf)
+    if case == "untuned_conf":
+        spark.conf.set(conf, "200")
+    try:
+        width = tables.spread_width(spark)
+        if case == "untuned_conf":
+            assert width == 4 * spark.sparkContext.defaultParallelism < 200
+        rows = spark.range(4 * width).selectExpr("id AS k", "id * 2 AS v")
+        path = str(tmp_path / case)
+        if case == "wide_scan":
+            rows.repartition(width).write.parquet(path)
+        else:
+            rows.coalesce(1).write.parquet(path)
+        df = spark.read.parquet(path)
+        n_scan = df.rdd.getNumPartitions()
+        assert n_scan >= width if case == "wide_scan" else n_scan == 1
+        plan = tables.spread_small_scan(df, "k")._jdf.queryExecution().executedPlan().toString()
+        exchanges = re.findall(r"Exchange hashpartitioning\(k#\d+L?, (\d+)\)", plan)
+        assert exchanges == ([] if case == "wide_scan" else [str(width)]), plan
+        assert plan.count("Exchange") == len(exchanges), plan
+    finally:
+        spark.conf.set(conf, before)

@@ -81,7 +81,7 @@ def test_fused_plan_single_scan_no_exchange(spark):
     """The whole point of the fusion: FileScan -> Project -> Generate,
     ONE corpus read, ZERO shuffles. A regression here silently doubles
     the 100TB read."""
-    docs = tables.load_documents_spans(spark, SF, repartition=False)
+    docs = tables.load_documents_spans(spark, SF)
     plan = triples.all_triples_fused(docs)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("Scan parquet") == 1, plan
     assert "Exchange" not in plan, plan
