@@ -151,46 +151,60 @@ def raster_checksum(g) -> int:
 
 
 # ---------------------------------------------------------------------------
-# Batched forms — one (B, h, w) stack per CHAIN-SIGNATURE group.
+# Batched forms — one (B, h, w) stack per ACTION-TUPLE group.
 #
-# Every kernel above is elementwise or a fixed gather once its scalar
-# parameter (rotation quadrant, skew angle) is pinned, so broadcasting a
-# leading batch axis changes NOTHING about per-element arithmetic: the
-# gather index maps are computed once from the scalar parameter (via the
-# same math.* libm calls), and the float ops (+,-,*,/ and floor) are
-# IEEE-exact elementwise in both numpy and scalar Python.
+# Every kernel above is elementwise or a gather, so a leading batch axis
+# changes NOTHING about per-element arithmetic. The per-image parameters
+# (rotation quadrant, skew angle) ride along as (B,) arrays: rotation
+# gathers each quadrant's rows with that quadrant's index map, and the
+# deskew map takes cos/sin from the same math.* libm calls (once per
+# distinct angle) and runs the scalar path's float ops (+,-,*,/ and
+# floor, IEEE-exact elementwise) over the batch axis.
 # tests/test_imaging.py pins batch == per-image bit equality.
 # ---------------------------------------------------------------------------
 
 _GAMMA_LUT_NP = np.array(GAMMA_LUT, dtype=np.int64)
 
 
-def rotate_exact_batch(G, deg: int):
+def rotate_exact_batch(G, deg):
+    """Batched ``rotate_exact``; ``deg`` is one quadrant for the whole
+    stack or one per image."""
     n, h, w = G.shape
-    assert h == w or deg in (0, 180), f"90/270 remap needs square raster, got {h}x{w}"
+    degs = np.broadcast_to(np.asarray(deg, dtype=np.int64), (n,))
+    assert h == w or not np.isin(degs, (90, 270)).any(), (
+        f"90/270 remap needs square raster, got {h}x{w}"
+    )
     yy, xx = np.mgrid[0:h, 0:w]
-    if deg == 90:
-        return G[:, h - 1 - xx, yy]
-    if deg == 180:
-        return G[:, h - 1 - yy, w - 1 - xx]
-    if deg == 270:
-        return G[:, xx, w - 1 - yy]
-    return G
+    out = G.copy()
+    for d, ry, rx in (
+        (90, h - 1 - xx, yy),
+        (180, h - 1 - yy, w - 1 - xx),
+        (270, xx, w - 1 - yy),
+    ):
+        ix = np.flatnonzero(degs == d)
+        out[ix] = G[ix][:, ry, rx]
+    return out
 
 
-def deskew_nn_batch(G, skew_deg: float):
-    if skew_deg == 0.0:
-        return G
+def deskew_nn_batch(G, skew_deg):
+    """Batched ``deskew_nn``; ``skew_deg`` is one angle for the whole
+    stack or one per image. A zero angle (either sign) maps every pixel
+    to itself exactly (cos 1.0, sin ±0.0), as the scalar early return
+    does."""
     n, h, w = G.shape
-    al = math.cos(skew_deg * RAD)
-    be = math.sin(skew_deg * RAD)
+    skews = np.broadcast_to(np.asarray(skew_deg, dtype=np.float64), (n,))
+    if not skews.any():
+        return G
+    angles, inv = np.unique(skews, return_inverse=True)
+    al = np.array([math.cos(float(a) * RAD) for a in angles])[inv][:, None, None]
+    be = np.array([math.sin(float(a) * RAD) for a in angles])[inv][:, None, None]
     cy, cx = h // 2, w // 2
     yy, xx = np.mgrid[0:h, 0:w]
     sx = al * (xx - cx) - be * (yy - cy) + cx
     sy = be * (xx - cx) + al * (yy - cy) + cy
     rx = np.clip(np.floor(sx + 0.5).astype(np.int64), 0, w - 1)
     ry = np.clip(np.floor(sy + 0.5).astype(np.int64), 0, h - 1)
-    return G[:, ry, rx]
+    return G[np.arange(n)[:, None, None], ry, rx]
 
 
 def contrast_stretch_batch(G):
@@ -206,25 +220,59 @@ def gamma_correct_batch(G):
     return _GAMMA_LUT_NP[G]
 
 
-def denoise_median5_batch(G, chunk: int = 1024):
-    """25-tap median over the batch. The tap stack is a 25x transient
-    copy (plus np.median's partition copy), so large signature groups
-    are processed in fixed-size chunks — bounded memory per task, same
-    per-image arithmetic."""
+def _drop_extremes(work):
+    """``work`` (k >= 4 same-shape arrays) minus one elementwise minimum
+    and one elementwise maximum: compare-exchange the pairs, then run
+    the lows' min chain and the highs' max chain, keeping every loser."""
+    lows = [np.minimum(a, b) for a, b in zip(work[0::2], work[1::2])]
+    highs = [np.maximum(a, b) for a, b in zip(work[0::2], work[1::2])]
+    kept = []
+    if len(work) % 2:  # fold the odd one out into the first pair
+        odd = work[-1]
+        lows[0], odd = np.minimum(lows[0], odd), np.maximum(lows[0], odd)
+        highs[0], mid = np.maximum(highs[0], odd), np.minimum(highs[0], odd)
+        kept.append(mid)
+    lo, hi = lows[0], highs[0]
+    for x in lows[1:-1]:
+        kept.append(np.maximum(lo, x))
+        lo = np.minimum(lo, x)
+    kept.append(np.maximum(lo, lows[-1]))
+    for x in highs[1:-1]:
+        kept.append(np.minimum(hi, x))
+        hi = np.maximum(hi, x)
+    kept.append(np.minimum(hi, highs[-1]))
+    return kept
+
+
+def median5_uint8(G):
+    """Exact 5x5 median with replicate border over a (B, h, w) stack of
+    values in [0, 255], as a uint8 stack — the 13th of the 25
+    edge-replicated taps, equal to ``np.median`` of them (odd count, no
+    interpolation; ``denoise_median5`` and ``media._median5_replicate``
+    are the per-image references).
+
+    Forgetful selection: hold one tap more than the median's rank (14
+    of 25). The smallest of them lies below the median of all 25 and
+    the largest above it, so dropping both leaves that median the
+    median of the 23 left. Take the next tap and repeat — two values
+    fewer, rank one lower — until three values remain; their median is
+    the answer. Every step is an np.minimum/np.maximum over views of
+    the padded raster or of earlier steps, so the working set is at
+    most 14 uint8 copies of the stack, not a 25x tap stack."""
     n, h, w = G.shape
-    out = np.empty_like(G)
-    for s in range(0, n, chunk):
-        # every chain kernel clips to [0, 255], so the taps fit uint8;
-        # median of 25 = the exact 13th order statistic (odd count) —
-        # np.partition on the narrow dtype, bit-equal to np.median
-        p = np.pad(
-            G[s : s + chunk].astype(np.uint8), ((0, 0), (2, 2), (2, 2)), mode="edge"
-        )
-        stack = np.stack(
-            [p[:, dy : dy + h, dx : dx + w] for dy in range(5) for dx in range(5)]
-        )
-        out[s : s + chunk] = np.partition(stack, 12, axis=0)[12].astype(np.int64)
-    return out
+    p = np.pad(G.astype(np.uint8), ((0, 0), (2, 2), (2, 2)), mode="edge")
+    taps = [p[:, dy : dy + h, dx : dx + w] for dy in range(5) for dx in range(5)]
+    work = taps[:14]
+    for tap in taps[14:]:
+        work = _drop_extremes(work) + [tap]
+    a, b, c = work
+    return np.maximum(np.minimum(a, b), np.minimum(np.maximum(a, b), c))
+
+
+def denoise_median5_batch(G):
+    """Batched ``denoise_median5``: the chain kernels clip to [0, 255],
+    so the taps fit ``median5_uint8``."""
+    return median5_uint8(G).astype(np.int64)
 
 
 def sharpen_batch(G):
@@ -250,9 +298,10 @@ def raster_checksum_batch(G):
     return (G * idx).sum(axis=(1, 2))
 
 
-def apply_chain_batch(G, actions, skew_deg: float, rotation_deg: int):
-    """Batched ``apply_chain`` for a group of images SHARING one chain
-    signature (identical action tuple, rotation quadrant, skew angle).
+def apply_chain_batch(G, actions, skew_deg, rotation_deg):
+    """Batched ``apply_chain`` for a group of images SHARING one action
+    tuple. ``skew_deg`` and ``rotation_deg`` are scalars for the whole
+    stack or (B,) arrays, one per image.
 
     PRECONDITION: pixel values in [0, 255]. Every chain kernel clips
     its output, and the decode/synth sources produce bytes, but the

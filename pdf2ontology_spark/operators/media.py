@@ -22,16 +22,17 @@ normalizations) are ported as numpy in ``assess_quality_gray`` and
 verified against the independent DuckDB twin.
 
 ONE STAGE: every operator runs through ``_media_stage`` — salt, blob
-join, one mapInPandas whose loop hands row chunks of the Arrow batch
-to the operator's kernel. The operators differ only in their kernel,
-output schema and chunk size.
+join, one mapInPandas that hands each whole Arrow batch to the
+operator's kernel, so the batch decodes once. The operators differ
+only in their kernel and output schema.
 
 Scale notes: media bytes stay OUT of the span row (media_ref pointer;
-the bytes enter through ONE co-partitioned join on media_ref straight
-into the Arrow stage — at deployment scale the blob table is bucketed
-by media_ref so that join is co-located, no shuffle of the bytes).
-Partitioning salts on the media_ref hash — media-heavy docs are exactly
-the north-rule skew case.
+the bytes enter through ONE join on media_ref in front of the Arrow
+stage — broadcast for a small store, so the bytes never cross a
+shuffle; a store too big to broadcast is joined and then salted, so
+its bytes cross the join and the salt exchanges). The Arrow stage is
+partitioned on the (doc_id, media_ref) hash — media-heavy docs are
+exactly the north-rule skew case.
 """
 
 from __future__ import annotations
@@ -44,32 +45,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pdf2ontology_spark import png_codec
+from pdf2ontology_spark.operators import imaging
 from pdf2ontology_spark.sources import tables
 
 
-def _broadcast_if_small(blobs: DataFrame) -> DataFrame:
-    """Broadcast-hint the blob side when its on-disk size is under the
-    session's autoBroadcastJoinThreshold (a driver-side file stat — no
-    job). The hint matters because the JOINED side must not win the
-    broadcast: when the planner broadcasts the salted media side
-    instead, ``_media_stage``'s Arrow stage inherits the BLOB SCAN's split
-    count and the salt exchange is dead weight (round-7: media_quality
-    ran its kernels on ~5 partitions instead of 32, 2x slower). A big
-    blob store keeps planner choice (both sides shuffle on media_ref;
-    at deployment scale the store is bucketed by media_ref and the join
-    is co-located)."""
-    import os
-
-    try:
-        size = sum(os.path.getsize(p) for p in tables.input_paths(blobs))
-        threshold = tables._parse_byte_conf(
-            blobs.sparkSession.conf.get(
-                "spark.sql.autoBroadcastJoinThreshold", "33554432"
-            )
-        )
-    except Exception:  # noqa: BLE001 — non-file sources / odd confs keep planner choice
-        return blobs
-    return F.broadcast(blobs) if 0 < size < threshold else blobs
+def _fits_broadcast(blobs: DataFrame) -> bool:
+    """True when the optimizer's size estimate of the blob store is
+    under the session's autoBroadcastJoinThreshold — no job: a parquet
+    store is sized by its files, an in-memory table built from pandas
+    by its rows, and a store Spark cannot size (a table built from a
+    Python list or an RDD) reports the maximum and is not broadcast."""
+    size = int(blobs._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    threshold = tables._parse_byte_conf(
+        blobs.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "33554432")
+    )
+    return size < threshold
 
 
 def _media_spans(spans: DataFrame) -> DataFrame:
@@ -81,37 +71,41 @@ def _media_stage(
     blobs: DataFrame,
     kernel: Callable[[pd.DataFrame], pd.DataFrame],
     schema: str,
-    chunk: int | None,
 ) -> DataFrame:
     """The one Arrow stage every media operator runs through.
 
-    ``rows`` (keyed by doc_id, media_ref) are salt-repartitioned on
-    xxhash64(doc_id, media_ref) into ``tables.spread_width`` partitions
-    so a media-heavy doc cannot pin one partition, then left-joined with the blob store on media_ref: a ref
-    missing from the store reaches the kernel with a null ``png``, so it
-    is quarantined (``media_features``: decode_ok=false) or fails the
-    stage (every other operator) — never silently dropped.
-    The salt runs BEFORE the join: the exchange moves only the narrow
-    rows — blob bytes, the widest column in the pipeline, never transit
-    the salt shuffle. The join then either broadcasts the blob side
-    onto the salted layout (small store) or shuffles both sides on
-    media_ref (unique per row), which is itself uniform.
+    ``rows`` (keyed by doc_id, media_ref) are left-joined with the blob
+    store on media_ref: a ref missing from the store reaches the kernel
+    with a null ``png``, so it is quarantined (``media_features``:
+    decode_ok=false) or fails the stage (every other operator) — never
+    silently dropped. The Arrow stage runs on the salted layout:
+    xxhash64(doc_id, media_ref) into ``tables.spread_width`` partitions,
+    so a media-heavy doc cannot pin one partition.
 
-    ``kernel`` maps one pandas slice of at most ``chunk`` rows
-    (``None``: the whole Arrow batch) to its output rows."""
-    rows = rows.repartition(
-        tables.spread_width(rows.sparkSession), F.xxhash64("doc_id", "media_ref")
-    )
-    rows = rows.join(
-        _broadcast_if_small(blobs).select("media_ref", "png"), "media_ref", "left"
-    )
+    A small store is broadcast onto rows salted BEFORE the join, so the
+    salt exchange moves only the narrow rows. The hint matters: when
+    the planner broadcasts the salted media side instead, the Arrow
+    stage inherits the blob scan's split count (round-7: media_quality
+    ran its kernels on ~5 partitions instead of 32, 2x slower). Any
+    other store is joined first and salted after: the join shuffles
+    both sides on media_ref, and AQE may coalesce that shuffle of a
+    small table into a single partition.
+
+    ``kernel`` maps one whole Arrow batch, as pandas, to its output
+    rows: every kernel is vectorized over the batch, and the PNG
+    defilter loop costs per batch, not per row."""
+    width = tables.spread_width(rows.sparkSession)
+    salt = F.xxhash64("doc_id", "media_ref")
+    store = blobs.select("media_ref", "png")
+    if _fits_broadcast(store):
+        rows = rows.repartition(width, salt).join(F.broadcast(store), "media_ref", "left")
+    else:
+        rows = rows.join(store, "media_ref", "left").repartition(width, salt)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            step = chunk or max(len(pdf), 1)
-            outs = [kernel(pdf.iloc[lo : lo + step]) for lo in range(0, len(pdf), step)]
-            if outs:
-                yield pd.concat(outs)
+            if len(pdf):
+                yield kernel(pdf)
 
     return rows.mapInPandas(run, schema=schema)
 
@@ -152,8 +146,7 @@ def media_features(spans: DataFrame, blobs: DataFrame) -> DataFrame:
     with zeroed metadata instead of failing the stage — the quarantine
     pattern for bad bytes.
 
-    The kernel sees the whole Arrow batch (no chunking): the batch decode
-    is the fast path, and a corrupt blob re-decodes the batch per item.
+    A corrupt blob re-decodes its whole Arrow batch one item at a time.
     """
 
     def decode(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -203,7 +196,7 @@ def media_features(spans: DataFrame, blobs: DataFrame) -> DataFrame:
         out["decode_ok"] = oks
         return out
 
-    return _media_stage(_media_spans(spans), blobs, decode, MEDIA_FEATURES_SCHEMA, None)
+    return _media_stage(_media_spans(spans), blobs, decode, MEDIA_FEATURES_SCHEMA)
 
 
 QUALITY_SCHEMA = (
@@ -392,7 +385,7 @@ def content_layout(spans: DataFrame, blobs: DataFrame) -> DataFrame:
         out["multi_column"] = [c > 1 for c in cols]
         return out
 
-    return _media_stage(_media_spans(spans), blobs, layout, LAYOUT_SCHEMA, 4096)
+    return _media_stage(_media_spans(spans), blobs, layout, LAYOUT_SCHEMA)
 
 
 def assess_quality_batch(G) -> dict:
@@ -408,8 +401,7 @@ def assess_quality_batch(G) -> dict:
     n = hh * ww
     # narrow-dtype hot path: every intermediate is exact in int32
     # (pixels <= 255, laplacian in [-1020, 1020], squares < 2^31) and
-    # the 25-tap median runs as a uint8 partition — an int64 median
-    # stack alone was 8x this whole kernel's cost at a 10k batch
+    # the 25-tap median runs on uint8 (``imaging.median5_uint8``)
     g32 = G.astype(np.int32)
     s1 = g32.sum(axis=(1, 2), dtype=np.int64)
     s2 = (g32 * g32).sum(axis=(1, 2), dtype=np.int64)
@@ -428,13 +420,7 @@ def assess_quality_batch(G) -> dict:
     l1 = lap.sum(axis=(1, 2), dtype=np.int64)
     l2 = (lap * lap).sum(axis=(1, 2), dtype=np.int64)
     sharpness = np.minimum((l2 / n - (l1 / n) * (l1 / n)) / 1000.0, 1.0)
-    pe = np.pad(G.astype(np.uint8), ((0, 0), (2, 2), (2, 2)), mode="edge")
-    stack = np.stack(
-        [pe[:, dy : dy + hh, dx : dx + ww] for dy in range(5) for dx in range(5)]
-    )
-    # median of 25 = the 13th order statistic exactly (odd count, no
-    # interpolation) — np.partition on uint8, bit-equal to np.median
-    med = np.partition(stack, 12, axis=0)[12].astype(np.int32)
+    med = imaging.median5_uint8(G).astype(np.int32)
     sad = np.abs(g32 - med).sum(axis=(1, 2), dtype=np.int64)
     noise = np.minimum((sad / n) / 20.0, 1.0)
     overall = contrast * 0.3 + brightness * 0.2 + sharpness * 0.3 + (1.0 - noise) * 0.2
@@ -468,21 +454,18 @@ def assess_quality_batch(G) -> dict:
 def media_quality(spans: DataFrame, blobs: DataFrame) -> DataFrame:
     """media spans -> per-image quality assessment via mapInPandas: the
     bytes decode through the stdlib PNG reader, the METRICS over the
-    pixels are the reference's real math, vectorized across each chunk
-    (``assess_quality_batch``; ``assess_quality_gray`` is the
+    pixels are the reference's real math, vectorized across the Arrow
+    batch (``assess_quality_batch``; ``assess_quality_gray`` is the
     per-image reference implementation the batch path is tested
-    against).
-
-    Chunks of 256 rows: the 25-tap median materializes 25*B*h*w
-    samples — keep the working set cache-resident (32 concurrent
-    Python workers share one socket's DRAM; a 100MB stack per worker
-    turns the stage memory-bound)."""
+    against). The median's working set is at most 14 uint8 copies of
+    the batch's pixels (``imaging.median5_uint8``), so the whole batch
+    is assessed at once."""
 
     def assess(part: pd.DataFrame) -> pd.DataFrame:
         G = png_codec.decode_png_gray_batch(list(part["png"]))
         return part[["doc_id", "media_ref", "offset"]].assign(**assess_quality_batch(G))
 
-    return _media_stage(_media_spans(spans), blobs, assess, QUALITY_SCHEMA, 256)
+    return _media_stage(_media_spans(spans), blobs, assess, QUALITY_SCHEMA)
 
 
 CONDITION_SCHEMA = (
@@ -498,7 +481,7 @@ def assess_media_full(spans: DataFrame, blobs: DataFrame) -> DataFrame:
     operators/orientation.py) in ONE Arrow stage: the raster decodes
     once and both metric families read the same stack — the plan a real
     CV pass wants (1 scan, 1 Python stage, no join of two decode
-    stages). Same chunking as ``media_quality``."""
+    stages), one whole Arrow batch per kernel call."""
     from pdf2ontology_spark.operators import orientation
 
     def assess(part: pd.DataFrame) -> pd.DataFrame:
@@ -507,7 +490,7 @@ def assess_media_full(spans: DataFrame, blobs: DataFrame) -> DataFrame:
             **assess_quality_batch(G), **orientation.orientation_batch(G)
         )
 
-    return _media_stage(_media_spans(spans), blobs, assess, CONDITION_SCHEMA, 256)
+    return _media_stage(_media_spans(spans), blobs, assess, CONDITION_SCHEMA)
 
 
 PREPROCESSED_SCHEMA = (
@@ -541,7 +524,6 @@ def apply_actions(assessed: DataFrame, blobs: DataFrame) -> DataFrame:
     untouched. rotation/skew are zeroed when their corrective action
     ran; out_checksum/mean_after expose the transformed pixels for the
     independent SQL twin."""
-    from pdf2ontology_spark.operators import imaging
 
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
@@ -550,32 +532,28 @@ def apply_actions(assessed: DataFrame, blobs: DataFrame) -> DataFrame:
         G = png_codec.decode_png_gray_batch(list(pdf["png"]))
         n, h, w = G.shape
         n_px = h * w
-        # Group rows by CHAIN SIGNATURE — the action tuple plus the
-        # only parameters the kernels read (rotation iff the chain
-        # rotates, skew iff it deskews) — and run each group's chain
-        # once over a (B, h, w) stack. The signature space is
-        # BOUNDED, not data-sized: rotation is quadrant-valued and
-        # skew is the median of 3-degree-stepped Hough angles (half-
-        # step lattice), so groups only get denser as the corpus
-        # grows (~1.2k signatures over 138k rows at sf0.1).
-        # Bit-identical to the per-image path (pinned by
-        # tests/test_imaging.py): parameter-pinned kernels are pure
-        # elementwise/gather ops under a batch axis.
+        # Group rows by ACTION TUPLE and run each group's chain once
+        # over a (B, h, w) stack, with each row's own rotation and skew
+        # (read only when the chain rotates / deskews). A plan is a
+        # subset of six actions in one priority order
+        # (condition._raw_actions), so a batch has at most 64 groups
+        # whatever its size. Bit-identical to the per-image path
+        # (pinned by tests/test_imaging.py).
         groups: dict = {}
-        for i, (a, sk, rot) in enumerate(
-            zip(acts, pdf["skew_deg"], pdf["rotation_deg"])
-        ):
-            key = (
-                tuple(a),
-                int(rot) if "rotate" in a else 0,
-                float(sk) if "deskew" in a else 0.0,
-            )
-            groups.setdefault(key, []).append(i)
+        for i, a in enumerate(acts):
+            groups.setdefault(tuple(a), []).append(i)
+        skews = pdf["skew_deg"].to_numpy()
+        rots = pdf["rotation_deg"].to_numpy()
         checksums = np.zeros(n, dtype=np.int64)
         means = np.zeros(n, dtype=np.float64)
-        for (a, rot, sk), rows in groups.items():
+        for a, rows in groups.items():
             ix = np.array(rows, dtype=np.int64)
-            g = imaging.apply_chain_batch(G[ix], a, sk, rot)
+            g = imaging.apply_chain_batch(
+                G[ix],
+                a,
+                skews[ix] if "deskew" in a else 0.0,
+                rots[ix] if "rotate" in a else 0,
+            )
             checksums[ix] = imaging.raster_checksum_batch(g)
             sums = g.reshape(len(ix), -1).sum(axis=1)
             means[ix] = np.floor(sums / n_px * 10000.0) / 10000.0
@@ -598,12 +576,10 @@ def apply_actions(assessed: DataFrame, blobs: DataFrame) -> DataFrame:
         out["mean_after"] = means
         return out
 
-    # whole Arrow batch, not chunks: the chain-signature groups get
-    # denser (fewer kernel calls per row) as the batch grows
     plans = assessed.select(
         "doc_id", "offset", "media_ref", "actions", "skew_deg", "rotation_deg"
     )
-    return _media_stage(plans, blobs, run, PREPROCESSED_SCHEMA, None)
+    return _media_stage(plans, blobs, run, PREPROCESSED_SCHEMA)
 
 
 def frame_samples(spans: DataFrame, interval_s: int = 2, max_frames: int = 32) -> DataFrame:

@@ -234,8 +234,8 @@ def _inflate_scanlines(data: bytes) -> tuple[int, int, bytes]:
 
 def decode_png_gray_batch(blobs) -> np.ndarray:
     """list[bytes] -> (B, h, w) int64 stack; all images must share one
-    shape (the batch kernels operate on a uniform stack — mixed shapes
-    are grouped by the caller, like apply_actions' signature groups).
+    shape (the batch kernels operate on a uniform stack — a batch of
+    mixed shapes raises ``PngFormatError``).
 
     The unfilter recurrences run BATCH-VECTORIZED: chunk parse + inflate
     stay per-image (C-side zlib), then the five defilter paths process

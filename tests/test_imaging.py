@@ -111,8 +111,63 @@ def test_batched_chain_bit_identical_to_scalar():
             I.raster_checksum_batch(got)
             == np.array([I.raster_checksum(got[i]) for i in range(G.shape[0])])
         ).all()
-    # the chunked median must be seamless across a chunk boundary
-    big = np.concatenate([G] * 2)
-    got = I.denoise_median5_batch(big, chunk=5)
-    want = I.denoise_median5_batch(big)
-    assert (got == want).all()
+
+
+def _median_of_taps(G):
+    """np.median of the 25 edge-replicated taps, image by image."""
+    out = np.empty(G.shape, dtype=np.float64)
+    for i, g in enumerate(G):
+        h, w = g.shape
+        p = np.pad(g, 2, mode="edge")
+        taps = [p[dy : dy + h, dx : dx + w] for dy in range(5) for dx in range(5)]
+        out[i] = np.median(np.stack(taps), axis=0)
+    return out
+
+
+def test_median5_uint8_equals_np_median_of_taps():
+    """The forgetful-selection median is exact on every input class:
+    random bytes, constant and two-valued images (ties), the 0 and 255
+    extremes, rasters narrower or shorter than the window, and stacks
+    of 0 and 1 images."""
+    rng = np.random.default_rng(14)
+    stacks = [
+        rng.integers(0, 256, (64, 16, 16)),
+        rng.integers(0, 256, (1, 16, 16)),
+        np.zeros((0, 16, 16), dtype=np.int64),
+        np.full((3, 16, 16), 93),
+        np.zeros((2, 16, 16), dtype=np.int64),
+        np.full((2, 16, 16), 255),
+        rng.choice([0, 255], (16, 16, 16)),
+        rng.choice([40, 41], (16, 16, 16)),
+        rng.integers(0, 3, (16, 16, 16)),
+    ]
+    stacks += [rng.integers(0, 256, (5, h, w)) for h, w in [(1, 1), (2, 9), (4, 4), (9, 3), (5, 5)]]
+    for G in stacks:
+        G = G.astype(np.int64)
+        got = I.median5_uint8(G)
+        assert got.dtype == np.uint8 and got.shape == G.shape
+        assert (got == _median_of_taps(G)).all(), G.shape
+        assert (I.denoise_median5_batch(G) == got).all()
+        for i in range(G.shape[0]):
+            assert (I.denoise_median5(G[i]) == got[i]).all()
+
+
+def test_per_image_parameters_in_one_action_group():
+    """One action tuple, many parameters: every rotation quadrant and
+    skews that repeat, are zero of either sign or fractional run as one
+    batch and match the per-image chain image by image."""
+    from pdf2ontology_spark.raster import synth_raster
+
+    rots = [0, 90, 180, 270] * 6
+    skews = [0.0, -0.0, 3.7, 3.7, -11.25, 2.0, -2.0, 0.5] * 3
+    G = np.stack([synth_raster(f"media://p{i}/x.png") for i in range(len(rots))])
+    for actions in [
+        ("rotate",),
+        ("deskew",),
+        ("rotate", "deskew"),
+        ("rotate", "deskew", "enhance_contrast", "gamma_correction", "denoise", "sharpen"),
+    ]:
+        got = I.apply_chain_batch(G.copy(), actions, np.array(skews), np.array(rots))
+        for i in range(G.shape[0]):
+            want = I.apply_chain(G[i].copy(), list(actions), skews[i], rots[i])
+            assert (got[i] == want).all(), (actions, skews[i], rots[i])

@@ -55,13 +55,17 @@ def test_media_features_corrupt_blob_quarantined(spark):
     assert (stats.n_media, stats.n_ok) == (3, 1)
 
 
-def test_media_salt_balances_gallery_docs(spark, fixture_blobs):
+@pytest.mark.parametrize("store", ["parquet", "memory"])
+def test_media_salt_balances_gallery_docs(spark, fixture_blobs, store):
     """The composite salt spreads a gallery doc's media: 2 docs x 400
     media spans plus 400 docs x 2, at 8 shuffle partitions. The rows of
     media_quality's Arrow stage stay within 1.3x of the mean partition,
     while the same rows keyed by doc_id alone reach >= 2x (each gallery
     doc lands whole in one bucket) — the deterministic row histogram
-    behind BENCH/SKEW_r6.md."""
+    behind BENCH/SKEW_r6.md. A parquet store is broadcast onto the
+    salted rows; an in-memory store built from a Python list has no
+    size estimate, so its join shuffles on media_ref and the salt must
+    survive that join."""
     rows = [(f"g{d}", i) for d in range(2) for i in range(400)]
     rows += [(f"d{d}", i) for d in range(400) for i in range(2)]
     spans = spark.createDataFrame(
@@ -76,7 +80,14 @@ def test_media_salt_balances_gallery_docs(spark, fixture_blobs):
         assert sum(sizes) == len(rows)
         return max(sizes) * n_part / len(rows)
 
-    blobs = fixture_blobs(f"media://{doc}/{i}.png" for doc, i in rows)
+    refs = [f"media://{doc}/{i}.png" for doc, i in rows]
+    if store == "parquet":
+        blobs = fixture_blobs(refs)
+    else:
+        blobs = spark.createDataFrame(
+            [(r, bytearray(png_codec.encode_png_gray(raster.synth_raster(r)))) for r in refs],
+            "media_ref string, png binary",
+        )
     assert max_over_mean(media.media_quality(spans, blobs)) <= 1.3
     assert max_over_mean(spans.repartition(n_part, F.xxhash64("doc_id"))) >= 2
 
@@ -188,6 +199,34 @@ def test_apply_actions_passthrough_and_chain(spark, fixture_blobs):
         assert r.processed_ref == state and r.changed is True
         if "rotate" in planned[r.media_ref].actions:
             assert r.rotation_deg_after == 0
+
+
+def test_apply_actions_pixels_match_per_image_chain(spark, fixture_blobs):
+    """Every row's out_checksum and mean_after equal the per-image chain
+    recomputed from its own raster, rotation and skew — the action-tuple
+    groups mix every rotation quadrant and many skews."""
+    import numpy as np
+
+    from pdf2ontology_spark.operators import condition, imaging
+
+    refs = [f"media://a{i % 37}/{i}.png" for i in range(300)]
+    spans = spark.createDataFrame(
+        [(r.split("/")[2], "media", "", r, i) for i, r in enumerate(refs)],
+        "doc_id string, kind string, text string, media_ref string, offset int",
+    )
+    assessed = condition.assess_media(spans)
+    plans = {r.media_ref: r for r in assessed.collect()}
+    out = media.apply_actions(assessed, fixture_blobs(refs)).collect()
+    assert len(out) == len(refs)
+    assert len({p.rotation_deg for p in plans.values() if "rotate" in p.actions}) == 3
+    assert len({p.skew_deg for p in plans.values() if "deskew" in p.actions}) > 10
+    for r in out:
+        p = plans[r.media_ref]
+        g = imaging.apply_chain(
+            raster.synth_raster(r.media_ref), list(p.actions), p.skew_deg, p.rotation_deg
+        )
+        assert r.out_checksum == imaging.raster_checksum(g), r.media_ref
+        assert r.mean_after == np.floor(g.sum() / g.size * 10000.0) / 10000.0
 
 
 def test_apply_actions_on_real_skew(spark):
