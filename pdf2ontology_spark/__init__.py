@@ -11,4 +11,12 @@ cannot express the semantics (media decode plumbing).
 
 __version__ = "0.1.0"
 
-from pdf2ontology_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    # ``get_spark`` loads on first use: the worker daemon imports this
+    # package and must not pull in pyspark.sql (and with it numpy)
+    if name == "get_spark":
+        from pdf2ontology_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -16,10 +16,9 @@ encoded corpora genuinely exercise every defilter path in the reader.
 
 Reader: validates the signature, parses chunks with CRC checking,
 concatenates IDAT, inflates, and undoes filters 0-4 row by row
-(vectorized where the recurrence allows: Up is a plain column add; Sub/
-Average/Paeth carry a left-neighbor recurrence and run per-row in C
-via numpy cumulative ops where possible, else a tight per-pixel loop on
-a 16-wide row — trivial at our raster size, still correct at any).
+(Up is a plain row add; Sub/Average/Paeth carry a left-neighbor
+recurrence and run a per-pixel loop, which ``decode_png_gray_batch``
+runs over every image of a batch at once).
 
 Scale note: decode runs INSIDE Arrow-batched mapInPandas stages —
 per-image cost is independent of corpus size and the bytes never
@@ -127,31 +126,12 @@ def decode_png_gray(data: bytes) -> np.ndarray:
     """PNG bytes -> (h, w) int64 pixel array.
 
     Supports the profile the pipeline stores: 8-bit grayscale (color
-    type 0), non-interlaced. Anything else raises ``PngFormatError`` —
-    the quarantine path's job, not a silent fallback."""
-    ihdr = None
-    idat = bytearray()
-    for tag, payload in _parse_chunks(bytes(data)):
-        if tag == b"IHDR":
-            ihdr = struct.unpack(">IIBBBBB", payload)
-        elif tag == b"IDAT":
-            idat += payload
-    if ihdr is None:
-        raise PngFormatError("missing IHDR chunk")
-    w, h, depth, color, comp, filt, interlace = ihdr
-    if depth != 8 or color != COLOR_GRAY:
-        raise PngFormatError(f"unsupported PNG profile: depth={depth} color={color}")
-    if comp != 0 or filt != 0:
-        raise PngFormatError("unsupported compression/filter method")
-    if interlace != 0:
-        raise PngFormatError("Adam7 interlacing not supported")
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error as e:
-        raise PngFormatError(f"IDAT inflate failed: {e}") from None
+    type 0), non-interlaced. Anything else, a ``None`` blob included,
+    raises ``PngFormatError`` — the quarantine path's job, not a silent
+    fallback. The row-by-row scalar defilter is the reference that
+    tests/test_png_codec.py pins ``decode_png_gray_batch`` against."""
+    w, h, raw = _inflate_scanlines(data)
     stride = w + 1
-    if len(raw) != h * stride:
-        raise PngFormatError(f"IDAT size {len(raw)} != expected {h * stride}")
     scan = np.frombuffer(raw, dtype=np.uint8).reshape(h, stride)
     filters = scan[:, 0]
     rows = scan[:, 1:].astype(np.int64)
@@ -203,8 +183,10 @@ def read_png_header(data: bytes) -> tuple[int, int, int, int]:
 
 
 def _inflate_scanlines(data: bytes) -> tuple[int, int, bytes]:
-    """One image's (w, h, raw scanline bytes) — the chunk-parse +
-    inflate half of ``decode_png_gray`` (all C-side work)."""
+    """One image's (w, h, raw scanline bytes): the chunk parse, IHDR
+    checks and inflate that both decoders share. The chunk parse is a
+    Python loop (four ``_parse_chunks`` steps for an IHDR/IDAT/IEND
+    image); only the CRCs and the inflate run in zlib."""
     if data is None:  # a media ref with no bytes in the blob store
         raise PngFormatError("no PNG bytes (null blob)")
     ihdr = None
@@ -237,8 +219,9 @@ def decode_png_gray_batch(blobs) -> np.ndarray:
     shape (the batch kernels operate on a uniform stack — a batch of
     mixed shapes raises ``PngFormatError``).
 
-    The unfilter recurrences run BATCH-VECTORIZED: chunk parse + inflate
-    stay per-image (C-side zlib), then the five defilter paths process
+    The unfilter recurrences run BATCH-VECTORIZED: the chunk parse
+    (Python) and the inflate (zlib) stay per image in
+    ``_inflate_scanlines``, then the five defilter paths process
     row y of EVERY image at once — the per-pixel left-neighbor loop is
     h*w numpy ops on (B,)-wide vectors per batch instead of per image
     (~B-fold fewer interpreter steps; bit-identical to

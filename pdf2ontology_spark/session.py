@@ -33,6 +33,15 @@ def get_spark(
       entity-linking self-joins (north rule calls this out explicitly).
     - Arrow on: every pandas UDF stage is Arrow-batched, never per-row.
     - UTC session TZ: parity with DuckDB oracle timestamps.
+    - ``spark.python.daemon.module`` = ``pdf2ontology_spark.worker_daemon``:
+      every Python task (the media and imaging Arrow stages, the
+      components union-find, the dedup and similarity UDFs) starts with
+      PySpark's ``importlib.invalidate_caches()``, which before Python
+      3.13 makes each zip importer re-read its whole archive directory
+      (pyspark.zip, the spark-core jar). That cost 0.15-0.40 s per
+      task before the UDF ran (local[4], Python 3.11). The library
+      daemon re-reads an archive only when it changed on disk, which
+      cuts the call to under 1 ms (see worker_daemon.py).
     - shuffle partitions ~ cores locally; on a real cluster this is set
       to ~2-3x total executor cores (AQE coalesces the rest).
     """
@@ -58,6 +67,7 @@ def get_spark(
         # the graph job; AQE still coalesces truly tiny stages)
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.python.daemon.module", "pdf2ontology_spark.worker_daemon")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")

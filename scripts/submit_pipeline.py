@@ -11,7 +11,16 @@ Cluster (the only changes are master/packaging — no code changes):
       --py-files pdf2ontology_spark.zip \
       --conf spark.sql.shuffle.partitions=<2-3x total cores> \
       --conf spark.sql.adaptive.enabled=true \
+      --conf spark.python.daemon.module=pdf2ontology_spark.worker_daemon \
       scripts/submit_pipeline.py --sf-dir s3://... --output s3://... --ckpt s3://...
+
+The daemon module (the one ``get_spark`` sets; it stops every Python
+task from re-reading pyspark.zip and the spark-core jar) is imported
+when an executor starts its Python daemon, before any task has put its
+``--py-files`` on ``sys.path``. So the package must already be
+importable there: installed on the executors, or on the path that
+``spark.executorEnv.PYTHONPATH`` gives them. Where it is not, leave that
+line out and the stock daemon runs.
 
 The job: documents spans -> spans + quarantine side table -> triples ->
 exact-key nodes and edges (graph.nodes/graph.edges: surface forms with

@@ -83,6 +83,14 @@ def test_corrupt_bytes_raise(mutate):
         png_codec.decode_png_gray(mutate(b))
 
 
+def test_null_blob_raises_in_both_decoders():
+    # a media ref with no bytes in the blob store
+    with pytest.raises(png_codec.PngFormatError):
+        png_codec.decode_png_gray(None)
+    with pytest.raises(png_codec.PngFormatError):
+        png_codec.decode_png_gray_batch([None])
+
+
 def test_unsupported_profile_raises():
     # hand-build an RGB (color type 2) IHDR — reader must refuse, not
     # silently misread
