@@ -609,8 +609,8 @@ def q_streaming_triples(spark, sf_dir):
 
 def q_streaming_nodes(spark, sf_dir):
     """stream_graph_upsert: per micro-batch, merge-upsert the mergeable
-    graph stages (surfaces / edge_aggs), then derive the node table from
-    the upserted stage — must equal the batch graph (oracle: nodes)."""
+    graph stages (surfaces / edge_surfaces), then derive the node table
+    from the upserted stage — must equal the batch graph (oracle: nodes)."""
     import os
 
     from pdf2ontology_spark.streaming import incremental

@@ -15,81 +15,6 @@ def clamp01(c: Column) -> Column:
     return F.greatest(F.lit(0.0), F.least(F.lit(1.0), c))
 
 
-def combined_confidence(a: Column, b: Column) -> Column:
-    """Mean of two confidences (document_analyzer.py:209-211)."""
-    return (a + b) / 2
-
-
-def word_count(text: Column) -> Column:
-    """(pydantic_models/__init__.py:82-84)."""
-    return F.size(F.filter(F.split(text, r"\s+"), lambda w: w != "")).cast("long")
-
-
-def char_count(text: Column) -> Column:
-    return F.length(text).cast("long")
-
-
-def page_table_id(page: Column, idx: Column) -> Column:
-    """'page_{p}_table_{i}' (document_analyzer.py:178)."""
-    return F.format_string("page_%d_table_%d", page, idx)
-
-
-def content_hash(c: Column) -> Column:
-    """md5 caching key (image_utils.py:93-98) — here it is actually used
-    (checkpoint identity), unlike the reference where it is dormant."""
-    return F.md5(c)
-
-
-def truncate(text: Column, n: int) -> Column:
-    """Prompt-cap projections [:4000]/[:200]/[:100]
-    (classifier.py:52; triplet_extractor.py:263,355,367)."""
-    return F.substring(text, 1, n)
-
-
-def standardize_symbols(text: Column) -> Column:
-    """Symbol standardization (table_processor_paddlex.py:167-174)."""
-    out = F.regexp_replace(text, "✓", "[CE_MARK]")
-    out = F.regexp_replace(out, "●", "[SELECTED]")
-    return F.regexp_replace(out, "§", "[SECTION]")
-
-
-# ---- bbox geometry (region_models.py:25-48: right/bottom/center/area) ----
-def bbox_right(x: Column, w: Column) -> Column:
-    return x + w
-
-
-def bbox_bottom(y: Column, h: Column) -> Column:
-    return y + h
-
-
-def bbox_center_x(x: Column, w: Column) -> Column:
-    return x + w / 2
-
-
-def bbox_area(w: Column, h: Column) -> Column:
-    return w * h
-
-
-def bbox_valid(x: Column, y: Column, w: Column, h: Column) -> Column:
-    """Relative-bbox validity (region_detector.py:215-234 +
-    pydantic_models/__init__.py:62-71: coords in [0,1], x+w <= 1)."""
-    inrange = (
-        (x >= 0) & (x <= 1) & (y >= 0) & (y <= 1) & (w > 0) & (w <= 1) & (h > 0) & (h <= 1)
-    )
-    return inrange & (x + w <= 1.0001) & (y + h <= 1.0001)
-
-
-def bbox_overlap(
-    ax: Column, ay: Column, aw: Column, ah: Column,
-    bx: Column, by: Column, bw: Column, bh: Column,
-) -> Column:
-    """Interval-overlap predicate (table_transformer.py:322-325) — the
-    theta-join condition for spanning-cell -> grid-cell mapping (J2)."""
-    return ~(
-        (ax + aw <= bx) | (bx + bw <= ax) | (ay + ah <= by) | (by + bh <= ay)
-    )
-
-
 def priority_sorted_actions(actions: Column) -> Column:
     """Deterministic action-plan ordering (image_utils.py:261-289
     priority map 1:rotations .. 8:threshold): dedupe, then stable-sort

@@ -12,6 +12,11 @@
   scale the only shuffles are the final groupBys. (The MinHash-LSH +
   connected-components path, which does need a band self-join, lives
   in operators/linking.py.)
+- Two MERGEABLE stage tables feed every graph output: ``per_surface``
+  (nodes) and ``edge_surfaces`` (edges). Each edge table — exact
+  ``edges``, LSH canonical edges, streamed edges — is
+  ``edges_from_surfaces`` over ``edge_surfaces`` rows with its own
+  endpoint-id columns, through the one edge merge ``_merge_edges``.
 
 ``canonical_form`` populates the reference's declared-but-never-written
 Entity.canonical_form field (knowledge_models.py:43-46).
@@ -229,22 +234,24 @@ def nodes(triples: DataFrame) -> DataFrame:
     return nodes_from_surfaces(per_surface(triples))
 
 
+EDGE_SURFACE_KEYS = ["subj_name", "subj_type", "predicate", "obj_name", "obj_type"]
+
+
 def edge_surfaces(triples: DataFrame) -> DataFrame:
-    """One row per surface-keyed edge (subj_name, subj_type, predicate,
-    obj_name, obj_type): weight = co-occurrence count (Relation.weight
+    """One row per surface-keyed edge (``EDGE_SURFACE_KEYS``) — the
+    MERGEABLE edge stage: weight = co-occurrence count (Relation.weight
     semantics, knowledge_models.py:77-81), confidence = max over the
     merged triples, evidence = Relation.evidence (knowledge_models.py:
     94-97) as a top-3 of supporting sentences, _methods = the sorted
-    extraction methods. Exact edges re-key these groups by entity id
-    (``edge_aggs``); LSH canonicalization re-keys them by component."""
+    extraction methods. Every edge table re-keys these groups by two
+    endpoint-id columns through ``edges_from_surfaces``: exact ids in
+    ``edges``, component ids in LSH canonicalization."""
     # aggregating on the RAW surface keys keeps the fact-stream shuffle
     # narrow: names/predicate (tens of bytes), not two 64-char sha2 hex
     # ids (128 bytes/row). This was a measured 1.38-1.58x CPU-seconds
     # inflation lever at rising thread counts — the aggregation is
     # DRAM-bound and row width is the knob.
-    return triples.groupBy(
-        "subj_name", "subj_type", "predicate", "obj_name", "obj_type"
-    ).agg(
+    return triples.groupBy(*EDGE_SURFACE_KEYS).agg(
         F.count("*").cast("double").alias("weight"),
         F.max("confidence").alias("confidence"),
         _top3("source_sentence").alias("evidence"),
@@ -252,12 +259,13 @@ def edge_surfaces(triples: DataFrame) -> DataFrame:
     )
 
 
-def _merge_edge_aggs(df: DataFrame) -> DataFrame:
-    """Id-keyed edge aggregation over rows that already carry weight /
-    confidence / evidence / _methods: every column's merge is the exact
-    distributive combine (weights sum, confidences max, evidence re-takes
-    the top-3, _methods a distinct union)."""
-    return df.groupBy("subject_id", "predicate", "object_id").agg(
+def _merge_edges(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """The one edge merge, over rows that already carry weight /
+    confidence / evidence / _methods: weights sum, confidences max,
+    evidence re-takes the top-3, _methods a distinct union — each the
+    exact distributive combine, so merging partial groups equals
+    grouping the raw triples at once."""
+    return rows.groupBy(*keys).agg(
         F.sum("weight").alias("weight"),
         F.max("confidence").alias("confidence"),
         _top3_merge("evidence").alias("evidence"),
@@ -265,31 +273,24 @@ def _merge_edge_aggs(df: DataFrame) -> DataFrame:
     )
 
 
-def edge_aggs(triples: DataFrame) -> DataFrame:
-    """Keyed edge aggregates — the MERGEABLE edge stage: batch-local rows
-    upsert additively into an edge-aggs stage table (streaming graph
-    materialization)."""
-    # endpoint ids are pure expressions of the group keys, so they are
-    # computed on the collapsed rows (edge-surface cardinality) instead
-    # of through a surface-id dimension join, which costs a second pass
-    # over the triples (measured 1.39 -> 0.87s at sf0.1). Distinct
-    # surfaces can normalize to the SAME entity_id, so the surface-keyed
-    # groups are finer than the id-keyed edges and merge once more.
-    return _merge_edge_aggs(
-        edge_surfaces(triples)
-        .withColumn("subject_id", entity_id_col(F.col("subj_name"), F.col("subj_type")))
-        .withColumn("object_id", entity_id_col(F.col("obj_name"), F.col("obj_type")))
+def combine_edge_surfaces(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Merge two edge_surfaces tables exactly: combine(edge_surfaces(X),
+    edge_surfaces(Y)) == edge_surfaces(X ++ Y)."""
+    return _merge_edges(a.unionByName(b), EDGE_SURFACE_KEYS)
+
+
+def edges_from_surfaces(
+    edge_surfaces_df: DataFrame, subject_id: Column, object_id: Column
+) -> DataFrame:
+    """Edge table (schemas.EDGES) from surface-keyed edge groups: the
+    groups re-key by the two endpoint-id columns and merge once more,
+    since distinct surfaces can share an id. A caller that selects only
+    some columns pays for no more: the optimizer prunes the unread
+    evidence/_methods aggregates at both levels."""
+    merged = _merge_edges(
+        edge_surfaces_df.withColumns({"subject_id": subject_id, "object_id": object_id}),
+        ["subject_id", "predicate", "object_id"],
     )
-
-
-def combine_edge_aggs(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Merge two edge_aggs tables exactly: combine(edge_aggs(X),
-    edge_aggs(Y)) == edge_aggs(X ++ Y)."""
-    return _merge_edge_aggs(a.unionByName(b))
-
-
-def edges_from_aggs(agg: DataFrame) -> DataFrame:
-    """Final edge table from an edge_aggs stage table."""
     # metadata fills Relation.metadata (knowledge_models.py:59-62) with
     # real provenance: evidence count + contributing extraction methods
     metadata = F.create_map(
@@ -298,7 +299,7 @@ def edges_from_aggs(agg: DataFrame) -> DataFrame:
         F.lit("methods"),
         F.array_join("_methods", ","),
     )
-    return agg.select(
+    return merged.select(
         edge_id_col(F.col("subject_id"), F.col("predicate"), F.col("object_id")).alias(
             "edge_id"
         ),
@@ -319,7 +320,15 @@ def edges_from_aggs(agg: DataFrame) -> DataFrame:
 
 def edges(triples: DataFrame) -> DataFrame:
     """Canonicalized edge table (schemas.EDGES), exact blocking."""
-    return edges_from_aggs(edge_aggs(triples))
+    # endpoint ids are pure expressions of the group keys, so they are
+    # computed on the collapsed rows (edge-surface cardinality) instead
+    # of through a surface-id dimension join, which costs a second pass
+    # over the triples (measured 1.39 -> 0.87s at sf0.1)
+    return edges_from_surfaces(
+        edge_surfaces(triples),
+        entity_id_col(F.col("subj_name"), F.col("subj_type")),
+        entity_id_col(F.col("obj_name"), F.col("obj_type")),
+    )
 
 
 # --------------------------------------------------------------- ontology
@@ -382,16 +391,6 @@ def ontology_classes(spark, nodes_df: DataFrame) -> DataFrame:
             ),
         )
     )
-
-
-def nodes_with_class(nodes_df: DataFrame) -> DataFrame:
-    """entity->class column on the node table via a broadcast dim join
-    (the Entity -> OntologyClass.instances inversion, row-wise)."""
-    spark = nodes_df.sparkSession
-    dim = ontology_class_dim(spark).select(
-        F.col("name").alias("entity_type"), "class_id", "parent_class"
-    )
-    return nodes_df.join(F.broadcast(dim), "entity_type", "left")
 
 
 def graph_stats(

@@ -107,9 +107,10 @@ def _isnum(v) -> bool:
 
 
 def _overlap(gx, gy, gw, gh, sx, sy, sw, sh) -> bool:
-    """fn.bbox_overlap with SQL three-valued logic collapsed to a join
-    predicate: any null coordinate -> NOT matched (the theta join only
-    keeps rows where the predicate is TRUE)."""
+    """Interval-overlap predicate (table_transformer.py:322-325) with
+    SQL three-valued logic collapsed to a join predicate: any null
+    coordinate -> NOT matched (the theta join only keeps rows where the
+    predicate is TRUE)."""
     for v in (gx, gy, gw, gh, sx, sy, sw, sh):
         if not _isnum(v):
             return False

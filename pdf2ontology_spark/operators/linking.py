@@ -30,8 +30,10 @@ Pipeline (all DataFrame ops):
    bridge edges — one single-task union-find, exact.
 5. canonical_nodes/canonical_edges: groupBy component, representative =
    most frequent surface form (graph.top_surface); graph.edge_surfaces'
-   surface-keyed edge groups are remapped via a surface -> component
-   dimension join and re-aggregated.
+   surface-keyed edge groups take their endpoints' component ids via a
+   surface -> component dimension join and merge through
+   graph.edges_from_surfaces, the same edge stage the exact and
+   streamed edge tables use.
 """
 
 from __future__ import annotations
@@ -127,14 +129,6 @@ def banded_candidates(fuzzy_base: DataFrame) -> DataFrame:
     return _band_join(fuzzy_base).select("id_a", "id_b").distinct()
 
 
-def prefiltered_candidates(fuzzy_base: DataFrame) -> DataFrame:
-    """Band candidates that pass the size prefilter (``_size_ok``) —
-    the pairs ``candidate_pairs`` runs the exact Jaccard on. The filter
-    depends only on (id_a, id_b)-functional values, so applying it
-    before the pair ``distinct`` is equivalent to applying it after."""
-    return _band_join(fuzzy_base).filter(_size_ok()).select("id_a", "id_b").distinct()
-
-
 def candidate_pairs(reps: DataFrame) -> DataFrame:
     """Fuzzy (id_a, id_b) bridge links between exact-group reps, within
     entity_type. Only non-value types; minhash over char-3-grams of the
@@ -202,18 +196,12 @@ def canonicalize(triples: DataFrame) -> dict[str, DataFrame]:
         F.col("entity_type").alias("obj_type"),
         F.col("canonical_id").alias("object_id"),
     )
-    # join at edge-surface cardinality: weight (a count) sums and
-    # confidence maxes exactly across the surface groups of one edge
-    edges = (
+    # join at edge-surface cardinality, then the one edge merge
+    edges = graph.edges_from_surfaces(
         graph.edge_surfaces(triples)
         .join(m_subj, ["subj_name", "subj_type"])
-        .join(m_obj, ["obj_name", "obj_type"])
-        .groupBy("subject_id", "predicate", "object_id")
-        .agg(F.sum("weight").alias("weight"), F.max("confidence").alias("confidence"))
-        .select(
-            graph.edge_id_col(F.col("subject_id"), F.col("predicate"), F.col("object_id"))
-            .alias("edge_id"),
-            "subject_id", "predicate", "object_id", "weight", "confidence",
-        )
-    )
+        .join(m_obj, ["obj_name", "obj_type"]),
+        F.col("subject_id"),
+        F.col("object_id"),
+    ).select("edge_id", "subject_id", "predicate", "object_id", "weight", "confidence")
     return {"surfaces": surf, "pairs": pairs, "mapping": mapping, "nodes": nodes, "edges": edges}

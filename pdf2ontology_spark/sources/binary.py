@@ -29,16 +29,6 @@ def load_media_dir(spark: SparkSession, path: str, glob: str = "*.png") -> DataF
     )
 
 
-def media_manifest(files: DataFrame) -> DataFrame:
-    """Typed metadata for opaque media blobs: content hash + size —
-    the caching key of image_utils.py:93-98, actually used here."""
-    return files.select(
-        "path",
-        "length",
-        F.md5(F.col("content")).alias("content_md5"),
-    )
-
-
 def write_spans_csv(spans: DataFrame, path: str) -> None:
     """Diagnostics CSV of exploded spans (K2 sink analog)."""
     spans.select(

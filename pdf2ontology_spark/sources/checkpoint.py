@@ -8,7 +8,7 @@ StageResult (/root/reference/src/pydantic_models/pipeline_models.py:25-48).
 
 Semantics:
 - ``stage(...)`` computes a DataFrame, writes it to
-  ``<root>/<name>`` (parquet today, Iceberg on a real cluster), and
+  ``<root>/<name>`` (parquet; see ``tables`` on Iceberg), and
   appends one _metrics row per output file. If the checkpoint is
   already complete (``_SUCCESS``), it is READ instead of recomputed —
   that is the idempotent resume path: all ids are deterministic content

@@ -1,10 +1,9 @@
 """Table IO.
 
-The production design targets Iceberg (BASELINE.json north_rule); this
-sandbox has no Iceberg runtime jar, so every writer goes through
-``storage_format()`` — parquet today, ``iceberg`` transparently when
-``SPARK_GRAFT_TABLE_FORMAT=iceberg`` is set on a real cluster. Readers
-take plain paths so the same code reads either.
+Every table is a parquet path. The production design targets Iceberg
+(BASELINE.json north_rule), but no Iceberg runtime jar ships with the
+repo, so Iceberg writers and ``MERGE INTO`` wait until one does;
+``merge_upsert`` keeps MERGE's semantics over parquet meanwhile.
 """
 
 from __future__ import annotations
@@ -27,10 +26,6 @@ DRIVER_TABLES = [
     "documents",
     "embeddings",
 ]
-
-
-def storage_format() -> str:
-    return os.environ.get("SPARK_GRAFT_TABLE_FORMAT", "parquet")
 
 
 # parquet schema inference submits a one-task Spark job per read, so
@@ -267,14 +262,11 @@ def load_golden_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(paths["golden_triples"])
 
 
-def write_table(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    fmt = storage_format()
-    if fmt == "iceberg":
-        df.writeTo(path).createOrReplace()
-    else:
-        # 16MB row groups keep the table splittable regardless of the
-        # writer's parallelism (row group = atomic scan-split unit)
-        df.write.mode(mode).option("parquet.block.size", 16 * 1024 * 1024).parquet(path)
+def write_table(df: DataFrame, path: str) -> None:
+    """Overwrite the parquet table at ``path``."""
+    # 16MB row groups keep the table splittable regardless of the
+    # writer's parallelism (row group = atomic scan-split unit)
+    df.write.mode("overwrite").option("parquet.block.size", 16 * 1024 * 1024).parquet(path)
 
 
 _MERGE_META = "_merge_meta.json"
@@ -312,8 +304,8 @@ def merge_upsert(
     key_cols: list[str],
     commit_meta: dict | None = None,
 ) -> None:
-    """Keyed upsert — the Iceberg ``MERGE INTO`` analog for the parquet
-    sandbox: rows matching on ``key_cols`` are replaced by the update,
+    """Keyed upsert — the Iceberg ``MERGE INTO`` analog over parquet:
+    rows matching on ``key_cols`` are replaced by the update,
     others are kept, new keys are inserted. Semantics (not mechanics)
     match MERGE ... WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN
     INSERT. The parquet commit is two renames, which is NOT atomic —
@@ -324,22 +316,11 @@ def merge_upsert(
     helper) prefers COMPLETING the crashed commit from ``._merge_tmp``
     (it has ``_SUCCESS``, so it is the full merged output) and falls
     back to restoring ``._merge_old`` — no committed data is ever
-    silently lost. On Iceberg (SPARK_GRAFT_TABLE_FORMAT=iceberg) the
-    real MERGE runs and the snapshot commit is truly transactional.
+    silently lost. A real transactional MERGE INTO waits until an
+    Iceberg runtime jar is in the repo.
     """
     import shutil
 
-    if storage_format() == "iceberg":
-        updates.createOrReplaceTempView("_merge_updates")
-        on = " AND ".join(f"t.{k} = s.{k}" for k in key_cols)
-        spark.sql(
-            f"MERGE INTO {path} t USING _merge_updates s ON {on} "
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
-        # on Iceberg the snapshot commit is the transaction; replay
-        # markers belong in snapshot summary properties there (the
-        # parquet-sandbox meta file is not transactional post-MERGE)
-        return
     tmp = path.rstrip("/") + "._merge_tmp"
     old = path.rstrip("/") + "._merge_old"
     _recover_merge(path)

@@ -16,8 +16,7 @@ the incremental surface exercises the same flagship plan as batch
 Delivery semantics: the streaming checkpoint gives exactly-once source
 tracking; the parquet append sink inside foreachBatch is at-least-once
 on retry (idempotent downstream thanks to deterministic content ids —
-consumers dedupe on the triple's content hash). On Iceberg the sink
-becomes a MERGE and is exactly-once.
+consumers dedupe on the triple's content hash).
 
 ``stream_dedup_first_seen`` is the stateful extension: streaming
 exact-dedup with applyInPandasWithState — the custom stateful operator
@@ -141,18 +140,22 @@ def stream_graph_upsert(
     """Incremental KG materialization — the streaming form of the graph
     stage: per micro-batch, run the fused triple extraction, aggregate
     the batch's MERGEABLE graph stages (graph.per_surface /
-    graph.edge_aggs — counts sum, confidences max, evidence/mentions
+    graph.edge_surfaces — counts sum, confidences max, evidence/mentions
     are distributive top-3s), and upsert ONLY the touched keys into the
-    surfaces / edge_aggs stage tables via ``tables.merge_upsert`` (the
-    crash-recoverable Iceberg-MERGE analog). The final node/edge tables
-    are cheap derivations over the stages (``read_stream_nodes`` /
+    ``surfaces`` / ``edge_surfaces`` stage tables under ``out_base`` via
+    ``tables.merge_upsert`` (the crash-recoverable MERGE analog). These
+    are the batch graph's own stage tables, so the final node/edge
+    tables are the batch derivations over them (``read_stream_nodes`` /
     ``read_stream_edges``) and equal the batch graph exactly
     (tests/test_stream_graph.py pins 3-chunk equivalence).
 
     Scale shape: the per-batch update is sized by the BATCH's distinct
     keys, not the accumulated graph; the stage tables are
-    entity/edge-cardinality (orders of magnitude under the triple
-    stream); on Iceberg the upsert is a transactional MERGE INTO.
+    entity/edge-surface cardinality (orders of magnitude under the
+    triple stream).
+
+    An ``out_base`` from before the surface-keyed edge stage holds an
+    id-keyed ``edge_aggs`` table instead; rebuild it (no migration).
 
     Replay-idempotent: see ``graph_batch_handler``.
     """
@@ -178,17 +181,21 @@ def graph_batch_handler(spark: SparkSession, out_base: str, checkpoint_dir: str)
     dir, so it commits atomically with the data) and a replayed batch
     whose id is <= the stage's recorded id is a no-op FOR THAT STAGE —
     a crash between the two stage merges replays into "skip surfaces,
-    apply edge_aggs", exactly completing the interrupted batch. The
+    apply edge_surfaces", exactly completing the interrupted batch. The
     checkpoint identity guards the other direction: a FRESH stream
     (batch ids restart at 0) pointed at an existing out_base must not
-    skip its early batches on the old stream's high-water mark."""
+    skip its early batches on the old stream's high-water mark.
+
+    Stages: ``surfaces`` (name, entity_type) and ``edge_surfaces``
+    (``graph.EDGE_SURFACE_KEYS``); an older ``out_base`` with an
+    id-keyed ``edge_aggs`` stage must be rebuilt, not resumed."""
     import os
 
     from pdf2ontology_spark.operators import graph
     from pdf2ontology_spark.sources import tables
 
     surf_path = os.path.join(out_base, "surfaces")
-    edge_path = os.path.join(out_base, "edge_aggs")
+    edge_path = os.path.join(out_base, "edge_surfaces")
 
     def _applied(path, batch_id: int) -> bool:
         meta = tables.merge_meta(path)
@@ -227,9 +234,9 @@ def graph_batch_handler(spark: SparkSession, out_base: str, checkpoint_dir: str)
         if need_edge:
             _merge_stage(
                 edge_path,
-                graph.edge_aggs(trips),
-                ["subject_id", "predicate", "object_id"],
-                graph.combine_edge_aggs,
+                graph.edge_surfaces(trips),
+                graph.EDGE_SURFACE_KEYS,
+                graph.combine_edge_surfaces,
                 meta,
             )
 
@@ -250,15 +257,20 @@ def read_stream_nodes(spark: SparkSession, out_base: str):
 
 
 def read_stream_edges(spark: SparkSession, out_base: str):
-    """Derive the edge table from the incrementally-upserted edge-aggs
-    stage."""
+    """Derive the edge table from the incrementally-upserted
+    ``edge_surfaces`` stage through ``graph.edges_from_surfaces`` with
+    exact endpoint ids — the same derivation as batch ``graph.edges``.
+    An ``out_base`` written with the older id-keyed ``edge_aggs`` stage
+    has no ``edge_surfaces`` table and must be rebuilt."""
     import os
 
     from pdf2ontology_spark.operators import graph
     from pdf2ontology_spark.sources import tables
 
-    return graph.edges_from_aggs(
-        tables.read_merged(spark, os.path.join(out_base, "edge_aggs"))
+    return graph.edges_from_surfaces(
+        tables.read_merged(spark, os.path.join(out_base, "edge_surfaces")),
+        graph.entity_id_col(F.col("subj_name"), F.col("subj_type")),
+        graph.entity_id_col(F.col("obj_name"), F.col("obj_type")),
     )
 
 

@@ -64,9 +64,9 @@ How to read this (the 100 TB checklist):
   each node twice — tree + detail — so the raw counts below are 2x the
   physical node count). triples_all is the FUSED single-scan plan:
   FileScan -> Project -> Generate, ONE corpus read, zero extraction
-  shuffles (its only exchange is the loader's small-file repartition,
-  which disappears at bench scale where row-group splits cover the
-  cores). The LSH canonicalization is the most exchange-heavy plan by
+  shuffles (its only exchange is `tables.spread_small_scan`'s doc_id
+  spread, which disappears once the scan splits at least
+  `spread_width` ways). The LSH canonicalization is the most exchange-heavy plan by
   design (blocking join + union-find components) and is exactly the
   stage the north rule says to pay for.
 - **Broadcast** on every dimension-sided join (region/nation rollup,

@@ -9,42 +9,9 @@ def test_scalar_functions(spark):
     df = spark.range(1).select(
         fn.clamp01(F.lit(1.7)).alias("c1"),
         fn.clamp01(F.lit(-0.2)).alias("c2"),
-        fn.combined_confidence(F.lit(0.8), F.lit(0.6)).alias("cc"),
-        fn.word_count(F.lit("  a b   c ")).alias("wc"),
-        fn.page_table_id(F.lit(2), F.lit(0)).alias("pid"),
-        fn.truncate(F.lit("abcdef"), 4).alias("tr"),
-        fn.standardize_symbols(F.lit("x ✓ y ● z")).alias("sym"),
     )
     r = df.collect()[0]
     assert r.c1 == 1.0 and r.c2 == 0.0
-    assert abs(r.cc - 0.7) < 1e-12
-    assert r.wc == 3
-    assert r.pid == "page_2_table_0"
-    assert r.tr == "abcd"
-    assert r.sym == "x [CE_MARK] y [SELECTED] z"
-
-
-def test_bbox_functions(spark):
-    df = spark.createDataFrame(
-        [(0.1, 0.2, 0.3, 0.4)], "x double, y double, w double, h double"
-    ).select(
-        fn.bbox_right(F.col("x"), F.col("w")).alias("r"),
-        fn.bbox_area(F.col("w"), F.col("h")).alias("a"),
-        fn.bbox_valid(F.col("x"), F.col("y"), F.col("w"), F.col("h")).alias("v"),
-        fn.bbox_valid(F.lit(0.9), F.col("y"), F.lit(0.5), F.col("h")).alias("inv"),
-        fn.bbox_overlap(
-            F.col("x"), F.col("y"), F.col("w"), F.col("h"),
-            F.lit(0.2), F.lit(0.3), F.lit(0.3), F.lit(0.4),
-        ).alias("ov"),
-        fn.bbox_overlap(
-            F.col("x"), F.col("y"), F.col("w"), F.col("h"),
-            F.lit(0.9), F.lit(0.9), F.lit(0.1), F.lit(0.1),
-        ).alias("nov"),
-    )
-    r = df.collect()[0]
-    assert abs(r.r - 0.4) < 1e-12 and abs(r.a - 0.12) < 1e-12
-    assert r.v is True and r.inv is False
-    assert r.ov is True and r.nov is False
 
 
 def test_priority_sorted_actions(spark):

@@ -183,7 +183,10 @@ def test_prefilter_equivalence_and_volume(spark):
     assert got == {(r.id_a, r.id_b) for r in ref.collect()}
 
     raw = linking.banded_candidates(base).count()
-    array_join_rows = linking.prefiltered_candidates(base).count()
+    prefiltered = (
+        linking._band_join(base).filter(linking._size_ok()).select("id_a", "id_b").distinct()
+    )
+    array_join_rows = prefiltered.count()
     assert array_join_rows < raw, (array_join_rows, raw)
     # mixed-length band collisions must be dropped before the array join
     assert array_join_rows <= 0.8 * raw, f"prefilter only kept {array_join_rows}/{raw}"
@@ -200,7 +203,8 @@ def test_prefilter_never_drops_true_pairs(spark):
     ]
     reps = spark.createDataFrame(rows, "surface_id string, entity_type string, key string")
     base = linking._fuzzy_base(reps)
-    pre = {(r.id_a, r.id_b) for r in linking.prefiltered_candidates(base).collect()}
+    prefiltered = linking._band_join(base).filter(linking._size_ok()).select("id_a", "id_b")
+    pre = {(r.id_a, r.id_b) for r in prefiltered.collect()}
     raw = {(r.id_a, r.id_b) for r in linking.banded_candidates(base).collect()}
     # if the LSH bands collide for this pair, the prefilter must keep it
     # (Jaccard = 6/10 = threshold exactly)

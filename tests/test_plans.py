@@ -150,13 +150,19 @@ def test_canonicalize_surfaces_prune_node_columns(spark):
     graph.per_surface, whose mention_ex top-3 (collect_set) and
     entity_id (sha2 over the canonical key) it does not read: the
     optimized plan must prune both, leaving one mention explode and one
-    two-column count/max aggregation."""
+    two-column count/max aggregation. Its edges go through the shared
+    edge merge (graph.edges_from_surfaces) but keep only weight and
+    confidence, so no evidence or _methods array is collected."""
     from pdf2ontology_spark.operators import linking
     from pdf2ontology_spark.plans.pipeline import run_kg_pipeline
 
     trips = run_kg_pipeline(spark, SF)["triples"].localCheckpoint()
-    surf = linking.canonicalize(trips)["surfaces"]
+    out = linking.canonicalize(trips)
+    surf = out["surfaces"]
     surf.unpersist()
+    edges_plan = out["edges"].select("*")._jdf.queryExecution().optimizedPlan().toString()
+    for agg in ("collect_set", "collect_list"):
+        assert agg not in edges_plan, edges_plan
     # a fresh frame, so the dropped cache entry does not stand in for the plan
     plan = surf.select("*")._jdf.queryExecution().optimizedPlan().toString()
     assert "collect_set" not in plan, plan

@@ -1,7 +1,7 @@
 """Streaming graph materialization: the same corpus arriving as 3
-micro-batch drops, incrementally upserted into the surfaces/edge-aggs
-stage tables via merge_upsert, must derive EXACTLY the batch
-graph.nodes/graph.edges over the full corpus."""
+micro-batch drops, incrementally upserted into the surfaces /
+edge_surfaces stage tables via merge_upsert, must derive EXACTLY the
+batch graph.nodes/graph.edges over the full corpus."""
 
 from pyspark.sql import functions as F
 
@@ -62,40 +62,39 @@ def test_stream_graph_three_chunks_matches_batch(spark, tmp_path):
 def test_graph_batch_replay_is_idempotent(spark, tmp_path):
     """foreachBatch is at-least-once: delivering the SAME (batch_id,
     data) twice — the post-crash replay — must not double-add counts;
-    a NEW batch id with the same data must (it is genuinely new data)."""
+    a NEW batch id with the same data must (it is genuinely new data).
+    Both stages keep the guard: node mention counts and edge weights."""
     docs = tables.load_documents_spans(spark, SF).cache()
     part = docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(3)) == 0).cache()
     out_base = str(tmp_path / "graph")
     ckpt = str(tmp_path / "ck")
     handler = graph_batch_handler(spark, out_base, ckpt)
 
+    def counts():
+        nodes = {
+            r.entity_id: r.mention_count
+            for r in read_stream_nodes(spark, out_base).collect()
+        }
+        edges = {r.edge_id: r.weight for r in read_stream_edges(spark, out_base).collect()}
+        return nodes, edges
+
+    def scaled(k):
+        return tuple({key: k * v for key, v in c.items()} for c in first)
+
     handler(part, 0)
-    first = {
-        r.entity_id: r.mention_count
-        for r in read_stream_nodes(spark, out_base).collect()
-    }
+    first = counts()
+    assert first[0] and first[1]
 
     handler(part, 0)  # exact replay -> no-op
-    assert {
-        r.entity_id: r.mention_count
-        for r in read_stream_nodes(spark, out_base).collect()
-    } == first
+    assert counts() == first
 
     handler(part, 1)  # same rows, NEW batch -> counts must grow
-    doubled = {
-        r.entity_id: r.mention_count
-        for r in read_stream_nodes(spark, out_base).collect()
-    }
-    assert doubled == {k: 2 * v for k, v in first.items()}
+    assert counts() == scaled(2)
 
     # a fresh stream (different checkpoint, ids restart) must APPLY its
     # batch 0 even though the stage high-water mark is already 1
     other = graph_batch_handler(spark, out_base, str(tmp_path / "ck2"))
     other(part, 0)
-    tripled = {
-        r.entity_id: r.mention_count
-        for r in read_stream_nodes(spark, out_base).collect()
-    }
-    assert tripled == {k: 3 * v for k, v in first.items()}
+    assert counts() == scaled(3)
     part.unpersist()
     docs.unpersist()
