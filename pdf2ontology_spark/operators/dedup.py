@@ -17,12 +17,13 @@ Scale notes:
   hot band (e.g. boilerplate-heavy corpora);
 - n-gram Jaccard join guards against hot shingles with a document-
   frequency cap (``max_df``) — a stop-shingle appearing in half the
-  corpus would otherwise quadratically explode the join.
+  corpus would otherwise quadratically explode the join. Its document
+  frequency is a window over the join key: no cache, no broadcast.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pdf2ontology_spark.sources import tables
@@ -36,24 +37,16 @@ def _words(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"[^a-z0-9äöüß]+"), lambda w: w != "")
 
 
-def shingles(df: DataFrame, id_col: str, text_col: str, w: int = SHINGLE_W) -> DataFrame:
-    """(id, text) -> distinct (id, shingle) word-w-gram rows.
-
-    Distinctness comes from the per-row ``array_distinct`` BEFORE the
-    explode — (id, shingle) rows are unique by construction, with no
-    shuffle (a trailing ``.distinct()`` here used to re-shuffle the
-    full shingle stream for nothing). CONTRACT: ``df`` must carry ONE
-    row per id (a document table, not a span table) — with multiple
-    rows per id the count-based Jaccard consumers (sizes/intersections)
-    would silently double-count; pre-aggregate such input first.
-
-    The input is hash-spread when its scan under-uses the cores
-    (round-7 re-measurement: the documents table is one split, so the
-    tokenize + shingle + per-shingle hash stage ran single-core;
-    shuffling the narrow (id, text) rows first cut minhash signatures
-    0.73 -> 0.37s at sf0.1 — the round-6 'don't spread shingles' note
-    predated the one-md5 mix rewrite that made hashing cheap relative
-    to the explode)."""
+def shingle_array(
+    df: DataFrame, id_col: str, text_col: str, w: int = SHINGLE_W
+) -> tuple[DataFrame, Column]:
+    """(rows, grams): ``df``'s (id, words) rows and the expression of each
+    row's distinct, non-empty word-w-gram array over them. CONTRACT: one
+    row per id (a document table, not a span table). The input is
+    hash-spread when its one-split scan under-uses the cores (minhash
+    signatures 0.73 -> 0.37s at sf0.1). ``grams`` stays an expression:
+    exploding a projected column makes Spark infer a ``size > 0`` filter
+    below the projection, which builds every array twice."""
     df = tables.spread_small_scan(df, id_col)
     # Generate barrier (explode of a 1-element array): materialize the
     # tokenized words array ONCE per row. Without it, Project-collapse
@@ -61,7 +54,7 @@ def shingles(df: DataFrame, id_col: str, text_col: str, w: int = SHINGLE_W) -> D
     # shingle transform — O(n_words^2) interpreted re-evaluations per
     # document (measured: the entire minhash wall time at sf0.1 was
     # this amplification, 9.6s -> sub-second for the shingle stage).
-    base = df.select(
+    rows = df.select(
         F.col(id_col).alias("id"), _words(F.col(text_col)).alias("w0")
     ).select("id", F.explode(F.array("w0")).alias("words"))
     words = F.col("words")
@@ -69,9 +62,31 @@ def shingles(df: DataFrame, id_col: str, text_col: str, w: int = SHINGLE_W) -> D
         F.sequence(F.lit(0), F.greatest(F.size(words) - w, F.lit(0))),
         lambda i: F.array_join(F.slice(words, i + 1, w), " "),
     )
-    return base.select(
-        "id", F.explode(F.array_distinct(sh)).alias("shingle")
-    ).filter(F.col("shingle") != "")
+    # a text without words yields the one empty shingle "": removed
+    return rows, F.array_remove(F.array_distinct(sh), "")
+
+
+def shingles(df: DataFrame, id_col: str, text_col: str, w: int = SHINGLE_W) -> DataFrame:
+    """(id, text) -> distinct (id, shingle) rows, no shuffle: the explode
+    of ``shingle_array``."""
+    rows, grams = shingle_array(df, id_col, text_col, w)
+    return rows.select("id", F.explode(grams).alias("shingle"))
+
+
+def jaccard_at_least(a: str, b: str, t: float) -> Column:
+    """The near-duplicate verification rule of entity linking and
+    ``dedup_clusters``: exact Jaccard |A ∩ B| / |A ∪ B| >= t of two
+    distinct arrays, behind ``size_prefilter`` (``And`` short-circuits)."""
+    jaccard = F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
+    return size_prefilter(a, b, t) & (jaccard >= t)
+
+
+def size_prefilter(a: str, b: str, t: float) -> Column:
+    """Jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|), so ``min >= t*max`` is
+    NECESSARY (epsilon-slack: float rounding can only over-admit) — it
+    spares the array set operations on mixed-length pairs."""
+    na, nb = F.size(a), F.size(b)
+    return F.least(na, nb) >= F.lit(t) * F.greatest(na, nb) - F.lit(1e-9)
 
 
 def dedup_exact(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -200,12 +215,13 @@ def ngram_jaccard_pairs(
     back; J = inter / (|A| + |B| - inter). ``max_df`` drops shingles in
     more than that many docs (hot-key guard; dropped shingles only
     LOWER similarity, so this is a recall-safe approximation for
-    near-dup detection at scale — logged, not silent).
-    """
-    sh = shingles(df, id_col, text_col, w).cache()
-    df_counts = sh.groupBy("shingle").agg(F.count("*").alias("df"))
-    sh_f = sh.join(F.broadcast(df_counts.filter(F.col("df") <= max_df)), "shingle").select(
-        "id", "shingle"
+    near-dup detection at scale). The document frequency is a window
+    over ``shingle``, whose exchange already keys the self-join."""
+    sh_f = (
+        shingles(df, id_col, text_col, w)
+        .withColumn("df", F.count("*").over(Window.partitionBy("shingle")))
+        .filter(F.col("df") <= max_df)
+        .select("id", "shingle")
     )
     sizes = sh_f.groupBy("id").agg(F.count("*").cast("long").alias("n"))
     inter = (
@@ -355,24 +371,15 @@ def dedup_clusters(
     exact-Jaccard verification -> connected components -> per-cluster
     survivor (min id). Every input doc appears exactly once;
     is_survivor marks the row to KEEP (singletons keep themselves).
-    Scale shape: banded equi-join for candidates (never all-pairs),
-    shingle joins restricted to candidate ids, union-find CC only over
-    verified duplicate edges (tiny by construction)."""
+    Scale shape: banded equi-join for candidates (never all-pairs), each
+    side's ``shingle_array`` row joined on for ``jaccard_at_least``,
+    union-find CC only over verified duplicate edges (tiny)."""
     cand = minhash_pairs(df, id_col, text_col, k, bands, w)
-    sh = shingles(df, id_col, text_col, w)
-    sizes = sh.groupBy("id").agg(F.count("*").cast("long").alias("n"))
-    inter = (
-        cand.join(sh.select(F.col("id").alias("id_a"), "shingle"), "id_a")
-        .join(sh.select(F.col("id").alias("id_b"), "shingle"), ["id_b", "shingle"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").cast("long").alias("inter"))
-    )
+    rows, grams = shingle_array(df, id_col, text_col, w)
+    arrays = rows.select("id", grams)
     verified = (
-        inter.join(sizes.select(F.col("id").alias("id_a"), F.col("n").alias("na")), "id_a")
-        .join(sizes.select(F.col("id").alias("id_b"), F.col("n").alias("nb")), "id_b")
-        .filter(
-            F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")) >= threshold
-        )
+        cand.join(arrays.toDF("id_a", "ga"), "id_a").join(arrays.toDF("id_b", "gb"), "id_b")
+        .filter(jaccard_at_least("ga", "gb", threshold))
         .select("id_a", "id_b")
     )
     from pdf2ontology_spark.operators import components
@@ -387,12 +394,21 @@ def dedup_clusters(
     )
 
 
-def _vec_dim(emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    return emb.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    ).withColumn(
-        "norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
+def _cosine_pairs(pairs, emb: DataFrame, id_col: str, vec_col: str, threshold: float):
+    """Cosine >= threshold over the rows ``pairs(a, b)`` builds from the
+    (id_a, va, na) and (id_b, vb, nb) sides, folded by similarity's."""
+    from pdf2ontology_spark.operators import similarity as sim
+
+    v = emb.select(
+        F.col(id_col).alias("id"), sim._as_double(F.col(vec_col)).alias("v")
+    ).withColumn("norm", sim._norm(F.col("v")))
+    a, b = (v.toDF(f"id_{s}", f"v{s}", f"n{s}") for s in "ab")
+    cosine = F.round(sim._dot("va", "vb") / (F.col("na") * F.col("nb")), 4)
+    return (
+        pairs(a, b)
+        .withColumn("cosine", cosine)
+        .filter(F.col("cosine") >= threshold)
+        .select("id_a", "id_b", "cosine")
     )
 
 
@@ -604,18 +620,8 @@ def embedding_cosine_pairs(
                     .filter(F.col("cosine") >= threshold)
                     .select("id_a", "id_b", "cosine")
                 )
-    v = _vec_dim(emb, id_col, vec_col)
-    a = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 4))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    return _cosine_pairs(
+        lambda a, b: cand.join(a, "id_a").join(b, "id_b"), emb, id_col, vec_col, threshold
     )
 
 
@@ -628,16 +634,7 @@ def embedding_cosine_pairs_brute(
     """Exhaustive O(n^2) baseline for embedding near-dup pairs — the
     recall oracle for the bucketed path; never point it at a full
     corpus. Dot products stay JVM-side via zip_with + aggregate."""
-    v = _vec_dim(emb, id_col, vec_col)
-    a = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(
-        F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-    return (
-        a.crossJoin(b)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(dot / (F.col("na") * F.col("nb")), 4))
-        .filter(F.col("cosine") >= threshold)
-        .select("id_a", "id_b", "cosine")
+    return _cosine_pairs(
+        lambda a, b: a.crossJoin(b).filter(F.col("id_a") < F.col("id_b")),
+        emb, id_col, vec_col, threshold,
     )

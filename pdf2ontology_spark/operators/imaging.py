@@ -99,6 +99,8 @@ def gamma_correct(g):
 
 
 def denoise_median5(g):
+    """5x5 median with BORDER_REPLICATE (cv2.medianBlur(gray, 5)), exact on
+    ints: the denoise action and ``media.assess_quality_gray``'s noise."""
     p = np.pad(g, 2, mode="edge")
     h, w = g.shape
     stack = np.stack(
@@ -248,8 +250,7 @@ def median5_uint8(G):
     """Exact 5x5 median with replicate border over a (B, h, w) stack of
     values in [0, 255], as a uint8 stack — the 13th of the 25
     edge-replicated taps, equal to ``np.median`` of them (odd count, no
-    interpolation; ``denoise_median5`` and ``media._median5_replicate``
-    are the per-image references).
+    interpolation; ``denoise_median5`` is the per-image reference).
 
     Forgetful selection: hold one tap more than the median's rank (14
     of 25). The smallest of them lies below the median of all 25 and

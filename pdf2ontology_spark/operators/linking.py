@@ -24,8 +24,8 @@ Pipeline (all DataFrame ops):
    Jaccard check removes banding false positives. Signatures are
    computed once per distinct key, in the row (one ``array_min`` per
    slot over the key's gram array, no shuffle), and the band join
-   carries the gram arrays, so the size prefilter and the exact Jaccard
-   run inline on its output before one pair ``distinct``.
+   carries the gram arrays, so ``dedup.jaccard_at_least`` (size prefilter
+   + exact Jaccard, as in dedup_clusters) runs on its output inline.
 4. connected components (components.connected_components) over the
    bridge edges — one single-task union-find, exact.
 5. canonical_nodes/canonical_edges: groupBy component, representative =
@@ -41,7 +41,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pdf2ontology_spark.operators import components, graph
+from pdf2ontology_spark.operators import components, dedup, graph
 
 JACCARD_THRESHOLD = 0.6
 LSH_K = 12
@@ -113,16 +113,6 @@ def _band_join(fuzzy_base: DataFrame) -> DataFrame:
     )
 
 
-def _size_ok() -> Column:
-    """The SIZE prefilter. Jaccard(A,B) <= min(|A|,|B|)/max(|A|,|B|), so
-    ``min >= t*max`` (epsilon-slack so float rounding can only
-    over-admit, never wrongly drop) is a NECESSARY condition for the
-    threshold — a pure prefilter that saves the array set operations on
-    mixed-length band collisions."""
-    na, nb = F.size("ga"), F.size("gb")
-    return F.least(na, nb) >= F.lit(JACCARD_THRESHOLD) * F.greatest(na, nb) - F.lit(1e-9)
-
-
 def banded_candidates(fuzzy_base: DataFrame) -> DataFrame:
     """Raw LSH band-collision pairs (id_a < id_b) between reps — the
     blocking stage only, before any verification."""
@@ -140,11 +130,9 @@ def candidate_pairs(reps: DataFrame) -> DataFrame:
     ``reps`` needs (surface_id, entity_type, key) — one row per distinct
     key (the exact-group representative).
     """
-    jaccard = F.size(F.array_intersect("ga", "gb")) / F.size(F.array_union("ga", "gb"))
     return (
         _band_join(_fuzzy_base(reps))
-        .filter(_size_ok())
-        .filter(jaccard >= JACCARD_THRESHOLD)
+        .filter(dedup.jaccard_at_least("ga", "gb", JACCARD_THRESHOLD))
         .select("id_a", "id_b")
         .distinct()
     )

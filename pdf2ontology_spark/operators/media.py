@@ -217,19 +217,6 @@ def _laplacian_reflect101(g):
     return p[:-2, 1:-1] + p[2:, 1:-1] + p[1:-1, :-2] + p[1:-1, 2:] - 4 * g
 
 
-def _median5_replicate(g):
-    """5x5 median filter with BORDER_REPLICATE — the kernel and border
-    mode of cv2.medianBlur(gray, 5) (document_analysis_utils.py:523).
-    Odd window (25 samples) keeps the median an exact order statistic."""
-    import numpy as np
-
-    p = np.pad(g, 2, mode="edge")
-    stack = np.stack(
-        [p[dy : dy + g.shape[0], dx : dx + g.shape[1]] for dy in range(5) for dx in range(5)]
-    )
-    return np.median(stack, axis=0)
-
-
 def assess_quality_gray(gray) -> dict:
     """The reference QualityAssessor's metric math — REAL, not a stub —
     ported to pure numpy (this container has no cv2; the kernels and
@@ -269,7 +256,7 @@ def assess_quality_gray(gray) -> dict:
     l2 = int((lap * lap).sum())
     lap_var = l2 / n - (l1 / n) * (l1 / n)
     sharpness = min(lap_var / 1000.0, 1.0)
-    sad = int(abs(gray - _median5_replicate(gray)).sum())
+    sad = int(abs(gray - imaging.denoise_median5(gray)).sum())
     noise = min((sad / n) / 20.0, 1.0)
     overall = contrast * 0.3 + brightness * 0.2 + sharpness * 0.3 + (1.0 - noise) * 0.2
     issues = []

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+# Region kinds mirror the reference's RegionType (src/pydantic_models/enums.py:3-15)
 SPAN_KINDS = ["text", "title", "header", "footer", "caption", "table", "media"]
 DET_BUCKETS = ["row", "column", "header", "spanning_cell", "cell"]
 

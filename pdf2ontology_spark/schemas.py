@@ -38,9 +38,6 @@ DOCUMENTS = StructType(
     ]
 )
 
-# Region kinds mirror RegionType (/root/reference/src/pydantic_models/enums.py:3-15)
-SPAN_KINDS = ["text", "table", "media", "title", "header", "footer", "caption"]
-
 # Table cell grid — the reference's coordinate-JSON cell form
 # (/root/reference/src/table_processors/table_content_extractor_general.py:54-64)
 CELL = StructType(
@@ -84,6 +81,8 @@ NODES = StructType(
         StructField("mentions", ArrayType(StringType()), False),
         StructField("uri", StringType(), False),
         StructField("external_ids", MapType(StringType(), StringType()), False),
+        # Entity.properties (knowledge_models.py:37-40): surface statistics
+        StructField("properties", MapType(StringType(), StringType()), False),
     ]
 )
 
@@ -102,16 +101,7 @@ EDGES = StructType(
         StructField("negated", BooleanType(), False),
         StructField("modality", StringType(), True),
         StructField("evidence", ArrayType(StringType()), False),
-    ]
-)
-
-METRICS = StructType(
-    [
-        StructField("stage", StringType(), False),
-        StructField("run_id", StringType(), False),
-        StructField("partition_id", IntegerType(), False),
-        StructField("rows_out", LongType(), False),
-        StructField("wall_ms", LongType(), False),
-        StructField("output_checkpoint", StringType(), True),
+        # Relation.metadata (knowledge_models.py:59-62): provenance
+        StructField("metadata", MapType(StringType(), StringType()), False),
     ]
 )

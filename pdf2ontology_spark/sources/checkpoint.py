@@ -60,13 +60,7 @@ class CheckpointStore:
             self._record(name, path, wall_ms=0, reused=True)
             return self.spark.read.parquet(path)
         t0 = time.monotonic()
-        # 16MB row groups: a row group is the atomic scan-split unit, so
-        # big default blocks (128MB) written at low parallelism would cap
-        # every RESUMED stage's scan parallelism at the writer's file
-        # count — small groups keep checkpoints splittable at any width
-        compute().write.mode("overwrite").option(
-            "parquet.block.size", 16 * 1024 * 1024
-        ).parquet(path)
+        tables.write_table(compute(), path)  # 16MB groups: resumes split at any width
         wall_ms = int((time.monotonic() - t0) * 1000)
         self._record(name, path, wall_ms=wall_ms, reused=False)
         return self.spark.read.parquet(path)

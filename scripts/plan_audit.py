@@ -26,7 +26,9 @@ AUDIT = [
     "nodes",
     "edges",
     "canonical_nodes_lsh",
+    "minhash_signatures",
     "minhash_pairs",
+    "ngram_jaccard_pairs",
     "dedup_clusters",
     "simhash_pairs",
     "embedding_cosine_pairs",

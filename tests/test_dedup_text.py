@@ -47,6 +47,27 @@ def test_ngram_jaccard_exact_values(spark, docs):
     assert pairs[("d1", "d3")] == 0.75
 
 
+def test_ngram_jaccard_leaves_no_persisted_rdds(spark, docs):
+    """Repeated calls on two inputs cache nothing: the document
+    frequency is a window, not a cached shingle table."""
+    before = len(spark.sparkContext._jsc.getPersistentRDDs())
+    for _ in range(2):
+        for d in (docs, docs.filter("doc_id != 'd2'")):
+            dedup.ngram_jaccard_pairs(d, "doc_id", "text", threshold=0.5).collect()
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == before
+
+
+def test_dedup_clusters_keeps_pair_at_threshold(spark, docs):
+    """d1/d3 share 6 of 8 distinct shingles: J = 0.75 exactly, so the
+    pair clusters at threshold 0.75 and not above it."""
+    def cluster_of_d3(t):
+        out = dedup.dedup_clusters(docs.filter("doc_id != 'd2'"), "doc_id", "text", threshold=t)
+        return {r.id: r.cluster_id for r in out.collect()}["d3"]
+
+    assert cluster_of_d3(0.75) == "d1"
+    assert cluster_of_d3(0.76) == "d3"
+
+
 def test_simhash_close_for_near_dups(spark, docs):
     sh = {r.id: r.simhash for r in dedup.simhash(docs, "doc_id", "text").collect()}
     assert sh["d1"] == sh["d2"]

@@ -10,7 +10,7 @@ from itertools import combinations
 
 import pytest
 
-from pdf2ontology_spark.operators import components, graph, linking
+from pdf2ontology_spark.operators import components, dedup, graph, linking
 from pdf2ontology_spark.plans.pipeline import run_kg_pipeline
 from pdf2ontology_spark.sources import tables
 from pdf2ontology_spark import synth
@@ -183,9 +183,8 @@ def test_prefilter_equivalence_and_volume(spark):
     assert got == {(r.id_a, r.id_b) for r in ref.collect()}
 
     raw = linking.banded_candidates(base).count()
-    prefiltered = (
-        linking._band_join(base).filter(linking._size_ok()).select("id_a", "id_b").distinct()
-    )
+    size_ok = dedup.size_prefilter("ga", "gb", linking.JACCARD_THRESHOLD)
+    prefiltered = linking._band_join(base).filter(size_ok).select("id_a", "id_b").distinct()
     array_join_rows = prefiltered.count()
     assert array_join_rows < raw, (array_join_rows, raw)
     # mixed-length band collisions must be dropped before the array join
@@ -203,7 +202,8 @@ def test_prefilter_never_drops_true_pairs(spark):
     ]
     reps = spark.createDataFrame(rows, "surface_id string, entity_type string, key string")
     base = linking._fuzzy_base(reps)
-    prefiltered = linking._band_join(base).filter(linking._size_ok()).select("id_a", "id_b")
+    size_ok = dedup.size_prefilter("ga", "gb", linking.JACCARD_THRESHOLD)
+    prefiltered = linking._band_join(base).filter(size_ok).select("id_a", "id_b")
     pre = {(r.id_a, r.id_b) for r in prefiltered.collect()}
     raw = {(r.id_a, r.id_b) for r in linking.banded_candidates(base).collect()}
     # if the LSH bands collide for this pair, the prefilter must keep it

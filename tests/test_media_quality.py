@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 
 from pdf2ontology_spark import raster
-from pdf2ontology_spark.operators import media
+from pdf2ontology_spark.operators import imaging, media
 
 
 def _naive_laplacian(g):
@@ -46,7 +46,7 @@ def test_kernels_match_naive_loops():
     rng = np.random.RandomState(5)
     g = rng.randint(0, 256, size=(11, 13)).astype(np.int64)
     assert np.array_equal(media._laplacian_reflect101(g), _naive_laplacian(g))
-    assert np.array_equal(media._median5_replicate(g), _naive_median5(g))
+    assert np.array_equal(imaging.denoise_median5(g), _naive_median5(g))
 
 
 def test_assess_quality_flat_image():
@@ -74,7 +74,7 @@ def test_assess_quality_reference_formulas():
     assert m["contrast_score"] == pytest.approx(min(g.std() / 80.0, 1.0), abs=1e-4)
     lap = media._laplacian_reflect101(g)
     assert m["sharpness_score"] == pytest.approx(min(lap.var() / 1000.0, 1.0), abs=1e-4)
-    sad = np.abs(g - media._median5_replicate(g)).mean()
+    sad = np.abs(g - imaging.denoise_median5(g)).mean()
     assert m["noise_level"] == pytest.approx(min(sad / 20.0, 1.0), abs=1e-4)
     assert m["overall_score"] == pytest.approx(
         0.3 * m["contrast_score"]

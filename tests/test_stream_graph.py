@@ -5,6 +5,7 @@ batch graph.nodes/graph.edges over the full corpus."""
 
 from pyspark.sql import functions as F
 
+from pdf2ontology_spark import schemas
 from pdf2ontology_spark.operators import graph, triples
 from pdf2ontology_spark.sources import tables
 from pdf2ontology_spark.streaming.incremental import (
@@ -98,3 +99,23 @@ def test_graph_batch_replay_is_idempotent(spark, tmp_path):
     assert counts() == scaled(3)
     part.unpersist()
     docs.unpersist()
+
+
+def test_graph_outputs_match_declared_schemas(spark, tmp_path):
+    """Batch and streamed node/edge tables carry exactly the field names
+    and types of schemas.NODES / schemas.EDGES (nullability is plan
+    metadata, so types compare without it)."""
+    docs = tables.load_documents_spans(spark, SF).limit(20)
+    graph_batch_handler(spark, str(tmp_path / "graph"), str(tmp_path / "ck"))(docs, 0)
+    trips = triples.all_triples_fused(docs)
+
+    def fields(struct):
+        return [(f.name, f.dataType.simpleString()) for f in struct.fields]
+
+    for df, declared in [
+        (graph.nodes(trips), schemas.NODES),
+        (graph.edges(trips), schemas.EDGES),
+        (read_stream_nodes(spark, str(tmp_path / "graph")), schemas.NODES),
+        (read_stream_edges(spark, str(tmp_path / "graph")), schemas.EDGES),
+    ]:
+        assert fields(df.schema) == fields(declared)
