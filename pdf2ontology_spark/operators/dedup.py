@@ -18,7 +18,7 @@ Scale notes:
 - n-gram Jaccard join guards against hot shingles with a document-
   frequency cap (``max_df``) — a stop-shingle appearing in half the
   corpus would otherwise quadratically explode the join. Its document
-  frequency is a window over the join key: no cache, no broadcast.
+  frequency is a window over the join key: no cache, no shingle broadcast.
 """
 
 from __future__ import annotations
@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pdf2ontology_spark.operators import components, similarity
 from pdf2ontology_spark.sources import tables
 
 MINHASH_K = 12  # signature length
@@ -48,15 +49,17 @@ def shingle_array(
     exploding a projected column makes Spark infer a ``size > 0`` filter
     below the projection, which builds every array twice."""
     df = tables.spread_small_scan(df, id_col)
+    # a null text shingles as the empty text: no words, no shingles
+    text = F.coalesce(F.col(text_col), F.lit(""))
     # Generate barrier (explode of a 1-element array): materialize the
     # tokenized words array ONCE per row. Without it, Project-collapse
     # re-inlines the split+filter expression into EVERY slice() of the
     # shingle transform — O(n_words^2) interpreted re-evaluations per
     # document (measured: the entire minhash wall time at sf0.1 was
     # this amplification, 9.6s -> sub-second for the shingle stage).
-    rows = df.select(
-        F.col(id_col).alias("id"), _words(F.col(text_col)).alias("w0")
-    ).select("id", F.explode(F.array("w0")).alias("words"))
+    rows = df.select(F.col(id_col).alias("id"), _words(text).alias("w0")).select(
+        "id", F.explode(F.array("w0")).alias("words")
+    )
     words = F.col("words")
     sh = F.transform(
         F.sequence(F.lit(0), F.greatest(F.size(words) - w, F.lit(0))),
@@ -215,10 +218,12 @@ def ngram_jaccard_pairs(
     back; J = inter / (|A| + |B| - inter). ``max_df`` drops shingles in
     more than that many docs (hot-key guard; dropped shingles only
     LOWER similarity, so this is a recall-safe approximation for
-    near-dup detection at scale). The document frequency is a window
-    over ``shingle``, whose exchange already keys the self-join."""
+    near-dup detection at scale). The document frequency is a window over
+    ``shingle``; the merge self-join and the sizes reuse its one exchange
+    (``isNotNull`` is the filter the join would infer on its side only)."""
     sh_f = (
         shingles(df, id_col, text_col, w)
+        .filter(F.col("shingle").isNotNull())
         .withColumn("df", F.count("*").over(Window.partitionBy("shingle")))
         .filter(F.col("df") <= max_df)
         .select("id", "shingle")
@@ -226,7 +231,7 @@ def ngram_jaccard_pairs(
     sizes = sh_f.groupBy("id").agg(F.count("*").cast("long").alias("n"))
     inter = (
         sh_f.withColumnRenamed("id", "id_a")
-        .join(sh_f.withColumnRenamed("id", "id_b"), "shingle")
+        .join(sh_f.withColumnRenamed("id", "id_b").hint("merge"), "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("long").alias("inter"))
@@ -382,8 +387,6 @@ def dedup_clusters(
         .filter(jaccard_at_least("ga", "gb", threshold))
         .select("id_a", "id_b")
     )
-    from pdf2ontology_spark.operators import components
-
     comp = components.connected_components(verified, "id_a", "id_b")
     return (
         df.select(F.col(id_col).alias("id"))
@@ -397,13 +400,11 @@ def dedup_clusters(
 def _cosine_pairs(pairs, emb: DataFrame, id_col: str, vec_col: str, threshold: float):
     """Cosine >= threshold over the rows ``pairs(a, b)`` builds from the
     (id_a, va, na) and (id_b, vb, nb) sides, folded by similarity's."""
-    from pdf2ontology_spark.operators import similarity as sim
-
     v = emb.select(
-        F.col(id_col).alias("id"), sim._as_double(F.col(vec_col)).alias("v")
-    ).withColumn("norm", sim._norm(F.col("v")))
+        F.col(id_col).alias("id"), similarity._as_double(F.col(vec_col)).alias("v")
+    ).withColumn("norm", similarity._norm(F.col("v")))
     a, b = (v.toDF(f"id_{s}", f"v{s}", f"n{s}") for s in "ab")
-    cosine = F.round(sim._dot("va", "vb") / (F.col("na") * F.col("nb")), 4)
+    cosine = F.round(similarity._dot("va", "vb") / (F.col("na") * F.col("nb")), 4)
     return (
         pairs(a, b)
         .withColumn("cosine", cosine)
@@ -431,8 +432,6 @@ def embedding_candidates(
     parquet footer metadata, e.g. ``tables.table_rows``) to keep the
     plan build fully lazy; when absent one count job runs as fallback —
     cheap for plain parquet (row-group-metadata driven) but eager."""
-    from pdf2ontology_spark.operators import similarity
-
     if planes_per_band is None:
         planes_per_band = similarity.planes_for_corpus(emb.count() if n is None else n)
     # compute the signature table ONCE: both self-join sides read the

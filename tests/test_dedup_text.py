@@ -68,6 +68,25 @@ def test_dedup_clusters_keeps_pair_at_threshold(spark, docs):
     assert cluster_of_d3(0.76) == "d3"
 
 
+def test_null_text_has_no_shingles(spark, docs):
+    """A null text has no shingles: no signature row, no candidate or
+    Jaccard pair, and each null-text doc stays its own cluster (an
+    all-null signature would band every null text together)."""
+    nulls = spark.createDataFrame([("n1", None), ("n2", None)], "doc_id string, text string")
+    d = docs.unionByName(nulls)
+    assert {r.id for r in dedup.minhash_signature(d, "doc_id", "text").collect()} == {
+        "d1", "d2", "d3", "d4", "d5"
+    }
+    for pairs in (
+        dedup.minhash_pairs(d, "doc_id", "text"),
+        dedup.ngram_jaccard_pairs(d, "doc_id", "text", threshold=0.5),
+    ):
+        assert not {"n1", "n2"} & {i for r in pairs.collect() for i in (r.id_a, r.id_b)}
+    clusters = {r.id: r for r in dedup.dedup_clusters(d, "doc_id", "text").collect()}
+    for n in ("n1", "n2"):
+        assert clusters[n].cluster_id == n and clusters[n].is_survivor == 1
+
+
 def test_simhash_close_for_near_dups(spark, docs):
     sh = {r.id: r.simhash for r in dedup.simhash(docs, "doc_id", "text").collect()}
     assert sh["d1"] == sh["d2"]
