@@ -65,10 +65,9 @@ BENCH_QUERIES = [
 
 
 def _force(make_df) -> float:
-    """Time query CONSTRUCTION + execution: some operators run Spark
-    jobs while the query is built (LSH connected components counts its
-    edge list against its size limit), so timing only the final action
-    would under-report them."""
+    """Time query CONSTRUCTION + execution: building a plan does driver
+    work a user waits for too (the first parquet schema read, scan-width
+    probes), so timing only the final action would under-report it."""
     t0 = time.monotonic()
     make_df().write.format("noop").mode("overwrite").save()
     return time.monotonic() - t0

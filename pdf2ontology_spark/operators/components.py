@@ -1,18 +1,19 @@
 """Connected components over an edge list (SURVEY.md §7.2 step 3 — the
 canonicalization substrate).
 
-One path: the symmetric edge list is gathered into ONE task that runs
-a union-find over it (``_union_find``, a mapInPandas body), so the
+One lazy stage: the symmetric edge list is gathered into ONE task that
+runs a union-find over it (``_union_find``, a mapInPandas body), so the
 labels are exact — no round cap, no convergence test.
 
 The size limit is that one task: it streams the edges in Arrow batches
 but holds every node, so its memory grows with |V|, not |E| (measured
 in the ``connected_components`` comment). ``gather_threshold`` bounds
-it: a symmetric edge list longer than the threshold is refused with an
-error, never labelled partially. Every node has at least one symmetric
-edge, so the threshold is also a bound on |V|. Past one task, the
-Spark-native route is large-star/small-star (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14).
+it: past it the task stops inserting, counts on and raises, so the
+consuming action fails; nothing is ever labelled partially. Every node
+has at least one symmetric edge, so the threshold is also a bound on
+|V|. Past one task, the Spark-native route is large-star/small-star
+(Kiveris et al., "Connected Components in MapReduce and Beyond",
+SoCC'14).
 """
 
 from __future__ import annotations
@@ -24,20 +25,19 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-# label results at or under this many edges carry a broadcast hint
-BROADCAST_THRESHOLD = 100_000
 
-
-def _union_find(node_col: str, root_col: str):
+def _union_find(node_col: str, root_col: str, gather_threshold: int):
     """mapInPandas body: union-find over every (a, b) edge the iterator
     yields (Arrow-batched; the iterator spans the whole partition, so
     state accumulates across batches), emitting each node once with its
     root — the component's MIN id under python's ``<``, which matches
     Spark's ordering for the id types used here (strings compare as
-    code points == UTF-8 bytes; ints/longs are ints)."""
+    code points == UTF-8 bytes; ints/longs are ints). Batches past
+    ``gather_threshold`` edges are only counted, then it raises."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         parent: dict = {}
+        n_edges = 0
 
         def find(x):
             r = x
@@ -48,6 +48,9 @@ def _union_find(node_col: str, root_col: str):
             return r
 
         for pdf in batches:
+            n_edges += len(pdf)
+            if n_edges > gather_threshold:
+                continue
             for a, b in zip(pdf["a"], pdf["b"]):
                 if a not in parent:
                     parent[a] = a
@@ -58,20 +61,17 @@ def _union_find(node_col: str, root_col: str):
                     # root at the smaller id: keeps the forest deterministic
                     lo, hi = (ra, rb) if ra < rb else (rb, ra)
                     parent[hi] = lo
+        if n_edges > gather_threshold:
+            raise ValueError(
+                f"connected_components: {n_edges} symmetric edges exceed "
+                f"gather_threshold={gather_threshold}; the one union-find task "
+                "holds every node, so raise the threshold only if its Python "
+                "worker has the memory"
+            )
         nodes = list(parent)
         yield pd.DataFrame({node_col: nodes, root_col: [find(n) for n in nodes]})
 
     return run
-
-
-def _gather_components(sym: DataFrame) -> DataFrame:
-    """Exact single-task union-find over a symmetric edge list: (node,
-    component = min id). One executor task, ONE job when consumed."""
-    t = sym.schema["a"].dataType
-    schema = T.StructType(
-        [T.StructField("node", t), T.StructField("component", t)]
-    )
-    return sym.coalesce(1).mapInPandas(_union_find("node", "component"), schema)
 
 
 def _symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -108,29 +108,14 @@ def connected_components(
     minimum node id in the connected component. Nodes appear iff they
     occur in the edge list. Deterministic and exact.
 
-    The symmetric edge count is checked once (a cheap job on the
-    just-materialized list). Above ``gather_threshold`` edges the call
-    raises ``ValueError``; otherwise the list goes into the single-task
-    union-find (``_gather_components``). Entity-linking bridge graphs
-    are tiny by construction (LSH-verified near-dup pairs between
-    exact-group reps). Results under ``BROADCAST_THRESHOLD`` edges
-    additionally carry a broadcast hint so the caller's label join
-    skips its shuffle."""
-    # materialize the symmetric edge list ONCE: the size probe and the
-    # union-find would otherwise each re-evaluate the whole upstream
-    # pair-generation plan (LSH banding included). With the single-pass
-    # ``_symmetrize`` the lazy checkpoint + count runs that upstream
-    # plan exactly once.
-    sym = _symmetrize(edges, src, dst).localCheckpoint(eager=False)
-    n_edges = sym.count()
-    if n_edges > gather_threshold:
-        raise ValueError(
-            f"connected_components: {n_edges} symmetric edges exceed "
-            f"gather_threshold={gather_threshold}; the one union-find task "
-            "holds every node, so raise the threshold only if its Python "
-            "worker has the memory"
-        )
-    labels = _gather_components(sym)
-    if n_edges <= BROADCAST_THRESHOLD:
-        labels = labels.hint("broadcast")
-    return labels
+    Lazy: nothing runs until the labels are consumed. Above
+    ``gather_threshold`` symmetric edges the union-find task raises
+    ``ValueError`` and the consuming action fails. The labels carry no
+    join hint: AQE's runtime join selection broadcasts them from their
+    measured size (entity-linking bridge graphs are tiny)."""
+    sym = _symmetrize(edges, src, dst)
+    t = sym.schema["a"].dataType
+    schema = T.StructType([T.StructField("node", t), T.StructField("component", t)])
+    return sym.coalesce(1).mapInPandas(
+        _union_find("node", "component", gather_threshold), schema
+    )

@@ -378,7 +378,7 @@ def dedup_clusters(
     is_survivor marks the row to KEEP (singletons keep themselves).
     Scale shape: banded equi-join for candidates (never all-pairs), each
     side's ``shingle_array`` row joined on for ``jaccard_at_least``,
-    union-find CC only over verified duplicate edges (tiny)."""
+    union-find CC only over verified duplicate edges (tiny), lazily."""
     cand = minhash_pairs(df, id_col, text_col, k, bands, w)
     rows, grams = shingle_array(df, id_col, text_col, w)
     arrays = rows.select("id", grams)

@@ -27,7 +27,8 @@ Pipeline (all DataFrame ops):
    carries the gram arrays, so ``dedup.jaccard_at_least`` (size prefilter
    + exact Jaccard, as in dedup_clusters) runs on its output inline.
 4. connected components (components.connected_components) over the
-   bridge edges — one single-task union-find, exact.
+   bridge edges — one lazy single-task union-find, exact; AQE picks the
+   label join at run time.
 5. canonical_nodes/canonical_edges: groupBy component, representative =
    most frequent surface form (graph.top_surface); graph.edge_surfaces'
    surface-keyed edge groups take their endpoints' component ids via a

@@ -220,25 +220,29 @@ def graph_batch_handler(spark: SparkSession, out_base: str, checkpoint_dir: str)
         if not (need_surf or need_edge):
             return
         meta = {"checkpoint": checkpoint_dir, "batch_id": batch_id}
-        # the extraction output feeds both stage updates: checkpoint it
-        # so the fused plan runs once per micro-batch, not per stage
-        trips = triples.all_triples_fused(batch_df).localCheckpoint(eager=True)
-        if need_surf:
-            _merge_stage(
-                surf_path,
-                graph.per_surface(trips),
-                ["name", "entity_type"],
-                graph.combine_surfaces,
-                meta,
-            )
-        if need_edge:
-            _merge_stage(
-                edge_path,
-                graph.edge_surfaces(trips),
-                graph.EDGE_SURFACE_KEYS,
-                graph.combine_edge_surfaces,
-                meta,
-            )
+        # the extraction output feeds both stage updates: persist it so
+        # the fused plan runs once per micro-batch, not per stage, and
+        # release it when the batch is done
+        trips = triples.all_triples_fused(batch_df).persist()
+        try:
+            if need_surf:
+                _merge_stage(
+                    surf_path,
+                    graph.per_surface(trips),
+                    ["name", "entity_type"],
+                    graph.combine_surfaces,
+                    meta,
+                )
+            if need_edge:
+                _merge_stage(
+                    edge_path,
+                    graph.edge_surfaces(trips),
+                    graph.EDGE_SURFACE_KEYS,
+                    graph.combine_edge_surfaces,
+                    meta,
+                )
+        finally:
+            trips.unpersist()
 
     return process_batch
 

@@ -34,9 +34,9 @@ def test_connected_components_basic(spark):
 
 
 def test_connected_components_refuses_above_gather_threshold(spark):
-    """Both sides of the gather switch: at exactly the symmetric edge
+    """Both sides of the gather limit: at exactly the symmetric edge
     count (14 here) the single task labels chains, a cycle and a
-    singleton edge; one edge below it the call raises instead of
+    singleton edge; one edge below it the action fails instead of
     returning partial labels."""
     edges = spark.createDataFrame(
         [("d", "c"), ("c", "b"), ("b", "a"), ("m", "n"), ("n", "o"), ("o", "m"), ("z", "q")],
@@ -50,8 +50,8 @@ def test_connected_components_refuses_above_gather_threshold(spark):
         "a": "a", "b": "a", "c": "a", "d": "a",
         "m": "m", "n": "m", "o": "m", "q": "q", "z": "q",
     }
-    with pytest.raises(ValueError, match="14 symmetric edges exceed gather_threshold=13"):
-        components.connected_components(edges, gather_threshold=13)
+    with pytest.raises(Exception, match="14 symmetric edges exceed gather_threshold=13"):
+        components.connected_components(edges, gather_threshold=13).collect()
 
 
 def test_connected_components_reads_edges_once(spark):
@@ -73,17 +73,17 @@ def test_connected_components_reads_edges_once(spark):
     got = {r.node: r.component for r in components.connected_components(edges).collect()}
     assert got == want
     assert read.value == len(rows), read.value
-    with pytest.raises(ValueError):
-        components.connected_components(edges, gather_threshold=0)
+    with pytest.raises(Exception, match="10 symmetric edges exceed gather_threshold=0"):
+        components.connected_components(edges, gather_threshold=0).collect()
     assert read.value == 2 * len(rows), read.value
 
 
 def test_connected_components_exact_on_long_chains(spark):
     """Shuffled string-id chains far longer than a few propagation
     rounds come back as ONE component labelled with the minimum id, and
-    a threshold under their edge count raises rather than returning
-    partial labels. Coalescing is off so the edges reach the one
-    union-find task from 8 partitions."""
+    a threshold under their edge count fails the action rather than
+    returning partial labels. Coalescing is off so the edges reach the
+    one union-find task from 8 partitions."""
     key = "spark.sql.adaptive.coalescePartitions.enabled"
     old = spark.conf.get(key)
     spark.conf.set(key, "false")
@@ -101,8 +101,10 @@ def test_connected_components_exact_on_long_chains(spark):
             }
             assert len(got) == n, n
             assert set(got.values()) == {min(ids)}, (n, len(set(got.values())))
-            with pytest.raises(ValueError):
-                components.connected_components(edges, gather_threshold=0)
+            with pytest.raises(
+                Exception, match=f"{2 * (n - 1)} symmetric edges exceed gather_threshold=0"
+            ):
+                components.connected_components(edges, gather_threshold=0).collect()
     finally:
         spark.conf.set(key, old)
 

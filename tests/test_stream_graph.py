@@ -101,6 +101,32 @@ def test_graph_batch_replay_is_idempotent(spark, tmp_path):
     docs.unpersist()
 
 
+def test_graph_batch_handler_releases_its_extraction(spark, tmp_path):
+    """Each applied micro-batch runs the extraction once for both stage
+    merges (a counting pass in front of the batch sees each row once per
+    call) and releases it afterwards: after three handler calls no RDD
+    persisted during the calls is left."""
+    part = tables.load_documents_spans(spark, SF).filter(
+        F.pmod(F.xxhash64("doc_id"), F.lit(3)) == 0
+    )
+    n_rows = part.count()
+    read = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for batch in batches:
+            read.add(batch.num_rows)
+            yield batch
+
+    counted = part.mapInArrow(count_rows, part.schema)
+    handler = graph_batch_handler(spark, str(tmp_path / "graph"), str(tmp_path / "ck"))
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(persisted().keys())
+    for batch_id in range(3):
+        handler(counted, batch_id)
+        assert read.value == (batch_id + 1) * n_rows, (batch_id, read.value)
+    assert set(persisted().keys()) - before == set()
+
+
 def test_graph_outputs_match_declared_schemas(spark):
     """graph.nodes / graph.edges carry exactly the field names and types
     of schemas.NODES / schemas.EDGES (nullability is plan metadata, so
