@@ -75,8 +75,10 @@ def _all_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # downstream graph queries consume the extraction as a materialized
-# stage, not a plan to re-expand: edges alone re-ran the fused
-# extraction 3x (surface dim x2 + fact stream). One lazy localCheckpoint
+# stage, not a plan to re-expand: graph_integrity, graph_stats and the
+# canonical queries each build several outputs (nodes, edges, the
+# canonical tables) over one triples input, and each output would re-run
+# the fused extraction. One lazy localCheckpoint
 # per (session, sf_dir) runs extraction once and every graph query reads
 # the stage (the durable production analog is the CheckpointStore
 # parquet stage in plans/pipeline.py; localCheckpoint is the in-session

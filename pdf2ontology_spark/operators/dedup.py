@@ -399,15 +399,12 @@ def dedup_clusters(
 
 def _cosine_pairs(pairs, emb: DataFrame, id_col: str, vec_col: str, threshold: float):
     """Cosine >= threshold over the rows ``pairs(a, b)`` builds from the
-    (id_a, va, na) and (id_b, vb, nb) sides, folded by similarity's."""
-    v = emb.select(
-        F.col(id_col).alias("id"), similarity._as_double(F.col(vec_col)).alias("v")
-    ).withColumn("norm", similarity._norm(F.col("v")))
+    (id_a, va, na) and (id_b, vb, nb) sides of ``similarity.vectors``."""
+    v = similarity.vectors(emb, id_col, vec_col)
     a, b = (v.toDF(f"id_{s}", f"v{s}", f"n{s}") for s in "ab")
-    cosine = F.round(similarity._dot("va", "vb") / (F.col("na") * F.col("nb")), 4)
     return (
         pairs(a, b)
-        .withColumn("cosine", cosine)
+        .withColumn("cosine", similarity.cosine("va", "na", "vb", "nb"))
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
@@ -435,7 +432,7 @@ def embedding_candidates(
     if planes_per_band is None:
         planes_per_band = similarity.planes_for_corpus(emb.count() if n is None else n)
     # compute the signature table ONCE: both self-join sides read the
-    # persisted keys, where referencing banded_signatures twice
+    # persisted keys, where computing the keys once per side
     # duplicated the whole scan + Arrow-UDF subtree in the physical
     # plan (round-7 profile: the duplicated signature stage was most of
     # the candidate cost). persist() (not localCheckpoint) keeps the
@@ -483,7 +480,7 @@ def _bare_parquet_files(df: DataFrame) -> list[str] | None:
 def _load_vector_matrix(paths: list[str], id_col: str, vec_col: str, dim: int):
     """(id -> row index dict, (n, dim) float64 matrix, norms) from the
     parquet files, or None if the vectors are ragged. Norms use the
-    same strict left-to-right fold as similarity._norm."""
+    same strict left-to-right fold as similarity.vectors."""
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as pq

@@ -256,7 +256,7 @@ def _row_maps(dets: list) -> list | None:
     """J5 + W4 for one table: non-empty cells scattered over their
     rowspan x colspan extent, header row = first row with any non-empty
     cell, every later row an ordered {header -> value} map. Returns
-    (row, row_map) pairs, map keys in column order."""
+    one {row, row_map} dict per data row, map keys in column order."""
     fin = _spanning_cells(dets)
     if fin is None:
         return None
@@ -346,76 +346,34 @@ def _row_maps(dets: list) -> list | None:
             if k in m:
                 raise ValueError(f"duplicate row-map key {k!r}")
             m[k] = v
-        rows_out.append((int(r), m))
+        rows_out.append({"row": int(r), "row_map": m})
     return rows_out
 
 
-def _kernel(mode: str):
+def _per_table(table_rows, schema: str):
+    """The one Arrow kernel runner: a DataFrame -> DataFrame transform
+    over ``grid_tables`` that calls ``table_rows(dets)`` once per table
+    (None or [] emits nothing), prefixes each returned row dict with the
+    table's (doc_id, table_id) and cuts it to ``schema``'s columns."""
+    cols = [f.split(" ", 1)[0] for f in schema.split(", ")]
+
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            recs: dict = {k: [] for k in _COLS[mode]}
-            for doc_id, table_id, dets in zip(
-                pdf["doc_id"], pdf["table_id"], pdf["dets"]
-            ):
-                dets = list(dets)
-                if mode == "assign":
-                    cells = _assigned_cells(dets)
-                    if cells is None:
-                        continue
-                    for c in cells:
-                        recs["doc_id"].append(doc_id)
-                        recs["table_id"].append(table_id)
-                        recs["cell_id"].append(c["cell_id"])
-                        recs["row"].append(c["row"])
-                        recs["col"].append(c["col"])
-                        recs["text"].append(c["text"])
-                elif mode == "spanning":
-                    out = _spanning_cells(dets)
-                    if out is None:
-                        continue
-                    for c in out:
-                        recs["doc_id"].append(doc_id)
-                        recs["table_id"].append(table_id)
-                        recs["row"].append(c["row"])
-                        recs["col"].append(c["col"])
-                        recs["text"].append(c["text"])
-                        recs["cell_type"].append(c["cell_type"])
-                        recs["rowspan"].append(c["rowspan"])
-                        recs["colspan"].append(c["colspan"])
-                else:
-                    maps = _row_maps(dets)
-                    if not maps:
-                        continue
-                    for r, m in maps:
-                        recs["doc_id"].append(doc_id)
-                        recs["table_id"].append(table_id)
-                        recs["row"].append(r)
-                        recs["row_map"].append(m)
-            yield pd.DataFrame(recs)
+            recs = [
+                {"doc_id": doc_id, "table_id": table_id, **r}
+                for doc_id, table_id, dets in zip(pdf["doc_id"], pdf["table_id"], pdf["dets"])
+                for r in table_rows(list(dets)) or ()
+            ]
+            yield pd.DataFrame(recs, columns=cols)
 
-    return run
-
-
-_COLS = {
-    "assign": ["doc_id", "table_id", "cell_id", "row", "col", "text"],
-    "spanning": [
-        "doc_id", "table_id", "row", "col", "text", "cell_type", "rowspan", "colspan"
-    ],
-    "rowmaps": ["doc_id", "table_id", "row", "row_map"],
-}
-
-_SCHEMAS = {
-    "assign": ASSIGN_SCHEMA,
-    "spanning": SPANNING_SCHEMA,
-    "rowmaps": ROWMAP_SCHEMA,
-}
+    return lambda tables: tables.mapInPandas(run, schema)
 
 
 def assign_cells_fused(detections: DataFrame) -> DataFrame:
     """q:grid_assign_cells body: (doc_id, table_id, cell_id, row, col,
     text) per assigned cell. Reference: ``oracles_data.grid_assign_sql``
     and the J3 fixture in tests/test_grid.py."""
-    return grid_tables(detections).mapInPandas(_kernel("assign"), _SCHEMAS["assign"])
+    return grid_tables(detections).transform(_per_table(_assigned_cells, ASSIGN_SCHEMA))
 
 
 def spanning_cells_fused(detections: DataFrame) -> DataFrame:
@@ -423,11 +381,11 @@ def spanning_cells_fused(detections: DataFrame) -> DataFrame:
     with its cell_type/rowspan/colspan. Reference:
     ``oracles_data.grid_spanning_sql`` and the J2 fixture in
     tests/test_grid.py."""
-    return grid_tables(detections).mapInPandas(_kernel("spanning"), _SCHEMAS["spanning"])
+    return grid_tables(detections).transform(_per_table(_spanning_cells, SPANNING_SCHEMA))
 
 
 def row_maps_fused(detections: DataFrame) -> DataFrame:
     """q:grid_row_maps body: (row, row_map) per data row. Reference:
     ``oracles_data.grid_row_maps_sql`` and the J5+W4 fixture in
     tests/test_grid.py."""
-    return grid_tables(detections).mapInPandas(_kernel("rowmaps"), _SCHEMAS["rowmaps"])
+    return grid_tables(detections).transform(_per_table(_row_maps, ROWMAP_SCHEMA))

@@ -139,12 +139,12 @@ def ahash_batch(G) -> list[str]:
 
 def media_features(spans: DataFrame, blobs: DataFrame) -> DataFrame:
     """media spans -> decoded feature rows via mapInPandas: width/height
-    and format from the actual PNG header (``png_codec.read_png_header``
-    + magic-byte sniff), perceptual fingerprint from the decoded pixels
-    (``ahash_batch``). Per-item error tolerance (F11): a blob that fails
-    to parse, or a ref with no blob in the store, yields decode_ok=false
-    with zeroed metadata instead of failing the stage — the quarantine
-    pattern for bad bytes.
+    from the decoded pixel array's shape, format "png" for a blob that
+    decodes (else from the PNG signature sniff), perceptual fingerprint
+    from the decoded pixels (``ahash_batch``). Per-item error tolerance
+    (F11): a blob that fails to parse, or a ref with no blob in the
+    store, yields decode_ok=false with zeroed metadata instead of
+    failing the stage — the quarantine pattern for bad bytes.
 
     A corrupt blob re-decodes its whole Arrow batch one item at a time.
     """

@@ -1,14 +1,22 @@
 """Approximate-nearest-neighbor search over an embedding column.
 
 - ``brute_topk``: exact cosine top-k, the correctness baseline — a
-  broadcast join of the (small) query set against the corpus, dot
-  products via zip_with/aggregate (JVM-side, no Python).
-- ``lsh_topk``: the scale path — signed-random-projection (hyperplane)
-  LSH: each vector gets a ``planes``-bit signature; candidates are
-  corpus vectors sharing a signature bucket with the query (optionally
-  within Hamming distance via multi-probe over 1-bit flips); exact
-  cosine re-ranks candidates. Hyperplane components are md5-derived, so
-  the bucketing is deterministic and reproducible in SQL.
+  broadcast join of the (small) query set against the corpus.
+- ``ivf_topk``: coarse-quantizer ANN — inverted lists of the nearest
+  ``ivf_centroids`` centroid (``ivf_assign``), ``nprobe`` lists probed.
+- ``lsh_topk``: banded signed-random-projection (hyperplane) LSH — each
+  vector gets one ``planes_per_band``-bit key per band
+  (``banded_keys``); candidates are corpus vectors sharing a band
+  bucket with the query within Hamming distance 1 (multi-probe over
+  1-bit flips, ``probe_signatures``). Hyperplane components are
+  md5-derived, so the bucketing is deterministic and reproducible in
+  SQL.
+
+Every path reranks with the same three pieces, each written once here:
+``vectors`` (id, doubles, left-fold L2 norm), ``cosine`` (dot products
+via zip_with/aggregate, JVM-side, rounded to 4 places) and ``_top_k``
+(the per-query rank window). ``dedup``'s embedding near-dup pairs use
+``vectors``, ``cosine`` and ``banded_keys`` too.
 
 At 10^12 scale: buckets partition the corpus so each query touches
 ~n/2^planes vectors; signatures are precomputable and storable as a
@@ -47,16 +55,43 @@ def planes_for_corpus(
     return min(cap, max(floor, math.ceil(math.log2(n / target_bucket))))
 
 
-def _as_double(vec: Column) -> Column:
-    return F.transform(vec, lambda x: x.cast("double"))
+def vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, v, norm): each vector as doubles with its L2 norm — the one
+    vector side of every exact-cosine rerank."""
+    return _normed(
+        df.select(
+            F.col(id_col).alias("id"),
+            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
+        )
+    )
 
 
-def _norm(v: Column) -> Column:
-    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
+def _normed(v: DataFrame) -> DataFrame:
+    """(id, v) doubles plus ``norm``. The squares fold strictly left to
+    right (``dedup._load_vector_matrix`` repeats that order in numpy,
+    bit for bit)."""
+    return v.withColumn(
+        "norm", F.sqrt(F.aggregate("v", F.lit(0.0), lambda acc, x: acc + x * x))
+    )
 
 
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+def cosine(a: str, na: str, b: str, nb: str) -> Column:
+    """Exact cosine of vector columns ``a``/``b`` with norms ``na``/``nb``,
+    rounded to 4 places — the one cosine rule of the ANN and near-dup
+    operators."""
+    dot = F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+    return F.round(dot / (F.col(na) * F.col(nb)), 4)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (query_id, corpus_id, cosine) rows per query:
+    cosine desc, ties by corpus_id asc, ranked from 1."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "corpus_id", "cosine", "rank")
+    )
 
 
 def _plane_value(p: int, i: int) -> float:
@@ -152,7 +187,7 @@ def probe_signatures(bb: DataFrame, planes_per_band: int) -> DataFrame:
     return bb.select("id", "band", F.explode(flips).alias("band_key"))
 
 
-def banded_signatures(
+def banded_keys(
     emb: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -161,12 +196,13 @@ def banded_signatures(
     dim: int | None = None,
     spread: bool = True,
 ) -> DataFrame:
-    """(id, band, band_key): ``bands`` independent hyperplane-LSH tables
-    of ``planes_per_band`` bits each. Two vectors at angle theta collide
-    in >= 1 band with probability 1 - (1 - p^b)^L, p = 1 - theta/pi —
-    the multi-table construction that keeps recall high where a single
-    wide signature would shatter near-dups across buckets. Signatures
-    are deterministic (md5 hyperplanes), precomputable and storable as a
+    """(id, keys array<int>): ``bands`` independent hyperplane-LSH tables
+    of ``planes_per_band`` bits each, one key per band (posexplode gives
+    (id, band, band_key) rows). Two vectors at angle theta collide in
+    >= 1 band with probability 1 - (1 - p^b)^L, p = 1 - theta/pi — the
+    multi-table construction that keeps recall high where a single wide
+    signature would shatter near-dups across buckets. Signatures are
+    deterministic (md5 hyperplanes), precomputable and storable as a
     bucketed table at corpus scale.
 
     ``dim`` is the vector width; when omitted it is sampled from one row
@@ -177,24 +213,6 @@ def banded_signatures(
     biased signatures. ``spread=False`` skips the small-scan
     repartition for inputs known to be tiny (e.g. a query batch that
     broadcasts later anyway)."""
-    return banded_keys(emb, id_col, vec_col, planes_per_band, bands, dim, spread).select(
-        "id", F.posexplode("keys").alias("band", "band_key")
-    )
-
-
-def banded_keys(
-    emb: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    planes_per_band: int = 4,
-    bands: int = 8,
-    dim: int | None = None,
-    spread: bool = True,
-) -> DataFrame:
-    """(id, keys array<int>) — the pre-explode form of
-    ``banded_signatures``, exposed so a caller that derives BOTH sides
-    of a self-join from the signatures (``dedup.embedding_candidates``)
-    can compute them once and cut the duplicated scan + UDF subtree."""
     if dim is None:
         dim = _vec_dim(emb, vec_col)
     base = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
@@ -214,22 +232,12 @@ def brute_topk(
 ) -> DataFrame:
     """Exact top-k by cosine for each query vector (query rows have the
     same (id_col, vec_col) shape). Broadcast the query side."""
-    corpus = emb.select(
-        F.col(id_col).alias("corpus_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
-    scored = (
-        corpus.join(F.broadcast(q), F.col("corpus_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 4))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    corpus = vectors(emb, id_col, vec_col).toDF("corpus_id", "cv", "cn")
+    q = vectors(queries, id_col, vec_col).toDF("query_id", "qv", "qn")
+    scored = corpus.join(
+        F.broadcast(q), F.col("corpus_id") != F.col("query_id")
+    ).withColumn("cosine", cosine("qv", "qn", "cv", "cn"))
+    return _top_k(scored, k)
 
 
 def centroids_for_corpus(n: int, floor: int = 16, cap: int = 1 << 16) -> int:
@@ -280,12 +288,11 @@ def ivf_centroids(
     vectors land together, not the operator's shape (assignment join,
     inverted lists, nprobe search) — and iterative float averaging is
     not bit-reproducible across engines, which would break the oracle."""
-    return (
-        emb.select(F.col(id_col).alias("centroid_id"), _as_double(F.col(vec_col)).alias("cv"))
-        .orderBy("centroid_id")
-        .limit(n_centroids)
-        .withColumn("cn", _norm(F.col("cv")))
-    )
+    # the cast runs below the top-k and the norm above it, on the kept
+    # rows only: one TakeOrderedAndProject, not a global sort (a Limit
+    # over two stacked Projects does not plan as a top-k)
+    first = vectors(emb, id_col, vec_col).drop("norm").orderBy("id").limit(n_centroids)
+    return _normed(first).toDF("centroid_id", "cv", "cn")
 
 
 def ivf_assign(
@@ -299,12 +306,9 @@ def ivf_assign(
     its ``nprobe`` nearest centroids by cosine (rank 1 = the inverted
     list it belongs to). Ties break like the ANN rankings: round-4
     cosine desc, centroid id asc. The centroid table broadcasts."""
-    v = df.select(
-        F.col(id_col).alias("id"), _as_double(F.col(vec_col)).alias("v")
-    ).withColumn("norm", _norm(F.col("v")))
-    scored = v.join(F.broadcast(centroids), how="cross").withColumn(
-        "ccos", F.round(_dot("v", "cv") / (F.col("norm") * F.col("cn")), 4)
-    )
+    scored = vectors(df, id_col, vec_col).join(
+        F.broadcast(centroids), how="cross"
+    ).withColumn("ccos", cosine("v", "norm", "cv", "cn"))
     w = Window.partitionBy("id").orderBy(F.desc("ccos"), F.asc("centroid_id"))
     return (
         scored.withColumn("probe_rank", F.row_number().over(w))
@@ -346,31 +350,17 @@ def ivf_topk(
     if nprobe is None:
         nprobe = nprobe_for_centroids(n_centroids)
     cent = ivf_centroids(emb, id_col, vec_col, n_centroids)
-    corpus = ivf_assign(emb, cent, id_col, vec_col, nprobe=1).select(
-        F.col("id").alias("corpus_id"),
-        F.col("v").alias("cv"),
-        F.col("norm").alias("cn"),
-        "cluster",
-    )
-    probes = ivf_assign(queries, cent, id_col, vec_col, nprobe).select(
-        F.col("id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("norm").alias("qn"),
-        "cluster",
-    )
+    corpus = ivf_assign(emb, cent, id_col, vec_col, nprobe=1).drop("probe_rank")
+    probes = ivf_assign(queries, cent, id_col, vec_col, nprobe).drop("probe_rank")
     scored = (
-        corpus.join(F.broadcast(probes), "cluster")
+        corpus.toDF("corpus_id", "cv", "cn", "cluster")
+        .join(F.broadcast(probes.toDF("query_id", "qv", "qn", "cluster")), "cluster")
         .filter(F.col("corpus_id") != F.col("query_id"))
-        .withColumn("cosine", F.round(_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 4))
+        .withColumn("cosine", cosine("qv", "qn", "cv", "cn"))
         .select("query_id", "corpus_id", "cosine")
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def lsh_topk(
@@ -402,15 +392,16 @@ def lsh_topk(
     stream ~(planes_per_band+1)x the large-side rows through the join
     for nothing). Candidate volume per query is
     ~bands * probes * n/2^planes_per_band."""
-    corpus_bb = banded_signatures(emb, id_col, vec_col, planes_per_band, bands, dim
-                                  ).withColumnRenamed("id", "corpus_id")
+
+    def band_rows(df: DataFrame, spread: bool) -> DataFrame:
+        keys = banded_keys(df, id_col, vec_col, planes_per_band, bands, dim, spread)
+        return keys.select("id", F.posexplode("keys").alias("band", "band_key"))
+
+    corpus_bb = band_rows(emb, True).withColumnRenamed("id", "corpus_id")
     # query side: a handful of rows that broadcast below — spreading
     # them across the shuffle width would add an exchange for nothing
     probed_q = probe_signatures(
-        banded_signatures(
-            queries, id_col, vec_col, planes_per_band, bands, dim, spread=False
-        ),
-        planes_per_band,
+        band_rows(queries, False), planes_per_band
     ).withColumnRenamed("id", "query_id")
     cand = (
         corpus_bb.join(F.broadcast(probed_q), ["band", "band_key"])
@@ -418,20 +409,11 @@ def lsh_topk(
         .select("query_id", "corpus_id")
         .distinct()
     )
-    corpus = emb.select(
-        F.col(id_col).alias("corpus_id"), _as_double(F.col(vec_col)).alias("cv")
-    ).withColumn("cn", _norm(F.col("cv")))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
-    ).withColumn("qn", _norm(F.col("qv")))
+    corpus = vectors(emb, id_col, vec_col).toDF("corpus_id", "cv", "cn")
+    q = vectors(queries, id_col, vec_col).toDF("query_id", "qv", "qn")
     scored = (
         cand.join(corpus, "corpus_id")
         .join(F.broadcast(q), "query_id")
-        .withColumn("cosine", F.round(_dot("qv", "cv") / (F.col("qn") * F.col("cn")), 4))
+        .withColumn("cosine", cosine("qv", "qn", "cv", "cn"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("corpus_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "corpus_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)

@@ -308,7 +308,11 @@ def merge_upsert(
     rows matching on ``key_cols`` are replaced by the update,
     others are kept, new keys are inserted. Semantics (not mechanics)
     match MERGE ... WHEN MATCHED THEN UPDATE WHEN NOT MATCHED THEN
-    INSERT. The parquet commit is two renames, which is NOT atomic —
+    INSERT. Mechanically every call rewrites the WHOLE table: the
+    existing rows left-anti-joined against the update keys, unioned
+    with the update, written to ``._merge_tmp`` — the cost is the
+    table's size, not the update's. The parquet commit is two renames,
+    which is NOT atomic —
     it is CRASH-RECOVERABLE instead: a crash between the renames leaves
     the fully-written merge result under ``._merge_tmp`` and the
     previous table under ``._merge_old``; ``_recover_merge`` (run by the

@@ -141,7 +141,7 @@ def stream_graph_upsert(
     stage: per micro-batch, run the fused triple extraction, aggregate
     the batch's MERGEABLE graph stages (graph.per_surface /
     graph.edge_surfaces — counts sum, confidences max, evidence/mentions
-    are distributive top-3s), and upsert ONLY the touched keys into the
+    are distributive top-3s), and upsert the touched keys into the
     ``surfaces`` / ``edge_surfaces`` stage tables under ``out_base`` via
     ``tables.merge_upsert`` (the crash-recoverable MERGE analog). These
     are the batch graph's own stage tables, so the final node/edge
@@ -149,8 +149,10 @@ def stream_graph_upsert(
     ``read_stream_edges``) and equal the batch graph exactly
     (tests/test_stream_graph.py pins 3-chunk equivalence).
 
-    Scale shape: the per-batch update is sized by the BATCH's distinct
-    keys, not the accumulated graph; the stage tables are
+    Scale shape: the batch's aggregation is sized by the batch, but
+    every micro-batch REWRITES both stage tables in full
+    (``merge_upsert`` is a left-anti join, a union and an overwrite), so
+    a batch costs the accumulated stage size. The stage tables are
     entity/edge-surface cardinality (orders of magnitude under the
     triple stream).
 

@@ -1,7 +1,8 @@
-"""Physical-plan audit: dump .explain("formatted") for the headline
-queries and grep for the properties that matter at 100 TB —
-PushedFilters reaching the scan, pruned ReadSchema, WholeStageCodegen
-coverage, exchange (shuffle) count, broadcast usage. Writes PLANS.md.
+"""Physical-plan audit: run each headline query once (``collect()``),
+then dump the final adaptive plan it ran from .explain("formatted") and
+grep it for the properties that matter at 100 TB — PushedFilters
+reaching the scan, pruned ReadSchema, WholeStageCodegen coverage,
+exchange (shuffle) count, broadcast usage. Writes PLANS.md.
 
 Usage: python scripts/plan_audit.py [name ...] — with names, only those
 queries' sections of PLANS.md are rewritten (a new name is appended).
@@ -48,13 +49,45 @@ AUDIT = [
 
 
 def plan_of(df) -> str:
+    """The final plan of ``df``: after its own action, the formatted
+    explain holds AQE's final plan and the initial one it replaced."""
+    df.collect()
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
-    return buf.getvalue()
+    # what the run cached must not show up in the next section's plan
+    df.sparkSession.catalog.clearCache()
+    return final_plan(buf.getvalue())
 
 
-HEADER = """# PLANS.md — physical-plan audit (sf0.01, local[32] conf)
+def final_plan(explain: str) -> str:
+    """The final-plan part of an executed formatted explain: the tree
+    lines under no ``== Initial Plan ==`` marker (one is nested under
+    every cached relation's plan too) and the detail blocks of their
+    nodes."""
+    tree, _, details = explain.strip("\n").partition("\n\n\n")
+    kept, ids, initial = [], set(), []  # initial: marker columns open
+    for line in tree.splitlines():
+        col = len(line) - len(line.lstrip(" :"))
+        while initial and col <= initial[-1]:
+            initial.pop()
+        if initial:
+            continue
+        if "== Initial Plan ==" in line:
+            initial.append(col)
+        elif "== Final Plan ==" not in line:
+            kept.append(line)
+            ids.update(re.findall(r"\((\d+)\)", line))
+    blocks = [b for b in details.split("\n\n") if re.match(r"\((\d+)\)", b)]
+    keep = [b for b in blocks if re.match(r"\((\d+)\)", b).group(1) in ids]
+    return "\n".join(kept) + "\n\n\n" + "\n\n".join(keep) + "\n"
+
+
+HEADER = """# PLANS.md — physical-plan audit (sf0.01, {master}, 16 shuffle partitions)
+
+Each section is the final adaptive plan the query ran: the script runs
+the query's own `collect()` first, then keeps the `isFinalPlan=true`
+tree and its node details, dropping the initial plans AQE replaced.
 
 How to read this (the 100 TB checklist):
 - **PushedFilters** at every parquet scan — kind/key predicates reach
@@ -64,7 +97,8 @@ How to read this (the 100 TB checklist):
   struct because every field is consumed.
 - **Exchange count** = shuffle budget (NOTE: formatted explain prints
   each node twice — tree + detail — so the raw counts below are 2x the
-  physical node count). triples_all is the FUSED single-scan plan:
+  physical node count, more where a cached relation's plan is printed
+  under each of its scans). triples_all is the FUSED single-scan plan:
   FileScan -> Project -> Generate, ONE corpus read, zero extraction
   shuffles (its only exchange is `tables.spread_small_scan`'s doc_id
   spread, which disappears once the scan splits at least
@@ -133,11 +167,12 @@ def main() -> None:
         sections = {c.split("\n", 1)[0][3:]: c.rstrip("\n") + "\n\n" for c in chunks[1:]}
     spark = get_spark(shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
+    header = HEADER.format(master=spark.sparkContext.master)
     for name in only or AUDIT:
         sections[name] = section(name, plan_of(qs[name](spark, SF)))
     spark.stop()
     with open("PLANS.md", "w") as f:
-        f.write((HEADER + "\n" + "".join(sections.values())).rstrip("\n") + "\n")
+        f.write((header + "\n" + "".join(sections.values())).rstrip("\n") + "\n")
     print(f"wrote PLANS.md ({len(only or AUDIT)} sections audited)")
 
 

@@ -210,3 +210,28 @@ def test_embedding_matrix_rerank_equals_join_rerank(spark):
     slow = dedup.embedding_cosine_pairs(wrapped, threshold=0.45, n=n, dim=dim)
     assert fast.exceptAll(slow).count() == 0
     assert slow.exceptAll(fast).count() == 0
+
+
+def test_embedding_pairs_leave_nothing_persisted(spark):
+    """``embedding_candidates`` persists its band keys (both self-join
+    sides read them once); ``clearCache`` must release them on both
+    rerank paths: the matrix rerank (bare parquet scan) and the join
+    rerank (the same table behind a select). The outputs stay held
+    until the check, so garbage collection cannot hide a leak."""
+    from pdf2ontology_spark.sources import tables
+
+    sf = "/root/testdata/sf0.001"
+    emb = tables.load_table(spark, sf, "embeddings")
+    n, dim = tables.table_rows(sf, "embeddings"), tables.embedding_dim(sf)
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    spark.catalog.clearCache()
+    before = set(persisted().keys())
+    held = [
+        dedup.embedding_cosine_pairs(e, threshold=0.45, n=n, dim=dim)
+        for e in (emb, emb.select("vec_id", "embedding"))
+    ]
+    assert all(len(df.collect()) > 0 for df in held)
+    spark.catalog.clearCache()
+    # by id: older garbage the context cleaner drops meanwhile must not
+    # offset a new leak
+    assert set(persisted().keys()) - before == set()

@@ -7,8 +7,10 @@ stats come from the catalog instead of a job. Connected components and
 the two operators built on it (canonicalization, near-dup clusters)
 are lazy too, and leave nothing persisted behind.
 
-Detection: every job submitted inside the probe runs under a dedicated
-job group; the status tracker must report that group empty."""
+Detection: every job submitted inside a probe runs under a job group
+of its own; the status tracker must report that group empty."""
+
+import uuid
 
 import __spark_entry__ as entry
 from pdf2ontology_spark.operators import components, dedup, linking, similarity, triples
@@ -19,7 +21,9 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def _jobs_during(spark, fn):
     sc = spark.sparkContext
-    group = "lazy-build-probe"
+    # a fresh group per probe: the status tracker keeps a group's old
+    # jobs, so a shared id would list earlier probes' jobs as well
+    group = f"lazy-build-probe-{uuid.uuid4().hex}"
     sc.setJobGroup(group, "plan-build laziness probe")
     try:
         result = fn()

@@ -84,4 +84,4 @@ def test_signature_dim_mismatch_raises(spark):
         [(1, [0.1, 0.2, 0.3]), (2, [0.3, 0.1])], "vec_id int, embedding array<double>"
     )
     with pytest.raises(Exception, match="dimension mismatch"):
-        similarity.banded_signatures(bad).collect()
+        similarity.banded_keys(bad).collect()
