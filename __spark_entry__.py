@@ -10,9 +10,16 @@ pdf2ontology_spark/oracles.py).
 
 from __future__ import annotations
 
+import atexit
+import glob
+import os
+import shutil
+import tempfile
+import uuid
 from collections.abc import Callable
+from datetime import datetime, timezone
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from pdf2ontology_spark import oracles, oracles_data, synth
@@ -34,6 +41,7 @@ from pdf2ontology_spark.operators import (
     triples,
 )
 from pdf2ontology_spark.sources import tables
+from pdf2ontology_spark.streaming import incremental
 
 # the driver's DuckDB runs oracle SQL at sf0.01 — make sure the synthetic
 # corpus parquet exists before any oracle executes
@@ -184,8 +192,10 @@ def q_entity_type_histogram(spark, sf_dir):
     return graph.entity_type_histogram(_triples_stage(spark, sf_dir))
 
 
-def q_nodes(spark, sf_dir):
-    return graph.nodes(_triples_stage(spark, sf_dir)).select(
+def _node_cols(nodes: DataFrame) -> DataFrame:
+    """The driver's flat node projection (arrays joined, maps as JSON),
+    shared by the batch and the streaming node query."""
+    return nodes.select(
         "entity_id",
         "name",
         "canonical_form",
@@ -198,6 +208,10 @@ def q_nodes(spark, sf_dir):
         F.to_json("external_ids").alias("external_ids_json"),
         F.to_json("properties").alias("properties_json"),
     )
+
+
+def q_nodes(spark, sf_dir):
+    return _node_cols(graph.nodes(_triples_stage(spark, sf_dir)))
 
 
 def q_edges(spark, sf_dir):
@@ -559,18 +573,12 @@ def q_event_type_stats(spark, sf_dir):
 # ------------------------------------------------------- streaming
 # §2.9 driven through the driver's oracle gate: each query drains the
 # documents table through the REAL Structured Streaming path
-# (availableNow trigger, foreachBatch sinks, fresh checkpoint per call)
+# (availableNow trigger, the library's sinks, fresh checkpoint per call)
 # and returns the accumulated result as a batch DataFrame. Streaming
 # must equal batch — so each shares its batch twin's DuckDB oracle.
 
 
 def _stream_base() -> str:
-    import atexit
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     base = os.path.join(tempfile.gettempdir(), "graft_stream_q", uuid.uuid4().hex)
     # the returned DataFrames stay bound to these parquet files for the
     # caller's lifetime — clean up only at interpreter exit
@@ -583,8 +591,6 @@ def _stream_input(base: str, sf_dir: str) -> str:
     synthetic spans corpus is a single parquet file. Stage a per-call
     input dir holding a symlink to it — zero copy, and the source sees
     exactly the corpus the batch queries read."""
-    import os
-
     src = synth.ensure_synth(sf_dir)["documents_spans"]
     d = os.path.join(base, "in")
     os.makedirs(d, exist_ok=True)
@@ -592,14 +598,20 @@ def _stream_input(base: str, sf_dir: str) -> str:
     return d
 
 
+def _stage_file(df: DataFrame, base: str, in_dir: str, name: str) -> str:
+    """Write ``df`` as the ONE parquet file ``in_dir/name`` (Spark writes
+    a directory; its single part file is copied in) and return its path."""
+    tmp = os.path.join(base, "stage", name)
+    df.coalesce(1).write.parquet(tmp)
+    path = os.path.join(in_dir, name)
+    shutil.copy(sorted(glob.glob(os.path.join(tmp, "part-*.parquet")))[0], path)
+    return path
+
+
 def q_streaming_triples(spark, sf_dir):
     """stream_triples: readStream(documents) -> fused extraction per
     micro-batch -> parquet sink; the drained sink must equal the batch
     fused plan (oracle: all_triples_sql, same as triples_all)."""
-    import os
-
-    from pdf2ontology_spark.streaming import incremental
-
     base = _stream_base()
     out = os.path.join(base, "out")
     q = incremental.stream_triples(
@@ -613,28 +625,12 @@ def q_streaming_nodes(spark, sf_dir):
     """stream_graph_upsert: per micro-batch, merge-upsert the mergeable
     graph stages (surfaces / edge_surfaces), then derive the node table
     from the upserted stage — must equal the batch graph (oracle: nodes)."""
-    import os
-
-    from pdf2ontology_spark.streaming import incremental
-
     base = _stream_base()
     q = incremental.stream_graph_upsert(
         spark, _stream_input(base, sf_dir), base, os.path.join(base, "ckpt")
     )
     q.awaitTermination()
-    return incremental.read_stream_nodes(spark, base).select(
-        "entity_id",
-        "name",
-        "canonical_form",
-        "entity_type",
-        F.array_join("aliases", "|").alias("aliases_joined"),
-        "mention_count",
-        "confidence",
-        F.array_join("mentions", "|").alias("mentions_joined"),
-        "uri",
-        F.to_json("external_ids").alias("external_ids_json"),
-        F.to_json("properties").alias("properties_json"),
-    )
+    return _node_cols(incremental.read_stream_nodes(spark, base))
 
 
 def q_streaming_dedup(spark, sf_dir):
@@ -644,23 +640,12 @@ def q_streaming_dedup(spark, sf_dir):
     must survive, so the drained sink projected to content_hash equals
     the corpus's distinct content-hash set (the DuckDB twin recomputes
     the canonical span-serialization md5)."""
-    import glob
-    import os
-    import shutil
-
-    from pdf2ontology_spark.streaming import incremental
-
     base = _stream_base()
     in_dir = _stream_input(base, sf_dir)
     dups = _docs(spark, sf_dir).filter(F.pmod(F.xxhash64("doc_id"), F.lit(10)) == 0).select(
         F.concat(F.lit("dup-"), "doc_id").alias("doc_id"), "spans"
     )
-    d_dir = os.path.join(base, "dups")
-    dups.coalesce(1).write.parquet(d_dir)
-    shutil.copy(
-        sorted(glob.glob(os.path.join(d_dir, "part-*.parquet")))[0],
-        os.path.join(in_dir, "zz-dups.parquet"),
-    )
+    _stage_file(dups, base, in_dir, "zz-dups.parquet")
     out = os.path.join(base, "out")
     q = incremental.stream_dedup_first_seen(spark, in_dir, out, os.path.join(base, "ckpt"))
     q.awaitTermination()
@@ -685,15 +670,6 @@ def q_streaming_windowed(spark, sf_dir):
     per-window rollups of the corpus docs (the advancer window stays
     open and never emits), which the DuckDB twin recomputes
     closed-form."""
-    import glob
-    import os
-    import shutil
-    from datetime import datetime, timezone
-
-    from pyspark.sql import Row
-
-    from pdf2ontology_spark.streaming import incremental
-
     base = _stream_base()
     in_dir = os.path.join(base, "in")
     os.makedirs(in_dir, exist_ok=True)
@@ -701,11 +677,9 @@ def q_streaming_windowed(spark, sf_dir):
     timed = _docs(spark, sf_dir).select(
         "doc_id", "spans", F.timestamp_seconds(F.lit(STREAM_TS_BASE) + off).alias("ingest_ts")
     )
-    a_dir = os.path.join(base, "a")
-    timed.coalesce(1).write.parquet(a_dir)  # ONE file: the whole corpus
-    # shares batch 1's zero watermark, so nothing is dropped as late
-    staged = os.path.join(in_dir, "00-corpus.parquet")
-    shutil.copy(sorted(glob.glob(os.path.join(a_dir, "part-*.parquet")))[0], staged)
+    # ONE file: the whole corpus shares batch 1's zero watermark, so
+    # nothing is dropped as late
+    staged = _stage_file(timed, base, in_dir, "00-corpus.parquet")
     os.utime(staged, (1_000_000_000, 1_000_000_000))
     for i, adv_off in ((1, 800), (2, 800)):
         row = Row(
@@ -713,10 +687,8 @@ def q_streaming_windowed(spark, sf_dir):
             spans=[Row(kind="text", text="advance.", media_ref="", offset=0)],
             ingest_ts=datetime.fromtimestamp(STREAM_TS_BASE + adv_off, tz=timezone.utc),
         )
-        s_dir = os.path.join(base, f"s{i}")
-        spark.createDataFrame([row], incremental.TIMED_DOCUMENTS).coalesce(1).write.parquet(s_dir)
-        staged = os.path.join(in_dir, f"{i:02d}-advancer.parquet")
-        shutil.copy(sorted(glob.glob(os.path.join(s_dir, "part-*.parquet")))[0], staged)
+        adv = spark.createDataFrame([row], incremental.TIMED_DOCUMENTS)
+        staged = _stage_file(adv, base, in_dir, f"{i:02d}-advancer.parquet")
         os.utime(staged, (1_000_000_000 + 60 * i, 1_000_000_000 + 60 * i))
     out = os.path.join(base, "out")
     q = incremental.stream_windowed_doc_stats(

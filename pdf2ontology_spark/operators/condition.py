@@ -64,6 +64,19 @@ def _raw_actions(
     )
 
 
+def _needs(quality: Column, raw_actions: Column) -> Column:
+    """Skip predicate: good-quality spans, and spans no rule fires on,
+    pass through untouched."""
+    return (quality <= SKIP_QUALITY) & (F.size(raw_actions) > 0)
+
+
+def _actions(needs: Column, raw_actions: Column) -> Column:
+    """The action plan: skipped spans keep an EMPTY plan (pass-through
+    rows, same shape — the chain's copy-through at
+    document_preprocessing_chain.py:169-171)."""
+    return F.when(needs, raw_actions).otherwise(F.array().cast("array<string>"))
+
+
 # cache of the UNRESOLVED assess columns (pure expression ASTs, no
 # data/plan — see triples._FUSED_EXPR_CACHE): the withColumn-chain form
 # re-built ~300 py4j expression nodes per call, pure construction time
@@ -90,9 +103,7 @@ def _assess_cols() -> list[Column]:
     sharpness = F.round(si / 65535.0, 6)
     noise = F.round(ni / 65535.0, 6)
     raw_actions = _raw_actions(rotation_deg, skew_deg, contrast, brightness, sharpness, noise)
-    needs = (quality <= SKIP_QUALITY) & (F.size(raw_actions) > 0)
-    # skip predicate: good spans keep an EMPTY plan (pass-through rows,
-    # same shape — the chain's copy-through at :169-171)
+    needs = _needs(quality, raw_actions)
     _ASSESS_COLS = [
         F.col("doc_id"),
         F.col("offset"),
@@ -105,9 +116,7 @@ def _assess_cols() -> list[Column]:
         rotation_deg.alias("rotation_deg"),
         quality.alias("quality"),
         needs.alias("needs_processing"),
-        F.when(needs, raw_actions)
-        .otherwise(F.array().cast("array<string>"))
-        .alias("actions"),
+        _actions(needs, raw_actions).alias("actions"),
     ]
     return _ASSESS_COLS
 
@@ -156,16 +165,11 @@ def assess_media_real(spans: DataFrame, blobs: DataFrame) -> DataFrame:
         F.col("sharpness_score"),
         F.col("noise_level"),
     )
-    df = df.withColumn(
-        "needs_processing",
-        (F.col("quality") <= SKIP_QUALITY) & (F.size(raw_actions) > 0),
+    return (
+        df.withColumn("needs_processing", _needs(F.col("quality"), raw_actions))
+        .withColumn("actions", _actions(F.col("needs_processing"), raw_actions))
+        .drop("issues_joined")
     )
-    return df.withColumn(
-        "actions",
-        F.when(F.col("needs_processing"), raw_actions).otherwise(
-            F.array().cast("array<string>")
-        ),
-    ).drop("issues_joined")
 
 
 def condition_rollup(assessed: DataFrame) -> DataFrame:

@@ -27,15 +27,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pdf2ontology_spark.operators import components, similarity
+from pdf2ontology_spark.operators.text import _words
 from pdf2ontology_spark.sources import tables
 
 MINHASH_K = 12  # signature length
 LSH_BANDS = 6  # bands of rows = K // bands
 SHINGLE_W = 3  # words per shingle
-
-
-def _words(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), r"[^a-z0-9äöüß]+"), lambda w: w != "")
 
 
 def shingle_array(

@@ -1,6 +1,6 @@
 """Text analysis for training-data pipelines: language-ID, quality
 scoring, token counting, document fingerprinting. All pure JVM-side
-expressions with exact DuckDB-SQL twins (see oracles_text.py).
+expressions with exact DuckDB-SQL twins (see oracles_data.py).
 
 The quality composite reuses the reference's weighted-score shape
 (0.3/0.2/0.3/0.2 at /root/reference/src/utils/document_analysis_utils.py:467-473)
@@ -23,7 +23,10 @@ TOKEN_RE = r"[a-zA-ZäöüßÄÖÜ]+|[0-9]+|[^a-zA-ZäöüßÄÖÜ0-9\s]"
 
 
 def _words(text: Column) -> Column:
-    return F.filter(F.split(F.lower(text), r"[^a-zäöüß0-9]+"), lambda w: w != "")
+    """The word tokenizer of the text and dedup operators: lowercase,
+    split on runs of non-alphanumerics, drop empty tokens (DuckDB twin:
+    ``oracles_data.words_sql``)."""
+    return F.filter(F.split(F.lower(text), r"[^a-z0-9äöüß]+"), lambda w: w != "")
 
 
 def _stop_hits(words: Column, stops: list[str]) -> Column:

@@ -4,19 +4,26 @@ The reference is strictly batch (SURVEY.md §2.9); the target's
 incremental story is checkpointed batch resume. This module adds the
 natural streaming extension anyway: new document parquet files landing
 in a directory are picked up per micro-batch and extracted with the
-SAME operator functions via ``foreachBatch`` (each micro-batch is a
-plain batch DataFrame there). The extraction is the FUSED single-scan
-plan (``triples.all_triples_fused``): per-document array expressions,
-no window functions and no shuffle — so each micro-batch is one narrow
-map-side pass, exactly the shape you want for continuous ingest, and
-the incremental surface exercises the same flagship plan as batch
-(equivalence pinned by tests/test_media_streaming.py, including a
-3-chunk incremental run).
+SAME operator functions. The extraction is the FUSED single-scan plan
+(``triples.all_triples_fused``): per-document array expressions, no
+window functions and no shuffle — a stateless projection of the stream,
+so each micro-batch is one narrow map-side pass, exactly the shape you
+want for continuous ingest, and the incremental surface exercises the
+same flagship plan as batch (equivalence pinned by
+tests/test_media_streaming.py, including a 3-chunk incremental run).
 
-Delivery semantics: the streaming checkpoint gives exactly-once source
-tracking; the parquet append sink inside foreachBatch is at-least-once
-on retry (idempotent downstream thanks to deterministic content ids —
-consumers dedupe on the triple's content hash).
+Delivery semantics:
+
+- ``stream_triples``, ``stream_windowed_doc_stats`` and
+  ``stream_dedup_first_seen`` write through Spark's parquet file sink
+  (``_parquet_sink``) and are EXACTLY-ONCE: the sink logs each batch id
+  it committed in ``output_dir/_spark_metadata`` and skips a replayed
+  batch it already holds, and readers see only the files that log
+  names. A fresh checkpoint into an output another stream committed to
+  raises ``ValueError``.
+- ``stream_graph_upsert`` keeps ``foreachBatch`` (its keyed merge needs
+  the batch as a DataFrame), which delivers at-least-once; its handler
+  is REPLAY-IDEMPOTENT (see ``graph_batch_handler``).
 
 ``stream_dedup_first_seen`` is the stateful extension: streaming
 exact-dedup with applyInPandasWithState — the custom stateful operator
@@ -26,19 +33,61 @@ the moment they arrive, across micro-batches and restarts).
 
 from __future__ import annotations
 
+import os
+
 import pandas as pd
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
 from pyspark.sql import types as T
+from pyspark.sql.streaming.state import GroupStateTimeout
 
-from pdf2ontology_spark.operators import triples
+from pdf2ontology_spark.operators import graph, triples
 from pdf2ontology_spark.schemas import DOCUMENTS
+from pdf2ontology_spark.sources import tables
 
 # documents + an event-time column, for the watermarked windowed stats
 TIMED_DOCUMENTS = T.StructType(
     list(DOCUMENTS.fields) + [T.StructField("ingest_ts", T.TimestampType())]
 )
+
+
+def _start(writer, checkpoint_dir: str, available_now: bool):
+    """Start ``writer`` on ``checkpoint_dir``: with ``available_now`` the
+    query drains everything currently in the input directory and stops
+    — the testable micro-batch mode; without it, it runs continuously."""
+    writer = writer.option("checkpointLocation", checkpoint_dir)
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def _has_entries(path: str) -> bool:
+    # a streaming log dir: one file per batch id, plus hidden .crc files
+    return os.path.isdir(path) and any(not n.startswith(".") for n in os.listdir(path))
+
+
+def _parquet_sink(df: DataFrame, output_dir: str, checkpoint_dir: str, available_now: bool):
+    """Append the streaming ``df`` to ``output_dir`` through Spark's
+    exactly-once parquet file sink.
+
+    Raises ``ValueError`` when ``output_dir`` already holds committed
+    batches but ``checkpoint_dir`` has planned none: the fresh stream's
+    batch ids would restart at 0 and the sink would skip each one it
+    finds in its log, dropping the new data without an error. The check
+    reads ``offsets``, not ``commits``: ``offsets/N`` is written before
+    batch N runs, so a resume after a crash between the sink's write and
+    the checkpoint's commit still runs, and the sink skips the batch it
+    already holds."""
+    log = os.path.join(output_dir, "_spark_metadata")
+    offsets = os.path.join(checkpoint_dir, "offsets")
+    if _has_entries(log) and not _has_entries(offsets):
+        raise ValueError(
+            f"output {output_dir} already holds batches committed by another "
+            f"stream, and checkpoint {checkpoint_dir} is fresh: resume that "
+            "stream's checkpoint or write to a new output directory"
+        )
+    writer = df.writeStream.format("parquet").option("path", output_dir).outputMode("append")
+    return _start(writer, checkpoint_dir, available_now)
 
 
 def stream_triples(
@@ -48,27 +97,14 @@ def stream_triples(
     checkpoint_dir: str,
     available_now: bool = True,
 ):
-    """readStream(documents parquet dir) -> triples parquet sink.
-
-    With ``available_now`` the query drains everything currently in the
-    directory and stops — the testable micro-batch mode; without it, it
-    runs continuously.
-    """
+    """readStream(documents parquet dir) -> triples parquet sink: the
+    flagship fused plan (FileScan -> Project -> Generate, zero
+    exchanges), so per micro-batch the whole extraction is one narrow
+    map-side pass over the new files only."""
     docs = spark.readStream.schema(DOCUMENTS).parquet(input_dir)
-
-    def process_batch(batch_df, _batch_id: int) -> None:
-        # the flagship fused plan: FileScan -> Project -> Generate, zero
-        # exchanges — per micro-batch the whole extraction is one
-        # narrow map-side pass over the new files only
-        trips = triples.all_triples_fused(batch_df)
-        trips.write.mode("append").parquet(output_dir)
-
-    writer = docs.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
+    return _parquet_sink(
+        triples.all_triples_fused(docs), output_dir, checkpoint_dir, available_now
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_windowed_doc_stats(
@@ -119,15 +155,7 @@ def stream_windowed_doc_stats(
             "n_spans",
         )
     )
-    writer = (
-        agg.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(agg, output_dir, checkpoint_dir, available_now)
 
 
 def stream_graph_upsert(
@@ -157,18 +185,15 @@ def stream_graph_upsert(
     triple stream).
 
     An ``out_base`` from before the surface-keyed edge stage holds an
-    id-keyed ``edge_aggs`` table instead; rebuild it (no migration).
+    id-keyed ``edge_aggs`` table instead of ``edge_surfaces``; neither
+    the handler nor ``read_stream_edges`` reads it: rebuild it (no
+    migration).
 
     Replay-idempotent: see ``graph_batch_handler``.
     """
     docs = spark.readStream.schema(DOCUMENTS).parquet(input_dir)
     process_batch = graph_batch_handler(spark, out_base, checkpoint_dir)
-    writer = docs.writeStream.foreachBatch(process_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(docs.writeStream.foreachBatch(process_batch), checkpoint_dir, available_now)
 
 
 def graph_batch_handler(spark: SparkSession, out_base: str, checkpoint_dir: str):
@@ -189,13 +214,7 @@ def graph_batch_handler(spark: SparkSession, out_base: str, checkpoint_dir: str)
     skip its early batches on the old stream's high-water mark.
 
     Stages: ``surfaces`` (name, entity_type) and ``edge_surfaces``
-    (``graph.EDGE_SURFACE_KEYS``); an older ``out_base`` with an
-    id-keyed ``edge_aggs`` stage must be rebuilt, not resumed."""
-    import os
-
-    from pdf2ontology_spark.operators import graph
-    from pdf2ontology_spark.sources import tables
-
+    (``graph.EDGE_SURFACE_KEYS``)."""
     surf_path = os.path.join(out_base, "surfaces")
     edge_path = os.path.join(out_base, "edge_surfaces")
 
@@ -252,11 +271,6 @@ def graph_batch_handler(spark: SparkSession, out_base: str, checkpoint_dir: str)
 def read_stream_nodes(spark: SparkSession, out_base: str):
     """Derive the node table from the incrementally-upserted surfaces
     stage (repairing a crashed merge commit first)."""
-    import os
-
-    from pdf2ontology_spark.operators import graph
-    from pdf2ontology_spark.sources import tables
-
     return graph.nodes_from_surfaces(
         tables.read_merged(spark, os.path.join(out_base, "surfaces"))
     )
@@ -265,14 +279,7 @@ def read_stream_nodes(spark: SparkSession, out_base: str):
 def read_stream_edges(spark: SparkSession, out_base: str):
     """Derive the edge table from the incrementally-upserted
     ``edge_surfaces`` stage through ``graph.edges_from_surfaces`` with
-    exact endpoint ids — the same derivation as batch ``graph.edges``.
-    An ``out_base`` written with the older id-keyed ``edge_aggs`` stage
-    has no ``edge_surfaces`` table and must be rebuilt."""
-    import os
-
-    from pdf2ontology_spark.operators import graph
-    from pdf2ontology_spark.sources import tables
-
+    exact endpoint ids — the same derivation as batch ``graph.edges``."""
     return graph.edges_from_surfaces(
         tables.read_merged(spark, os.path.join(out_base, "edge_surfaces")),
         graph.entity_id_col(F.col("subj_name"), F.col("subj_type")),
@@ -323,8 +330,6 @@ def stream_dedup_first_seen(
     usually adds a TTL (state timeout) — both are config, not plan,
     changes.
     """
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     docs = spark.readStream.schema(DOCUMENTS).parquet(input_dir)
     hashed = docs.select("doc_id", content_hash_col().alias("content_hash")).withColumn(
         "bucket", F.substring("content_hash", 1, 2)
@@ -349,12 +354,4 @@ def stream_dedup_first_seen(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    writer = (
-        deduped.writeStream.format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(deduped, output_dir, checkpoint_dir, available_now)

@@ -1,6 +1,7 @@
 """Media plumbing (mapInPandas real PNG decode) + streaming micro-batch
 equivalence with the batch pipeline."""
 
+import os
 import time
 
 import pytest
@@ -9,6 +10,7 @@ from pyspark.sql import functions as F
 from pdf2ontology_spark import png_codec, raster
 from pdf2ontology_spark.operators import media, segment, triples
 from pdf2ontology_spark.sources import tables
+from pdf2ontology_spark.streaming import incremental
 from pdf2ontology_spark.streaming.incremental import stream_triples
 
 
@@ -329,3 +331,66 @@ def test_stream_windowed_watermark_drops_late(spark, tmp_path):
     r = out[0]
     assert r.window_start == datetime(2026, 1, 1, 10, 0, 0)
     assert r.n_docs == 2 and r.n_spans == 2  # late w3 NOT counted
+
+
+# the three writers on Spark's parquet file sink; each reads its columns
+# of the timed halves below (triples and dedup ignore ingest_ts)
+FILE_SINK_WRITERS = {
+    "triples": incremental.stream_triples,
+    "dedup": incremental.stream_dedup_first_seen,
+    "windowed": incremental.stream_windowed_doc_stats,
+}
+
+
+def _timed_halves(spark, tmp_path):
+    """sf0.001 split in two input dirs by xxhash64(doc_id) % 2, each doc
+    stamped with an event time in a 290 s span so windows close."""
+    docs = tables.load_documents_spans(spark, "/root/testdata/sf0.001").withColumn(
+        "ingest_ts",
+        F.timestamp_seconds(F.lit(1_767_225_600) + F.pmod(F.xxhash64("doc_id"), F.lit(290))),
+    )
+    dirs = []
+    for half in range(2):
+        d = str(tmp_path / f"in{half}")
+        docs.filter(F.pmod(F.xxhash64("doc_id"), F.lit(2)) == half).write.parquet(d)
+        dirs.append(d)
+    return dirs
+
+
+def _files(root):
+    return sorted(os.path.join(d, n) for d, _, names in os.walk(root) for n in names)
+
+
+@pytest.mark.parametrize("name", sorted(FILE_SINK_WRITERS))
+def test_stream_fresh_checkpoint_into_committed_output_refused(spark, tmp_path, name):
+    """The file sink skips every batch id already in its output log, so
+    a second stream with a FRESH checkpoint (batch ids restart at 0)
+    into an output another stream committed to would drop its data
+    without an error. It must be refused and write nothing."""
+    writer = FILE_SINK_WRITERS[name]
+    in_a, in_b = _timed_halves(spark, tmp_path)
+    out = str(tmp_path / "out")
+    writer(spark, in_a, out, str(tmp_path / "ck_a")).awaitTermination(120)
+    before = _files(out)
+    assert any("_spark_metadata" in f for f in before)
+    with pytest.raises(ValueError, match="ck_b"):
+        writer(spark, in_b, out, str(tmp_path / "ck_b"))
+    assert _files(out) == before
+
+
+def test_stream_replay_after_lost_commit(spark, tmp_path):
+    """A crash after the sink's write and before the checkpoint's commit
+    replays the batch on restart: with the checkpoint's ``commits``
+    entries removed, a rerun must leave the output unchanged."""
+    in_a, _ = _timed_halves(spark, tmp_path)
+    for name in ("triples", "dedup"):
+        writer = FILE_SINK_WRITERS[name]
+        out, ckpt = str(tmp_path / name / "out"), str(tmp_path / name / "ck")
+        writer(spark, in_a, out, ckpt).awaitTermination(120)
+        n = spark.read.parquet(out).count()
+        assert n > 0
+        commits = os.path.join(ckpt, "commits")
+        for f in os.listdir(commits):
+            os.remove(os.path.join(commits, f))
+        writer(spark, in_a, out, ckpt).awaitTermination(120)
+        assert spark.read.parquet(out).count() == n, name
